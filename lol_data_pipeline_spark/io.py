@@ -84,7 +84,7 @@ def _table_key(path: str) -> tuple | None:
     own stat is NOT enough — rewriting a member file's contents in
     place (same entry name) leaves the dir mtime unchanged (r14
     ADVICE) — so fold in every member file's (name, mtime_ns, size),
-    the same stat set _source_fingerprint hashes."""
+    the same stat set artifact.source_fingerprint hashes."""
     try:
         st = os.stat(path)
         if not os.path.isdir(path):

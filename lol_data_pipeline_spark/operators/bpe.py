@@ -177,15 +177,12 @@ def bpe_encode_docs(
 # The MATERIALIZED tokenizer: the ordered merge table persisted as a
 # fingerprinted JSON artifact (driver-literal-sized — no parquet
 # needed), so the encode path never pays the training scans. The
-# served-index family's pattern (vector_index / graph_index /
-# text_index / minhash_index ensure_* contract), applied to the one
-# remaining per-query retraining in the registry (text_bpe_encode
+# served-index family's build-if-stale contract (operators/artifact.py),
+# applied to the one remaining per-query retraining in the registry (text_bpe_encode
 # trains its merges on every run). Maintenance is re-training: BPE
 # merges have no sound incremental update (an early merge decision
 # can flip under new data), so staleness => rebuild, by design.
 # ---------------------------------------------------------------------------
-
-_BPE_META_NAME = "_bpe_meta.json"
 
 
 def ensure_bpe_vocab(
@@ -199,45 +196,22 @@ def ensure_bpe_vocab(
     list + params + source fingerprint in one JSON sidecar. Returns
     (path, meta); meta["merges"] is the same [(round, l, r, merged,
     cnt)] list bpe_train returns, JSON round-tripped."""
-    import json
-    import os
-
     from lol_data_pipeline_spark.io import load_table
-    from lol_data_pipeline_spark.operators.vector_index import (
-        _source_fingerprint,
-    )
+    from lol_data_pipeline_spark.operators import artifact
 
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    params = {"rounds": rounds}
+
+    def build(path: str) -> dict:
+        merges = bpe_train(load_table(spark, sf_dir, "documents"), rounds=rounds)
+        return artifact.save_meta(path, "bpe", {
+            "fingerprint": artifact.source_fingerprint(sf_dir, "documents"),
+            "params": params,
+            "merges": [[i, l, r, m, c] for (i, l, r, m, c) in merges],
+        })
+
+    return artifact.ensure(
+        "bpe", sf_dir, "documents", params, build, root, variant
     )
-    root = root or os.environ.get(
-        "SPARK_GRAFT_BPE_VOCAB_DIR",
-        os.path.join(repo_root, "spark-warehouse", "bpe_vocab"),
-    )
-    name = os.path.basename(os.path.normpath(sf_dir)) + (
-        f"_{variant}" if variant else ""
-    )
-    path = os.path.join(root, f"bpe_{name}")
-    meta_path = os.path.join(path, _BPE_META_NAME)
-    want_fp = _source_fingerprint(sf_dir, table="documents")
-    want_params = {"rounds": rounds}
-    try:
-        with open(meta_path) as f:
-            meta = json.load(f)
-        if meta.get("fingerprint") == want_fp and meta.get("params") == want_params:
-            return path, meta
-    except (OSError, ValueError):
-        pass
-    merges = bpe_train(load_table(spark, sf_dir, "documents"), rounds=rounds)
-    meta = {
-        "fingerprint": want_fp,
-        "params": want_params,
-        "merges": [[i, l, r, m, c] for (i, l, r, m, c) in merges],
-    }
-    os.makedirs(path, exist_ok=True)
-    with open(meta_path, "w") as f:
-        json.dump(meta, f)
-    return path, meta
 
 
 def vocab_merges(meta: dict) -> list[tuple[int, str, str, str, int]]:

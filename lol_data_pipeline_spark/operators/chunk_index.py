@@ -41,7 +41,6 @@ contract, exact-substring axis.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -49,6 +48,7 @@ from pyspark.sql import functions as F
 
 from lol_data_pipeline_spark.functions.scalar import md5_long
 from lol_data_pipeline_spark.io import load_table, write_overwrite
+from lol_data_pipeline_spark.operators import artifact
 from lol_data_pipeline_spark.operators.dedup import doc_chunks
 from lol_data_pipeline_spark.operators.lsm import (
     lsm_delete,
@@ -58,14 +58,6 @@ from lol_data_pipeline_spark.operators.lsm import (
     lsm_view,
 )
 
-_REPO_ROOT = os.path.dirname(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-)
-CHUNK_ROOT = os.environ.get(
-    "SPARK_GRAFT_CHUNK_INDEX_DIR",
-    os.path.join(_REPO_ROOT, "spark-warehouse", "chunk_index"),
-)
-_META_NAME = "_chunk_meta.json"
 N_BUCKETS = 16  # constant partition count — the maintenance unit
 
 
@@ -127,10 +119,6 @@ def build_chunk_index(
     partitioned chunk rows, h-sorted within files, + sidecar.
     ``index_where`` (SQL over documents) selects the index side —
     '' means the whole corpus."""
-    from lol_data_pipeline_spark.operators.vector_index import (
-        _source_fingerprint,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     if index_where:
         docs = docs.filter(F.expr(index_where))
@@ -146,15 +134,12 @@ def build_chunk_index(
         F.count("*").alias("n_chunks"),
         F.countDistinct("id").alias("n_docs"),
     ).collect()[0]
-    meta = {
-        "fingerprint": _source_fingerprint(sf_dir, table="documents"),
+    return artifact.save_meta(path, "chunk", {
+        "fingerprint": artifact.source_fingerprint(sf_dir, "documents"),
         "params": {"c": c, "nb": N_BUCKETS, "index_where": index_where},
         "n_docs": int(agg.n_docs),
         "n_chunks": int(agg.n_chunks),
-    }
-    with open(os.path.join(path, _META_NAME), "w") as f:
-        json.dump(meta, f)
-    return meta
+    })
 
 
 def ensure_chunk_index(
@@ -165,31 +150,16 @@ def ensure_chunk_index(
     c: int = 8,
     index_where: str = "",
 ) -> tuple[str, dict]:
-    """Build-if-absent-or-stale (the vector_index.ensure_* contract),
-    keyed by corpus basename + optional variant; params + predicate
-    are part of the staleness check."""
-    from lol_data_pipeline_spark.operators.vector_index import (
-        _source_fingerprint,
+    """Build-if-absent-or-stale (:func:`artifact.ensure`); params +
+    predicate are part of the staleness check."""
+    return artifact.ensure(
+        "chunk", sf_dir, "documents",
+        {"c": c, "nb": N_BUCKETS, "index_where": index_where},
+        lambda path: build_chunk_index(
+            spark, sf_dir, path, c=c, index_where=index_where
+        ),
+        root, variant,
     )
-
-    root = root or CHUNK_ROOT
-    name = os.path.basename(os.path.normpath(sf_dir)) + (
-        f"_{variant}" if variant else ""
-    )
-    path = os.path.join(root, f"chunk_{name}")
-    meta_path = os.path.join(path, _META_NAME)
-    want_fp = _source_fingerprint(sf_dir, table="documents")
-    want_params = {"c": c, "nb": N_BUCKETS, "index_where": index_where}
-    try:
-        with open(meta_path) as f:
-            meta = json.load(f)
-        if meta.get("fingerprint") == want_fp and meta.get("params") == want_params:
-            return path, meta
-    except (OSError, ValueError):
-        pass
-    os.makedirs(path, exist_ok=True)
-    meta = build_chunk_index(spark, sf_dir, path, c=c, index_where=index_where)
-    return path, meta
 
 
 def served_chunk_clean(
@@ -243,6 +213,26 @@ def served_chunk_clean(
     )
 
 
+def _settle(
+    spark: SparkSession, path: str, meta: dict, kind: str, **fields
+) -> dict:
+    """After a write: fold at quota, then recount the view into the
+    sidecar (rows as ``n_chunks`` or ``n_grams``, by ``kind``)."""
+    lsm_maybe_compact(
+        spark, chunks_path(path), "id", ["hb"], sort_within=["h"]
+    )
+    read, n_rows = (
+        (read_chunk_rows, "n_chunks") if kind == "chunk"
+        else (read_ngram_rows, "n_grams")
+    )
+    agg = read(spark, path).agg(
+        F.count("*").alias("n"), F.countDistinct("id").alias("n_docs")
+    ).collect()[0]
+    return artifact.save_meta(path, kind, {
+        **meta, "n_docs": int(agg.n_docs), n_rows: int(agg.n), **fields
+    })
+
+
 def chunk_index_upsert(
     spark: SparkSession, path: str, meta: dict, new_docs: DataFrame
 ) -> dict:
@@ -259,19 +249,7 @@ def chunk_index_upsert(
         .count()
     )  # bounded collect: one count (column-pruned id scan)
     lsm_upsert(spark, chunks_path(path), rows, "id", ["hb"])
-    lsm_maybe_compact(
-        spark, chunks_path(path), "id", ["hb"], sort_within=["h"]
-    )
-    disk = read_chunk_rows(spark, path)
-    agg = disk.agg(
-        F.count("*").alias("n_chunks"), F.countDistinct("id").alias("n_docs")
-    ).collect()[0]
-    meta = dict(meta)
-    meta["n_docs"], meta["n_chunks"] = int(agg.n_docs), int(agg.n_chunks)
-    meta["replaced_last_upsert"] = int(replaced)
-    with open(os.path.join(path, _META_NAME), "w") as f:
-        json.dump(meta, f)
-    return meta
+    return _settle(spark, path, meta, "chunk", replaced_last_upsert=int(replaced))
 
 
 def chunk_index_delete(
@@ -285,19 +263,7 @@ def chunk_index_delete(
     Idempotent."""
     ids = doomed_ids.select(F.col("doc_id").alias("id")).distinct()
     lsm_delete(spark, chunks_path(path), ids, "id")
-    lsm_maybe_compact(
-        spark, chunks_path(path), "id", ["hb"], sort_within=["h"]
-    )
-    disk = read_chunk_rows(spark, path)
-    agg = disk.agg(
-        F.count("*").alias("n_chunks"),
-        F.countDistinct("id").alias("n_docs"),
-    ).collect()[0]
-    meta = dict(meta)
-    meta["n_docs"], meta["n_chunks"] = int(agg.n_docs), int(agg.n_chunks)
-    with open(os.path.join(path, _META_NAME), "w") as f:
-        json.dump(meta, f)
-    return meta
+    return _settle(spark, path, meta, "chunk")
 
 
 def _batch_ngram_rows(docs: DataFrame, n: int) -> DataFrame:
@@ -330,10 +296,6 @@ def build_ngram_index(
     TRAINING side goes at rest here: benchmarks change, the corpus is
     static, so contamination checks against a new benchmark must not
     re-shingle 100 TB."""
-    from lol_data_pipeline_spark.operators.vector_index import (
-        _source_fingerprint,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     if index_where:
         docs = docs.filter(F.expr(index_where))
@@ -348,15 +310,12 @@ def build_ngram_index(
     agg = disk.agg(
         F.count("*").alias("n_grams"), F.countDistinct("id").alias("n_docs")
     ).collect()[0]
-    meta = {
-        "fingerprint": _source_fingerprint(sf_dir, table="documents"),
+    return artifact.save_meta(path, "ngram", {
+        "fingerprint": artifact.source_fingerprint(sf_dir, "documents"),
         "params": {"n": n, "nb": N_BUCKETS, "index_where": index_where},
         "n_docs": int(agg.n_docs),
         "n_grams": int(agg.n_grams),
-    }
-    with open(os.path.join(path, _META_NAME), "w") as f:
-        json.dump(meta, f)
-    return meta
+    })
 
 
 def ensure_ngram_index(
@@ -370,28 +329,14 @@ def ensure_ngram_index(
     """Build-if-absent-or-stale for the n-gram artifact (the
     ensure_* contract; own path family so a chunk index and an n-gram
     index over the same corpus coexist)."""
-    from lol_data_pipeline_spark.operators.vector_index import (
-        _source_fingerprint,
+    return artifact.ensure(
+        "ngram", sf_dir, "documents",
+        {"n": n, "nb": N_BUCKETS, "index_where": index_where},
+        lambda path: build_ngram_index(
+            spark, sf_dir, path, n=n, index_where=index_where
+        ),
+        root, variant,
     )
-
-    root = root or CHUNK_ROOT
-    name = os.path.basename(os.path.normpath(sf_dir)) + (
-        f"_{variant}" if variant else ""
-    )
-    path = os.path.join(root, f"ngram_{name}")
-    meta_path = os.path.join(path, _META_NAME)
-    want_fp = _source_fingerprint(sf_dir, table="documents")
-    want_params = {"n": n, "nb": N_BUCKETS, "index_where": index_where}
-    try:
-        with open(meta_path) as f:
-            meta = json.load(f)
-        if meta.get("fingerprint") == want_fp and meta.get("params") == want_params:
-            return path, meta
-    except (OSError, ValueError):
-        pass
-    os.makedirs(path, exist_ok=True)
-    meta = build_ngram_index(spark, sf_dir, path, n=n, index_where=index_where)
-    return path, meta
 
 
 def served_contamination(
@@ -449,19 +394,7 @@ def ngram_index_upsert(
         .count()
     )  # bounded collect: one count (column-pruned id scan)
     lsm_upsert(spark, chunks_path(path), rows, "id", ["hb"])
-    lsm_maybe_compact(
-        spark, chunks_path(path), "id", ["hb"], sort_within=["h"]
-    )
-    disk = read_ngram_rows(spark, path)
-    agg = disk.agg(
-        F.count("*").alias("n_grams"), F.countDistinct("id").alias("n_docs")
-    ).collect()[0]
-    meta = dict(meta)
-    meta["n_docs"], meta["n_grams"] = int(agg.n_docs), int(agg.n_grams)
-    meta["replaced_last_upsert"] = int(replaced)
-    with open(os.path.join(path, _META_NAME), "w") as f:
-        json.dump(meta, f)
-    return meta
+    return _settle(spark, path, meta, "ngram", replaced_last_upsert=int(replaced))
 
 
 def ngram_index_delete(
@@ -474,16 +407,4 @@ def ngram_index_delete(
     Idempotent."""
     ids = doomed_ids.select(F.col("doc_id").alias("id")).distinct()
     lsm_delete(spark, chunks_path(path), ids, "id")
-    lsm_maybe_compact(
-        spark, chunks_path(path), "id", ["hb"], sort_within=["h"]
-    )
-    disk = read_ngram_rows(spark, path)
-    agg = disk.agg(
-        F.count("*").alias("n_grams"),
-        F.countDistinct("id").alias("n_docs"),
-    ).collect()[0]
-    meta = dict(meta)
-    meta["n_docs"], meta["n_grams"] = int(agg.n_docs), int(agg.n_grams)
-    with open(os.path.join(path, _META_NAME), "w") as f:
-        json.dump(meta, f)
-    return meta
+    return _settle(spark, path, meta, "ngram")

@@ -379,39 +379,20 @@ def ensure_power_dirs(
     JSON round-trips IEEE doubles exactly (repr/float), so the served
     directions are bit-equal to a fresh power_topr run — the
     emb_power_topr oracle parity is the standing proof."""
-    import json
-    import os
-
     from lol_data_pipeline_spark.io import load_table
-    from lol_data_pipeline_spark.operators.vector_index import (
-        _source_fingerprint,
-    )
+    from lol_data_pipeline_spark.operators import artifact
 
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    root = root or os.environ.get(
-        "SPARK_GRAFT_POWER_DIRS_DIR",
-        os.path.join(repo_root, "spark-warehouse", "power_dirs"),
-    )
-    name = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(root, f"dirs_{name}")
-    meta_path = os.path.join(path, "_dirs_meta.json")
-    want_fp = _source_fingerprint(sf_dir, table="embeddings")
-    want_params = {"r": r, "rounds": rounds, "dim": dim}
-    try:
-        with open(meta_path) as f:
-            meta = json.load(f)
-        if meta.get("fingerprint") == want_fp and meta.get("params") == want_params:
-            return [[float(x) for x in v] for v in meta["dirs"]]
-    except (OSError, ValueError):
-        pass
-    dirs = power_topr(
-        load_table(spark, sf_dir, "embeddings"), r=r, rounds=rounds, dim=dim
-    )
-    os.makedirs(path, exist_ok=True)
-    with open(meta_path, "w") as f:
-        json.dump(
-            {"fingerprint": want_fp, "params": want_params, "dirs": dirs}, f
+    params = {"r": r, "rounds": rounds, "dim": dim}
+
+    def build(path: str) -> dict:
+        dirs = power_topr(
+            load_table(spark, sf_dir, "embeddings"), r=r, rounds=rounds, dim=dim
         )
-    return dirs
+        return artifact.save_meta(path, "dirs", {
+            "fingerprint": artifact.source_fingerprint(sf_dir, "embeddings"),
+            "params": params,
+            "dirs": dirs,
+        })
+
+    _path, meta = artifact.ensure("dirs", sf_dir, "embeddings", params, build, root)
+    return [[float(x) for x in v] for v in meta["dirs"]]

@@ -54,8 +54,6 @@ this is the same build-once/serve-many contract for the graph family.
 
 from __future__ import annotations
 
-import hashlib
-import json
 import os
 import shutil
 
@@ -68,6 +66,7 @@ from lol_data_pipeline_spark.io import (
     write_overwrite,
     write_upsert_partitions,
 )
+from lol_data_pipeline_spark.operators import artifact
 from lol_data_pipeline_spark.operators.lsm import (
     lsm_delete,
     lsm_maybe_compact,
@@ -76,15 +75,6 @@ from lol_data_pipeline_spark.operators.lsm import (
     lsm_view,
 )
 from lol_data_pipeline_spark.operators.similarity import dot, with_norm
-
-_REPO_ROOT = os.path.dirname(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-)
-GRAPH_ROOT = os.environ.get(
-    "SPARK_GRAFT_GRAPH_INDEX_DIR",
-    os.path.join(_REPO_ROOT, "spark-warehouse", "graph_index"),
-)
-_META_NAME = "_graph_meta.json"
 
 
 def assign_codes(
@@ -159,14 +149,6 @@ def bucket_edges(nodes: DataFrame, k: int) -> DataFrame:
     )
 
 
-def _source_fingerprint(sf_dir: str, table: str = "embeddings") -> str:
-    from lol_data_pipeline_spark.operators.vector_index import (
-        _source_fingerprint as fp,
-    )
-
-    return fp(sf_dir, table)
-
-
 def nodes_path(path: str) -> str:
     return os.path.join(path, "nodes")
 
@@ -203,14 +185,11 @@ def build_knn_graph_index(
     write_overwrite(
         bucket_edges(stored, k), edges_path(path), partition_by=["code"]
     )
-    meta = {
-        "fingerprint": _source_fingerprint(sf_dir),
+    return artifact.save_meta(path, "knn", {
+        "fingerprint": artifact.source_fingerprint(sf_dir, "embeddings"),
         "params": {"n_planes": n_planes, "k": k},
         "planes": planes,
-    }
-    with open(os.path.join(path, _META_NAME), "w") as f:
-        json.dump(meta, f)
-    return meta
+    })
 
 
 def ensure_knn_graph_index(
@@ -221,29 +200,14 @@ def ensure_knn_graph_index(
     n_planes: int = 6,
     k: int = 3,
 ) -> tuple[str, dict]:
-    """Build-if-absent-or-stale (the vector_index.ensure_* contract):
-    keyed by corpus basename + optional variant (maintenance entries
-    mutate their OWN copy so the served read-only index never sees
-    synthetic batches). Staleness = source fingerprint or params
-    changed."""
-    root = root or GRAPH_ROOT
-    name = os.path.basename(os.path.normpath(sf_dir)) + (
-        f"_{variant}" if variant else ""
+    """Build-if-absent-or-stale (:func:`artifact.ensure`)."""
+    return artifact.ensure(
+        "knn", sf_dir, "embeddings", {"n_planes": n_planes, "k": k},
+        lambda path: build_knn_graph_index(
+            spark, sf_dir, path, n_planes=n_planes, k=k
+        ),
+        root, variant,
     )
-    path = os.path.join(root, f"knn_{name}")
-    meta_path = os.path.join(path, _META_NAME)
-    want_fp = _source_fingerprint(sf_dir)
-    params = {"n_planes": n_planes, "k": k}
-    try:
-        with open(meta_path) as f:
-            meta = json.load(f)
-        if meta.get("fingerprint") == want_fp and meta.get("params") == params:
-            return path, meta
-    except (OSError, ValueError):
-        pass
-    os.makedirs(path, exist_ok=True)
-    meta = build_knn_graph_index(spark, sf_dir, path, n_planes=n_planes, k=k)
-    return path, meta
 
 
 def read_edges(

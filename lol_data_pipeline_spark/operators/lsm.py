@@ -113,6 +113,15 @@ def _next_epoch(table_dir: str) -> int:
     return (eps[-1] + 1) if eps else 1
 
 
+def _refresh(spark: SparkSession, table_dir: str) -> None:
+    """Invalidate cached plans over the table after its files change.
+    The path prefix also covers the ``__delta``/``__tomb`` logs. A
+    compaction restarts the epochs at 1, so a view plan after it can
+    equal one cached before the writes; without this, the cache would
+    serve that plan's old rows."""
+    spark.catalog.refreshByPath(table_dir)
+
+
 def lsm_reset(table_dir: str) -> None:
     """Drop the delta/tombstone logs — a full REBUILD writes a fresh
     base, so stale logs from a previous generation must not leak into
@@ -242,6 +251,7 @@ def lsm_upsert(
     )
     _write_epoch(ids.select(id_col).distinct(), tomb_path(table_dir), epoch, [])
     _write_epoch(rows, delta_path(table_dir), epoch, partition_by)
+    _refresh(spark, table_dir)
     return {
         "epoch": epoch,
         "delta_bytes": dir_bytes(
@@ -263,6 +273,7 @@ def lsm_delete(
     format's VACUUM)."""
     epoch = _next_epoch(table_dir)
     _write_epoch(ids.select(id_col).distinct(), tomb_path(table_dir), epoch, [])
+    _refresh(spark, table_dir)
     return {
         "epoch": epoch,
         "tomb_bytes": dir_bytes(
@@ -297,6 +308,7 @@ def lsm_compact(
             view.coalesce(1).write.parquet(staged)
         else:
             lsm_reset(table_dir)
+            _refresh(spark, table_dir)
             return False
     else:
         out = view.repartition(*partition_by)
@@ -309,6 +321,7 @@ def lsm_compact(
     os.rename(staged, table_dir)
     shutil.rmtree(old, ignore_errors=True)
     lsm_reset(table_dir)
+    _refresh(spark, table_dir)
     return True
 
 

@@ -40,7 +40,6 @@ contract, dedup axis.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -48,6 +47,7 @@ from pyspark.sql import functions as F
 
 from lol_data_pipeline_spark.caching import tracked_persist
 from lol_data_pipeline_spark.io import load_table, write_overwrite
+from lol_data_pipeline_spark.operators import artifact
 from lol_data_pipeline_spark.operators.lsm import (
     lsm_delete,
     lsm_maybe_compact,
@@ -64,16 +64,6 @@ from lol_data_pipeline_spark.operators.dedup import (
     md5_long,
     minhash_band_buckets,
 )
-
-_REPO_ROOT = os.path.dirname(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-)
-MINHASH_ROOT = os.environ.get(
-    "SPARK_GRAFT_MINHASH_INDEX_DIR",
-    os.path.join(_REPO_ROOT, "spark-warehouse", "minhash_index"),
-)
-_META_NAME = "_minhash_meta.json"
-
 
 def buckets_path(path: str) -> str:
     return os.path.join(path, "buckets")
@@ -121,10 +111,6 @@ def build_minhash_index(
     bucket rows, bkey-sorted within files, + params/fingerprint
     sidecar. ``index_where`` (SQL over documents) selects the index
     side — '' means the whole corpus."""
-    from lol_data_pipeline_spark.operators.vector_index import (
-        _source_fingerprint,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     if index_where:
         docs = docs.filter(F.expr(index_where))
@@ -141,14 +127,11 @@ def build_minhash_index(
         .distinct()
         .count()
     )
-    meta = {
-        "fingerprint": _source_fingerprint(sf_dir, table="documents"),
+    return artifact.save_meta(path, "minhash", {
+        "fingerprint": artifact.source_fingerprint(sf_dir, "documents"),
         "params": {"k": k, "bands": bands, "n": n, "index_where": index_where},
         "n_docs": int(n_docs),
-    }
-    with open(os.path.join(path, _META_NAME), "w") as f:
-        json.dump(meta, f)
-    return meta
+    })
 
 
 def ensure_minhash_index(
@@ -161,33 +144,16 @@ def ensure_minhash_index(
     n: int = 3,
     index_where: str = "",
 ) -> tuple[str, dict]:
-    """Build-if-absent-or-stale (the vector_index.ensure_* contract),
-    keyed by corpus basename + optional variant; params + predicate
-    are part of the staleness check."""
-    from lol_data_pipeline_spark.operators.vector_index import (
-        _source_fingerprint,
+    """Build-if-absent-or-stale (:func:`artifact.ensure`); params +
+    predicate are part of the staleness check."""
+    return artifact.ensure(
+        "minhash", sf_dir, "documents",
+        {"k": k, "bands": bands, "n": n, "index_where": index_where},
+        lambda path: build_minhash_index(
+            spark, sf_dir, path, k=k, bands=bands, n=n, index_where=index_where
+        ),
+        root, variant,
     )
-
-    root = root or MINHASH_ROOT
-    name = os.path.basename(os.path.normpath(sf_dir)) + (
-        f"_{variant}" if variant else ""
-    )
-    path = os.path.join(root, f"minhash_{name}")
-    meta_path = os.path.join(path, _META_NAME)
-    want_fp = _source_fingerprint(sf_dir, table="documents")
-    want_params = {"k": k, "bands": bands, "n": n, "index_where": index_where}
-    try:
-        with open(meta_path) as f:
-            meta = json.load(f)
-        if meta.get("fingerprint") == want_fp and meta.get("params") == want_params:
-            return path, meta
-    except (OSError, ValueError):
-        pass
-    os.makedirs(path, exist_ok=True)
-    meta = build_minhash_index(
-        spark, sf_dir, path, k=k, bands=bands, n=n, index_where=index_where
-    )
-    return path, meta
 
 
 def served_minhash_probe(
@@ -244,6 +210,15 @@ def served_minhash_probe(
     )
 
 
+def _settle(spark: SparkSession, path: str, meta: dict) -> dict:
+    """After a write: fold at quota, recount the view into the sidecar."""
+    lsm_maybe_compact(
+        spark, buckets_path(path), "id", ["band"], sort_within=["bkey"]
+    )
+    n_docs = read_minhash_buckets(spark, path).select("id").distinct().count()
+    return artifact.save_meta(path, "minhash", {**meta, "n_docs": int(n_docs)})
+
+
 def minhash_index_upsert(
     spark: SparkSession, path: str, meta: dict, new_docs: DataFrame
 ) -> dict:
@@ -256,15 +231,7 @@ def minhash_index_upsert(
     p = meta["params"]
     buckets = _batch_buckets(new_docs, p["k"], p["bands"], p["n"])
     lsm_upsert(spark, buckets_path(path), buckets, "id", ["band"])
-    lsm_maybe_compact(
-        spark, buckets_path(path), "id", ["band"], sort_within=["bkey"]
-    )
-    n_docs = read_minhash_buckets(spark, path).select("id").distinct().count()
-    meta = dict(meta)
-    meta["n_docs"] = int(n_docs)
-    with open(os.path.join(path, _META_NAME), "w") as f:
-        json.dump(meta, f)
-    return meta
+    return _settle(spark, path, meta)
 
 
 def minhash_index_delete(
@@ -275,15 +242,7 @@ def minhash_index_delete(
     next compact; the sidecar count shrinks exactly. Idempotent."""
     ids = doomed_ids.select(F.col("doc_id").alias("id")).distinct()
     lsm_delete(spark, buckets_path(path), ids, "id")
-    lsm_maybe_compact(
-        spark, buckets_path(path), "id", ["band"], sort_within=["bkey"]
-    )
-    n_docs = read_minhash_buckets(spark, path).select("id").distinct().count()
-    meta = dict(meta)
-    meta["n_docs"] = int(n_docs)
-    with open(os.path.join(path, _META_NAME), "w") as f:
-        json.dump(meta, f)
-    return meta
+    return _settle(spark, path, meta)
 
 
 def minhash_sql_ctes(

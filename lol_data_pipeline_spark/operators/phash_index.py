@@ -42,13 +42,13 @@ contract, image axis.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lol_data_pipeline_spark.io import load_table, write_overwrite
+from lol_data_pipeline_spark.operators import artifact
 from lol_data_pipeline_spark.operators.lsm import (
     lsm_delete,
     lsm_maybe_compact,
@@ -58,14 +58,6 @@ from lol_data_pipeline_spark.operators.lsm import (
 )
 from lol_data_pipeline_spark.operators.multimodal import media_dhash_frame
 
-_REPO_ROOT = os.path.dirname(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-)
-PHASH_ROOT = os.environ.get(
-    "SPARK_GRAFT_PHASH_INDEX_DIR",
-    os.path.join(_REPO_ROOT, "spark-warehouse", "phash_index"),
-)
-_META_NAME = "_phash_meta.json"
 BITS = 64
 MAX_HAMMING = 3
 N_BANDS = MAX_HAMMING + 1  # pigeonhole: d<=3 shares >=1 of 4 bands
@@ -149,6 +141,22 @@ def frame_media(docs: DataFrame, frames: list[int]) -> DataFrame:
     )
 
 
+def _params(index_where: str, frames: list[int] | None, signer: str) -> dict:
+    params = {
+        "bits": BITS,
+        "max_hamming": MAX_HAMMING,
+        "bands": N_BANDS,
+        "index_where": index_where,
+    }
+    if frames:
+        # only present in frame mode, so image-mode sidecars written
+        # before the video axis existed stay valid
+        params["frames"] = [int(f) for f in frames]
+    if signer != "image":
+        params["signer"] = signer  # same back-compat rule
+    return params
+
+
 def build_phash_index(
     spark: SparkSession,
     sf_dir: str,
@@ -162,10 +170,6 @@ def build_phash_index(
     sidecar. ``frames``: index per-clip sampled FRAMES instead of
     one image per doc (the video axis — frame_media). ``signer``:
     the modality kernel (image dHash / audio energy hash)."""
-    from lol_data_pipeline_spark.operators.vector_index import (
-        _source_fingerprint,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     if index_where:
         docs = docs.filter(F.expr(index_where))
@@ -179,26 +183,11 @@ def build_phash_index(
     lsm_reset(bands_path(path))  # a rebuild starts a fresh generation
     disk = spark.read.parquet(bands_path(path))
     n_docs = disk.select("id").distinct().count()
-    params = {
-        "bits": BITS,
-        "max_hamming": MAX_HAMMING,
-        "bands": N_BANDS,
-        "index_where": index_where,
-    }
-    if frames:
-        # only present in frame mode, so image-mode sidecars written
-        # before the video axis existed stay valid
-        params["frames"] = [int(f) for f in frames]
-    if signer != "image":
-        params["signer"] = signer  # same back-compat rule
-    meta = {
-        "fingerprint": _source_fingerprint(sf_dir, table="documents"),
-        "params": params,
+    return artifact.save_meta(path, "phash", {
+        "fingerprint": artifact.source_fingerprint(sf_dir, "documents"),
+        "params": _params(index_where, frames, signer),
         "n_docs": int(n_docs),
-    }
-    with open(os.path.join(path, _META_NAME), "w") as f:
-        json.dump(meta, f)
-    return meta
+    })
 
 
 def ensure_phash_index(
@@ -213,40 +202,14 @@ def ensure_phash_index(
     """Build-if-absent-or-stale (the ensure_* contract); ``frames``
     selects the video-frame axis and ``signer`` the modality kernel
     (both part of the staleness key)."""
-    from lol_data_pipeline_spark.operators.vector_index import (
-        _source_fingerprint,
+    return artifact.ensure(
+        "phash", sf_dir, "documents", _params(index_where, frames, signer),
+        lambda path: build_phash_index(
+            spark, sf_dir, path, index_where=index_where, frames=frames,
+            signer=signer,
+        ),
+        root, variant,
     )
-
-    root = root or PHASH_ROOT
-    name = os.path.basename(os.path.normpath(sf_dir)) + (
-        f"_{variant}" if variant else ""
-    )
-    path = os.path.join(root, f"phash_{name}")
-    meta_path = os.path.join(path, _META_NAME)
-    want_fp = _source_fingerprint(sf_dir, table="documents")
-    want_params = {
-        "bits": BITS,
-        "max_hamming": MAX_HAMMING,
-        "bands": N_BANDS,
-        "index_where": index_where,
-    }
-    if frames:
-        want_params["frames"] = [int(f) for f in frames]
-    if signer != "image":
-        want_params["signer"] = signer
-    try:
-        with open(meta_path) as f:
-            meta = json.load(f)
-        if meta.get("fingerprint") == want_fp and meta.get("params") == want_params:
-            return path, meta
-    except (OSError, ValueError):
-        pass
-    os.makedirs(path, exist_ok=True)
-    meta = build_phash_index(
-        spark, sf_dir, path, index_where=index_where, frames=frames,
-        signer=signer,
-    )
-    return path, meta
 
 
 def served_phash_pairs(
@@ -284,6 +247,15 @@ def served_phash_pairs(
     )
 
 
+def _settle(spark: SparkSession, path: str, meta: dict) -> dict:
+    """After a write: fold at quota, recount the view into the sidecar."""
+    lsm_maybe_compact(
+        spark, bands_path(path), "id", ["band"], sort_within=["chunk"]
+    )
+    n_docs = read_phash_rows(spark, path).select("id").distinct().count()
+    return artifact.save_meta(path, "phash", {**meta, "n_docs": int(n_docs)})
+
+
 def phash_index_upsert(
     spark: SparkSession, path: str, meta: dict, new_media: DataFrame
 ) -> dict:
@@ -297,15 +269,7 @@ def phash_index_upsert(
         new_media, signer=meta["params"].get("signer", "image")
     )
     lsm_upsert(spark, bands_path(path), rows, "id", ["band"])
-    lsm_maybe_compact(
-        spark, bands_path(path), "id", ["band"], sort_within=["chunk"]
-    )
-    n_docs = read_phash_rows(spark, path).select("id").distinct().count()
-    meta = dict(meta)
-    meta["n_docs"] = int(n_docs)
-    with open(os.path.join(path, _META_NAME), "w") as f:
-        json.dump(meta, f)
-    return meta
+    return _settle(spark, path, meta)
 
 
 def phash_index_delete(
@@ -316,15 +280,7 @@ def phash_index_delete(
     compact; the sidecar count shrinks exactly. Idempotent."""
     ids = doomed_ids.select(F.col("media_id").alias("id")).distinct()
     lsm_delete(spark, bands_path(path), ids, "id")
-    lsm_maybe_compact(
-        spark, bands_path(path), "id", ["band"], sort_within=["chunk"]
-    )
-    n_docs = read_phash_rows(spark, path).select("id").distinct().count()
-    meta = dict(meta)
-    meta["n_docs"] = int(n_docs)
-    with open(os.path.join(path, _META_NAME), "w") as f:
-        json.dump(meta, f)
-    return meta
+    return _settle(spark, path, meta)
 
 
 def phash_index_compact(spark: SparkSession, path: str, meta: dict) -> dict:

@@ -31,7 +31,6 @@ contract, mergeable-aggregate axis.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
@@ -43,15 +42,10 @@ from lol_data_pipeline_spark.io import (
     write_overwrite,
     write_upsert_partitions,
 )
+from lol_data_pipeline_spark.operators import artifact
 
-_REPO_ROOT = os.path.dirname(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-)
-SKETCH_ROOT = os.environ.get(
-    "SPARK_GRAFT_SKETCH_INDEX_DIR",
-    os.path.join(_REPO_ROOT, "spark-warehouse", "sketch_index"),
-)
-_META_NAME = "_sketch_meta.json"
+
+REGS_DDL = "idx long, m_j int, day date"
 
 
 def regs_path(path: str) -> str:
@@ -67,30 +61,26 @@ def _day_regs(ev: DataFrame) -> DataFrame:
     return hll_day_registers(ev)
 
 
+def _counts(spark: SparkSession, path: str) -> dict:
+    agg = spark.read.schema(REGS_DDL).parquet(regs_path(path)).agg(
+        F.count("*").alias("n_rows"), F.countDistinct("day").alias("n_days")
+    ).collect()[0]
+    return {"n_days": int(agg.n_days), "n_rows": int(agg.n_rows)}
+
+
 def build_hll_index(spark: SparkSession, sf_dir: str, path: str) -> dict:
     """One distinct-pass over events → day-partitioned registers +
     sidecar (HLL params, counts, source fingerprint)."""
-    from lol_data_pipeline_spark.operators.vector_index import (
-        _source_fingerprint,
-    )
     from lol_data_pipeline_spark.plans.sketches import _HLL_M, _HLL_P
 
     ev = load_table(spark, sf_dir, "events")
     regs = _day_regs(ev).repartition("day").sortWithinPartitions("idx")
     write_overwrite(regs, regs_path(path), partition_by=["day"])
-    disk = spark.read.parquet(regs_path(path))
-    agg = disk.agg(
-        F.count("*").alias("n_rows"), F.countDistinct("day").alias("n_days")
-    ).collect()[0]
-    meta = {
-        "fingerprint": _source_fingerprint(sf_dir, table="events"),
+    return artifact.save_meta(path, "hll", {
+        "fingerprint": artifact.source_fingerprint(sf_dir, "events"),
         "params": {"p": _HLL_P, "m": _HLL_M},
-        "n_days": int(agg.n_days),
-        "n_rows": int(agg.n_rows),
-    }
-    with open(os.path.join(path, _META_NAME), "w") as f:
-        json.dump(meta, f)
-    return meta
+        **_counts(spark, path),
+    })
 
 
 def ensure_hll_index(
@@ -99,30 +89,14 @@ def ensure_hll_index(
     root: str | None = None,
     variant: str = "",
 ) -> tuple[str, dict]:
-    """Build-if-absent-or-stale (the vector_index.ensure_* contract)."""
-    from lol_data_pipeline_spark.operators.vector_index import (
-        _source_fingerprint,
-    )
+    """Build-if-absent-or-stale (:func:`artifact.ensure`)."""
     from lol_data_pipeline_spark.plans.sketches import _HLL_M, _HLL_P
 
-    root = root or SKETCH_ROOT
-    name = os.path.basename(os.path.normpath(sf_dir)) + (
-        f"_{variant}" if variant else ""
+    return artifact.ensure(
+        "hll", sf_dir, "events", {"p": _HLL_P, "m": _HLL_M},
+        lambda path: build_hll_index(spark, sf_dir, path),
+        root, variant,
     )
-    path = os.path.join(root, f"hll_{name}")
-    meta_path = os.path.join(path, _META_NAME)
-    want_fp = _source_fingerprint(sf_dir, table="events")
-    want_params = {"p": _HLL_P, "m": _HLL_M}
-    try:
-        with open(meta_path) as f:
-            meta = json.load(f)
-        if meta.get("fingerprint") == want_fp and meta.get("params") == want_params:
-            return path, meta
-    except (OSError, ValueError):
-        pass
-    os.makedirs(path, exist_ok=True)
-    meta = build_hll_index(spark, sf_dir, path)
-    return path, meta
 
 
 def served_hll_rolling(spark: SparkSession, path: str) -> DataFrame:
@@ -132,7 +106,7 @@ def served_hll_rolling(spark: SparkSession, path: str) -> DataFrame:
     carries the exact answer alongside as its error envelope)."""
     from lol_data_pipeline_spark.plans.sketches import hll_rolling_estimate
 
-    day_regs = spark.read.schema("idx long, m_j int, day date").parquet(
+    day_regs = spark.read.schema(REGS_DDL).parquet(
         regs_path(path)
     ).select(
         "day", F.col("idx").cast("long").alias("idx"), "m_j"
@@ -163,15 +137,7 @@ def hll_index_upsert(
         .localCheckpoint()
     )
     write_upsert_partitions(merged, regs_path(path), ["day"])
-    disk = spark.read.parquet(regs_path(path))
-    agg = disk.agg(
-        F.count("*").alias("n_rows"), F.countDistinct("day").alias("n_days")
-    ).collect()[0]
-    meta = dict(meta)
-    meta["n_days"], meta["n_rows"] = int(agg.n_days), int(agg.n_rows)
-    with open(os.path.join(path, _META_NAME), "w") as f:
-        json.dump(meta, f)
-    return meta
+    return artifact.save_meta(path, "hll", {**meta, **_counts(spark, path)})
 
 
 def hll_index_retention_drop(
@@ -188,19 +154,9 @@ def hll_index_retention_drop(
             os.path.join(regs_path(path), f"day={d.isoformat()}"),
             ignore_errors=True,
         )
-    meta = dict(meta)
     if len(doomed) == len(days):
         # keep_from beyond the newest day: every partition dropped —
         # re-reading the emptied directory would throw (unable to
         # infer schema) and leave the sidecar stale (r12 ADVICE).
-        meta["n_days"], meta["n_rows"] = 0, 0
-    else:
-        disk = spark.read.parquet(regs_path(path))
-        agg = disk.agg(
-            F.count("*").alias("n_rows"),
-            F.countDistinct("day").alias("n_days"),
-        ).collect()[0]
-        meta["n_days"], meta["n_rows"] = int(agg.n_days), int(agg.n_rows)
-    with open(os.path.join(path, _META_NAME), "w") as f:
-        json.dump(meta, f)
-    return meta
+        return artifact.save_meta(path, "hll", {**meta, "n_days": 0, "n_rows": 0})
+    return artifact.save_meta(path, "hll", {**meta, **_counts(spark, path)})

@@ -49,7 +49,6 @@ serve-many contract, lexical axis.
 
 from __future__ import annotations
 
-import json
 import os
 import zlib
 
@@ -58,6 +57,7 @@ from pyspark.sql import functions as F
 
 from lol_data_pipeline_spark.functions.text import tokens
 from lol_data_pipeline_spark.io import load_table, widen, write_overwrite
+from lol_data_pipeline_spark.operators import artifact
 from lol_data_pipeline_spark.operators.lsm import (
     lsm_delete,
     lsm_maybe_compact,
@@ -68,14 +68,6 @@ from lol_data_pipeline_spark.operators.lsm import (
 from lol_data_pipeline_spark.operators.relational import global_topk_ranked
 from lol_data_pipeline_spark.operators.search import bm25_weight_sql
 
-_REPO_ROOT = os.path.dirname(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-)
-TEXT_ROOT = os.environ.get(
-    "SPARK_GRAFT_TEXT_INDEX_DIR",
-    os.path.join(_REPO_ROOT, "spark-warehouse", "text_index"),
-)
-_META_NAME = "_text_meta.json"
 _NB = 16  # term/doc bucket count
 
 
@@ -165,19 +157,12 @@ def build_bm25_index(spark: SparkSession, sf_dir: str, path: str) -> dict:
         )
         .collect()[0]
     )
-    from lol_data_pipeline_spark.operators.vector_index import (
-        _source_fingerprint,
-    )
-
-    meta = {
-        "fingerprint": _source_fingerprint(sf_dir, table="documents"),
+    return artifact.save_meta(path, "bm25", {
+        "fingerprint": artifact.source_fingerprint(sf_dir, "documents"),
         "params": {"nb": _NB},
         "n_docs": int(row.n),
         "total_tokens": int(row.tot),
-    }
-    with open(os.path.join(path, _META_NAME), "w") as f:
-        json.dump(meta, f)
-    return meta
+    })
 
 
 def ensure_bm25_index(
@@ -186,31 +171,12 @@ def ensure_bm25_index(
     root: str | None = None,
     variant: str = "",
 ) -> tuple[str, dict]:
-    """Build-if-absent-or-stale (the vector_index.ensure_* contract),
-    keyed by corpus basename + optional variant."""
-    from lol_data_pipeline_spark.operators.vector_index import (
-        _source_fingerprint,
+    """Build-if-absent-or-stale (:func:`artifact.ensure`)."""
+    return artifact.ensure(
+        "bm25", sf_dir, "documents", {"nb": _NB},
+        lambda path: build_bm25_index(spark, sf_dir, path),
+        root, variant,
     )
-
-    root = root or TEXT_ROOT
-    name = os.path.basename(os.path.normpath(sf_dir)) + (
-        f"_{variant}" if variant else ""
-    )
-    path = os.path.join(root, f"bm25_{name}")
-    meta_path = os.path.join(path, _META_NAME)
-    want_fp = _source_fingerprint(sf_dir, table="documents")
-    try:
-        with open(meta_path) as f:
-            meta = json.load(f)
-        if meta.get("fingerprint") == want_fp and meta.get("params") == {
-            "nb": _NB
-        }:
-            return path, meta
-    except (OSError, ValueError):
-        pass
-    os.makedirs(path, exist_ok=True)
-    meta = build_bm25_index(spark, sf_dir, path)
-    return path, meta
 
 
 def served_bm25_topk(
@@ -275,6 +241,27 @@ def served_bm25_topk(
     return topk.select(F.col("id").alias("doc_id"), "score", "n_terms_hit", "rank")
 
 
+def _settle(spark: SparkSession, path: str, meta: dict) -> dict:
+    """After a write: fold at quota, then the sidecar's EXACT integer
+    totals from the post-write doclens view (one column-pruned
+    aggregate)."""
+    lsm_maybe_compact(
+        spark, postings_path(path), "doc_id", ["tb"], sort_within=["term"]
+    )
+    lsm_maybe_compact(spark, doclens_path(path), "doc_id", ["db"])
+    row = (
+        read_doclens(spark, path)
+        .agg(
+            F.count("*").cast("long").alias("n"),
+            F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("tot"),
+        )
+        .collect()[0]
+    )
+    return artifact.save_meta(path, "bm25", {
+        **meta, "n_docs": int(row.n), "total_tokens": int(row.tot)
+    })
+
+
 def bm25_index_upsert(
     spark: SparkSession, path: str, meta: dict, new_docs: DataFrame
 ) -> dict:
@@ -289,27 +276,7 @@ def bm25_index_upsert(
     postings, lens = _postings_and_lens(new_docs)
     lsm_upsert(spark, postings_path(path), postings, "doc_id", ["tb"])
     lsm_upsert(spark, doclens_path(path), lens, "doc_id", ["db"])
-    lsm_maybe_compact(
-        spark, postings_path(path), "doc_id", ["tb"], sort_within=["term"]
-    )
-    lsm_maybe_compact(spark, doclens_path(path), "doc_id", ["db"])
-    # exact totals from the post-write doclens view (one column-pruned
-    # aggregate — the same read the old incremental arithmetic needed
-    # to find replaced docs' lengths)
-    row = (
-        read_doclens(spark, path)
-        .agg(
-            F.count("*").cast("long").alias("n"),
-            F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("tot"),
-        )
-        .collect()[0]
-    )
-    meta = dict(meta)
-    meta["n_docs"] = int(row.n)
-    meta["total_tokens"] = int(row.tot)
-    with open(os.path.join(path, _META_NAME), "w") as f:
-        json.dump(meta, f)
-    return meta
+    return _settle(spark, path, meta)
 
 
 def bm25_index_delete(
@@ -322,21 +289,4 @@ def bm25_index_delete(
     ids = doomed_ids.select("doc_id")
     lsm_delete(spark, postings_path(path), ids, "doc_id")
     lsm_delete(spark, doclens_path(path), ids, "doc_id")
-    lsm_maybe_compact(
-        spark, postings_path(path), "doc_id", ["tb"], sort_within=["term"]
-    )
-    lsm_maybe_compact(spark, doclens_path(path), "doc_id", ["db"])
-    row = (
-        read_doclens(spark, path)
-        .agg(
-            F.count("*").cast("long").alias("n"),
-            F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("tot"),
-        )
-        .collect()[0]
-    )
-    meta = dict(meta)
-    meta["n_docs"] = int(row.n)
-    meta["total_tokens"] = int(row.tot)
-    with open(os.path.join(path, _META_NAME), "w") as f:
-        json.dump(meta, f)
-    return meta
+    return _settle(spark, path, meta)

@@ -52,14 +52,13 @@ build-once/serve-many contract applied to the vector-index family.
 
 from __future__ import annotations
 
-import hashlib
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from lol_data_pipeline_spark.io import table_path, write_upsert_partitions, write_overwrite
+from lol_data_pipeline_spark.io import write_upsert_partitions, write_overwrite
+from lol_data_pipeline_spark.operators import artifact
 from lol_data_pipeline_spark.operators.clustering import _cc, kmeans_cells, kmeans_train
 from lol_data_pipeline_spark.operators.similarity import (
     _arr_sql,
@@ -68,15 +67,6 @@ from lol_data_pipeline_spark.operators.similarity import (
     dot,
     pq_encode,
 )
-
-_REPO_ROOT = os.path.dirname(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-)
-INDEX_ROOT = os.environ.get(
-    "SPARK_GRAFT_INDEX_DIR",
-    os.path.join(_REPO_ROOT, "spark-warehouse", "vector_index"),
-)
-_META_NAME = "_index_meta.json"
 
 
 def pq_code_cols(m: int) -> list[str]:
@@ -142,31 +132,6 @@ def ivf_probe_rows(
         F.col("sel.cid").alias("pcell"),
         (F.col("pos") + 1).cast("long").alias("probe_rank"),
     )
-
-
-def _source_fingerprint(sf_dir: str, table: str = "embeddings") -> str:
-    """Content fingerprint of the source table's files (name, size,
-    mtime_ns) — cheap staleness detection: a regenerated corpus gets
-    a rebuilt index, not stale cells.
-
-    Deployment posture (r12 verdict): file metadata is the right key
-    LOCALLY, but at cluster scale a source table lives behind a
-    catalog — substitute the table's manifest/snapshot version
-    (Iceberg snapshot-id, Delta table version, Hive partition
-    transient_lastDdlTime) for the os.walk here. The ensure_*
-    contract is unchanged: compare the stored key, rebuild on
-    mismatch; only the key's provenance moves."""
-    p = table_path(sf_dir, table)
-    stats: list[tuple[str, int, int]] = []
-    if os.path.isdir(p):
-        for root, _dirs, files in os.walk(p):
-            for f in sorted(files):
-                st = os.stat(os.path.join(root, f))
-                stats.append((f, st.st_size, st.st_mtime_ns))
-    else:
-        st = os.stat(p)
-        stats.append((os.path.basename(p), st.st_size, st.st_mtime_ns))
-    return hashlib.md5(repr(sorted(stats)).encode()).hexdigest()
 
 
 def auto_cells(n: int, lo: int = 8) -> int:
@@ -236,8 +201,8 @@ def build_ivfpq_index(
         emit="codes",
     )
     write_overwrite(codes, path, partition_by=["cell_id"])
-    meta = {
-        "fingerprint": _source_fingerprint(sf_dir),
+    return artifact.save_meta(path, "ivfpq", {
+        "fingerprint": artifact.source_fingerprint(sf_dir, "embeddings"),
         "params": {
             "k": k,
             "rounds": rounds,
@@ -249,10 +214,7 @@ def build_ivfpq_index(
         },
         "cents": [[cid, cv] for cid, cv in cents],
         "seeds": seeds,
-    }
-    with open(os.path.join(path, _META_NAME), "w") as f:
-        json.dump(meta, f)
-    return meta
+    })
 
 
 def ensure_ivfpq_index(
@@ -268,13 +230,6 @@ def ensure_ivfpq_index(
     its OWN copy so its synthetic batch never leaks into the served
     read-only index). Staleness = source fingerprint or build params
     changed."""
-    root = root or INDEX_ROOT
-    name = os.path.basename(os.path.normpath(sf_dir)) + (
-        f"_{variant}" if variant else ""
-    )
-    path = os.path.join(root, f"ivfpq_{name}")
-    meta_path = os.path.join(path, _META_NAME)
-    want_fp = _source_fingerprint(sf_dir)
     defaults = dict(
         k=8, rounds=5, m=8, dsub=8, ncent=16, sample_mod=4, dim=64
     )
@@ -290,15 +245,11 @@ def ensure_ivfpq_index(
         defaults["k"] = auto_cells(
             load_table(spark, sf_dir, "embeddings").count()
         )
-    try:
-        with open(meta_path) as f:
-            meta = json.load(f)
-        if meta.get("fingerprint") == want_fp and meta.get("params") == defaults:
-            return path, meta
-    except (OSError, ValueError):
-        pass
-    meta = build_ivfpq_index(spark, sf_dir, path, **defaults)
-    return path, meta
+    return artifact.ensure(
+        "ivfpq", sf_dir, "embeddings", defaults,
+        lambda path: build_ivfpq_index(spark, sf_dir, path, **defaults),
+        root, variant,
+    )
 
 
 def read_index_codes(

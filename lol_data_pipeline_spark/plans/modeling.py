@@ -515,32 +515,16 @@ def ensure_lr_model(spark, sf_dir, root: str | None = None) -> list[float]:
     IEEE doubles exactly, so served weights are bit-equal to a fresh
     training run — the shared oracle (which always unrolls training)
     is the standing proof."""
-    import json
-    import os
-
     from lol_data_pipeline_spark.caching import tracked_persist
-    from lol_data_pipeline_spark.operators.vector_index import (
-        _source_fingerprint,
-    )
+    from lol_data_pipeline_spark.operators import artifact
 
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    root = root or os.environ.get(
-        "SPARK_GRAFT_LR_MODEL_DIR",
-        os.path.join(repo_root, "spark-warehouse", "quality_model"),
-    )
-    name = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(root, f"qlr_{name}")
-    meta_path = os.path.join(path, "_model_meta.json")
-    want_fp = _source_fingerprint(sf_dir, table="documents")
     # EVERY constant that changes the trained weights must key the
     # sidecar: gsc/psc (fixed-point scales) and the feature recipe
     # included so a hyperparameter or feature change can never serve
     # stale weights (advice r11 — the SQL oracle always unrolls with
     # current constants, so a stale sidecar is a warm-only parity
     # failure a fresh checkout cannot reproduce)
-    want_params = {
+    params = {
         "rounds": _LR_ROUNDS,
         "eta": _LR_ETA,
         "nf": _LR_NF,
@@ -549,21 +533,17 @@ def ensure_lr_model(spark, sf_dir, root: str | None = None) -> list[float]:
         "features": "v1:bias,stopratio,ntok/100,avgtoklen/8,distinctratio",
         "label": "n_chars>=300",
     }
-    try:
-        with open(meta_path) as f:
-            meta = json.load(f)
-        if meta.get("fingerprint") == want_fp and meta.get("params") == want_params:
-            return [float(x) for x in meta["weights"]]
-    except (OSError, ValueError):
-        pass
-    feats = tracked_persist(_lr_feats_df(spark, sf_dir))
-    w = _lr_train_weights(feats)
-    os.makedirs(path, exist_ok=True)
-    with open(meta_path, "w") as f:
-        json.dump(
-            {"fingerprint": want_fp, "params": want_params, "weights": w}, f
-        )
-    return w
+
+    def build(path: str) -> dict:
+        w = _lr_train_weights(tracked_persist(_lr_feats_df(spark, sf_dir)))
+        return artifact.save_meta(path, "qlr", {
+            "fingerprint": artifact.source_fingerprint(sf_dir, "documents"),
+            "params": params,
+            "weights": w,
+        })
+
+    _path, meta = artifact.ensure("qlr", sf_dir, "documents", params, build, root)
+    return [float(x) for x in meta["weights"]]
 
 
 def _lr_scored_over(d, w):

@@ -57,11 +57,9 @@ def events_max_ts(spark: SparkSession, sf_dir: str):
     source files' content fingerprint so regenerated testdata never
     serves a stale horizon."""
     from lol_data_pipeline_spark.io import load_table
-    from lol_data_pipeline_spark.operators.vector_index import (
-        _source_fingerprint,
-    )
+    from lol_data_pipeline_spark.operators.artifact import source_fingerprint
 
-    key = (sf_dir, _source_fingerprint(sf_dir, table="events"))
+    key = (sf_dir, source_fingerprint(sf_dir, "events"))
     if key not in _HORIZON_MEMO:
         ev = load_table(spark, sf_dir, "events")
         _HORIZON_MEMO[key] = ev.agg(F.max("ts").alias("mx")).collect()[0]["mx"]

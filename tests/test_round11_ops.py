@@ -584,10 +584,8 @@ def test_stream_graph_upsert_writes_through_and_is_idempotent(spark, sf_dir):
     the streamup variant's node table holds every shifted batch id
     and the batch ids appear in the affected buckets' edges; a re-run
     (same batches replayed) leaves the output identical."""
-    from lol_data_pipeline_spark.operators.graph_index import (
-        GRAPH_ROOT,
-        read_nodes,
-    )
+    from lol_data_pipeline_spark.operators import artifact
+    from lol_data_pipeline_spark.operators.graph_index import read_nodes
     from lol_data_pipeline_spark.plans.round11 import (
         _GSUP_HI,
         _GSUP_LO,
@@ -601,9 +599,7 @@ def test_stream_graph_upsert_writes_through_and_is_idempotent(spark, sf_dir):
         )
     )
     want = {v + _GSUP_SHIFT for v in range(_GSUP_LO, _GSUP_HI)}
-    path = os.path.join(
-        GRAPH_ROOT, f"knn_{os.path.basename(sf_dir)}_streamup"
-    )
+    path = artifact.path("knn", sf_dir, variant="streamup")
     node_ids = {r.vec_id for r in read_nodes(spark, path).select("vec_id").collect()}
     assert want <= node_ids
     srcs = {row[1] for row in out1}

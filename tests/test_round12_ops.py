@@ -175,10 +175,8 @@ def test_chunk_delete_only_loses_dup_flags(spark, sf_dir):
     """After the delete entry removes standing ids [5,30), no probe
     doc can be MORE duplicated than before, and the artifact holds no
     doomed rows."""
-    from lol_data_pipeline_spark.operators.chunk_index import (
-        CHUNK_ROOT,
-        read_chunk_rows,
-    )
+    from lol_data_pipeline_spark.operators import artifact
+    from lol_data_pipeline_spark.operators.chunk_index import read_chunk_rows
     from lol_data_pipeline_spark.plans import REGISTRY
 
     rows = {
@@ -197,9 +195,7 @@ def test_chunk_delete_only_loses_dup_flags(spark, sf_dir):
     for d, r in rows.items():
         assert r.n_dup <= base[d].n_dup
         assert r.n_chunks == base[d].n_chunks
-    import os
-
-    path = os.path.join(CHUNK_ROOT, "chunk_sf0.001_delete")
+    path = artifact.path("chunk", sf_dir, variant="delete")
     # the LOGICAL artifact (LSM view) holds no doomed rows — physical
     # rows linger until the compact, suppressed by tombstones
     disk = read_chunk_rows(spark, path)

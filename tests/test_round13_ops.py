@@ -279,7 +279,7 @@ def test_ngram_upsert_flags_the_clones(spark):
         assert rows[cid].contaminated
 
 
-def test_ngram_delete_removes_doomed_ids(spark):
+def test_ngram_delete_removes_doomed_ids(spark, sf_dir):
     """After the take-down, no doomed id appears in the contamination
     result and the artifact's LOGICAL table (the LSM view: base∪delta
     minus tombstoned) holds none of their rows. The take-down is
@@ -288,22 +288,16 @@ def test_ngram_delete_removes_doomed_ids(spark):
     disk-level zero-count the pre-LSM test asserted is no longer the
     contract (and was state-dependent: it held only right after a
     compact)."""
-    import os
-
-    from lol_data_pipeline_spark.operators.chunk_index import (
-        CHUNK_ROOT,
-        read_ngram_rows,
-    )
+    from lol_data_pipeline_spark.operators import artifact
+    from lol_data_pipeline_spark.operators.chunk_index import read_ngram_rows
     from lol_data_pipeline_spark.plans import REGISTRY
     from lol_data_pipeline_spark.plans.round13 import _NDEL_HI, _NDEL_LO
 
-    rows = REGISTRY["ngram_index_delete"].fn(
-        spark, "/root/testdata/sf0.001"
-    ).collect()
+    rows = REGISTRY["ngram_index_delete"].fn(spark, sf_dir).collect()
     assert all(
         not (_NDEL_LO <= r.doc_id < _NDEL_HI) for r in rows
     )
-    path = os.path.join(CHUNK_ROOT, "ngram_sf0.001_ndel")
+    path = artifact.path("ngram", sf_dir, variant="ndel")
     view = read_ngram_rows(spark, path)
     assert (
         view.filter(f"id >= {_NDEL_LO} AND id < {_NDEL_HI}").count() == 0

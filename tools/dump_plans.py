@@ -1,6 +1,12 @@
-"""Dump formatted physical plans of representative queries to PLANS.md.
+"""Dump formatted physical plans of registry entries.
 
-Usage: python tools/dump_plans.py [sf_dir]
+Usage:
+    python tools/dump_plans.py [sf_dir]
+        the SHOWCASE below → PLANS.md (default sf0.01)
+    python tools/dump_plans.py <out_dir> <suffix> <query> [query ...]
+        each query → <out_dir>/<query>_<suffix>.txt, e.g. before/after
+        evidence for a plan change (sf from $SPARK_GRAFT_SF_DIR,
+        default sf0.1)
 
 The point: make the plan-shape claims reviewable without running
 anything — PushedFilters on scans, broadcast vs sort-merge choices,
@@ -16,6 +22,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from lol_data_pipeline_spark.io import DEFAULT_SF_DIR  # noqa: E402
 from lol_data_pipeline_spark.plans import REGISTRY  # noqa: E402
 from lol_data_pipeline_spark.session import get_spark  # noqa: E402
 
@@ -55,7 +62,27 @@ SHOWCASE = [
 ]
 
 
+def _formatted(spark, df) -> str:
+    return df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
+
+
+def dump_named(out_dir: str, suffix: str, names: list[str]) -> None:
+    os.makedirs(out_dir, exist_ok=True)
+    spark = get_spark("dump_plans")
+    for name in names:
+        plan = _formatted(spark, REGISTRY[name].fn(spark, DEFAULT_SF_DIR))
+        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
+        with open(path, "w") as f:
+            f.write(plan)
+        print(f"wrote {path} ({len(plan)} bytes)")
+
+
 def main() -> None:
+    if len(sys.argv) > 3:
+        dump_named(sys.argv[1], sys.argv[2], sys.argv[3:])
+        return
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     spark = get_spark("dump_plans")
     spark.conf.set("spark.sql.maxMetadataStringLength", "200")
@@ -68,10 +95,7 @@ def main() -> None:
         "",
     ]
     for name, note in SHOWCASE:
-        df = REGISTRY[name].fn(spark, sf)
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        )
+        plan = _formatted(spark, REGISTRY[name].fn(spark, sf))
         out.append(f"## {name}\n\n*{note}*\n\n```\n{plan.strip()}\n```\n")
     with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
         f.write("\n".join(out))

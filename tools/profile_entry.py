@@ -19,6 +19,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from lol_data_pipeline_spark.plans import REGISTRY  # noqa: E402
+from lol_data_pipeline_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
@@ -33,30 +34,15 @@ def main() -> None:
     shutil.rmtree(log_dir, ignore_errors=True)
     os.makedirs(log_dir, exist_ok=True)
 
-    from pyspark.sql import SparkSession
-
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
-    spark = (
-        SparkSession.builder.appName("profile_entry")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.compression.codec", "snappy")
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", log_dir)
-        .config("spark.eventLog.compress", "false")
-        .config("spark.eventLog.rolling.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("WARN")
+    # the event log must be on when the JVM starts
+    os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join([
+        "--conf", "spark.eventLog.enabled=true",
+        "--conf", f"spark.eventLog.dir=file://{log_dir}",
+        "--conf", "spark.eventLog.compress=false",
+        "--conf", "spark.eventLog.rolling.enabled=false",
+        "pyspark-shell",
+    ])
+    spark = get_spark("profile_entry")
 
     walls: dict[str, list[float]] = {}
     t0s: dict[str, float] = {}
@@ -91,7 +77,6 @@ def main() -> None:
 
     jobs: dict[int, dict] = {}
     stages: dict[int, dict] = {}
-    import itertools
 
     def lines():
         for p in parts:
