@@ -43,10 +43,12 @@ def tracked_persist(df: DataFrame) -> DataFrame:
 
 def truncate_lineage(df: DataFrame) -> DataFrame:
     """Checkpoint ``df`` to cut its logical plan — the per-round step
-    of iterative kernels (connected components, PageRank), whose plan
-    otherwise embeds the previous round's plan twice and grows
-    O(2^rounds) (plain persist caches data but keeps the full tree;
-    the tree's re-stringification alone OOMs a default-1g driver).
+    of iterative kernels whose plan otherwise embeds every previous
+    round (PageRank, the served kNN-graph beam walk). Plain persist
+    caches data but keeps the full tree, and re-stringifying a deep
+    tree alone can OOM a default-1g driver. A kernel whose rounds
+    read the previous round once and fuse into one shallow plan
+    (connected components) needs no truncation at all.
 
     Two tiers:
     - a checkpoint dir is set (``sc.setCheckpointDir``): RELIABLE

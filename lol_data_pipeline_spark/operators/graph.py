@@ -16,13 +16,20 @@ k also makes the operator DETERMINISTIC and lets the DuckDB oracle
 unroll the same k rounds symbolically.
 
 Scale notes (100 TB):
-- per round: one join (edges ⋈ labels, shuffle keyed on vertex id)
-  + one min-aggregate — both partial-aggregated map-side. Label
-  propagation is how GraphX/Pregel implement CC; this is the same
-  dataflow expressed as DataFrame ops.
-- labels are persisted per round (via tracked_persist) so the plan
-  stays k-deep, not exponential; at production scale each round
-  would checkpoint to break lineage.
+- one neighbourhood edge list, built from a single reference to the
+  pair list: each pair explodes to (a,b), (b,a), (a,a), (b,b). The
+  self-loops fold "min of own label and neighbours' labels" into
+  one min-aggregate, so round r reads round r-1's labels exactly
+  ONCE (hood ⋈ labels on src, then min per dst; round 1 needs no
+  join because label_0(u) = u). Label propagation is how GraphX/
+  Pregel implement CC; this is the same dataflow as DataFrame ops.
+- the k rounds fuse into one lazy plan of depth linear in k: no
+  checkpoint or collect per round, so building the operator starts
+  no Spark job. The edge list is persisted (lazily — the first round
+  fills the cache) so every round reads it instead of re-running the
+  pair pipeline. Reading the labels twice per round (say, a join
+  plus a least(label, nbr_min) left join) would double the plan tree
+  every round, O(2^k), and force a checkpoint per round.
 - pure integer arithmetic end-to-end — engine-portable, no float
   drift.
 """
@@ -40,66 +47,37 @@ def connected_components(
 ) -> DataFrame:
     """(vertex, component) for every vertex in ``pairs``, where
     component = min vertex id reachable within ``iters`` hops (= the
-    true component minimum once iters ≥ component diameter)."""
-    # persist the PAIR LIST before the symmetric union: the union
-    # references it twice, so an unpersisted pairs subtree (the whole
-    # shingle→hash→verify pipeline) would execute twice just to build
-    # edges — measured as the dominant cost of dedup_components at
-    # sf0.1 (the label rounds themselves touch only a few hundred
-    # rows).
-    pairs_p = tracked_persist(pairs.select(a_col, b_col))
-    edges = tracked_persist(
-        pairs_p.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst")).union(
-            pairs_p.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
+    true component minimum once iters ≥ component diameter). Exactly
+    ``iters`` rounds run — no early exit — matching the oracle's
+    unroll; ``iters`` ≤ 0 gives identity labels."""
+    a, b = F.col(a_col), F.col(b_col)
+    hood = tracked_persist(
+        pairs.select(
+            F.inline(
+                F.array(
+                    *(
+                        F.struct(s.alias("src"), d.alias("dst"))
+                        for s, d in ((a, b), (b, a), (a, a), (b, b))
+                    )
+                )
+            )
         )
     )
-    labels = edges.select(F.col("src").alias("v")).distinct().withColumn(
-        "label", F.col("v")
-    )
-    prev_sum = None
-    for _ in range(iters):
-        nbr_min = (
-            edges.join(labels, edges.src == labels.v)
-            .groupBy(F.col("dst").alias("nv"))
-            .agg(F.min("label").alias("nbr_label"))
+    if iters <= 0:
+        labels = hood.select("dst", F.col("dst").alias("label")).distinct()
+    else:
+        labels = hood.groupBy("dst").agg(F.min("src").alias("label"))
+    for _ in range(iters - 1):
+        labels = (
+            hood.join(labels.withColumnRenamed("dst", "src"), "src")
+            .groupBy("dst")
+            .agg(F.min("label").alias("label"))
         )
-        # truncate_lineage, not just persist: persist caches DATA but
-        # keeps the full logical plan, and each round's plan embeds
-        # the previous round's TWICE (join left side + nbr_min) —
-        # after k rounds the plan TREE is O(2^k) copies of the whole
-        # pair pipeline. That tree is re-stringified by AQE events
-        # and blew a default-1g driver heap in generateTreeString
-        # (found simulating the external verifier's plain session;
-        # invisible on the 16g get_spark session). Truncating lineage
-        # per round is the standard posture for iterative Spark
-        # algorithms (GraphX checkpoints for exactly this reason);
-        # with sc.setCheckpointDir set this uses the RELIABLE
-        # checkpoint (executor-loss-safe — the cluster posture).
-        labels = labels.join(nbr_min, labels.v == F.col("nv"), "left").select(
-            "v",
-            F.least(F.col("label"), F.coalesce("nbr_label", "label")).alias("label"),
-        )
-        labels = truncate_lineage(labels)
-        # Early fixed-point exit: labels are monotonically
-        # NON-INCREASING, so the label sum strictly decreases iff any
-        # vertex changed this round — one tiny aggregate on the
-        # freshly checkpointed frame detects convergence. Near-dup
-        # components are near-cliques that converge in 1-2 rounds,
-        # while the fixed ``iters`` must stay high enough for worst
-        # cases — without the exit every query pays the worst case's
-        # join+checkpoint rounds (measured ~0.5 s/round of fixed
-        # overhead at sf0.1 on a few hundred labels). A converged
-        # fixed point is invariant under further rounds, so the
-        # result is IDENTICAL to the full unroll the oracle runs.
-        # decimal(38,0): exact at any vertex-count × id-magnitude.
-        s = labels.agg(
-            F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-        ).collect()[0].s
-        if prev_sum is not None and s == prev_sum:
-            break
-        prev_sum = s
-    return labels.select(
-        F.col("v").alias("doc_id"), F.col("label").alias("component")
+    # persisted too: consumers join the labels back to their own
+    # aggregates (group sizes, representatives), and an uncached
+    # second reference would re-run all k rounds
+    return tracked_persist(
+        labels.select(F.col("dst").alias("doc_id"), F.col("label").alias("component"))
     )
 
 
@@ -174,10 +152,9 @@ def pagerank(
                 ).alias("s")
             )
         )
-        # lineage truncation per round (same rationale as the
-        # connected_components loop: each round's plan embeds the
+        # lineage truncation per round: each round's plan embeds the
         # previous one and the tree re-stringification blows small
-        # driver heaps; persist alone does not shrink the plan)
+        # driver heaps; persist alone does not shrink the plan
         ranks = base.join(contrib, base.v == contrib.dst, "left").select(
             "v",
             "n",

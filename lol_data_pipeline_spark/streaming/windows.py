@@ -214,15 +214,25 @@ def replay_multibatch(
     import shutil
 
     parts = list(parts)
+    # the staged files were written FROM parts[0..n]'s frames, so
+    # the frames' own schema IS the files' schema — declaring it
+    # skips a footer-inference job per replay (r15). That holds only
+    # if every part has parts[0]'s column names and types, checked
+    # here from the analyzed plans (no job); nullability may differ
+    # (a literal sentinel row is non-null, and parquet files are
+    # read back nullable anyway). No unit reinterpretation risk: the
+    # ts column was normalized to a real TimestampType upstream
+    # (io.load_table) and parquet round-trips it as TIMESTAMP(MICROS).
+    schema = parts[0].schema
+    want = schema.simpleString()
+    for i, p in enumerate(parts[1:], 1):
+        got = p.schema.simpleString()
+        if got != want:
+            raise ValueError(
+                f"replay_multibatch: part {i} has schema {got}, part 0 has {want}"
+            )
     stage = stage_ordered_batches(parts, key)
     try:
-        # the staged files were written FROM parts[0..n]'s frames, so
-        # the frames' own schema IS the files' schema — declaring it
-        # skips a footer-inference job per replay (r15). No unit
-        # reinterpretation risk: the ts column was normalized to a
-        # real TimestampType upstream (io.load_table) and parquet
-        # round-trips it as TIMESTAMP(MICROS).
-        schema = parts[0].schema
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)

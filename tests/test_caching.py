@@ -52,22 +52,45 @@ def test_registry_entries_release_previous_caches(spark, sf_dir):
     release_caches()
 
 
-def _cc_pairs(spark):
-    return spark.createDataFrame(
-        [(1, 2), (2, 3), (5, 6), (7, 7)], "id_a long, id_b long"
-    )
+def _pr_edges(spark):
+    # hub 0 linked both ways to 1..3, plus the separate pair 4<->5
+    edges = [(0, i, 1) for i in (1, 2, 3)] + [(i, 0, 1) for i in (1, 2, 3)]
+    edges += [(4, 5, 1), (5, 4, 1)]
+    return spark.createDataFrame(edges, "src long, dst long, w long")
+
+
+def _pr_expected(iters=3):
+    """The same fixed-point integer recurrence as graph.pagerank, in
+    plain Python: (node, rank_micro) after ``iters`` rounds."""
+    from lol_data_pipeline_spark.operators.graph import _PR_SCALE as S
+
+    out = {0: 3, 1: 1, 2: 1, 3: 1, 4: 1, 5: 1}  # every edge has w = 1
+    nbrs = {0: [1, 2, 3], 1: [0], 2: [0], 3: [0], 4: [5], 5: [4]}
+    n = len(out)
+    r = {v: S // n for v in out}
+    for _ in range(iters):
+        s = {v: 0 for v in out}
+        for u, vs in nbrs.items():
+            for v in vs:
+                s[v] += (r[u] * 850) // (out[u] * 1000)
+        r = {v: (150 * S) // (1000 * n) + s[v] for v in out}
+    return sorted(r.items())
+
+
+def _ranks(spark):
+    from lol_data_pipeline_spark.operators.graph import pagerank
+
+    return pagerank(_pr_edges(spark), iters=3)
 
 
 def test_truncate_lineage_blocks_released(spark):
     """The iterative kernels' localCheckpoint blocks (MEMORY_AND_DISK
     RDDs outside the CacheManager) must be freed by release_caches(),
-    not left to JVM ContextCleaner GC."""
-    from lol_data_pipeline_spark.operators.graph import connected_components
-
+    not left to JVM ContextCleaner GC. PageRank truncates every round."""
     release_caches()
-    cc = connected_components(_cc_pairs(spark))
-    got = sorted(tuple(r) for r in cc.collect())
-    assert got == [(1, 1), (2, 1), (3, 1), (5, 5), (6, 5), (7, 7)]
+    pr = _ranks(spark)
+    got = sorted((r.node, r.rank_micro) for r in pr.collect())
+    assert got == _pr_expected()
     jsc = spark.sparkContext._jsc
     assert jsc.getPersistentRDDs().size() > 0  # checkpoint blocks live
     release_caches()
@@ -77,18 +100,18 @@ def test_truncate_lineage_blocks_released(spark):
 def test_truncate_lineage_uses_reliable_checkpoint_when_dir_set(spark, tmp_path):
     """With sc.setCheckpointDir (the cluster posture), per-round
     truncation must write RELIABLE checkpoints — executor-loss-safe —
-    and still produce identical components."""
+    and still produce identical ranks."""
     import glob
     import os
-
-    from lol_data_pipeline_spark.operators.graph import connected_components
 
     release_caches()
     sc = spark.sparkContext
     assert sc.getCheckpointDir() is None
+    local = sorted((r.node, r.rank_micro) for r in _ranks(spark).collect())
+    release_caches()
     sc.setCheckpointDir(str(tmp_path / "ckpt"))
     try:
-        cc = connected_components(_cc_pairs(spark))
+        pr = _ranks(spark)
         # EAGER: each round's blocks must land on the fault-tolerant
         # store DURING iteration — before the caller runs any action —
         # or an executor loss mid-iteration recomputes from scratch
@@ -96,8 +119,8 @@ def test_truncate_lineage_uses_reliable_checkpoint_when_dir_set(spark, tmp_path)
         # until the final action, and then only the last marked RDD)
         files = glob.glob(str(tmp_path / "ckpt" / "**" / "*"), recursive=True)
         assert any(os.path.isfile(f) for f in files)  # written eagerly
-        got = sorted(tuple(r) for r in cc.collect())
-        assert got == [(1, 1), (2, 1), (3, 1), (5, 5), (6, 5), (7, 7)]
+        got = sorted((r.node, r.rank_micro) for r in pr.collect())
+        assert got == local == _pr_expected()
     finally:
         # no public unset API; directly clear so later tests take the
         # localCheckpoint branch again

@@ -20,6 +20,34 @@ def test_components_close_transitive_chain(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
 
 
+def _path_pairs(spark):
+    return spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6)], "id_a long, id_b long"
+    )
+
+
+def test_components_build_starts_no_job(spark):
+    """The k rounds are one lazy plan: no checkpoint, persist-count or
+    convergence collect runs while the operator is built."""
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    pairs = _path_pairs(spark)
+    before = sched.nextJobId()
+    connected_components(pairs, iters=4)
+    assert sched.nextJobId() == before
+
+
+def test_components_run_exactly_iters_rounds(spark):
+    """On the path 1-2-3-4-5-6, two rounds carry each minimum two hops
+    (the oracle's k-round unroll), not to the true component."""
+    got = {r.doc_id: r.component for r in connected_components(_path_pairs(spark), iters=2).collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 4: 2, 5: 3, 6: 4}
+
+
+def test_components_zero_iters_is_identity(spark):
+    got = {r.doc_id: r.component for r in connected_components(_path_pairs(spark), iters=0).collect()}
+    assert got == {v: v for v in range(1, 7)}
+
+
 def test_dedup_groups_verdicts(spark):
     pairs = spark.createDataFrame([(5, 9), (9, 7)], "id_a long, id_b long")
     rows = {r.doc_id: r for r in dedup_groups(pairs, iters=3).collect()}

@@ -249,6 +249,23 @@ def test_multibatch_replay_exercises_cross_batch_state(spark, sf_dir):
     assert multi_windows > 0, "no hour window spans two micro-batches"
 
 
+def test_replay_multibatch_rejects_mismatched_part_schema(spark):
+    """The replay reads every staged file with parts[0]'s schema, so a
+    part with other columns or types is refused before anything is
+    staged or run, naming the first part that differs."""
+    good = spark.createDataFrame([(1, 1.0)], "event_id long, value double")
+    bad = spark.createDataFrame([(2, "x")], "event_id long, value string")
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    before = sched.nextJobId()
+
+    def build(stream):
+        raise AssertionError("build must not run on mismatched parts")
+
+    with pytest.raises(ValueError, match=r"part 2 has schema struct<event_id:bigint,value:string>"):
+        sw.replay_multibatch(spark, [good, good, bad, good], build, "append", "schema_check")
+    assert sched.nextJobId() == before
+
+
 def test_stateful_checkpoint_recovery_restores_group_state(spark, tmp_path):
     """Restarting an applyInPandasWithState query from its checkpoint
     must RESTORE per-key state, not rebuild it from zero: user totals
