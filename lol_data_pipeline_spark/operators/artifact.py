@@ -131,12 +131,16 @@ def ensure(
     build: Callable[[str], dict],
     root_dir: str | None = None,
     variant: str = "",
+    settle: Callable[[str, dict], dict] | None = None,
 ) -> tuple[str, dict]:
     """Build-if-absent-or-stale: returns (path, sidecar meta). The
     stored sidecar is reused when its fingerprint of ``table`` and
     its ``params`` both match; otherwise ``build(path)`` runs and
     returns the new meta (it writes the sidecar last, after the
-    data, so a build that dies midway is rebuilt next time)."""
+    data, so a build that dies midway is rebuilt next time).
+    ``settle(path, meta)``, when given, vets a reused sidecar against
+    the data and returns the meta to serve (the LSM families recount
+    a sidecar that lags its tables: ``lsm.settle``)."""
     p = path(kind, sf_dir, root_dir, variant)
     meta = load_meta(p, kind)
     if (
@@ -144,6 +148,6 @@ def ensure(
         and meta.get("fingerprint") == source_fingerprint(sf_dir, table)
         and meta.get("params") == params
     ):
-        return p, meta
+        return p, (settle(p, meta) if settle else meta)
     os.makedirs(p, exist_ok=True)
     return p, build(p)

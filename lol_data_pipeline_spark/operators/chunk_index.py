@@ -41,34 +41,22 @@ contract, exact-substring axis.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lol_data_pipeline_spark.functions.scalar import md5_long
-from lol_data_pipeline_spark.io import load_table, write_overwrite
-from lol_data_pipeline_spark.operators import artifact
+from lol_data_pipeline_spark.io import load_table
+from lol_data_pipeline_spark.operators import artifact, lsm
 from lol_data_pipeline_spark.operators.dedup import doc_chunks
-from lol_data_pipeline_spark.operators.lsm import (
-    lsm_delete,
-    lsm_maybe_compact,
-    lsm_reset,
-    lsm_upsert,
-    lsm_view,
-)
 
 N_BUCKETS = 16  # constant partition count — the maintenance unit
 
-
-def chunks_path(path: str) -> str:
-    return os.path.join(path, "chunks")
-
-
-CHUNKS_DDL = "id long, chunk_idx int, h long, hb int"
-NGRAM_DDL = "id long, h long, hb int"
-# one source of truth per family: lsm_view's declared read schema AND
-# the empty fallback (r14 ADVICE)
+# the chunk and n-gram artifacts keep their rows in the same directory
+CHUNKS = lsm.Table(
+    "chunks", "id", ("hb",), ("h",), "id long, chunk_idx int, h long, hb int"
+)
+NGRAMS = lsm.Table("chunks", "id", ("hb",), ("h",), "id long, h long, hb int")
+chunks_path = CHUNKS.dir
 
 
 def read_chunk_rows(spark: SparkSession, path: str) -> DataFrame:
@@ -76,25 +64,28 @@ def read_chunk_rows(spark: SparkSession, path: str) -> DataFrame:
     LSM view (plain base scan when the log is empty). Empty-with-
     schema when nothing is on disk, so probe/upsert-after-full-
     take-down works (r13 ADVICE)."""
-    view = lsm_view(
-        spark, chunks_path(path), "id", schema=CHUNKS_DDL
-    )
-    if view is None:
-        view = spark.createDataFrame([], CHUNKS_DDL)
-    return view.select(
-        "id", "chunk_idx", "h", F.col("hb").cast("int").alias("hb")
-    )
+    return CHUNKS.read(spark, path).select("id", "chunk_idx", "h", "hb")
 
 
 def read_ngram_rows(spark: SparkSession, path: str) -> DataFrame:
     """The n-gram artifact's logical (id, h, hb) rows — same contract
     as read_chunk_rows for the decontamination index."""
-    view = lsm_view(
-        spark, chunks_path(path), "id", schema=NGRAM_DDL
-    )
-    if view is None:
-        view = spark.createDataFrame([], NGRAM_DDL)
-    return view.select("id", "h", F.col("hb").cast("int").alias("hb"))
+    return NGRAMS.read(spark, path).select("id", "h", "hb")
+
+
+def _row_counts(rows: DataFrame, n_rows: str) -> dict:
+    agg = rows.agg(
+        F.count("*").alias("n"), F.countDistinct("id").alias("n_docs")
+    ).collect()[0]
+    return {"n_docs": int(agg.n_docs), n_rows: int(agg.n)}
+
+
+def _chunk_counts(spark: SparkSession, path: str) -> dict:
+    return _row_counts(read_chunk_rows(spark, path), "n_chunks")
+
+
+def _ngram_counts(spark: SparkSession, path: str) -> dict:
+    return _row_counts(read_ngram_rows(spark, path), "n_grams")
 
 
 def _batch_chunk_rows(docs: DataFrame, c: int) -> DataFrame:
@@ -122,24 +113,11 @@ def build_chunk_index(
     docs = load_table(spark, sf_dir, "documents")
     if index_where:
         docs = docs.filter(F.expr(index_where))
-    rows = (
-        _batch_chunk_rows(docs, c)
-        .repartition("hb")
-        .sortWithinPartitions("h")
-    )
-    write_overwrite(rows, chunks_path(path), partition_by=["hb"])
-    lsm_reset(chunks_path(path))  # a rebuild starts a fresh generation
-    disk = spark.read.parquet(chunks_path(path))
-    agg = disk.agg(
-        F.count("*").alias("n_chunks"),
-        F.countDistinct("id").alias("n_docs"),
-    ).collect()[0]
-    return artifact.save_meta(path, "chunk", {
+    CHUNKS.write_base(_batch_chunk_rows(docs, c), path)
+    return lsm.maintain(spark, path, "chunk", {
         "fingerprint": artifact.source_fingerprint(sf_dir, "documents"),
         "params": {"c": c, "nb": N_BUCKETS, "index_where": index_where},
-        "n_docs": int(agg.n_docs),
-        "n_chunks": int(agg.n_chunks),
-    })
+    }, (CHUNKS,), _chunk_counts)
 
 
 def ensure_chunk_index(
@@ -159,6 +137,9 @@ def ensure_chunk_index(
             spark, sf_dir, path, c=c, index_where=index_where
         ),
         root, variant,
+        lambda path, meta: lsm.settle(
+            spark, path, "chunk", meta, (CHUNKS,), _chunk_counts
+        ),
     )
 
 
@@ -213,26 +194,6 @@ def served_chunk_clean(
     )
 
 
-def _settle(
-    spark: SparkSession, path: str, meta: dict, kind: str, **fields
-) -> dict:
-    """After a write: fold at quota, then recount the view into the
-    sidecar (rows as ``n_chunks`` or ``n_grams``, by ``kind``)."""
-    lsm_maybe_compact(
-        spark, chunks_path(path), "id", ["hb"], sort_within=["h"]
-    )
-    read, n_rows = (
-        (read_chunk_rows, "n_chunks") if kind == "chunk"
-        else (read_ngram_rows, "n_grams")
-    )
-    agg = read(spark, path).agg(
-        F.count("*").alias("n"), F.countDistinct("id").alias("n_docs")
-    ).collect()[0]
-    return artifact.save_meta(path, kind, {
-        **meta, "n_docs": int(agg.n_docs), n_rows: int(agg.n), **fields
-    })
-
-
 def chunk_index_upsert(
     spark: SparkSession, path: str, meta: dict, new_docs: DataFrame
 ) -> dict:
@@ -241,15 +202,8 @@ def chunk_index_upsert(
     re-ingesting a changed document replaces at the view level, never
     double-indexes) and the sidecar counts update exactly. Older rows
     physically drop at the quota-triggered compact. Idempotent."""
-    rows = _batch_chunk_rows(new_docs, meta["params"]["c"])
-    batch_ids = rows.select("id").distinct()
-    replaced = (
-        read_chunk_rows(spark, path)
-        .join(F.broadcast(batch_ids), "id")
-        .count()
-    )  # bounded collect: one count (column-pruned id scan)
-    lsm_upsert(spark, chunks_path(path), rows, "id", ["hb"])
-    return _settle(spark, path, meta, "chunk", replaced_last_upsert=int(replaced))
+    CHUNKS.upsert(spark, path, _batch_chunk_rows(new_docs, meta["params"]["c"]))
+    return lsm.maintain(spark, path, "chunk", meta, (CHUNKS,), _chunk_counts)
 
 
 def chunk_index_delete(
@@ -261,9 +215,8 @@ def chunk_index_delete(
     table stays readable (base + tombstones keep their parquet
     footers), so upsert-after-full-delete works (r13 ADVICE).
     Idempotent."""
-    ids = doomed_ids.select(F.col("doc_id").alias("id")).distinct()
-    lsm_delete(spark, chunks_path(path), ids, "id")
-    return _settle(spark, path, meta, "chunk")
+    CHUNKS.delete(spark, path, doomed_ids.select(F.col("doc_id").alias("id")))
+    return lsm.maintain(spark, path, "chunk", meta, (CHUNKS,), _chunk_counts)
 
 
 def _batch_ngram_rows(docs: DataFrame, n: int) -> DataFrame:
@@ -299,23 +252,11 @@ def build_ngram_index(
     docs = load_table(spark, sf_dir, "documents")
     if index_where:
         docs = docs.filter(F.expr(index_where))
-    rows = (
-        _batch_ngram_rows(docs, n)
-        .repartition("hb")
-        .sortWithinPartitions("h")
-    )
-    write_overwrite(rows, chunks_path(path), partition_by=["hb"])
-    lsm_reset(chunks_path(path))  # a rebuild starts a fresh generation
-    disk = spark.read.parquet(chunks_path(path))
-    agg = disk.agg(
-        F.count("*").alias("n_grams"), F.countDistinct("id").alias("n_docs")
-    ).collect()[0]
-    return artifact.save_meta(path, "ngram", {
+    NGRAMS.write_base(_batch_ngram_rows(docs, n), path)
+    return lsm.maintain(spark, path, "ngram", {
         "fingerprint": artifact.source_fingerprint(sf_dir, "documents"),
         "params": {"n": n, "nb": N_BUCKETS, "index_where": index_where},
-        "n_docs": int(agg.n_docs),
-        "n_grams": int(agg.n_grams),
-    })
+    }, (NGRAMS,), _ngram_counts)
 
 
 def ensure_ngram_index(
@@ -336,6 +277,9 @@ def ensure_ngram_index(
             spark, sf_dir, path, n=n, index_where=index_where
         ),
         root, variant,
+        lambda path, meta: lsm.settle(
+            spark, path, "ngram", meta, (NGRAMS,), _ngram_counts
+        ),
     )
 
 
@@ -384,17 +328,8 @@ def ngram_index_upsert(
     + id tombstones (re-ingesting a changed document replaces at the
     view level, never double-counts); older rows physically drop at
     the quota-triggered compact. Idempotent."""
-    rows = _batch_ngram_rows(new_docs, meta["params"]["n"])
-    batch_ids = rows.select("id").distinct()
-    replaced = (
-        read_ngram_rows(spark, path)
-        .join(F.broadcast(batch_ids), "id")
-        .select("id")
-        .distinct()
-        .count()
-    )  # bounded collect: one count (column-pruned id scan)
-    lsm_upsert(spark, chunks_path(path), rows, "id", ["hb"])
-    return _settle(spark, path, meta, "ngram", replaced_last_upsert=int(replaced))
+    NGRAMS.upsert(spark, path, _batch_ngram_rows(new_docs, meta["params"]["n"]))
+    return lsm.maintain(spark, path, "ngram", meta, (NGRAMS,), _ngram_counts)
 
 
 def ngram_index_delete(
@@ -405,6 +340,5 @@ def ngram_index_delete(
     the VIEW immediately, from disk at the next compact; the sidecar
     counts shrink exactly, and a fully-emptied table stays readable.
     Idempotent."""
-    ids = doomed_ids.select(F.col("doc_id").alias("id")).distinct()
-    lsm_delete(spark, chunks_path(path), ids, "id")
-    return _settle(spark, path, meta, "ngram")
+    NGRAMS.delete(spark, path, doomed_ids.select(F.col("doc_id").alias("id")))
+    return lsm.maintain(spark, path, "ngram", meta, (NGRAMS,), _ngram_counts)

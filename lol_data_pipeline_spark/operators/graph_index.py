@@ -66,14 +66,7 @@ from lol_data_pipeline_spark.io import (
     write_overwrite,
     write_upsert_partitions,
 )
-from lol_data_pipeline_spark.operators import artifact
-from lol_data_pipeline_spark.operators.lsm import (
-    lsm_delete,
-    lsm_maybe_compact,
-    lsm_reset,
-    lsm_upsert,
-    lsm_view,
-)
+from lol_data_pipeline_spark.operators import artifact, lsm
 from lol_data_pipeline_spark.operators.similarity import dot, with_norm
 
 
@@ -149,8 +142,16 @@ def bucket_edges(nodes: DataFrame, k: int) -> DataFrame:
     )
 
 
-def nodes_path(path: str) -> str:
-    return os.path.join(path, "nodes")
+NODES = lsm.Table(
+    "nodes", "vec_id", ("code",), (),
+    "vec_id long, embedding array<double>, code int",
+)
+TABLES = (NODES,)
+nodes_path = NODES.dir
+
+
+def _counts(spark: SparkSession, path: str) -> dict:
+    return {}  # the graph sidecar keeps no counts
 
 
 def edges_path(path: str) -> str:
@@ -178,18 +179,16 @@ def build_knn_graph_index(
         .collect()
     )
     planes = [[float(v) for v in r.p] for r in plane_rows]
-    nodes = assign_codes(emb, planes)
-    write_overwrite(nodes, nodes_path(path), partition_by=["code"])
-    lsm_reset(nodes_path(path))  # a rebuild starts a fresh generation
-    stored = spark.read.parquet(nodes_path(path))
+    NODES.write_base(assign_codes(emb, planes), path)
     write_overwrite(
-        bucket_edges(stored, k), edges_path(path), partition_by=["code"]
+        bucket_edges(read_nodes(spark, path), k), edges_path(path),
+        partition_by=["code"],
     )
-    return artifact.save_meta(path, "knn", {
+    return lsm.maintain(spark, path, "knn", {
         "fingerprint": artifact.source_fingerprint(sf_dir, "embeddings"),
         "params": {"n_planes": n_planes, "k": k},
         "planes": planes,
-    })
+    }, TABLES, _counts)
 
 
 def ensure_knn_graph_index(
@@ -207,6 +206,7 @@ def ensure_knn_graph_index(
             spark, sf_dir, path, n_planes=n_planes, k=k
         ),
         root, variant,
+        lambda path, meta: lsm.settle(spark, path, "knn", meta, TABLES, _counts),
     )
 
 
@@ -225,21 +225,12 @@ def read_edges(
     return df.select("code", "src_id", "dst_id", "sim", "rank")
 
 
-NODES_DDL = "vec_id long, embedding array<double>, code int"
-# one source of truth: lsm_view's declared read schema AND the empty
-# fallback (r14 ADVICE)
-
-
 def read_nodes(
     spark: SparkSession, path: str, codes: list[int] | None = None
 ) -> DataFrame:
     """Logical node set — the LSM view (plain base scan when the log
     is empty); the code filter prunes base AND delta directories."""
-    df = lsm_view(
-        spark, nodes_path(path), "vec_id", schema=NODES_DDL
-    )
-    if df is None:
-        df = spark.createDataFrame([], NODES_DDL)
+    df = NODES.read(spark, path)
     if codes is not None:
         df = df.filter(F.col("code").isin([int(c) for c in codes]))
     return df.select("vec_id", "embedding", "code")
@@ -293,14 +284,14 @@ def graph_upsert(
         .distinct()
     )
     affected = sorted({int(r.code) for r in old.collect()} | set(batch_codes))
-    lsm_upsert(spark, nodes_path(path), coded, "vec_id", ["code"])
+    NODES.upsert(spark, path, coded)
     merged = read_nodes(spark, path, codes=affected)
     edges = bucket_edges(merged, k).localCheckpoint()
     write_upsert_partitions(edges, edges_path(path), ["code"])
     # a merged bucket can still produce zero edges (single-member
     # bucket) — its stale edge directory must not survive
     _drop_emptied(spark, edges_path(path), affected, edges)
-    lsm_maybe_compact(spark, nodes_path(path), "vec_id", ["code"])
+    lsm.maintain(spark, path, "knn", meta, TABLES, _counts)
     return affected
 
 
@@ -334,12 +325,12 @@ def graph_delete(
     affected = sorted(
         {int(r.code) for r in stored.collect()} | set(_affected_codes(coded))
     )
-    lsm_delete(spark, nodes_path(path), coded.select("vec_id"), "vec_id")
+    NODES.delete(spark, path, coded)
     keep = read_nodes(spark, path, codes=affected)
     edges = bucket_edges(keep, k).localCheckpoint()
     write_upsert_partitions(edges, edges_path(path), ["code"])
     _drop_emptied(spark, edges_path(path), affected, edges)
-    lsm_maybe_compact(spark, nodes_path(path), "vec_id", ["code"])
+    lsm.maintain(spark, path, "knn", meta, TABLES, _counts)
     return affected
 
 

@@ -43,6 +43,20 @@ crash class structurally: a full delete leaves base + tombstones,
 so every later read still finds parquet footers to infer schema
 from).
 
+Each index family declares every LSM table it keeps exactly once, as a
+:class:`Table` (directory name, id column, partition and sort columns,
+schema DDL). The declaration owns the table's whole life: the build's
+base write (the same layout a compaction writes, then a fresh
+generation), the view (declared schema; an empty frame of that schema
+when nothing is on disk), the upsert/delete appends (conformed to the
+DDL) and the quota fold (reads with the DDL, never infers). After a
+write the family calls :func:`maintain`: fold each table at quota, then
+save the sidecar with the family's counts and the epoch listing they
+were taken at. :func:`settle` is ``artifact.ensure``'s reuse hook: a
+sidecar whose listing differs from disk lags its data (a writer died
+between the table write and the sidecar save), so it is recounted, not
+reused.
+
 tests/test_lsm_maintenance.py pins: delta bytes scale with the
 batch, not the corpus (the r13 verdict's done-criterion), view
 equality across compact, idempotence, replace precedence, and
@@ -54,13 +68,17 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
+from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-# epochs accumulated before a fold-back; env override is for the
-# scale probe (which wants to measure many un-compacted upserts).
-DEFAULT_QUOTA = int(os.environ.get("SPARK_GRAFT_LSM_QUOTA", "8"))
+from lol_data_pipeline_spark.io import write_overwrite
+from lol_data_pipeline_spark.operators import artifact
+
+DEFAULT_QUOTA = 8  # epochs accumulated before a fold-back
 
 _EPOCH = "_lsm_epoch"
 
@@ -125,7 +143,7 @@ def _refresh(spark: SparkSession, table_dir: str) -> None:
 def lsm_reset(table_dir: str) -> None:
     """Drop the delta/tombstone logs — a full REBUILD writes a fresh
     base, so stale logs from a previous generation must not leak into
-    its view. Every build_* calls this after writing base."""
+    its view. :meth:`Table.write_base` calls this after writing base."""
     shutil.rmtree(delta_path(table_dir), ignore_errors=True)
     shutil.rmtree(tomb_path(table_dir), ignore_errors=True)
 
@@ -136,11 +154,12 @@ def lsm_view(
     """The logical current table: base∪delta minus superseded rows.
 
     None when no generation of the table has any data file (never
-    built, or built empty and compacted away) — callers substitute
-    an empty frame with their family schema. With empty logs this
-    returns the PLAIN base scan: the serve path's plan (and its
-    pushed partition/row-group predicates) is byte-identical to the
-    pre-LSM design, so read-only benches pay nothing for the layer.
+    built, or built empty and compacted away) — :meth:`Table.read`
+    substitutes an empty frame of the declared schema. With empty
+    logs this returns the PLAIN base scan: the serve path's plan (and
+    its pushed partition/row-group predicates) is byte-identical to
+    the pre-LSM design, so read-only benches pay nothing for the
+    layer.
 
     ``schema`` is the family's BASE table DDL (data + partition
     columns, in storage order). When given, every read here declares
@@ -149,8 +168,6 @@ def lsm_view(
     probe pays it once per table otherwise. Families know their
     schemas statically, so the inference was pure overhead.
     """
-    from pyspark.sql import types as T
-
     base_schema = T.StructType.fromDDL(schema) if schema else None
     srcs: list[DataFrame] = []
     if _has_parquet(table_dir):
@@ -282,22 +299,33 @@ def lsm_delete(
     }
 
 
+def _layout(
+    df: DataFrame, partition_by: list[str], sort_within: list[str] | None
+) -> DataFrame:
+    """A base generation's file layout: one shuffle on the partition
+    columns, sorted within files (row-group skipping)."""
+    out = df.repartition(*partition_by)
+    return out.sortWithinPartitions(*sort_within) if sort_within else out
+
+
 def lsm_compact(
     spark: SparkSession,
     table_dir: str,
     id_col: str,
     partition_by: list[str],
     sort_within: list[str] | None = None,
+    schema: str | None = None,
 ) -> bool:
     """Fold delta+tombstones back into a fresh base and clear the
     logs — the amortized full rewrite. ``sort_within`` restores the
-    family's row-group-skipping layout (chunk/bkey/h-sorted files).
+    family's row-group-skipping layout (chunk/bkey/h-sorted files);
+    ``schema`` is the table's DDL (without it the view infers).
     Staged write + rename swap: a reader racing the swap sees the old
     or the new complete generation, never a mix. Returns True when a
     fold happened (False: nothing to fold)."""
     if not lsm_epochs(table_dir):
         return False
-    view = lsm_view(spark, table_dir, id_col)
+    view = lsm_view(spark, table_dir, id_col, schema=schema)
     staged = f"{table_dir}__compact_{uuid.uuid4().hex[:8]}"
     if view is None or view.limit(1).count() == 0:
         if view is not None:
@@ -311,10 +339,9 @@ def lsm_compact(
             _refresh(spark, table_dir)
             return False
     else:
-        out = view.repartition(*partition_by)
-        if sort_within:
-            out = out.sortWithinPartitions(*sort_within)
-        out.write.partitionBy(*partition_by).parquet(staged)
+        _layout(view, partition_by, sort_within).write.partitionBy(
+            *partition_by
+        ).parquet(staged)
     old = f"{table_dir}__old_{uuid.uuid4().hex[:8]}"
     if os.path.isdir(table_dir):
         os.rename(table_dir, old)
@@ -332,6 +359,7 @@ def lsm_maybe_compact(
     partition_by: list[str],
     sort_within: list[str] | None = None,
     quota: int | None = None,
+    schema: str | None = None,
 ) -> bool:
     """The quota trigger (vector_index.index_compact's shape): fold
     when the log has accumulated ``quota`` epochs. Called at the end
@@ -341,5 +369,120 @@ def lsm_maybe_compact(
     if len(lsm_epochs(table_dir)) < q:
         return False
     return lsm_compact(
-        spark, table_dir, id_col, partition_by, sort_within=sort_within
+        spark, table_dir, id_col, partition_by, sort_within=sort_within,
+        schema=schema,
     )
+
+
+def _conform(df: DataFrame, ddl: str) -> DataFrame:
+    """``df`` as exactly the declared columns, in DDL order and type —
+    so a write can never put a column on disk that the declared read
+    would null-fill or misread."""
+    return df.select(
+        *[
+            F.col(f.name).cast(f.dataType).alias(f.name)
+            for f in T.StructType.fromDDL(ddl)
+        ]
+    )
+
+
+@dataclass(frozen=True)
+class Table:
+    """One LSM table of an index family, declared once. ``name`` is its
+    directory under the artifact; ``ddl`` lists data then partition
+    columns, in storage order."""
+
+    name: str
+    id_col: str
+    partition_by: tuple[str, ...]
+    sort_within: tuple[str, ...]
+    ddl: str
+
+    def dir(self, path: str) -> str:
+        return os.path.join(path, self.name)
+
+    def write_base(self, df: DataFrame, path: str) -> None:
+        """The build's base: the layout :func:`lsm_compact` writes,
+        then a fresh generation (stale logs must not leak into it)."""
+        write_overwrite(
+            _layout(_conform(df, self.ddl), list(self.partition_by),
+                    list(self.sort_within)),
+            self.dir(path), partition_by=list(self.partition_by),
+        )
+        lsm_reset(self.dir(path))
+
+    def read(self, spark: SparkSession, path: str) -> DataFrame:
+        """The logical table (:func:`lsm_view` with the declared
+        schema); empty with that schema when nothing is on disk."""
+        view = lsm_view(spark, self.dir(path), self.id_col, schema=self.ddl)
+        return view if view is not None else spark.createDataFrame([], self.ddl)
+
+    def upsert(self, spark: SparkSession, path: str, rows: DataFrame) -> dict:
+        return lsm_upsert(
+            spark, self.dir(path), _conform(rows, self.ddl), self.id_col,
+            list(self.partition_by),
+        )
+
+    def delete(self, spark: SparkSession, path: str, ids: DataFrame) -> dict:
+        id_type = T.StructType.fromDDL(self.ddl)[self.id_col].dataType
+        return lsm_delete(
+            spark, self.dir(path),
+            ids.select(F.col(self.id_col).cast(id_type).alias(self.id_col)),
+            self.id_col,
+        )
+
+    def compact(self, spark: SparkSession, path: str) -> bool:
+        """Force the fold (:func:`lsm_compact` with the declared layout)."""
+        return lsm_compact(
+            spark, self.dir(path), self.id_col, list(self.partition_by),
+            sort_within=list(self.sort_within), schema=self.ddl,
+        )
+
+    def fold(self, spark: SparkSession, path: str) -> bool:
+        """The quota trigger (:func:`lsm_maybe_compact`)."""
+        return lsm_maybe_compact(
+            spark, self.dir(path), self.id_col, list(self.partition_by),
+            sort_within=list(self.sort_within), schema=self.ddl,
+        )
+
+
+Counts = Callable[[SparkSession, str], dict]
+
+
+def epochs(path: str, tables: tuple[Table, ...]) -> dict[str, list[int]]:
+    """The sidecar's record of each table's log: {name: epochs}."""
+    return {t.name: lsm_epochs(t.dir(path)) for t in tables}
+
+
+def maintain(
+    spark: SparkSession,
+    path: str,
+    kind: str,
+    meta: dict,
+    tables: tuple[Table, ...],
+    counts: Counts,
+) -> dict:
+    """Settle an artifact after a build or a write: fold each table at
+    quota, then save ``{**meta, **counts(spark, path)}`` with the epoch
+    listing the counts were taken at. Returns the saved meta."""
+    for t in tables:
+        t.fold(spark, path)
+    return artifact.save_meta(path, kind, {
+        **meta, **counts(spark, path), "epochs": epochs(path, tables)
+    })
+
+
+def settle(
+    spark: SparkSession,
+    path: str,
+    kind: str,
+    meta: dict,
+    tables: tuple[Table, ...],
+    counts: Counts,
+) -> dict:
+    """``meta`` if its epoch listing matches disk, else :func:`maintain`
+    recounts it. A sidecar without the listing counts as all-empty."""
+    stored = meta.get("epochs") or {t.name: [] for t in tables}
+    if stored == epochs(path, tables):
+        return meta
+    return maintain(spark, path, kind, meta, tables, counts)

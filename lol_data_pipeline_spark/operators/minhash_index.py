@@ -40,21 +40,12 @@ contract, dedup axis.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lol_data_pipeline_spark.caching import tracked_persist
-from lol_data_pipeline_spark.io import load_table, write_overwrite
-from lol_data_pipeline_spark.operators import artifact
-from lol_data_pipeline_spark.operators.lsm import (
-    lsm_delete,
-    lsm_maybe_compact,
-    lsm_reset,
-    lsm_upsert,
-    lsm_view,
-)
+from lol_data_pipeline_spark.io import load_table
+from lol_data_pipeline_spark.operators import artifact, lsm
 from lol_data_pipeline_spark.operators.dedup import (
     _affine_params,
     _doc_shingle_arrays,
@@ -65,25 +56,25 @@ from lol_data_pipeline_spark.operators.dedup import (
     minhash_band_buckets,
 )
 
-def buckets_path(path: str) -> str:
-    return os.path.join(path, "buckets")
-
-
-BUCKETS_DDL = "id long, bkey string, band int"  # one source of truth:
-# lsm_view's declared read schema AND the empty fallback (r14 ADVICE —
-# a drifting duplicate would silently null-fill instead of erroring)
+BUCKETS = lsm.Table(
+    "buckets", "id", ("band",), ("bkey",), "id long, bkey string, band int"
+)
+TABLES = (BUCKETS,)
+buckets_path = BUCKETS.dir
 
 
 def read_minhash_buckets(spark: SparkSession, path: str) -> DataFrame:
     """The artifact's logical (id, band, bkey) rows — the LSM view
     (plain base scan when the log is empty). Empty-with-schema when
     nothing is on disk, so probe-after-full-take-down works."""
-    view = lsm_view(
-        spark, buckets_path(path), "id", schema=BUCKETS_DDL
-    )
-    if view is None:
-        view = spark.createDataFrame([], BUCKETS_DDL)
-    return view.select("id", F.col("band").cast("int").alias("band"), "bkey")
+    return BUCKETS.read(spark, path).select("id", "band", "bkey")
+
+
+def _counts(spark: SparkSession, path: str) -> dict:
+    return {
+        "n_docs": read_minhash_buckets(spark, path)
+        .select("id").distinct().count()
+    }
 
 
 def _batch_buckets(docs: DataFrame, k: int, bands: int, n: int) -> DataFrame:
@@ -114,24 +105,11 @@ def build_minhash_index(
     docs = load_table(spark, sf_dir, "documents")
     if index_where:
         docs = docs.filter(F.expr(index_where))
-    buckets = (
-        _batch_buckets(docs, k, bands, n)
-        .repartition("band")
-        .sortWithinPartitions("bkey")
-    )
-    write_overwrite(buckets, buckets_path(path), partition_by=["band"])
-    lsm_reset(buckets_path(path))  # a rebuild starts a fresh generation
-    n_docs = (
-        spark.read.parquet(buckets_path(path))
-        .select("id")
-        .distinct()
-        .count()
-    )
-    return artifact.save_meta(path, "minhash", {
+    BUCKETS.write_base(_batch_buckets(docs, k, bands, n), path)
+    return lsm.maintain(spark, path, "minhash", {
         "fingerprint": artifact.source_fingerprint(sf_dir, "documents"),
         "params": {"k": k, "bands": bands, "n": n, "index_where": index_where},
-        "n_docs": int(n_docs),
-    })
+    }, TABLES, _counts)
 
 
 def ensure_minhash_index(
@@ -153,6 +131,9 @@ def ensure_minhash_index(
             spark, sf_dir, path, k=k, bands=bands, n=n, index_where=index_where
         ),
         root, variant,
+        lambda path, meta: lsm.settle(
+            spark, path, "minhash", meta, TABLES, _counts
+        ),
     )
 
 
@@ -210,15 +191,6 @@ def served_minhash_probe(
     )
 
 
-def _settle(spark: SparkSession, path: str, meta: dict) -> dict:
-    """After a write: fold at quota, recount the view into the sidecar."""
-    lsm_maybe_compact(
-        spark, buckets_path(path), "id", ["band"], sort_within=["bkey"]
-    )
-    n_docs = read_minhash_buckets(spark, path).select("id").distinct().count()
-    return artifact.save_meta(path, "minhash", {**meta, "n_docs": int(n_docs)})
-
-
 def minhash_index_upsert(
     spark: SparkSession, path: str, meta: dict, new_docs: DataFrame
 ) -> dict:
@@ -229,9 +201,10 @@ def minhash_index_upsert(
     Older rows physically drop at the quota-triggered compact.
     Idempotent."""
     p = meta["params"]
-    buckets = _batch_buckets(new_docs, p["k"], p["bands"], p["n"])
-    lsm_upsert(spark, buckets_path(path), buckets, "id", ["band"])
-    return _settle(spark, path, meta)
+    BUCKETS.upsert(
+        spark, path, _batch_buckets(new_docs, p["k"], p["bands"], p["n"])
+    )
+    return lsm.maintain(spark, path, "minhash", meta, TABLES, _counts)
 
 
 def minhash_index_delete(
@@ -240,9 +213,8 @@ def minhash_index_delete(
     """Take-down: tombstones only (write ∝ doomed ids) — the batch's
     bucket rows vanish from the VIEW immediately, from disk at the
     next compact; the sidecar count shrinks exactly. Idempotent."""
-    ids = doomed_ids.select(F.col("doc_id").alias("id")).distinct()
-    lsm_delete(spark, buckets_path(path), ids, "id")
-    return _settle(spark, path, meta)
+    BUCKETS.delete(spark, path, doomed_ids.select(F.col("doc_id").alias("id")))
+    return lsm.maintain(spark, path, "minhash", meta, TABLES, _counts)
 
 
 def minhash_sql_ctes(

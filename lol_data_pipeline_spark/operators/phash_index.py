@@ -42,20 +42,11 @@ contract, image axis.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lol_data_pipeline_spark.io import load_table, write_overwrite
-from lol_data_pipeline_spark.operators import artifact
-from lol_data_pipeline_spark.operators.lsm import (
-    lsm_delete,
-    lsm_maybe_compact,
-    lsm_reset,
-    lsm_upsert,
-    lsm_view,
-)
+from lol_data_pipeline_spark.io import load_table
+from lol_data_pipeline_spark.operators import artifact, lsm
 from lol_data_pipeline_spark.operators.multimodal import media_dhash_frame
 
 BITS = 64
@@ -65,8 +56,12 @@ _WIDTH = BITS // N_BANDS
 _MASK = (1 << _WIDTH) - 1
 
 
-def bands_path(path: str) -> str:
-    return os.path.join(path, "bands")
+BANDS = lsm.Table(
+    "bands", "id", ("band",), ("chunk",),
+    "id long, simhash long, chunk long, band int",
+)
+TABLES = (BANDS,)
+bands_path = BANDS.dir
 
 
 def _batch_band_rows(media: DataFrame, signer: str = "image") -> DataFrame:
@@ -97,22 +92,18 @@ def _batch_band_rows(media: DataFrame, signer: str = "image") -> DataFrame:
     ).select("id", "simhash", F.col("bk.band").alias("band"), F.col("bk.chunk").alias("chunk"))
 
 
-BANDS_DDL = "id long, simhash long, chunk long, band int"
-# one source of truth: lsm_view's declared read schema AND the empty
-# fallback (r14 ADVICE)
-
-
 def read_phash_rows(spark: SparkSession, path: str) -> DataFrame:
     """The artifact's logical (id, simhash, band, chunk) rows — the
     LSM view (plain base scan when the log is empty, so the serve
     plan is unchanged from the pre-LSM design). Empty-with-schema
     when nothing is on disk, so probe-after-full-take-down works."""
-    view = lsm_view(
-        spark, bands_path(path), "id", schema=BANDS_DDL
-    )
-    if view is None:
-        view = spark.createDataFrame([], BANDS_DDL)
-    return view.select("id", "simhash", "band", "chunk")
+    return BANDS.read(spark, path).select("id", "simhash", "band", "chunk")
+
+
+def _counts(spark: SparkSession, path: str) -> dict:
+    return {
+        "n_docs": read_phash_rows(spark, path).select("id").distinct().count()
+    }
 
 
 def _base_media(docs: DataFrame) -> DataFrame:
@@ -174,20 +165,11 @@ def build_phash_index(
     if index_where:
         docs = docs.filter(F.expr(index_where))
     media = frame_media(docs, frames) if frames else _base_media(docs)
-    rows = (
-        _batch_band_rows(media, signer=signer)
-        .repartition("band")
-        .sortWithinPartitions("chunk")
-    )
-    write_overwrite(rows, bands_path(path), partition_by=["band"])
-    lsm_reset(bands_path(path))  # a rebuild starts a fresh generation
-    disk = spark.read.parquet(bands_path(path))
-    n_docs = disk.select("id").distinct().count()
-    return artifact.save_meta(path, "phash", {
+    BANDS.write_base(_batch_band_rows(media, signer=signer), path)
+    return lsm.maintain(spark, path, "phash", {
         "fingerprint": artifact.source_fingerprint(sf_dir, "documents"),
         "params": _params(index_where, frames, signer),
-        "n_docs": int(n_docs),
-    })
+    }, TABLES, _counts)
 
 
 def ensure_phash_index(
@@ -209,6 +191,9 @@ def ensure_phash_index(
             signer=signer,
         ),
         root, variant,
+        lambda path, meta: lsm.settle(
+            spark, path, "phash", meta, TABLES, _counts
+        ),
     )
 
 
@@ -247,15 +232,6 @@ def served_phash_pairs(
     )
 
 
-def _settle(spark: SparkSession, path: str, meta: dict) -> dict:
-    """After a write: fold at quota, recount the view into the sidecar."""
-    lsm_maybe_compact(
-        spark, bands_path(path), "id", ["band"], sort_within=["chunk"]
-    )
-    n_docs = read_phash_rows(spark, path).select("id").distinct().count()
-    return artifact.save_meta(path, "phash", {**meta, "n_docs": int(n_docs)})
-
-
 def phash_index_upsert(
     spark: SparkSession, path: str, meta: dict, new_media: DataFrame
 ) -> dict:
@@ -265,11 +241,10 @@ def phash_index_upsert(
     has a row in every band partition); replaced ids' older rows are
     superseded by the tombstones at read time and physically dropped
     at the quota-triggered compact. Idempotent at the view level."""
-    rows = _batch_band_rows(
+    BANDS.upsert(spark, path, _batch_band_rows(
         new_media, signer=meta["params"].get("signer", "image")
-    )
-    lsm_upsert(spark, bands_path(path), rows, "id", ["band"])
-    return _settle(spark, path, meta)
+    ))
+    return lsm.maintain(spark, path, "phash", meta, TABLES, _counts)
 
 
 def phash_index_delete(
@@ -278,16 +253,5 @@ def phash_index_delete(
     """Take-down: tombstones only (write ∝ doomed ids); the batch's
     rows vanish from the VIEW immediately and from disk at the next
     compact; the sidecar count shrinks exactly. Idempotent."""
-    ids = doomed_ids.select(F.col("media_id").alias("id")).distinct()
-    lsm_delete(spark, bands_path(path), ids, "id")
-    return _settle(spark, path, meta)
-
-
-def phash_index_compact(spark: SparkSession, path: str, meta: dict) -> dict:
-    """Force the fold (the maintenance entry's explicit form of the
-    quota trigger): view → fresh chunk-sorted base, logs cleared.
-    The view — and therefore every probe — is unchanged."""
-    from lol_data_pipeline_spark.operators.lsm import lsm_compact
-
-    lsm_compact(spark, bands_path(path), "id", ["band"], sort_within=["chunk"])
-    return meta
+    BANDS.delete(spark, path, doomed_ids.select(F.col("media_id").alias("id")))
+    return lsm.maintain(spark, path, "phash", meta, TABLES, _counts)

@@ -49,22 +49,14 @@ serve-many contract, lexical axis.
 
 from __future__ import annotations
 
-import os
 import zlib
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lol_data_pipeline_spark.functions.text import tokens
-from lol_data_pipeline_spark.io import load_table, widen, write_overwrite
-from lol_data_pipeline_spark.operators import artifact
-from lol_data_pipeline_spark.operators.lsm import (
-    lsm_delete,
-    lsm_maybe_compact,
-    lsm_reset,
-    lsm_upsert,
-    lsm_view,
-)
+from lol_data_pipeline_spark.io import load_table, widen
+from lol_data_pipeline_spark.operators import artifact, lsm
 from lol_data_pipeline_spark.operators.relational import global_topk_ranked
 from lol_data_pipeline_spark.operators.search import bm25_weight_sql
 
@@ -78,43 +70,41 @@ def term_bucket(term: str) -> int:
     return zlib.crc32(term.encode("utf-8")) % _NB
 
 
-def postings_path(path: str) -> str:
-    return os.path.join(path, "postings")
-
-
-def doclens_path(path: str) -> str:
-    return os.path.join(path, "doclens")
-
-
-POSTINGS_DDL = "doc_id long, term string, tf long, tb int"
-DOCLENS_DDL = "doc_id long, dl long, db int"
-# one source of truth per table: lsm_view's declared read schema AND
-# the empty fallback (r14 ADVICE)
+POSTINGS = lsm.Table(
+    "postings", "doc_id", ("tb",), ("term",),
+    "doc_id long, term string, tf long, tb int",
+)
+DOCLENS = lsm.Table("doclens", "doc_id", ("db",), (), "doc_id long, dl long, db int")
+TABLES = (POSTINGS, DOCLENS)
+postings_path = POSTINGS.dir
+doclens_path = DOCLENS.dir
 
 
 def read_postings(spark: SparkSession, path: str) -> DataFrame:
     """The postings table's logical (doc_id, term, tf, tb) rows — the
     LSM view (plain base scan when the log is empty). Empty-with-
     schema when nothing is on disk."""
-    view = lsm_view(
-        spark, postings_path(path), "doc_id", schema=POSTINGS_DDL
-    )
-    if view is None:
-        view = spark.createDataFrame([], POSTINGS_DDL)
-    return view.select(
-        "doc_id", "term", "tf", F.col("tb").cast("int").alias("tb")
-    )
+    return POSTINGS.read(spark, path).select("doc_id", "term", "tf", "tb")
 
 
 def read_doclens(spark: SparkSession, path: str) -> DataFrame:
     """The doc-length table's logical (doc_id, dl, db) rows — same
     contract as read_postings."""
-    view = lsm_view(
-        spark, doclens_path(path), "doc_id", schema=DOCLENS_DDL
+    return DOCLENS.read(spark, path).select("doc_id", "dl", "db")
+
+
+def _counts(spark: SparkSession, path: str) -> dict:
+    """The sidecar's EXACT integer totals from the doclens view (one
+    column-pruned aggregate)."""
+    row = (
+        read_doclens(spark, path)
+        .agg(
+            F.count("*").cast("long").alias("n"),
+            F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("tot"),
+        )
+        .collect()[0]
     )
-    if view is None:
-        view = spark.createDataFrame([], DOCLENS_DDL)
-    return view.select("doc_id", "dl", F.col("db").cast("int").alias("db"))
+    return {"n_docs": int(row.n), "total_tokens": int(row.tot)}
 
 
 def _postings_and_lens(
@@ -145,24 +135,12 @@ def build_bm25_index(spark: SparkSession, sf_dir: str, path: str) -> dict:
     the one-time cost every probe afterwards avoids."""
     docs = load_table(spark, sf_dir, "documents")
     postings, lens = _postings_and_lens(docs)
-    write_overwrite(postings, postings_path(path), partition_by=["tb"])
-    write_overwrite(lens, doclens_path(path), partition_by=["db"])
-    lsm_reset(postings_path(path))  # a rebuild starts a fresh generation
-    lsm_reset(doclens_path(path))
-    row = (
-        spark.read.parquet(doclens_path(path))
-        .agg(
-            F.count("*").cast("long").alias("n"),
-            F.sum("dl").cast("long").alias("tot"),
-        )
-        .collect()[0]
-    )
-    return artifact.save_meta(path, "bm25", {
+    POSTINGS.write_base(postings, path)
+    DOCLENS.write_base(lens, path)
+    return lsm.maintain(spark, path, "bm25", {
         "fingerprint": artifact.source_fingerprint(sf_dir, "documents"),
         "params": {"nb": _NB},
-        "n_docs": int(row.n),
-        "total_tokens": int(row.tot),
-    })
+    }, TABLES, _counts)
 
 
 def ensure_bm25_index(
@@ -176,6 +154,7 @@ def ensure_bm25_index(
         "bm25", sf_dir, "documents", {"nb": _NB},
         lambda path: build_bm25_index(spark, sf_dir, path),
         root, variant,
+        lambda path, meta: lsm.settle(spark, path, "bm25", meta, TABLES, _counts),
     )
 
 
@@ -241,27 +220,6 @@ def served_bm25_topk(
     return topk.select(F.col("id").alias("doc_id"), "score", "n_terms_hit", "rank")
 
 
-def _settle(spark: SparkSession, path: str, meta: dict) -> dict:
-    """After a write: fold at quota, then the sidecar's EXACT integer
-    totals from the post-write doclens view (one column-pruned
-    aggregate)."""
-    lsm_maybe_compact(
-        spark, postings_path(path), "doc_id", ["tb"], sort_within=["term"]
-    )
-    lsm_maybe_compact(spark, doclens_path(path), "doc_id", ["db"])
-    row = (
-        read_doclens(spark, path)
-        .agg(
-            F.count("*").cast("long").alias("n"),
-            F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("tot"),
-        )
-        .collect()[0]
-    )
-    return artifact.save_meta(path, "bm25", {
-        **meta, "n_docs": int(row.n), "total_tokens": int(row.tot)
-    })
-
-
 def bm25_index_upsert(
     spark: SparkSession, path: str, meta: dict, new_docs: DataFrame
 ) -> dict:
@@ -274,9 +232,9 @@ def bm25_index_upsert(
     EXACT integer totals update. Older rows physically drop at the
     quota-triggered compact. Idempotent. Returns the updated meta."""
     postings, lens = _postings_and_lens(new_docs)
-    lsm_upsert(spark, postings_path(path), postings, "doc_id", ["tb"])
-    lsm_upsert(spark, doclens_path(path), lens, "doc_id", ["db"])
-    return _settle(spark, path, meta)
+    POSTINGS.upsert(spark, path, postings)
+    DOCLENS.upsert(spark, path, lens)
+    return lsm.maintain(spark, path, "bm25", meta, TABLES, _counts)
 
 
 def bm25_index_delete(
@@ -286,7 +244,6 @@ def bm25_index_delete(
     ids) — the docs' postings and lengths vanish from the VIEW
     immediately, from disk at the next compact; the sidecar's EXACT
     integer totals shrink. Idempotent."""
-    ids = doomed_ids.select("doc_id")
-    lsm_delete(spark, postings_path(path), ids, "doc_id")
-    lsm_delete(spark, doclens_path(path), ids, "doc_id")
-    return _settle(spark, path, meta)
+    for t in TABLES:
+        t.delete(spark, path, doomed_ids)
+    return lsm.maintain(spark, path, "bm25", meta, TABLES, _counts)

@@ -113,15 +113,16 @@ def test_paths_roots_and_variants(src, tmp_path, monkeypatch):
 
 def test_sidecar_write_is_atomic_inside_upsert(spark, sf_dir, tmp_path, monkeypatch):
     """A sidecar write that dies partway through an upsert leaves the
-    previous sidecar on disk, parseable and reused by the next ensure
-    (an in-place ``open(path, "w")`` would truncate it first)."""
+    previous sidecar on disk and parseable (an in-place
+    ``open(path, "w")`` would truncate it first). Its epoch listing
+    then lags the table's, so the next ensure recounts it from the
+    view instead of serving the pre-write counts, and builds nothing."""
     from lol_data_pipeline_spark.operators import minhash_index as mh
     from lol_data_pipeline_spark.operators.lsm import lsm_epochs
 
     root = str(tmp_path)
     path, meta = mh.ensure_minhash_index(spark, sf_dir, root=root)
     sidecar = os.path.join(path, "_minhash_meta.json")
-    mtime = os.stat(sidecar).st_mtime_ns
     real_dump = json.dump
 
     def dies_midway(obj, f, *a, **kw):
@@ -147,8 +148,10 @@ def test_sidecar_write_is_atomic_inside_upsert(spark, sf_dir, tmp_path, monkeypa
         raise AssertionError("ensure rebuilt a valid artifact")
 
     monkeypatch.setattr(mh, "build_minhash_index", no_rebuild)
-    assert mh.ensure_minhash_index(spark, sf_dir, root=root) == (path, meta)
-    assert os.stat(sidecar).st_mtime_ns == mtime
+    path2, meta2 = mh.ensure_minhash_index(spark, sf_dir, root=root)
+    view_ids = mh.read_minhash_buckets(spark, path).select("id").distinct().count()
+    assert path2 == path and meta2["n_docs"] == view_ids != meta["n_docs"]
+    assert artifact.load_meta(path, "minhash") == meta2
 
 
 def test_probe_after_compaction_reads_current_rows(

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from lol_data_pipeline_spark.operators.lsm import (
@@ -193,3 +194,34 @@ def test_quota_trigger_folds_at_threshold(spark, tmp_path):
     assert lsm_epochs(base)
     assert lsm_maybe_compact(spark, base, "id", ["hb"], quota=1)
     assert lsm_epochs(base) == []
+
+
+@pytest.mark.parametrize(
+    "module, table, build",
+    [
+        ("minhash_index", "BUCKETS", "build_minhash_index"),
+        ("phash_index", "BANDS", "build_phash_index"),
+        ("chunk_index", "CHUNKS", "build_chunk_index"),
+        ("chunk_index", "NGRAMS", "build_ngram_index"),
+        ("text_index", "POSTINGS", "build_bm25_index"),
+        ("text_index", "DOCLENS", "build_bm25_index"),
+        ("graph_index", "NODES", "build_knn_graph_index"),
+    ],
+)
+def test_built_base_matches_declared_ddl(spark, tmp_path, module, table, build):
+    """Each LSM table's build writes exactly its declared columns and
+    types: every read declares the DDL, so a base that drifted from it
+    would be null-filled or misread rather than rejected."""
+    import importlib
+
+    from pyspark.sql import types as T
+
+    mod = importlib.import_module(f"lol_data_pipeline_spark.operators.{module}")
+    tbl = getattr(mod, table)
+    path = str(tmp_path / module)
+    getattr(mod, build)(spark, SF, path)
+    on_disk = spark.read.parquet(tbl.dir(path)).schema
+    declared = T.StructType.fromDDL(tbl.ddl)
+    assert [(f.name, f.dataType.simpleString()) for f in on_disk] == [
+        (f.name, f.dataType.simpleString()) for f in declared
+    ]

@@ -140,3 +140,18 @@ def test_negative_control_driver_canon_crashes_on_lists():
         pd.DataFrame({"a": [2, 1], "d": pd.to_datetime(["2024-01-02", "2024-01-01"])})
     )
     assert out == [("1", "2024-01-01"), ("2", "2024-01-02")]
+
+
+def test_materialized_ctes_return_the_same_rows():
+    """check_parity runs every oracle with its CTEs materialized; for a
+    CTE referenced twice DuckDB must return the same rows either way."""
+    from tools.check_parity import materialize_ctes
+
+    sql = """WITH a AS (SELECT range AS x FROM range(6)),
+    b AS (SELECT x, x * x AS y FROM a)
+    SELECT p.x, q.y FROM b p JOIN b q ON p.x + 1 = q.x ORDER BY p.x"""
+    rewritten = materialize_ctes(sql)
+    assert rewritten.count("AS MATERIALIZED (") == 2
+    con = duckdb.connect()
+    assert con.execute(rewritten).fetchall() == con.execute(sql).fetchall()
+    assert len(con.execute(sql).fetchall()) == 5

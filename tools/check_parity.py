@@ -1,9 +1,9 @@
 """Local replica of the driver's correctness gate.
 
-Runs every REGISTRY entry's Spark plan and DuckDB oracle SQL on the
-same sf dir and compares row count, column names, and
-order-insensitive values (exact after normalization; float drift is
-reported separately because it would break a value-hash).
+Runs every REGISTRY entry's Spark plan and DuckDB oracle SQL (every
+CTE materialized) on the same sf dir and compares row count, column
+names, and order-insensitive values (exact after normalization; float
+drift is reported separately because it would break a value-hash).
 
 Usage: python tools/check_parity.py [sf_dir] [query ...]
 """
@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import datetime as dt
 import math
+import re
 import sys
 
 import duckdb
@@ -136,6 +137,18 @@ def audit_dtype_agreement(spark_schema, con, sql):
     return flagged
 
 
+# DuckDB inlines a CTE at each of its references. The component
+# oracles reference every label round twice, so inlined they blow up
+# with the round count (at sf0.1 they spilled ~7 GB and never
+# finished); materialized, each CTE runs once, with the same rows.
+_CTE = re.compile(r"(\bWITH\s+|,\s*)(\w+)\s+AS\s+\(", re.IGNORECASE)
+
+
+def materialize_ctes(sql: str) -> str:
+    """``sql`` with every CTE evaluated ``AS MATERIALIZED``."""
+    return _CTE.sub(r"\1\2 AS MATERIALIZED (", sql)
+
+
 def norm(v):
     if isinstance(v, dt.datetime):
         # Deliberately do NOT strip tzinfo: an aware oracle timestamp vs
@@ -219,9 +232,10 @@ def main():
             print(f"✗ {name}: SPARK ERROR {type(e).__name__}: {str(e)[:300]}")
             n_fail += 1
             continue
+        sql = materialize_ctes(spec.sql)
         try:
-            type_flags = audit_oracle_types(con, spec.sql)
-            res = con.execute(spec.sql)
+            type_flags = audit_oracle_types(con, sql)
+            res = con.execute(sql)
             duck_cols = [d[0] for d in res.description]
             duck_rows = res.fetchall()
         except Exception as e:
@@ -231,7 +245,7 @@ def main():
         issues = compare(name, spark_rows, duck_rows, spark_cols, duck_cols)
         if type_flags:
             issues.append(f"ORACLE-TYPE {type_flags}")
-        dtype_flags = audit_dtype_agreement(sdf.schema, con, spec.sql)
+        dtype_flags = audit_dtype_agreement(sdf.schema, con, sql)
         if dtype_flags:
             issues.append(f"DTYPE-DISAGREE {dtype_flags}")
         if issues:

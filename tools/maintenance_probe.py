@@ -38,7 +38,6 @@ from lol_data_pipeline_spark.io import load_table  # noqa: E402
 from lol_data_pipeline_spark.operators.lsm import (  # noqa: E402
     delta_path,
     dir_bytes,
-    lsm_compact,
     tomb_path,
 )
 from lol_data_pipeline_spark.session import get_spark  # noqa: E402
@@ -92,46 +91,39 @@ def probe_family(spark, family: str, sf_dir: str, scale: str, batch) -> list[dic
     os.makedirs(work, exist_ok=True)
     if family == "chunk":
         from lol_data_pipeline_spark.operators.chunk_index import (
+            CHUNKS as table,
             build_chunk_index,
-            chunk_index_upsert,
-            chunks_path,
+            chunk_index_upsert as upsert,
         )
 
         t0 = time.perf_counter()
         meta = build_chunk_index(spark, sf_dir, work, c=8)
-        t_build = time.perf_counter() - t0
-        base_dir, upsert = chunks_path(work), chunk_index_upsert
-        part, sort = ["hb"], ["h"]
     elif family == "ngram":
         from lol_data_pipeline_spark.operators.chunk_index import (
+            NGRAMS as table,
             build_ngram_index,
-            chunks_path,
-            ngram_index_upsert,
+            ngram_index_upsert as upsert,
         )
 
         t0 = time.perf_counter()
         meta = build_ngram_index(spark, sf_dir, work, n=5)
-        t_build = time.perf_counter() - t0
-        base_dir, upsert = chunks_path(work), ngram_index_upsert
-        part, sort = ["hb"], ["h"]
     else:  # phash
         from lol_data_pipeline_spark.operators.phash_index import (
-            bands_path,
+            BANDS as table,
             build_phash_index,
-            phash_index_upsert,
+            phash_index_upsert as upsert,
         )
 
         t0 = time.perf_counter()
         meta = build_phash_index(spark, sf_dir, work)
-        t_build = time.perf_counter() - t0
-        base_dir, upsert = bands_path(work), phash_index_upsert
-        part, sort = ["band"], ["chunk"]
         batch = batch.select(
             F.col("doc_id").alias("media_id"),
             (F.col("doc_id") - 77_000_000).alias("src"),
             F.lit(0).alias("perturb"),
         )
 
+    t_build = time.perf_counter() - t0
+    base_dir = table.dir(work)
     base_bytes = dir_bytes(base_dir)
     before = _file_set(base_dir)
     t0 = time.perf_counter()
@@ -140,7 +132,7 @@ def probe_family(spark, family: str, sf_dir: str, scale: str, batch) -> list[dic
     touched = len(before ^ (_file_set(base_dir) & before))
     wrote = dir_bytes(delta_path(base_dir)) + dir_bytes(tomb_path(base_dir))
     t0 = time.perf_counter()
-    lsm_compact(spark, base_dir, "id", part, sort_within=sort)
+    table.compact(spark, work)
     t_compact = time.perf_counter() - t0
     rows = [
         {

@@ -362,13 +362,8 @@ BARE_READ_OK = {
     # runs once per (table, file generation), then every read declares
     "io.py:compact_parquet",  # maintenance rewrite, once per compact
     "operators/lsm.py:lsm_view",  # the schema=None fallback branch;
-    # every family caller passes its declared DDL
-    "operators/minhash_index.py:build_minhash_index",  # build-once
-    "operators/graph_index.py:build_knn_graph_index",  # build-once
-    "operators/chunk_index.py:build_chunk_index",  # build-once
-    "operators/chunk_index.py:build_ngram_index",  # build-once
-    "operators/phash_index.py:build_phash_index",  # build-once
-    "operators/text_index.py:build_bm25_index",  # build-once
+    # every Table passes its DDL, so only direct lsm_compact calls (the
+    # chunk_index_compact entry, tests) still infer
     "operators/sketch_index.py:build_hll_index",  # build-once
     "operators/sketch_index.py:hll_index_upsert",  # maintenance merge
     # over the register partitions it rewrites (write-staging entry)
