@@ -53,9 +53,10 @@ N_BUCKETS = 16  # constant partition count — the maintenance unit
 
 # the chunk and n-gram artifacts keep their rows in the same directory
 CHUNKS = lsm.Table(
-    "chunks", "id", ("hb",), ("h",), "id long, chunk_idx int, h long, hb int"
+    "chunks", "id", ("hb",), ("h",), "id long, chunk_idx int, h long, hb int",
+    "doc_id",
 )
-NGRAMS = lsm.Table("chunks", "id", ("hb",), ("h",), "id long, h long, hb int")
+NGRAMS = lsm.Table("chunks", "id", ("hb",), ("h",), "id long, h long, hb int", "doc_id")
 chunks_path = CHUNKS.dir
 
 
@@ -202,7 +203,8 @@ def chunk_index_upsert(
     re-ingesting a changed document replaces at the view level, never
     double-indexes) and the sidecar counts update exactly. Older rows
     physically drop at the quota-triggered compact. Idempotent."""
-    CHUNKS.upsert(spark, path, _batch_chunk_rows(new_docs, meta["params"]["c"]))
+    rows = _batch_chunk_rows(new_docs, meta["params"]["c"])
+    CHUNKS.upsert(spark, path, rows, new_docs)
     return lsm.maintain(spark, path, "chunk", meta, (CHUNKS,), _chunk_counts)
 
 
@@ -215,7 +217,7 @@ def chunk_index_delete(
     table stays readable (base + tombstones keep their parquet
     footers), so upsert-after-full-delete works (r13 ADVICE).
     Idempotent."""
-    CHUNKS.delete(spark, path, doomed_ids.select(F.col("doc_id").alias("id")))
+    CHUNKS.delete(spark, path, doomed_ids)
     return lsm.maintain(spark, path, "chunk", meta, (CHUNKS,), _chunk_counts)
 
 
@@ -328,7 +330,8 @@ def ngram_index_upsert(
     + id tombstones (re-ingesting a changed document replaces at the
     view level, never double-counts); older rows physically drop at
     the quota-triggered compact. Idempotent."""
-    NGRAMS.upsert(spark, path, _batch_ngram_rows(new_docs, meta["params"]["n"]))
+    rows = _batch_ngram_rows(new_docs, meta["params"]["n"])
+    NGRAMS.upsert(spark, path, rows, new_docs)
     return lsm.maintain(spark, path, "ngram", meta, (NGRAMS,), _ngram_counts)
 
 
@@ -340,5 +343,5 @@ def ngram_index_delete(
     the VIEW immediately, from disk at the next compact; the sidecar
     counts shrink exactly, and a fully-emptied table stays readable.
     Idempotent."""
-    NGRAMS.delete(spark, path, doomed_ids.select(F.col("doc_id").alias("id")))
+    NGRAMS.delete(spark, path, doomed_ids)
     return lsm.maintain(spark, path, "ngram", meta, (NGRAMS,), _ngram_counts)

@@ -35,6 +35,8 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -282,7 +284,7 @@ def power_iteration(
     ]
     for _ in range(rounds):
         w = _gv_round(emb, v, dim, vec_col)
-        nrm = _cc(w) ** 0.5
+        nrm = math.sqrt(_cc(w))  # correctly rounded, as the oracle's sqrt
         v = [wj / nrm for wj in w]
     return v
 
@@ -356,7 +358,7 @@ def power_topr(
             for u in dirs:
                 du = _ip(w, u)
                 w = [w[i] - du * u[i] for i in range(dim)]
-            nrm = _cc(w) ** 0.5
+            nrm = math.sqrt(_cc(w))
             v = [wj / nrm for wj in w]
         dirs.append(v)
     return dirs

@@ -144,14 +144,9 @@ def bucket_edges(nodes: DataFrame, k: int) -> DataFrame:
 
 NODES = lsm.Table(
     "nodes", "vec_id", ("code",), (),
-    "vec_id long, embedding array<double>, code int",
+    "vec_id long, embedding array<double>, code int", "vec_id",
 )
-TABLES = (NODES,)
 nodes_path = NODES.dir
-
-
-def _counts(spark: SparkSession, path: str) -> dict:
-    return {}  # the graph sidecar keeps no counts
 
 
 def edges_path(path: str) -> str:
@@ -168,9 +163,9 @@ def build_knn_graph_index(
     """The graph BUILD: code the corpus against the first
     ``n_planes`` corpus vectors, persist nodes and top-k edges
     hive-partitioned by ``code``, and write the sidecar (literal
-    plane vectors + source fingerprint + params). One bucket
-    self-join over the whole corpus — the Σ bucket² pass the serve
-    path never repays."""
+    plane vectors + source fingerprint + params) once: writes never
+    touch it. One bucket self-join over the whole corpus — the
+    Σ bucket² pass the serve path never repays."""
     emb = widen(load_table(spark, sf_dir, "embeddings"))
     plane_rows = (
         emb.filter(F.col("vec_id") < n_planes)
@@ -184,11 +179,11 @@ def build_knn_graph_index(
         bucket_edges(read_nodes(spark, path), k), edges_path(path),
         partition_by=["code"],
     )
-    return lsm.maintain(spark, path, "knn", {
+    return artifact.save_meta(path, "knn", {
         "fingerprint": artifact.source_fingerprint(sf_dir, "embeddings"),
         "params": {"n_planes": n_planes, "k": k},
         "planes": planes,
-    }, TABLES, _counts)
+    })
 
 
 def ensure_knn_graph_index(
@@ -206,7 +201,6 @@ def ensure_knn_graph_index(
             spark, sf_dir, path, n_planes=n_planes, k=k
         ),
         root, variant,
-        lambda path, meta: lsm.settle(spark, path, "knn", meta, TABLES, _counts),
     )
 
 
@@ -284,14 +278,14 @@ def graph_upsert(
         .distinct()
     )
     affected = sorted({int(r.code) for r in old.collect()} | set(batch_codes))
-    NODES.upsert(spark, path, coded)
+    NODES.upsert(spark, path, coded, new_vecs)
     merged = read_nodes(spark, path, codes=affected)
     edges = bucket_edges(merged, k).localCheckpoint()
     write_upsert_partitions(edges, edges_path(path), ["code"])
     # a merged bucket can still produce zero edges (single-member
     # bucket) — its stale edge directory must not survive
     _drop_emptied(spark, edges_path(path), affected, edges)
-    lsm.maintain(spark, path, "knn", meta, TABLES, _counts)
+    NODES.fold(spark, path)
     return affected
 
 
@@ -330,7 +324,7 @@ def graph_delete(
     edges = bucket_edges(keep, k).localCheckpoint()
     write_upsert_partitions(edges, edges_path(path), ["code"])
     _drop_emptied(spark, edges_path(path), affected, edges)
-    lsm.maintain(spark, path, "knn", meta, TABLES, _counts)
+    NODES.fold(spark, path)
     return affected
 
 

@@ -49,13 +49,16 @@ schema DDL). The declaration owns the table's whole life: the build's
 base write (the same layout a compaction writes, then a fresh
 generation), the view (declared schema; an empty frame of that schema
 when nothing is on disk), the upsert/delete appends (conformed to the
-DDL) and the quota fold (reads with the DDL, never infers). After a
-write the family calls :func:`maintain`: fold each table at quota, then
-save the sidecar with the family's counts and the epoch listing they
-were taken at. :func:`settle` is ``artifact.ensure``'s reuse hook: a
-sidecar whose listing differs from disk lags its data (a writer died
-between the table write and the sidecar save), so it is recounted, not
-reused.
+DDL; an upsert tombstones the batch's key column, so a document whose
+new text derives no rows still loses its old ones) and the quota fold
+(reads with the DDL, never infers). Minhash and kNN graph write their
+sidecar once, at build, and end each write in :meth:`Table.fold`. The
+counted families (chunk, n-gram, BM25, phash) end it in
+:func:`maintain`: fold each table at quota, then save the sidecar with
+the family's counts and the epoch listing they were taken at.
+:func:`settle` is their ``artifact.ensure`` reuse hook: a sidecar whose
+listing differs from disk lags its data (a writer died between the
+table write and the sidecar save), so it is recounted, not reused.
 
 tests/test_lsm_maintenance.py pins: delta bytes scale with the
 batch, not the corpus (the r13 verdict's done-criterion), view
@@ -240,14 +243,13 @@ def lsm_upsert(
     spark: SparkSession,
     table_dir: str,
     rows: DataFrame,
-    id_col: str,
     partition_by: list[str],
-    tombstone_ids: DataFrame | None = None,
+    tombstone_ids: DataFrame,
 ) -> dict:
     """Merge a batch into the table: append its rows as a delta epoch
-    and tombstone its ids (superseding any older rows — replace
-    semantics). Both writes are ∝ batch; the base table is NOT
-    touched.
+    and tombstone ``tombstone_ids``, the batch's keys (superseding any
+    older rows — replace semantics). Both writes are ∝ batch; the base
+    table is NOT touched.
 
     Write order is TOMBSTONES FIRST: the two appends are not atomic
     together, and a crash between them must fail CLOSED — tombstones
@@ -261,12 +263,7 @@ def lsm_upsert(
     Returns {"epoch", "delta_bytes", "tomb_bytes"} so tests and the
     scale probe can assert the write-cost bound."""
     epoch = _next_epoch(table_dir)
-    ids = (
-        tombstone_ids
-        if tombstone_ids is not None
-        else rows.select(id_col).distinct()
-    )
-    _write_epoch(ids.select(id_col).distinct(), tomb_path(table_dir), epoch, [])
+    _write_epoch(tombstone_ids.distinct(), tomb_path(table_dir), epoch, [])
     _write_epoch(rows, delta_path(table_dir), epoch, partition_by)
     _refresh(spark, table_dir)
     return {
@@ -280,16 +277,14 @@ def lsm_upsert(
     }
 
 
-def lsm_delete(
-    spark: SparkSession, table_dir: str, ids: DataFrame, id_col: str
-) -> dict:
+def lsm_delete(spark: SparkSession, table_dir: str, ids: DataFrame) -> dict:
     """Take-down: tombstones only — write cost ∝ doomed ids. The
     doomed rows stay on disk, suppressed by the view, until the next
     compact physically drops them (the right-to-be-forgotten SLA is
     therefore the compact cadence — same contract as every MOR table
     format's VACUUM)."""
     epoch = _next_epoch(table_dir)
-    _write_epoch(ids.select(id_col).distinct(), tomb_path(table_dir), epoch, [])
+    _write_epoch(ids.distinct(), tomb_path(table_dir), epoch, [])
     _refresh(spark, table_dir)
     return {
         "epoch": epoch,
@@ -390,13 +385,15 @@ def _conform(df: DataFrame, ddl: str) -> DataFrame:
 class Table:
     """One LSM table of an index family, declared once. ``name`` is its
     directory under the artifact; ``ddl`` lists data then partition
-    columns, in storage order."""
+    columns, in storage order; ``key`` is the column a write's batch
+    carries the ids in."""
 
     name: str
     id_col: str
     partition_by: tuple[str, ...]
     sort_within: tuple[str, ...]
     ddl: str
+    key: str
 
     def dir(self, path: str) -> str:
         return os.path.join(path, self.name)
@@ -417,19 +414,23 @@ class Table:
         view = lsm_view(spark, self.dir(path), self.id_col, schema=self.ddl)
         return view if view is not None else spark.createDataFrame([], self.ddl)
 
-    def upsert(self, spark: SparkSession, path: str, rows: DataFrame) -> dict:
+    def _ids(self, batch: DataFrame) -> DataFrame:
+        id_type = T.StructType.fromDDL(self.ddl)[self.id_col].dataType
+        return batch.select(F.col(self.key).cast(id_type).alias(self.id_col))
+
+    def upsert(
+        self, spark: SparkSession, path: str, rows: DataFrame, batch: DataFrame
+    ) -> dict:
+        """Append ``rows``, derived from ``batch``; tombstone the batch's
+        ``key`` column."""
         return lsm_upsert(
-            spark, self.dir(path), _conform(rows, self.ddl), self.id_col,
-            list(self.partition_by),
+            spark, self.dir(path), _conform(rows, self.ddl),
+            list(self.partition_by), self._ids(batch),
         )
 
-    def delete(self, spark: SparkSession, path: str, ids: DataFrame) -> dict:
-        id_type = T.StructType.fromDDL(self.ddl)[self.id_col].dataType
-        return lsm_delete(
-            spark, self.dir(path),
-            ids.select(F.col(self.id_col).cast(id_type).alias(self.id_col)),
-            self.id_col,
-        )
+    def delete(self, spark: SparkSession, path: str, batch: DataFrame) -> dict:
+        """Tombstone the batch's ``key`` column."""
+        return lsm_delete(spark, self.dir(path), self._ids(batch))
 
     def compact(self, spark: SparkSession, path: str) -> bool:
         """Force the fold (:func:`lsm_compact` with the declared layout)."""
@@ -462,9 +463,10 @@ def maintain(
     tables: tuple[Table, ...],
     counts: Counts,
 ) -> dict:
-    """Settle an artifact after a build or a write: fold each table at
-    quota, then save ``{**meta, **counts(spark, path)}`` with the epoch
-    listing the counts were taken at. Returns the saved meta."""
+    """Settle a counted family's artifact after a build or a write:
+    fold each table at quota, then save ``{**meta, **counts(spark,
+    path)}`` with the epoch listing the counts were taken at. Returns
+    the saved meta."""
     for t in tables:
         t.fold(spark, path)
     return artifact.save_meta(path, kind, {
@@ -480,8 +482,9 @@ def settle(
     tables: tuple[Table, ...],
     counts: Counts,
 ) -> dict:
-    """``meta`` if its epoch listing matches disk, else :func:`maintain`
-    recounts it. A sidecar without the listing counts as all-empty."""
+    """A counted family's reuse hook: ``meta`` if its epoch listing
+    matches disk, else :func:`maintain` recounts it. A sidecar without
+    the listing counts as all-empty."""
     stored = meta.get("epochs") or {t.name: [] for t in tables}
     if stored == epochs(path, tables):
         return meta

@@ -16,7 +16,7 @@ is that deployment:
   by ``band`` and sorted by ``bkey`` within files (a probe's per-band
   bkey point predicates become row-group skipping — the layout
   tests/test_data_skipping.py pins), plus a sidecar with the LSH
-  params and source fingerprint.
+  params and source fingerprint, written once (no write recounts).
 - PROBE (per batch): shingle + sign ONLY the incoming batch (the
   index corpus is never re-tokenized), equi-join its bucket rows
   against the persisted table on (band, bkey), then verify candidate
@@ -57,9 +57,9 @@ from lol_data_pipeline_spark.operators.dedup import (
 )
 
 BUCKETS = lsm.Table(
-    "buckets", "id", ("band",), ("bkey",), "id long, bkey string, band int"
+    "buckets", "id", ("band",), ("bkey",), "id long, bkey string, band int",
+    "doc_id",
 )
-TABLES = (BUCKETS,)
 buckets_path = BUCKETS.dir
 
 
@@ -68,13 +68,6 @@ def read_minhash_buckets(spark: SparkSession, path: str) -> DataFrame:
     (plain base scan when the log is empty). Empty-with-schema when
     nothing is on disk, so probe-after-full-take-down works."""
     return BUCKETS.read(spark, path).select("id", "band", "bkey")
-
-
-def _counts(spark: SparkSession, path: str) -> dict:
-    return {
-        "n_docs": read_minhash_buckets(spark, path)
-        .select("id").distinct().count()
-    }
 
 
 def _batch_buckets(docs: DataFrame, k: int, bands: int, n: int) -> DataFrame:
@@ -106,10 +99,10 @@ def build_minhash_index(
     if index_where:
         docs = docs.filter(F.expr(index_where))
     BUCKETS.write_base(_batch_buckets(docs, k, bands, n), path)
-    return lsm.maintain(spark, path, "minhash", {
+    return artifact.save_meta(path, "minhash", {
         "fingerprint": artifact.source_fingerprint(sf_dir, "documents"),
         "params": {"k": k, "bands": bands, "n": n, "index_where": index_where},
-    }, TABLES, _counts)
+    })
 
 
 def ensure_minhash_index(
@@ -131,9 +124,6 @@ def ensure_minhash_index(
             spark, sf_dir, path, k=k, bands=bands, n=n, index_where=index_where
         ),
         root, variant,
-        lambda path, meta: lsm.settle(
-            spark, path, "minhash", meta, TABLES, _counts
-        ),
     )
 
 
@@ -195,16 +185,16 @@ def minhash_index_upsert(
     spark: SparkSession, path: str, meta: dict, new_docs: DataFrame
 ) -> dict:
     """Merge a document batch into the persisted index: its bucket
-    rows APPEND as a delta epoch + id tombstones (write ∝ batch;
-    re-ingesting a changed document replaces at the view level, never
-    double-buckets) and the sidecar's doc count updates exactly.
-    Older rows physically drop at the quota-triggered compact.
-    Idempotent."""
+    rows APPEND as a delta epoch + tombstones of the batch's doc ids
+    (write ∝ batch; re-ingesting a changed document replaces at the
+    view level, never double-buckets, even when its new text is too
+    short to bucket). Older rows physically drop at the
+    quota-triggered compact. Idempotent. Returns ``meta`` unchanged."""
     p = meta["params"]
-    BUCKETS.upsert(
-        spark, path, _batch_buckets(new_docs, p["k"], p["bands"], p["n"])
-    )
-    return lsm.maintain(spark, path, "minhash", meta, TABLES, _counts)
+    rows = _batch_buckets(new_docs, p["k"], p["bands"], p["n"])
+    BUCKETS.upsert(spark, path, rows, new_docs)
+    BUCKETS.fold(spark, path)
+    return meta
 
 
 def minhash_index_delete(
@@ -212,9 +202,10 @@ def minhash_index_delete(
 ) -> dict:
     """Take-down: tombstones only (write ∝ doomed ids) — the batch's
     bucket rows vanish from the VIEW immediately, from disk at the
-    next compact; the sidecar count shrinks exactly. Idempotent."""
-    BUCKETS.delete(spark, path, doomed_ids.select(F.col("doc_id").alias("id")))
-    return lsm.maintain(spark, path, "minhash", meta, TABLES, _counts)
+    next compact. Idempotent. Returns ``meta`` unchanged."""
+    BUCKETS.delete(spark, path, doomed_ids)
+    BUCKETS.fold(spark, path)
+    return meta
 
 
 def minhash_sql_ctes(

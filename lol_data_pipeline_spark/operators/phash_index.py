@@ -58,7 +58,7 @@ _MASK = (1 << _WIDTH) - 1
 
 BANDS = lsm.Table(
     "bands", "id", ("band",), ("chunk",),
-    "id long, simhash long, chunk long, band int",
+    "id long, simhash long, chunk long, band int", "media_id",
 )
 TABLES = (BANDS,)
 bands_path = BANDS.dir
@@ -243,7 +243,7 @@ def phash_index_upsert(
     at the quota-triggered compact. Idempotent at the view level."""
     BANDS.upsert(spark, path, _batch_band_rows(
         new_media, signer=meta["params"].get("signer", "image")
-    ))
+    ), new_media)
     return lsm.maintain(spark, path, "phash", meta, TABLES, _counts)
 
 
@@ -253,5 +253,5 @@ def phash_index_delete(
     """Take-down: tombstones only (write ∝ doomed ids); the batch's
     rows vanish from the VIEW immediately and from disk at the next
     compact; the sidecar count shrinks exactly. Idempotent."""
-    BANDS.delete(spark, path, doomed_ids.select(F.col("media_id").alias("id")))
+    BANDS.delete(spark, path, doomed_ids)
     return lsm.maintain(spark, path, "phash", meta, TABLES, _counts)

@@ -72,9 +72,11 @@ def term_bucket(term: str) -> int:
 
 POSTINGS = lsm.Table(
     "postings", "doc_id", ("tb",), ("term",),
-    "doc_id long, term string, tf long, tb int",
+    "doc_id long, term string, tf long, tb int", "doc_id",
 )
-DOCLENS = lsm.Table("doclens", "doc_id", ("db",), (), "doc_id long, dl long, db int")
+DOCLENS = lsm.Table(
+    "doclens", "doc_id", ("db",), (), "doc_id long, dl long, db int", "doc_id"
+)
 TABLES = (POSTINGS, DOCLENS)
 postings_path = POSTINGS.dir
 doclens_path = DOCLENS.dir
@@ -232,8 +234,8 @@ def bm25_index_upsert(
     EXACT integer totals update. Older rows physically drop at the
     quota-triggered compact. Idempotent. Returns the updated meta."""
     postings, lens = _postings_and_lens(new_docs)
-    POSTINGS.upsert(spark, path, postings)
-    DOCLENS.upsert(spark, path, lens)
+    POSTINGS.upsert(spark, path, postings, new_docs)
+    DOCLENS.upsert(spark, path, lens, new_docs)
     return lsm.maintain(spark, path, "bm25", meta, TABLES, _counts)
 
 

@@ -112,17 +112,18 @@ def test_paths_roots_and_variants(src, tmp_path, monkeypatch):
 
 
 def test_sidecar_write_is_atomic_inside_upsert(spark, sf_dir, tmp_path, monkeypatch):
-    """A sidecar write that dies partway through an upsert leaves the
-    previous sidecar on disk and parseable (an in-place
-    ``open(path, "w")`` would truncate it first). Its epoch listing
-    then lags the table's, so the next ensure recounts it from the
-    view instead of serving the pre-write counts, and builds nothing."""
-    from lol_data_pipeline_spark.operators import minhash_index as mh
+    """A sidecar write that dies partway through an upsert of a counted
+    family (BM25) leaves the previous sidecar on disk and parseable (an
+    in-place ``open(path, "w")`` would truncate it first). Its epoch
+    listing then lags the tables', so the next ensure recounts it from
+    the view instead of serving the pre-write counts, and builds
+    nothing."""
+    from lol_data_pipeline_spark.operators import text_index as ti
     from lol_data_pipeline_spark.operators.lsm import lsm_epochs
 
     root = str(tmp_path)
-    path, meta = mh.ensure_minhash_index(spark, sf_dir, root=root)
-    sidecar = os.path.join(path, "_minhash_meta.json")
+    path, meta = ti.ensure_bm25_index(spark, sf_dir, root=root)
+    sidecar = os.path.join(path, "_text_meta.json")
     real_dump = json.dump
 
     def dies_midway(obj, f, *a, **kw):
@@ -135,10 +136,11 @@ def test_sidecar_write_is_atomic_inside_upsert(spark, sf_dir, tmp_path, monkeypa
         (F.col("doc_id") + 970000).alias("doc_id"), "text"
     )
     with pytest.raises(OSError, match="disk full"):
-        mh.minhash_index_upsert(spark, path, meta, batch)
+        ti.bm25_index_upsert(spark, path, meta, batch)
     monkeypatch.setattr(json, "dump", real_dump)
     # it died after the data write, at the sidecar
-    assert lsm_epochs(mh.buckets_path(path)) == [1]
+    assert lsm_epochs(ti.postings_path(path)) == [1]
+    assert lsm_epochs(ti.doclens_path(path)) == [1]
 
     with open(sidecar) as f:
         assert json.load(f) == meta
@@ -147,11 +149,11 @@ def test_sidecar_write_is_atomic_inside_upsert(spark, sf_dir, tmp_path, monkeypa
     def no_rebuild(*a, **kw):
         raise AssertionError("ensure rebuilt a valid artifact")
 
-    monkeypatch.setattr(mh, "build_minhash_index", no_rebuild)
-    path2, meta2 = mh.ensure_minhash_index(spark, sf_dir, root=root)
-    view_ids = mh.read_minhash_buckets(spark, path).select("id").distinct().count()
-    assert path2 == path and meta2["n_docs"] == view_ids != meta["n_docs"]
-    assert artifact.load_meta(path, "minhash") == meta2
+    monkeypatch.setattr(ti, "build_bm25_index", no_rebuild)
+    path2, meta2 = ti.ensure_bm25_index(spark, sf_dir, root=root)
+    view_docs = ti.read_doclens(spark, path).count()
+    assert path2 == path and meta2["n_docs"] == view_docs != meta["n_docs"]
+    assert artifact.load_meta(path, "bm25") == meta2
 
 
 def test_probe_after_compaction_reads_current_rows(

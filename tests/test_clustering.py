@@ -154,3 +154,24 @@ def test_probe_cells_nprobe_exceeding_centroids(spark):
         assert sorted(p for p, _ in probes) == list(range(1, len(probes) + 1))
         cells = [c for _, c in probes]
         assert len(cells) == len(set(cells)) == 2  # C=2 cells, each once
+
+
+def test_power_norm_is_the_oracles_correctly_rounded_sqrt(spark, monkeypatch):
+    """power_iteration and power_topr normalize by the oracle's ``sqrt``
+    of the sequential |w|² fold. At |w|² = 677780.7041081183, ``x ** 0.5``
+    is one ulp above the correctly rounded root."""
+    import math
+
+    import duckdb
+
+    from lol_data_pipeline_spark.operators import clustering
+
+    sq = 677780.7041081183
+    root = duckdb.execute("SELECT sqrt(?)", [sq]).fetchone()[0]
+    assert root == math.sqrt(sq) != sq ** 0.5
+    # one round whose G·v product is (root, -2·root) with |w|² = sq
+    monkeypatch.setattr(clustering, "_gv_round", lambda *a: [root, -2 * root])
+    monkeypatch.setattr(clustering, "_cc", lambda w: sq)
+    emb = spark.createDataFrame([(0, [1.0, 0.0])], "vec_id long, embedding array<float>")
+    assert clustering.power_iteration(emb, rounds=1, dim=2) == [1.0, -2.0]
+    assert clustering.power_topr(emb, r=1, rounds=1, dim=2) == [[1.0, -2.0]]

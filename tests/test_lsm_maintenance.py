@@ -225,3 +225,90 @@ def test_built_base_matches_declared_ddl(spark, tmp_path, module, table, build):
     assert [(f.name, f.dataType.simpleString()) for f in on_disk] == [
         (f.name, f.dataType.simpleString()) for f in declared
     ]
+
+
+@pytest.mark.parametrize(
+    "module, build, upsert, read, id_col, text",
+    [
+        ("minhash_index", "build_minhash_index", "minhash_index_upsert",
+         "read_minhash_buckets", "id", "too short"),  # < n=3 words
+        ("chunk_index", "build_chunk_index", "chunk_index_upsert",
+         "read_chunk_rows", "id", ""),  # no word, no chunk
+        ("chunk_index", "build_ngram_index", "ngram_index_upsert",
+         "read_ngram_rows", "id", "too short"),  # < n=5 words
+        ("text_index", "build_bm25_index", "bm25_index_upsert",
+         "read_postings", "doc_id", ""),  # no term, no posting
+    ],
+)
+def test_reupsert_with_rowless_text_replaces_old_rows(
+    spark, tmp_path, module, build, upsert, read, id_col, text
+):
+    """An upsert tombstones the batch's ids, not the ids of the rows it
+    derives: a document re-upserted with text too short to produce any
+    row loses its old rows instead of keeping them in the view."""
+    import importlib
+
+    mod = importlib.import_module(f"lol_data_pipeline_spark.operators.{module}")
+    path = str(tmp_path / module)
+    os.makedirs(path, exist_ok=True)
+    meta = getattr(mod, build)(spark, SF, path)
+
+    def doc1_rows():
+        return getattr(mod, read)(spark, path).filter(F.col(id_col) == 1).count()
+
+    assert doc1_rows() > 0
+    batch = spark.createDataFrame([(1, text)], "doc_id long, text string")
+    getattr(mod, upsert)(spark, path, meta, batch)
+    assert doc1_rows() == 0
+
+
+def _job_id(spark):
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
+def test_minhash_writes_are_count_free(spark, tmp_path):
+    """Below quota a minhash upsert starts at most 5 Spark jobs and a
+    delete at most 2: no write recounts the index. The sidecar is the
+    build's, byte for byte, after both writes."""
+    from lol_data_pipeline_spark.operators import minhash_index as mh
+
+    path = str(tmp_path / "mh")
+    os.makedirs(path, exist_ok=True)
+    meta = mh.build_minhash_index(spark, SF, path)
+    sidecar = os.path.join(path, "_minhash_meta.json")
+    with open(sidecar, "rb") as f:
+        built = f.read()
+    batch = _batch(spark, n=20)
+    j0 = _job_id(spark)
+    assert mh.minhash_index_upsert(spark, path, meta, batch) == meta
+    j1 = _job_id(spark)
+    assert mh.minhash_index_delete(spark, path, meta, batch.select("doc_id")) == meta
+    j2 = _job_id(spark)
+    assert lsm_epochs(mh.buckets_path(path)) == [1, 2]  # below quota
+    upsert_jobs, delete_jobs = j1 - j0, j2 - j1
+    assert upsert_jobs <= 5 and delete_jobs <= 2, (upsert_jobs, delete_jobs)
+    with open(sidecar, "rb") as f:
+        assert f.read() == built
+
+
+def test_knn_graph_writes_leave_the_sidecar_alone(spark, tmp_path):
+    """The kNN-graph sidecar (planes, params, fingerprint) is written
+    once, at build: an upsert and a delete leave it byte-identical."""
+    from lol_data_pipeline_spark.io import load_table
+    from lol_data_pipeline_spark.operators import graph_index as gi
+
+    path = str(tmp_path / "knn")
+    os.makedirs(path, exist_ok=True)
+    meta = gi.build_knn_graph_index(spark, SF, path)
+    sidecar = os.path.join(path, "_graph_meta.json")
+    with open(sidecar, "rb") as f:
+        built = f.read()
+    vecs = load_table(spark, SF, "embeddings").filter(F.col("vec_id") < 4).select(
+        (F.col("vec_id") + 880000).alias("vec_id"), "embedding"
+    )
+    gi.graph_upsert(spark, path, meta, vecs)
+    gi.graph_delete(spark, path, meta, vecs)
+    assert lsm_epochs(gi.nodes_path(path)) == [1, 2]
+    assert gi.read_nodes(spark, path).filter(F.col("vec_id") >= 880000).count() == 0
+    with open(sidecar, "rb") as f:
+        assert f.read() == built

@@ -908,6 +908,7 @@ def test_minhash_layout_and_fresh_reuse(spark, sf_dir, tmp_path_factory):
     from lol_data_pipeline_spark.operators.minhash_index import (
         buckets_path,
         ensure_minhash_index,
+        read_minhash_buckets,
     )
 
     root = str(tmp_path_factory.mktemp("mh_idx"))
@@ -916,7 +917,8 @@ def test_minhash_layout_and_fresh_reuse(spark, sf_dir, tmp_path_factory):
         d for d in os.listdir(buckets_path(path)) if d.startswith("band=")
     ]
     assert len(parts) == 8
-    assert meta["params"]["k"] == 16 and meta["n_docs"] > 0
+    n_docs = read_minhash_buckets(spark, path).select("id").distinct().count()
+    assert meta["params"]["k"] == 16 and n_docs > 0
     mtime = os.path.getmtime(os.path.join(path, "_minhash_meta.json"))
     path2, meta2 = ensure_minhash_index(spark, sf_dir, root=root, k=16, bands=8)
     assert path2 == path and meta2 == meta
@@ -929,7 +931,7 @@ def test_minhash_layout_and_fresh_reuse(spark, sf_dir, tmp_path_factory):
 
 def test_minhash_upsert_is_idempotent_and_replaces(spark, sf_dir, tmp_path_factory):
     """Re-upserting the same batch leaves identical bucket rows and an
-    identical sidecar count; a replaced id never double-buckets."""
+    identical doc count; a replaced id never double-buckets."""
     from lol_data_pipeline_spark.operators.minhash_index import (
         ensure_minhash_index,
         minhash_index_upsert,
@@ -938,16 +940,23 @@ def test_minhash_upsert_is_idempotent_and_replaces(spark, sf_dir, tmp_path_facto
 
     root = str(tmp_path_factory.mktemp("mh_up"))
     path, meta = ensure_minhash_index(spark, sf_dir, root=root)
+
+    def n_docs():
+        return read_minhash_buckets(spark, path).select("id").distinct().count()
+
+    n0 = n_docs()
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     batch = docs.filter(F.col("doc_id") < 5).select(
         (F.col("doc_id") + 990000).alias("doc_id"), "text"
     )
     meta1 = minhash_index_upsert(spark, path, meta, batch)
     rows1 = sorted(map(tuple, read_minhash_buckets(spark, path).collect()))
+    n1 = n_docs()
     meta2 = minhash_index_upsert(spark, path, meta1, batch)
     rows2 = sorted(map(tuple, read_minhash_buckets(spark, path).collect()))
     assert rows1 == rows2
-    assert meta1["n_docs"] == meta2["n_docs"] == meta["n_docs"] + 5
+    assert n1 == n_docs() == n0 + 5
+    assert meta2 == meta1 == meta  # writes leave the sidecar alone
     per_id = (
         read_minhash_buckets(spark, path)
         .filter(F.col("id") >= 990000)
@@ -961,7 +970,7 @@ def test_minhash_upsert_is_idempotent_and_replaces(spark, sf_dir, tmp_path_facto
 
 def test_minhash_delete_removes_every_band_row(spark, sf_dir, tmp_path_factory):
     """Deleting ids drops their rows from ALL band partitions and the
-    sidecar count shrinks exactly; other ids' rows are untouched."""
+    doc count shrinks exactly; other ids' rows are untouched."""
     from lol_data_pipeline_spark.operators.minhash_index import (
         ensure_minhash_index,
         minhash_index_delete,
@@ -970,6 +979,11 @@ def test_minhash_delete_removes_every_band_row(spark, sf_dir, tmp_path_factory):
 
     root = str(tmp_path_factory.mktemp("mh_del"))
     path, meta = ensure_minhash_index(spark, sf_dir, root=root)
+
+    def n_docs():
+        return read_minhash_buckets(spark, path).select("id").distinct().count()
+
+    n0 = n_docs()
     ids = spark.createDataFrame([(0,), (1,)], "doc_id long")
     before = (
         read_minhash_buckets(spark, path)
@@ -980,7 +994,8 @@ def test_minhash_delete_removes_every_band_row(spark, sf_dir, tmp_path_factory):
     left = read_minhash_buckets(spark, path)
     assert left.filter(F.col("id") <= 1).count() == 0
     assert left.count() == before
-    assert meta2["n_docs"] == meta["n_docs"] - 2
+    assert n_docs() == n0 - 2
+    assert meta2 == meta
 
 
 def test_stream_minhash_probe_equals_oneshot(spark, sf_dir):

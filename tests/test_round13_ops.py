@@ -93,8 +93,8 @@ def test_chunk_delete_everything_zeroes_sidecar(spark, tmp_path):
 
 def test_minhash_delete_drops_emptied_bands(spark, tmp_path):
     """Every doc has one bucket row per band, so deleting the whole
-    standing set empties EVERY band partition: the view and sidecar
-    hit zero immediately, and the compact drops the directories —
+    standing set empties EVERY band partition: the view hits zero
+    immediately, and the compact drops the directories —
     without crashing any later read."""
     from lol_data_pipeline_spark.operators.lsm import lsm_compact
     from lol_data_pipeline_spark.operators.minhash_index import (
@@ -110,10 +110,14 @@ def test_minhash_delete_drops_emptied_bands(spark, tmp_path):
         spark, "/root/testdata/sf0.001", path,
         index_where="doc_id IN (1, 2, 3)",
     )
-    assert meta["n_docs"] == 3
+
+    def n_docs():
+        return read_minhash_buckets(spark, path).select("id").distinct().count()
+
+    assert n_docs() == 3
     doomed = spark.createDataFrame([(1,), (2,), (3,)], "doc_id long")
     meta = minhash_index_delete(spark, path, meta, doomed)
-    assert meta["n_docs"] == 0
+    assert n_docs() == 0
     assert read_minhash_buckets(spark, path).count() == 0
     lsm_compact(
         spark, buckets_path(path), "id", ["band"], sort_within=["bkey"]
