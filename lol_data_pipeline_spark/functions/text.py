@@ -87,6 +87,16 @@ def quality_score(col: Column | str) -> Column:
     return F.floor(quality_score_raw(col) * F.lit(10000.0)).cast("long")
 
 
+def normalize(col: Column | str) -> Column:
+    """Canonical text form: lowercase, every character outside
+    ``[a-z0-9 ]`` to a space, space runs collapsed, trimmed. Patterns
+    are Java-regex/RE2-identical constructs."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.trim(
+        F.regexp_replace(F.regexp_replace(F.lower(c), "[^a-z0-9 ]", " "), " +", " ")
+    )
+
+
 def fingerprint(col: Column | str) -> Column:
     """Order-insensitive document fingerprint: md5 of the sorted
     distinct token set (the classic "fingerprint" clustering key)."""

@@ -1,5 +1,7 @@
 """Query registry: named DataFrame plans paired with oracle SQL."""
 
+from collections import Counter
+
 from lol_data_pipeline_spark.plans.queries import REGISTRY, QuerySpec  # noqa: F401
 import lol_data_pipeline_spark.plans.extensions  # noqa: E402,F401  (registers ext queries)
 import lol_data_pipeline_spark.plans.streaming_queries  # noqa: E402,F401
@@ -8,209 +10,37 @@ import lol_data_pipeline_spark.plans.tpch  # noqa: E402,F401
 import lol_data_pipeline_spark.plans.sketches  # noqa: E402,F401
 import lol_data_pipeline_spark.plans.corpus  # noqa: E402,F401
 import lol_data_pipeline_spark.plans.behavior  # noqa: E402,F401
-import lol_data_pipeline_spark.plans.curation  # noqa: E402,F401  (late on purpose: fresh entries queue behind the never-driver-verified backlog)
-import lol_data_pipeline_spark.plans.round8  # noqa: E402,F401  (late on purpose: same window discipline)
-import lol_data_pipeline_spark.plans.round9  # noqa: E402,F401  (late on purpose: same window discipline)
-import lol_data_pipeline_spark.plans.round10  # noqa: E402,F401  (late on purpose: same window discipline)
-import lol_data_pipeline_spark.plans.round11  # noqa: E402,F401  (late on purpose: same window discipline)
-import lol_data_pipeline_spark.plans.modeling  # noqa: E402,F401  (late on purpose: same window discipline)
-import lol_data_pipeline_spark.plans.round12  # noqa: E402,F401  (late on purpose: same window discipline)
-import lol_data_pipeline_spark.plans.round13  # noqa: E402,F401  (late on purpose: same window discipline)
-import lol_data_pipeline_spark.plans.round14  # noqa: E402,F401  (must stay LAST: same window discipline)
-
-# ---------------------------------------------------------------------------
-# Driver-sample rotation. The external correctness gate samples the FIRST 50
-# registry entries in iteration order; through round 5 that sample was frozen
-# on the original ref_/rel_ core, so 109 of 166 entries had only ever been
-# verified by the local sweep (tools/check_parity.py). The 50 names below are
-# all never-driver-sampled as of CORRECTNESS_r05.json, interleaved across
-# families (TPC-H patterns, streaming incl. multi-micro-batch replays,
-# sketches, corpus curation, text/ANN/dedup analytics, drift stats) so round
-# 6's external sample lands on first-time entries. Every displaced entry
-# stays in the registry and in the local full-registry sweep.
-_DRIVER_SAMPLE_PRIORITY = [
-    # TPC-H pattern suite (never sampled)
-    "rel_q6_forecast_revenue", "rel_q7_volume_shipping", "rel_q9_product_profit",
-    "rel_q18_large_orders", "rel_q2_min_acctbal_supplier", "rel_q4_order_priority",
-    "rel_q8_market_share", "rel_q13_order_histogram", "rel_q15_top_supplier",
-    "rel_q17_small_qty_revenue",
-    # streaming: multi-micro-batch replays + state-eviction entries
-    "stream_tumbling_multibatch", "stream_topk_multibatch", "stream_cdf_multibatch",
-    "stream_alert_multibatch", "stream_dedup", "stream_cdc_latest",
-    "stream_late_data_drop", "stream_incremental_view",
-    # sketches
-    "sketch_kmv_distinct", "sketch_hll_distinct", "sketch_countmin_freq",
-    "sketch_bloom_membership", "sketch_quantile_hist", "sketch_hll_rolling",
-    "rel_bloom_prejoin",
-    # corpus curation
-    "corpus_pii_scrub", "corpus_quality_filter", "corpus_decontaminate",
-    "corpus_dedup_keep_first", "corpus_pack_token_budget", "corpus_mixture_sample",
-    "corpus_shard_plan", "corpus_pipeline_e2e",
-    # text / dedup / ANN / graph analytics
-    "text_search_bm25", "text_tfidf_topterms", "text_repetition",
-    "text_unigram_loglik", "dedup_substring", "dedup_incremental_minhash",
-    "dedup_fuzzy_names", "graph_triangles", "emb_knn_graph", "ann_recall_eval",
-    # drift stats / behavioral / data quality
-    "stat_ks_drift", "stat_psi_drift", "stat_cusum_changepoint",
-    "rel_rolling_wau", "rel_interval_overlap", "dq_anomaly", "rel_funnel_steps",
-]
-
-# Names green in at least one CORRECTNESS_r0N.json through round 5 — the
-# STATIC FALLBACK when the recorded files can't be read at import time.
-# _driver_green_entries() below supersedes this by reading the actual
-# CORRECTNESS_r*.json records, so the rotation is self-updating: once a
-# round's sample lands and its entries are recorded green, they move to the
-# back automatically and the next never-checked block rises into the
-# sampled window without a manual reorder. This set is frozen at its
-# round-5 state on purpose — it only matters when NO CORRECTNESS_r*.json
-# is readable, and extending it by hand would just drift from the files.
-_DRIVER_CHECKED_THROUGH_R5 = {
-    "ann_cosine_topk", "ann_cosine_topk_arrow", "ann_ivf_topk", "ann_lsh_topk",
-    "ann_sq_topk", "dedup_embedding_cosine", "dedup_exact", "dedup_minhash_lsh",
-    "dedup_ngram_jaccard", "dedup_simhash", "mm_binary_meta",
-    "ref_antijoin",
-    "ref_array_position", "ref_conditional_units", "ref_counts_observability",
-    "ref_dedup_distinct", "ref_epoch_ms_to_date", "ref_filter_status",
-    "ref_flatten_struct", "ref_json_extract",
-    "ref_json_lines_scan", "ref_limit_topk", "ref_map_lookup",
-    "ref_projection_rename", "ref_semijoin", "ref_union_scans", "rel_agg_cube",
-    "rel_agg_distinct", "rel_agg_rollup", "rel_agg_salted", "rel_asof_forward",
-    "rel_asof_join", "rel_asof_tolerance", "rel_grouping_sets",
-    "rel_incremental_agg_merge", "rel_join_broadcast", "rel_join_left_agg",
-    "rel_join_salted", "rel_pivot", "rel_q1_pricing", "rel_q3_shipping",
-    "rel_q5_local_supplier", "rel_range_join", "rel_setop_except",
-    "rel_setop_intersect", "rel_topk_per_group_op", "rel_window_lag",
-    "rel_window_running", "rel_window_topk", "text_fingerprint",
-    "text_lang_id", "text_quality", "text_token_bpe", "text_token_stats",
-}
+import lol_data_pipeline_spark.plans.curation  # noqa: E402,F401
+import lol_data_pipeline_spark.plans.round8  # noqa: E402,F401
+import lol_data_pipeline_spark.plans.round9  # noqa: E402,F401
+import lol_data_pipeline_spark.plans.round10  # noqa: E402,F401
+import lol_data_pipeline_spark.plans.round11  # noqa: E402,F401
+import lol_data_pipeline_spark.plans.modeling  # noqa: E402,F401
+import lol_data_pipeline_spark.plans.round12  # noqa: E402,F401
+import lol_data_pipeline_spark.plans.round13  # noqa: E402,F401
+import lol_data_pipeline_spark.plans.round14  # noqa: E402,F401
+from lol_data_pipeline_spark.plans.order import ORDER  # noqa: E402
 
 
-def entry_fingerprint(spec) -> str:
-    """Content fingerprint of one registry entry: the plan function's
-    source plus its oracle SQL. Used to decide whether a driver-green
-    record still describes the CURRENT implementation — if either side
-    changed since the record was written, the entry must be treated as
-    never-verified again and rotate back into the sampled window.
-
-    Granularity note: this hashes the registered function's own source,
-    not helpers it calls in other modules, so a helper-only change can
-    escape freshness detection. That is a deliberate trade-off: hashing
-    whole modules would mark every entry in a file fresh on any edit
-    and flood the 50-entry window, displacing never-checked entries.
-    """
-    import hashlib
-    import inspect
-
-    try:
-        src = inspect.getsource(spec.fn)
-    except (OSError, TypeError):
-        # source unavailable (zipapp / bytecode-only import): fall back
-        # to something STABLE across processes. repr(fn) embeds the
-        # memory address — every stamped entry would spuriously
-        # mismatch per process and rotate the whole green backlog back
-        # into the 50-entry sampled window, displacing never-verified
-        # entries (the r07-advice finding).
-        code = getattr(spec.fn, "__code__", None)
-        src = getattr(spec.fn, "__qualname__", str(spec.fn)) + "\0" + (
-            code.co_code.hex() if code is not None else ""
+def apply_order(registry: dict, order: tuple[str, ...]) -> None:
+    """Reorder ``registry`` in place to ``order``. Raises ImportError,
+    naming the entries, when ``order`` repeats a name or does not list
+    exactly the registered names."""
+    dups = sorted(n for n, c in Counter(order).items() if c > 1)
+    if dups:
+        raise ImportError(f"plans/order.py lists these entries twice: {dups}")
+    missing = sorted(set(registry) - set(order))
+    extra = sorted(set(order) - set(registry))
+    if missing or extra:
+        raise ImportError(
+            f"plans/order.py is out of step with the registry: "
+            f"missing {missing}, extra {extra}"
         )
-    return hashlib.md5(
-        (src + "\0" + (spec.sql or "")).encode()
-    ).hexdigest()
-
-
-def _green_fingerprint_stamps() -> dict[str, str]:
-    """Stamps recorded by tools/update_fingerprints.py: entry name →
-    fingerprint at the time of its most recent driver-green record.
-    Empty dict when unreadable (back-compat: greenness then counts
-    regardless of subsequent edits)."""
-    import json
-    import os
-
-    root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    path = os.path.join(root, "tools", "green_fingerprints.json")
-    try:
-        with open(path) as f:
-            stamps = json.load(f)
-    except (OSError, ValueError):
-        return {}
-    return stamps if isinstance(stamps, dict) else {}
-
-
-def _driver_green_entries() -> set[str]:
-    """Entry names recorded GREEN (rows+schema+values matched, no
-    error) in any CORRECTNESS_r*.json at the repo root. A FAILED row
-    deliberately does NOT count — a red entry must stay in the
-    sampled window until a green record displaces it. Falls back to
-    the static round-5 set when no records are readable (e.g. the
-    package imported outside the repo)."""
-    import glob
-    import json
-    import os
-
-    root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    green: set[str] = set()
-    found = False
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        try:
-            with open(path) as f:
-                rows = json.load(f)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(rows, dict):
-            continue
-        found = True
-        for name, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            ok = (
-                row.get("err") is None
-                and row.get("rows_match") is True
-                and row.get("schema_match") is not False
-                and row.get("hash_match") is not False  # None = rows-only check
-            )
-            if ok:
-                green.add(name)
-    return green if found else set(_DRIVER_CHECKED_THROUGH_R5)
-
-
-def _effective_seen_green(items=None) -> set[str]:
-    """Recorded green AND unchanged since the record: a stamped
-    fingerprint that no longer matches means the plan or oracle was
-    edited after its last green round, so external re-verification is
-    required and the entry is treated as fresh. Green-but-unstamped
-    stays seen (back-compat until the stamp tool has covered it)."""
-    if items is None:
-        items = dict(REGISTRY)
-    recorded_green = _driver_green_entries()
-    stamps = _green_fingerprint_stamps()
-    return {
-        n
-        for n in recorded_green
-        if n in items
-        and (n not in stamps or stamps[n] == entry_fingerprint(items[n]))
-    }
-
-
-def _rotate_registry() -> None:
-    items = dict(REGISTRY)
-    seen_green = _effective_seen_green(items)
-    # fresh = never recorded green by the driver (or changed since);
-    # the hand-ordered priority list breaks ties so the sampled window
-    # mixes families
-    prio = [n for n in _DRIVER_SAMPLE_PRIORITY if n in items and n not in seen_green]
-    rest_fresh = [
-        n for n in items if n not in set(prio) and n not in seen_green
-    ]
-    rest_seen = [n for n in items if n in seen_green]
+    items = dict(registry)
     # clear + reinsert keeps the shared dict object (modules hold references)
-    REGISTRY.clear()
-    for n in prio + rest_fresh + rest_seen:
-        REGISTRY[n] = items[n]
+    registry.clear()
+    for n in order:
+        registry[n] = items[n]
 
 
-_rotate_registry()
+apply_order(REGISTRY, ORDER)

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from lol_data_pipeline_spark.functions import text as tx
 from lol_data_pipeline_spark.functions.scalar import md5_long
-from lol_data_pipeline_spark.plans.extensions import SQL_MD5_LONG, SQL_TOKS
+from lol_data_pipeline_spark.plans.extensions import SQL_MD5_LONG, SQL_NORM, SQL_TOKS
 from lol_data_pipeline_spark.plans.queries import T, query
 
 # ---------------------------------------------------------------------------
@@ -409,13 +409,11 @@ def corpus_decontaminate(spark, sf_dir):
 
 @query(
     "corpus_normalize",
-    sql="""
+    sql=f"""
     SELECT doc_id,
-           trim(regexp_replace(regexp_replace(lower(text),
-                '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')) AS normalized,
+           {SQL_NORM} AS normalized,
            CAST(length(text) AS BIGINT) AS n_chars_raw,
-           CAST(length(trim(regexp_replace(regexp_replace(lower(text),
-                '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))) AS BIGINT) AS n_chars_norm
+           CAST(length({SQL_NORM}) AS BIGINT) AS n_chars_norm
     FROM documents
     """,
 )
@@ -423,14 +421,9 @@ def corpus_normalize(spark, sf_dir):
     """Canonical text normalization: lowercase, strip
     non-alphanumerics, collapse whitespace runs, trim — the
     pre-tokenizer cleanup pass (and the canonical form exact-dedup
-    should hash, so case/punctuation variants collapse). Patterns
-    restricted to Java-regex/RE2-identical constructs. Pure
-    projection — scan speed."""
-    norm = F.trim(
-        F.regexp_replace(
-            F.regexp_replace(F.lower("text"), "[^a-z0-9 ]", " "), " +", " "
-        )
-    )
+    should hash, so case/punctuation variants collapse;
+    :func:`tx.normalize`). Pure projection — scan speed."""
+    norm = tx.normalize("text")
     return T(spark, sf_dir, "documents").select(
         "doc_id",
         norm.alias("normalized"),

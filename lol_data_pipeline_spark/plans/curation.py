@@ -5,13 +5,6 @@ retrieval, a CSV landing-zone scan, daily autocorrelation, and
 filtered vector search (exact pre-filter baseline + IVF scale
 path).
 
-Registered AFTER every other plans module on purpose: the driver's
-correctness gate samples the FIRST 50 registry entries, and the
-rotation (plans/__init__.py) orders never-green entries by
-registration order — putting these last means they queue BEHIND the
-existing never-driver-verified backlog instead of displacing it from
-the sampled window.
-
 Scale notes (100 TB):
 - length_buckets is a per-row projection plus a ≤4-group aggregate
   with constant state — scan speed on any cluster, no skew possible
@@ -28,7 +21,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from lol_data_pipeline_spark.plans.extensions import SQL_TOKS, _sql_components_cte
+from lol_data_pipeline_spark.plans.extensions import (
+    SQL_NORM,
+    SQL_TOKS,
+    _sql_components_cte,
+)
 from lol_data_pipeline_spark.functions import text as tx
 from lol_data_pipeline_spark.plans.queries import T, query
 
@@ -263,16 +260,10 @@ def dq_freshness(spark, sf_dir):
 # stops dominating the training mix without discarding provenance).
 # ---------------------------------------------------------------------------
 
-_SQL_NORM_KEY = (
-    "md5(trim(regexp_replace(regexp_replace(lower(text),"
-    "'[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')))"
-)
-
-
 @query(
     "corpus_dedup_softweight",
     sql=f"""
-    WITH n AS (SELECT doc_id, {_SQL_NORM_KEY} AS k FROM documents),
+    WITH n AS (SELECT doc_id, md5({SQL_NORM}) AS k FROM documents),
     sizes AS (
       SELECT k, CAST(count(*) AS BIGINT) AS group_size,
              min(doc_id) AS canonical_id
@@ -312,14 +303,7 @@ def softweight_report(docs):
     generated duplicate groups (tests/test_properties.py) — the
     small testdata scales are all-unique, so arbitrary-input testing
     is the only way to exercise multi-member groups cheaply."""
-    k = F.md5(
-        F.trim(
-            F.regexp_replace(
-                F.regexp_replace(F.lower("text"), "[^a-z0-9 ]", " "), " +", " "
-            )
-        )
-    )
-    n = docs.select("doc_id", k.alias("k"))
+    n = docs.select("doc_id", F.md5(tx.normalize("text")).alias("k"))
     sizes = n.groupBy("k").agg(
         F.count("*").cast("long").alias("group_size"),
         F.min("doc_id").alias("canonical_id"),

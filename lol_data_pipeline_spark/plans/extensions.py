@@ -22,6 +22,10 @@ from lol_data_pipeline_spark.plans.queries import REGISTRY, QuerySpec, T, query
 
 # Shared SQL fragments (DuckDB dialect) mirroring functions/text.py.
 SQL_TOKS = "list_filter(regexp_split_to_array(text, '\\s+'), x -> x != '')"
+SQL_NORM = (
+    "trim(regexp_replace(regexp_replace(lower(text),"
+    "'[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))"
+)
 
 
 def _sql_shingles(n: int = 3) -> str:

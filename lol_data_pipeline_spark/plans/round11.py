@@ -2181,9 +2181,7 @@ def stream_bm25_upsert_multibatch(spark, sf_dir):
     verified is the SERVE path over the post-stream artifact against
     an oracle recomputing BM25 over corpus∪batch from scratch. Own
     index copy (variant="streamup")."""
-    import json as _json
-    import os as _os
-
+    from lol_data_pipeline_spark.operators.artifact import load_meta
     from lol_data_pipeline_spark.operators.text_index import (
         bm25_index_upsert,
         ensure_bm25_index,
@@ -2207,9 +2205,7 @@ def stream_bm25_upsert_multibatch(spark, sf_dir):
     def sink(df, _epoch_id):
         # current sidecar, not the closure's snapshot — each epoch's
         # exact totals build on the previous epoch's writes
-        with open(_os.path.join(path, "_text_meta.json")) as f:
-            m = _json.load(f)
-        bm25_index_upsert(spark, path, m, df)
+        bm25_index_upsert(spark, path, load_meta(path, "bm25"), df)
 
     replay_multibatch(
         spark,
@@ -2219,10 +2215,9 @@ def stream_bm25_upsert_multibatch(spark, sf_dir):
         key=f"bm25_upsert:{sf_dir}",
         foreach_batch=sink,
     )
-    with open(_os.path.join(path, "_text_meta.json")) as f:
-        meta = _json.load(f)
     return served_bm25_topk(
-        spark, path, meta, _BM25_TERMS, k=_BM25_K, k1=_BM25_K1, b=_BM25_B
+        spark, path, load_meta(path, "bm25"), _BM25_TERMS,
+        k=_BM25_K, k1=_BM25_K1, b=_BM25_B,
     )
 
 

@@ -621,13 +621,15 @@ def chunk_index_compact_entry(spark, sf_dir):
     artifact. Shares chunk_index_upsert's oracle verbatim — the fold
     must be invisible to every probe. Own index copy
     (variant="cpt")."""
+    from lol_data_pipeline_spark.operators import lsm
     from lol_data_pipeline_spark.operators.chunk_index import (
+        CHUNKS,
+        _chunk_counts,
         chunk_index_upsert,
         chunks_path,
         ensure_chunk_index,
         served_chunk_clean,
     )
-    from lol_data_pipeline_spark.operators.lsm import lsm_compact, lsm_epochs
     from lol_data_pipeline_spark.plans.round12 import (
         _CHUP_HI,
         _CHUP_LO,
@@ -644,7 +646,8 @@ def chunk_index_compact_entry(spark, sf_dir):
         F.col("doc_id").between(_CHUP_LO, _CHUP_HI - 1)
     ).select((F.col("doc_id") + _CHUP_SHIFT).alias("doc_id"), "text")
     meta = chunk_index_upsert(spark, path, meta, batch)
-    lsm_compact(spark, chunks_path(path), "id", ["hb"], sort_within=["h"])
-    assert lsm_epochs(chunks_path(path)) == []
+    CHUNKS.compact(spark, path)
+    assert lsm.lsm_epochs(chunks_path(path)) == []
+    meta = lsm.maintain(spark, path, "chunk", meta, (CHUNKS,), _chunk_counts)
     probe = docs.filter(F.pmod(F.col("doc_id"), F.lit(5)) == 0)
     return served_chunk_clean(spark, path, meta, probe)

@@ -1,12 +1,5 @@
 """Round-8 additions: multi-probe filtered IVF vector search.
 
-Registered AFTER every other plans module on purpose: the driver's
-correctness gate samples the FIRST 50 registry entries, and the
-rotation (plans/__init__.py) orders never-green entries by
-registration order — putting these last means they queue BEHIND the
-existing never-driver-verified backlog instead of displacing it from
-the sampled window.
-
 Scale notes (100 TB):
 - multi-probe filtered IVF scans ~nprobe/C of the corpus per query
   (C = centroid count) instead of the full corpus: the candidate set

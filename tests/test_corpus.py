@@ -308,12 +308,10 @@ def test_csv_scan_quarantines_all_injected(spark, sf_dir):
 
 def test_softweight_key_is_corpus_normalize_canonical_form(spark, sf_dir):
     """corpus_dedup_softweight's docstring promises its grouping key
-    is md5 of corpus_normalize's canonical form. The expression is
-    deliberately re-inlined (refactoring corpus_normalize — a
-    driver-green entry — would change its fingerprint and rotate it
-    back into the externally sampled window), so THIS test is the
-    sync guard: group sizes computed from corpus_normalize's actual
-    output must equal softweight's group_size for every doc."""
+    is md5 of corpus_normalize's canonical form (both build it with
+    functions.text.normalize): group sizes computed from
+    corpus_normalize's actual output must equal softweight's
+    group_size for every doc."""
     norm_out = REGISTRY["corpus_normalize"].fn(spark, sf_dir).select(
         "doc_id", F.md5("normalized").alias("k")
     )

@@ -312,3 +312,27 @@ def test_knn_graph_writes_leave_the_sidecar_alone(spark, tmp_path):
     assert gi.read_nodes(spark, path).filter(F.col("vec_id") >= 880000).count() == 0
     with open(sidecar, "rb") as f:
         assert f.read() == built
+
+
+def test_chunk_index_compact_leaves_a_settled_sidecar(spark, tmp_path, monkeypatch):
+    """After chunk_index_compact's forced fold the sidecar records the
+    emptied log, so the next ensure of that artifact reuses it with no
+    Spark job instead of recounting the view."""
+    from lol_data_pipeline_spark.operators import lsm
+    from lol_data_pipeline_spark.operators.artifact import load_meta
+    from lol_data_pipeline_spark.operators.chunk_index import (
+        CHUNKS,
+        ensure_chunk_index,
+    )
+    from lol_data_pipeline_spark.plans import REGISTRY
+    from lol_data_pipeline_spark.plans.round12 import _CSD_C, _CSD_IDX_WHERE
+
+    monkeypatch.setenv("SPARK_GRAFT_CHUNK_INDEX_DIR", str(tmp_path))
+    REGISTRY["chunk_index_compact"].fn(spark, SF)
+    path = os.path.join(str(tmp_path), "chunk_sf0.001_cpt")
+    assert load_meta(path, "chunk")["epochs"] == lsm.epochs(path, (CHUNKS,))
+    j0 = _job_id(spark)
+    assert ensure_chunk_index(
+        spark, SF, variant="cpt", c=_CSD_C, index_where=_CSD_IDX_WHERE
+    )[0] == path
+    assert _job_id(spark) - j0 == 0
