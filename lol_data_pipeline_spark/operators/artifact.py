@@ -131,16 +131,15 @@ def ensure(
     build: Callable[[str], dict],
     root_dir: str | None = None,
     variant: str = "",
-    settle: Callable[[str, dict], dict] | None = None,
 ) -> tuple[str, dict]:
     """Build-if-absent-or-stale: returns (path, sidecar meta). The
     stored sidecar is reused when its fingerprint of ``table`` and
     its ``params`` both match; otherwise ``build(path)`` runs and
     returns the new meta (it writes the sidecar last, after the
-    data, so a build that dies midway is rebuilt next time).
-    ``settle(path, meta)``, when given, vets a reused sidecar against
-    the data and returns the meta to serve (the LSM families recount
-    a sidecar that lags its tables: ``lsm.settle``)."""
+    data, so a build that dies midway is rebuilt next time). The
+    build is the sidecar's only writer: it holds no count and no log
+    position, so an upsert or delete never has to rewrite it and a
+    reused sidecar can never lag its tables."""
     p = path(kind, sf_dir, root_dir, variant)
     meta = load_meta(p, kind)
     if (
@@ -148,6 +147,6 @@ def ensure(
         and meta.get("fingerprint") == source_fingerprint(sf_dir, table)
         and meta.get("params") == params
     ):
-        return p, (settle(p, meta) if settle else meta)
+        return p, meta
     os.makedirs(p, exist_ok=True)
     return p, build(p)

@@ -16,7 +16,9 @@ re-chunking a single standing document.
   (id, chunk_idx, h) rows, hive-partitioned by ``hb = h mod NB``
   (NB constant) and h-sorted within files (a probe's hash point
   predicates become row-group skipping), plus a sidecar with the
-  chunk width, bucket count, doc/chunk counts and source fingerprint.
+  chunk width, bucket count and source fingerprint, written once (no
+  write touches it; the stats entry counts docs and chunks from the
+  view).
 - PROBE (per batch): chunk ONLY the incoming batch, LEFT JOIN its
   hashes against the persisted table's h column (2-column scan: h is
   the only data column read; the text is never stored in the index —
@@ -74,21 +76,6 @@ def read_ngram_rows(spark: SparkSession, path: str) -> DataFrame:
     return NGRAMS.read(spark, path).select("id", "h", "hb")
 
 
-def _row_counts(rows: DataFrame, n_rows: str) -> dict:
-    agg = rows.agg(
-        F.count("*").alias("n"), F.countDistinct("id").alias("n_docs")
-    ).collect()[0]
-    return {"n_docs": int(agg.n_docs), n_rows: int(agg.n)}
-
-
-def _chunk_counts(spark: SparkSession, path: str) -> dict:
-    return _row_counts(read_chunk_rows(spark, path), "n_chunks")
-
-
-def _ngram_counts(spark: SparkSession, path: str) -> dict:
-    return _row_counts(read_ngram_rows(spark, path), "n_grams")
-
-
 def _batch_chunk_rows(docs: DataFrame, c: int) -> DataFrame:
     """(id, chunk_idx, h, hb) chunk-hash rows for a document frame —
     the shared build/probe/maintain derivation (doc_chunks +
@@ -115,10 +102,10 @@ def build_chunk_index(
     if index_where:
         docs = docs.filter(F.expr(index_where))
     CHUNKS.write_base(_batch_chunk_rows(docs, c), path)
-    return lsm.maintain(spark, path, "chunk", {
+    return artifact.save_meta(path, "chunk", {
         "fingerprint": artifact.source_fingerprint(sf_dir, "documents"),
         "params": {"c": c, "nb": N_BUCKETS, "index_where": index_where},
-    }, (CHUNKS,), _chunk_counts)
+    })
 
 
 def ensure_chunk_index(
@@ -138,9 +125,6 @@ def ensure_chunk_index(
             spark, sf_dir, path, c=c, index_where=index_where
         ),
         root, variant,
-        lambda path, meta: lsm.settle(
-            spark, path, "chunk", meta, (CHUNKS,), _chunk_counts
-        ),
     )
 
 
@@ -201,11 +185,12 @@ def chunk_index_upsert(
     """Merge a document batch into the persisted index: its chunk
     rows APPEND as a delta epoch + id tombstones (write ∝ batch;
     re-ingesting a changed document replaces at the view level, never
-    double-indexes) and the sidecar counts update exactly. Older rows
-    physically drop at the quota-triggered compact. Idempotent."""
+    double-indexes). Older rows physically drop at the quota-triggered
+    compact. Idempotent. Returns ``meta`` unchanged."""
     rows = _batch_chunk_rows(new_docs, meta["params"]["c"])
     CHUNKS.upsert(spark, path, rows, new_docs)
-    return lsm.maintain(spark, path, "chunk", meta, (CHUNKS,), _chunk_counts)
+    CHUNKS.fold(spark, path)
+    return meta
 
 
 def chunk_index_delete(
@@ -213,12 +198,12 @@ def chunk_index_delete(
 ) -> dict:
     """Take-down: tombstones only (write ∝ doomed ids) — the batch's
     chunk rows vanish from the VIEW immediately, from disk at the
-    next compact; the sidecar counts shrink exactly. A fully-emptied
-    table stays readable (base + tombstones keep their parquet
-    footers), so upsert-after-full-delete works (r13 ADVICE).
-    Idempotent."""
+    next compact. A fully-emptied table stays readable (the view
+    declares its schema), so upsert-after-full-delete works (r13
+    ADVICE). Idempotent. Returns ``meta`` unchanged."""
     CHUNKS.delete(spark, path, doomed_ids)
-    return lsm.maintain(spark, path, "chunk", meta, (CHUNKS,), _chunk_counts)
+    CHUNKS.fold(spark, path)
+    return meta
 
 
 def _batch_ngram_rows(docs: DataFrame, n: int) -> DataFrame:
@@ -255,10 +240,10 @@ def build_ngram_index(
     if index_where:
         docs = docs.filter(F.expr(index_where))
     NGRAMS.write_base(_batch_ngram_rows(docs, n), path)
-    return lsm.maintain(spark, path, "ngram", {
+    return artifact.save_meta(path, "ngram", {
         "fingerprint": artifact.source_fingerprint(sf_dir, "documents"),
         "params": {"n": n, "nb": N_BUCKETS, "index_where": index_where},
-    }, (NGRAMS,), _ngram_counts)
+    })
 
 
 def ensure_ngram_index(
@@ -279,9 +264,6 @@ def ensure_ngram_index(
             spark, sf_dir, path, n=n, index_where=index_where
         ),
         root, variant,
-        lambda path, meta: lsm.settle(
-            spark, path, "ngram", meta, (NGRAMS,), _ngram_counts
-        ),
     )
 
 
@@ -329,10 +311,12 @@ def ngram_index_upsert(
     Batch-bounded LSM write: the batch's rows APPEND as a delta epoch
     + id tombstones (re-ingesting a changed document replaces at the
     view level, never double-counts); older rows physically drop at
-    the quota-triggered compact. Idempotent."""
+    the quota-triggered compact. Idempotent. Returns ``meta``
+    unchanged."""
     rows = _batch_ngram_rows(new_docs, meta["params"]["n"])
     NGRAMS.upsert(spark, path, rows, new_docs)
-    return lsm.maintain(spark, path, "ngram", meta, (NGRAMS,), _ngram_counts)
+    NGRAMS.fold(spark, path)
+    return meta
 
 
 def ngram_index_delete(
@@ -340,8 +324,9 @@ def ngram_index_delete(
 ) -> dict:
     """Take-down for the decontamination index: tombstones only
     (write ∝ doomed ids) — the doomed docs' n-gram hashes vanish from
-    the VIEW immediately, from disk at the next compact; the sidecar
-    counts shrink exactly, and a fully-emptied table stays readable.
-    Idempotent."""
+    the VIEW immediately, from disk at the next compact, and a
+    fully-emptied table stays readable. Idempotent. Returns ``meta``
+    unchanged."""
     NGRAMS.delete(spark, path, doomed_ids)
-    return lsm.maintain(spark, path, "ngram", meta, (NGRAMS,), _ngram_counts)
+    NGRAMS.fold(spark, path)
+    return meta

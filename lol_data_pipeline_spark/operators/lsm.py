@@ -39,9 +39,9 @@ production table format does (Delta/Iceberg/Hudi MOR, LevelDB):
 Deletion of an id that never existed, re-upserting the same batch,
 and upsert-after-full-delete are all no-ops/safe by construction —
 the view algebra does not care (fixes the r13 ADVICE emptied-table
-crash class structurally: a full delete leaves base + tombstones,
-so every later read still finds parquet footers to infer schema
-from).
+crash class structurally: every read declares the table's schema,
+so an emptied table reads as an empty frame, never an inference
+error).
 
 Each index family declares every LSM table it keeps exactly once, as a
 :class:`Table` (directory name, id column, partition and sort columns,
@@ -51,14 +51,12 @@ generation), the view (declared schema; an empty frame of that schema
 when nothing is on disk), the upsert/delete appends (conformed to the
 DDL; an upsert tombstones the batch's key column, so a document whose
 new text derives no rows still loses its old ones) and the quota fold
-(reads with the DDL, never infers). Minhash and kNN graph write their
-sidecar once, at build, and end each write in :meth:`Table.fold`. The
-counted families (chunk, n-gram, BM25, phash) end it in
-:func:`maintain`: fold each table at quota, then save the sidecar with
-the family's counts and the epoch listing they were taken at.
-:func:`settle` is their ``artifact.ensure`` reuse hook: a sidecar whose
-listing differs from disk lags its data (a writer died between the
-table write and the sidecar save), so it is recounted, not reused.
+(reads with the DDL, never infers). Every read here declares its
+schema, so none pays a footer-inference job. A family's sidecar is
+written once, by its build; every write ends in :meth:`Table.fold`
+and stores no count. A read that needs a count (BM25's ``n_docs`` and
+``avgdl``, the ``*_index_stats`` totals) aggregates the view inside
+its own plan, so no count can lag the tables.
 
 tests/test_lsm_maintenance.py pins: delta bytes scale with the
 batch, not the corpus (the r13 verdict's done-criterion), view
@@ -72,14 +70,12 @@ import os
 import shutil
 import uuid
 from dataclasses import dataclass
-from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from lol_data_pipeline_spark.io import write_overwrite
-from lol_data_pipeline_spark.operators import artifact
 
 DEFAULT_QUOTA = 8  # epochs accumulated before a fold-back
 
@@ -152,7 +148,7 @@ def lsm_reset(table_dir: str) -> None:
 
 
 def lsm_view(
-    spark: SparkSession, table_dir: str, id_col: str, schema: str | None = None
+    spark: SparkSession, table_dir: str, id_col: str, schema: str
 ) -> DataFrame | None:
     """The logical current table: base∪delta minus superseded rows.
 
@@ -165,31 +161,29 @@ def lsm_view(
     layer.
 
     ``schema`` is the family's BASE table DDL (data + partition
-    columns, in storage order). When given, every read here declares
-    its schema instead of inferring it — parquet schema inference
-    launches a footer-read job per read call (~75 ms), and a served
-    probe pays it once per table otherwise. Families know their
-    schemas statically, so the inference was pure overhead.
+    columns, in storage order). Every read here declares it instead
+    of inferring it — parquet schema inference launches a footer-read
+    job per read call (~75 ms), which a served probe would pay once
+    per table.
     """
-    base_schema = T.StructType.fromDDL(schema) if schema else None
+    base_schema = T.StructType.fromDDL(schema)
     srcs: list[DataFrame] = []
     if _has_parquet(table_dir):
-        rd = spark.read.schema(base_schema) if base_schema else spark.read
         srcs.append(
-            rd.parquet(table_dir).withColumn(_EPOCH, F.lit(0).cast("long"))
+            spark.read.schema(base_schema)
+            .parquet(table_dir)
+            .withColumn(_EPOCH, F.lit(0).cast("long"))
         )
     dpath = delta_path(table_dir)
     if _has_parquet(dpath):
-        if base_schema:
-            dschema = T.StructType(
-                base_schema.fields
-                + [T.StructField("epoch", T.IntegerType())]
-            )
-            d = spark.read.schema(dschema).parquet(dpath)
-        else:
-            d = spark.read.parquet(dpath)
+        dschema = T.StructType(
+            base_schema.fields + [T.StructField("epoch", T.IntegerType())]
+        )
         srcs.append(
-            d.withColumn(_EPOCH, F.col("epoch").cast("long")).drop("epoch")
+            spark.read.schema(dschema)
+            .parquet(dpath)
+            .withColumn(_EPOCH, F.col("epoch").cast("long"))
+            .drop("epoch")
         )
     if not srcs:
         return None
@@ -200,15 +194,12 @@ def lsm_view(
     if _has_parquet(tpath):
         # max tombstone epoch per id — bounded by maintenance volume
         # since the last compact (the quota), broadcastable always.
-        if base_schema:
-            tschema = T.StructType(
-                [base_schema[id_col], T.StructField("epoch", T.IntegerType())]
-            )
-            trd = spark.read.schema(tschema)
-        else:
-            trd = spark.read
+        tschema = T.StructType(
+            [base_schema[id_col], T.StructField("epoch", T.IntegerType())]
+        )
         tomb = (
-            trd.parquet(tpath)
+            spark.read.schema(tschema)
+            .parquet(tpath)
             .groupBy(F.col(id_col).alias("_tid"))
             .agg(F.max(F.col("epoch").cast("long")).alias("_te"))
         )
@@ -308,26 +299,26 @@ def lsm_compact(
     table_dir: str,
     id_col: str,
     partition_by: list[str],
+    schema: str,
     sort_within: list[str] | None = None,
-    schema: str | None = None,
 ) -> bool:
     """Fold delta+tombstones back into a fresh base and clear the
-    logs — the amortized full rewrite. ``sort_within`` restores the
-    family's row-group-skipping layout (chunk/bkey/h-sorted files);
-    ``schema`` is the table's DDL (without it the view infers).
+    logs — the amortized full rewrite. ``schema`` is the table's DDL;
+    ``sort_within`` restores the family's row-group-skipping layout
+    (chunk/bkey/h-sorted files).
     Staged write + rename swap: a reader racing the swap sees the old
     or the new complete generation, never a mix. Returns True when a
     fold happened (False: nothing to fold)."""
     if not lsm_epochs(table_dir):
         return False
-    view = lsm_view(spark, table_dir, id_col, schema=schema)
+    view = lsm_view(spark, table_dir, id_col, schema)
     staged = f"{table_dir}__compact_{uuid.uuid4().hex[:8]}"
     if view is None or view.limit(1).count() == 0:
         if view is not None:
-            # schema-bearing empty base: one footer-only file so every
-            # later read still infers the family schema (the partition
-            # columns ride as ordinary data columns — pruning is moot
-            # on an empty table).
+            # schema-bearing empty base: one footer-only file, so even
+            # a bare read of the directory finds the family schema (the
+            # partition columns ride as ordinary data columns — pruning
+            # is moot on an empty table).
             view.coalesce(1).write.parquet(staged)
         else:
             lsm_reset(table_dir)
@@ -352,9 +343,9 @@ def lsm_maybe_compact(
     table_dir: str,
     id_col: str,
     partition_by: list[str],
+    schema: str,
     sort_within: list[str] | None = None,
     quota: int | None = None,
-    schema: str | None = None,
 ) -> bool:
     """The quota trigger (vector_index.index_compact's shape): fold
     when the log has accumulated ``quota`` epochs. Called at the end
@@ -364,8 +355,7 @@ def lsm_maybe_compact(
     if len(lsm_epochs(table_dir)) < q:
         return False
     return lsm_compact(
-        spark, table_dir, id_col, partition_by, sort_within=sort_within,
-        schema=schema,
+        spark, table_dir, id_col, partition_by, schema, sort_within=sort_within
     )
 
 
@@ -411,7 +401,7 @@ class Table:
     def read(self, spark: SparkSession, path: str) -> DataFrame:
         """The logical table (:func:`lsm_view` with the declared
         schema); empty with that schema when nothing is on disk."""
-        view = lsm_view(spark, self.dir(path), self.id_col, schema=self.ddl)
+        view = lsm_view(spark, self.dir(path), self.id_col, self.ddl)
         return view if view is not None else spark.createDataFrame([], self.ddl)
 
     def _ids(self, batch: DataFrame) -> DataFrame:
@@ -436,56 +426,12 @@ class Table:
         """Force the fold (:func:`lsm_compact` with the declared layout)."""
         return lsm_compact(
             spark, self.dir(path), self.id_col, list(self.partition_by),
-            sort_within=list(self.sort_within), schema=self.ddl,
+            self.ddl, sort_within=list(self.sort_within),
         )
 
     def fold(self, spark: SparkSession, path: str) -> bool:
         """The quota trigger (:func:`lsm_maybe_compact`)."""
         return lsm_maybe_compact(
             spark, self.dir(path), self.id_col, list(self.partition_by),
-            sort_within=list(self.sort_within), schema=self.ddl,
+            self.ddl, sort_within=list(self.sort_within),
         )
-
-
-Counts = Callable[[SparkSession, str], dict]
-
-
-def epochs(path: str, tables: tuple[Table, ...]) -> dict[str, list[int]]:
-    """The sidecar's record of each table's log: {name: epochs}."""
-    return {t.name: lsm_epochs(t.dir(path)) for t in tables}
-
-
-def maintain(
-    spark: SparkSession,
-    path: str,
-    kind: str,
-    meta: dict,
-    tables: tuple[Table, ...],
-    counts: Counts,
-) -> dict:
-    """Settle a counted family's artifact after a build or a write:
-    fold each table at quota, then save ``{**meta, **counts(spark,
-    path)}`` with the epoch listing the counts were taken at. Returns
-    the saved meta."""
-    for t in tables:
-        t.fold(spark, path)
-    return artifact.save_meta(path, kind, {
-        **meta, **counts(spark, path), "epochs": epochs(path, tables)
-    })
-
-
-def settle(
-    spark: SparkSession,
-    path: str,
-    kind: str,
-    meta: dict,
-    tables: tuple[Table, ...],
-    counts: Counts,
-) -> dict:
-    """A counted family's reuse hook: ``meta`` if its epoch listing
-    matches disk, else :func:`maintain` recounts it. A sidecar without
-    the listing counts as all-empty."""
-    stored = meta.get("epochs") or {t.name: [] for t in tables}
-    if stored == epochs(path, tables):
-        return meta
-    return maintain(spark, path, kind, meta, tables, counts)

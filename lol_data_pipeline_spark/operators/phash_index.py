@@ -20,7 +20,8 @@ shape:
   chunk point predicates become row-group skipping). Unlike the
   minhash index (where storing shingles would duplicate the corpus),
   the 8-byte signature IS stored: exact Hamming verification then
-  needs no source re-read at all.
+  needs no source re-read at all. The sidecar (params, source
+  fingerprint) is written once, here; no write touches it.
 - PROBE (per batch): sign ONLY the incoming batch (bytes → pixels →
   hash), equi-join its band rows against the persisted table on
   (band, chunk), emit each candidate pair once via the
@@ -60,7 +61,6 @@ BANDS = lsm.Table(
     "bands", "id", ("band",), ("chunk",),
     "id long, simhash long, chunk long, band int", "media_id",
 )
-TABLES = (BANDS,)
 bands_path = BANDS.dir
 
 
@@ -98,12 +98,6 @@ def read_phash_rows(spark: SparkSession, path: str) -> DataFrame:
     plan is unchanged from the pre-LSM design). Empty-with-schema
     when nothing is on disk, so probe-after-full-take-down works."""
     return BANDS.read(spark, path).select("id", "simhash", "band", "chunk")
-
-
-def _counts(spark: SparkSession, path: str) -> dict:
-    return {
-        "n_docs": read_phash_rows(spark, path).select("id").distinct().count()
-    }
 
 
 def _base_media(docs: DataFrame) -> DataFrame:
@@ -166,10 +160,10 @@ def build_phash_index(
         docs = docs.filter(F.expr(index_where))
     media = frame_media(docs, frames) if frames else _base_media(docs)
     BANDS.write_base(_batch_band_rows(media, signer=signer), path)
-    return lsm.maintain(spark, path, "phash", {
+    return artifact.save_meta(path, "phash", {
         "fingerprint": artifact.source_fingerprint(sf_dir, "documents"),
         "params": _params(index_where, frames, signer),
-    }, TABLES, _counts)
+    })
 
 
 def ensure_phash_index(
@@ -191,9 +185,6 @@ def ensure_phash_index(
             signer=signer,
         ),
         root, variant,
-        lambda path, meta: lsm.settle(
-            spark, path, "phash", meta, TABLES, _counts
-        ),
     )
 
 
@@ -240,11 +231,13 @@ def phash_index_upsert(
     — the old shape rewrote 100% of the artifact, since every image
     has a row in every band partition); replaced ids' older rows are
     superseded by the tombstones at read time and physically dropped
-    at the quota-triggered compact. Idempotent at the view level."""
+    at the quota-triggered compact. Idempotent at the view level.
+    Returns ``meta`` unchanged."""
     BANDS.upsert(spark, path, _batch_band_rows(
         new_media, signer=meta["params"].get("signer", "image")
     ), new_media)
-    return lsm.maintain(spark, path, "phash", meta, TABLES, _counts)
+    BANDS.fold(spark, path)
+    return meta
 
 
 def phash_index_delete(
@@ -252,6 +245,7 @@ def phash_index_delete(
 ) -> dict:
     """Take-down: tombstones only (write ∝ doomed ids); the batch's
     rows vanish from the VIEW immediately and from disk at the next
-    compact; the sidecar count shrinks exactly. Idempotent."""
+    compact. Idempotent. Returns ``meta`` unchanged."""
     BANDS.delete(spark, path, doomed_ids)
-    return lsm.maintain(spark, path, "phash", meta, TABLES, _counts)
+    BANDS.fold(spark, path)
+    return meta

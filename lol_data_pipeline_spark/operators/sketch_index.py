@@ -16,13 +16,17 @@ registers.
 
 - BUILD (once): one distinct (day, user) pass → daily registers,
   written hive-partitioned by ``day`` (the natural incremental unit —
-  a daily batch lands in exactly its own partitions).
+  a daily batch lands in exactly its own partitions), plus the
+  params/fingerprint sidecar, written once (no write touches it).
 - SERVE: window estimates off the artifact alone (register merge +
   exact-integer harmonic sum — plans/sketches.hll_rolling_estimate,
   the SAME estimate tail the in-query entry runs).
 - MAINTAIN: upsert = register-wise MAX merge of a batch's day
   sketches into the touched day partitions (idempotent by the HLL
-  merge property); delete = retention drop of whole day partitions.
+  merge property); delete = retention drop of whole day partitions,
+  chosen from the directory listing. Every read declares
+  ``REGS_DDL``, so a table emptied by retention reads as empty
+  instead of failing schema inference.
 
 Reference parity: the reference persists fetched documents and
 re-serves them (src/api/db.py:23-38) — the same build-once/probe-many
@@ -33,6 +37,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from datetime import date
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -61,16 +66,18 @@ def _day_regs(ev: DataFrame) -> DataFrame:
     return hll_day_registers(ev)
 
 
-def _counts(spark: SparkSession, path: str) -> dict:
-    agg = spark.read.schema(REGS_DDL).parquet(regs_path(path)).agg(
-        F.count("*").alias("n_rows"), F.countDistinct("day").alias("n_days")
-    ).collect()[0]
-    return {"n_days": int(agg.n_days), "n_rows": int(agg.n_rows)}
+def read_regs(spark: SparkSession, path: str) -> DataFrame:
+    """The artifact's (day, idx, m_j) register rows, read with the
+    declared schema (empty, not an error, after a full retention
+    drop)."""
+    return spark.read.schema(REGS_DDL).parquet(regs_path(path)).select(
+        "day", F.col("idx").cast("long").alias("idx"), "m_j"
+    )
 
 
 def build_hll_index(spark: SparkSession, sf_dir: str, path: str) -> dict:
     """One distinct-pass over events → day-partitioned registers +
-    sidecar (HLL params, counts, source fingerprint)."""
+    sidecar (HLL params, source fingerprint)."""
     from lol_data_pipeline_spark.plans.sketches import _HLL_M, _HLL_P
 
     ev = load_table(spark, sf_dir, "events")
@@ -79,7 +86,6 @@ def build_hll_index(spark: SparkSession, sf_dir: str, path: str) -> dict:
     return artifact.save_meta(path, "hll", {
         "fingerprint": artifact.source_fingerprint(sf_dir, "events"),
         "params": {"p": _HLL_P, "m": _HLL_M},
-        **_counts(spark, path),
     })
 
 
@@ -106,11 +112,7 @@ def served_hll_rolling(spark: SparkSession, path: str) -> DataFrame:
     carries the exact answer alongside as its error envelope)."""
     from lol_data_pipeline_spark.plans.sketches import hll_rolling_estimate
 
-    day_regs = spark.read.schema(REGS_DDL).parquet(
-        regs_path(path)
-    ).select(
-        "day", F.col("idx").cast("long").alias("idx"), "m_j"
-    )
+    day_regs = read_regs(spark, path)
     spine = day_regs.select("day").distinct().withColumnRenamed(
         "day", "report_day"
     )
@@ -123,13 +125,11 @@ def hll_index_upsert(
     """Merge a batch's day sketches into the artifact: register-wise
     MAX per (day, idx) against the touched days' existing rows, then
     rewrite ONLY those day partitions. Idempotent by HLL's merge
-    property — re-ingesting the same events is a no-op."""
+    property — re-ingesting the same events is a no-op. Returns
+    ``meta`` unchanged."""
     batch = _day_regs(new_events)
     days = batch.select("day").distinct()
-    existing = spark.read.parquet(regs_path(path)).select(
-        "day", F.col("idx").cast("long").alias("idx"), "m_j"
-    )
-    touched = existing.join(F.broadcast(days), "day")
+    touched = read_regs(spark, path).join(F.broadcast(days), "day")
     merged = (
         touched.unionByName(batch)
         .groupBy("day", "idx")
@@ -137,26 +137,18 @@ def hll_index_upsert(
         .localCheckpoint()
     )
     write_upsert_partitions(merged, regs_path(path), ["day"])
-    return artifact.save_meta(path, "hll", {**meta, **_counts(spark, path)})
+    return meta
 
 
 def hll_index_retention_drop(
     spark: SparkSession, path: str, meta: dict, keep_from
 ) -> dict:
     """Retention: drop whole day partitions older than ``keep_from``
-    (a date) — the take-down shape for pre-aggregated telemetry.
-    Idempotent."""
-    disk = spark.read.parquet(regs_path(path))
-    days = [r.day for r in disk.select("day").distinct().collect()]
-    doomed = [d for d in days if d < keep_from]
-    for d in doomed:
-        shutil.rmtree(
-            os.path.join(regs_path(path), f"day={d.isoformat()}"),
-            ignore_errors=True,
-        )
-    if len(doomed) == len(days):
-        # keep_from beyond the newest day: every partition dropped —
-        # re-reading the emptied directory would throw (unable to
-        # infer schema) and leave the sidecar stale (r12 ADVICE).
-        return artifact.save_meta(path, "hll", {**meta, "n_days": 0, "n_rows": 0})
-    return artifact.save_meta(path, "hll", {**meta, **_counts(spark, path)})
+    (a date) — the take-down shape for pre-aggregated telemetry. The
+    days come from the ``day=`` directory names, so the drop starts no
+    Spark job. Idempotent. Returns ``meta`` unchanged."""
+    root = regs_path(path)
+    for name in os.listdir(root):
+        if name.startswith("day=") and date.fromisoformat(name[4:]) < keep_from:
+            shutil.rmtree(os.path.join(root, name), ignore_errors=True)
+    return meta

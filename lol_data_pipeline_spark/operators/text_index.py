@@ -15,26 +15,27 @@ persistence:
   stable directories; a query's terms prune to ≤ |terms| of them),
   plus doclens (doc_id, dl) partitioned by ``db`` = doc_id mod NB
   (so document upserts/deletes rewrite only their partitions), plus
-  a sidecar with exact integer corpus totals (n_docs, total tokens —
-  avgdl derives as an exact-integer division, so the served literal
-  equals the oracle's computed avg bit-for-bit).
+  a sidecar with the bucket count and source fingerprint, written
+  once: it stores no corpus total, so no write ever rewrites it.
 - SERVE (per query): query terms hash driver-side to their buckets
   (zlib.crc32 == Spark's crc32 — pinned by test) → LITERAL partition
   filters + a pushed term filter on the postings scan; per-term df
   comes from the SAME pruned scan (≤ |terms| rows collected), so df
   stays correct under maintenance with no separate stats table;
   score = the shared bm25_weight_sql expression over pivoted tf
-  columns with sidecar scalars as literals — identical doubles to
-  the in-query operator, which is why the served entry shares
-  text_search_bm25's oracle verbatim.
+  columns; n_docs and avgdl are one-row aggregates over the doclens
+  view, attached as a scalar subquery (no eager job at construction:
+  it runs with the plan) — the same count and integer-sum average the
+  in-query operator takes, so the doubles are identical, which is why
+  the served entry shares text_search_bm25's oracle verbatim.
 - MAINTAIN: batch-bounded LSM writes (operators/lsm.py — the r13
   verdict's headline fix): an upsert APPENDS the batch's postings
   and lengths as delta epochs plus doc-id tombstones on BOTH tables
   (write ∝ batch — the old shape re-wrote every affected bucket's
   full contents, index-sized bytes when a batch's terms span the
   buckets; tombstones also subsume the old second pass that chased
-  replaced ids' postings into unaffected buckets), and the sidecar's
-  integer totals update exactly. Deletes append tombstones only.
+  replaced ids' postings into unaffected buckets). Deletes append
+  tombstones only.
   Serves read the base∪delta view (plain base scan when the log is
   empty); the quota trigger folds the log back. Idempotent at the
   view level by construction.
@@ -95,20 +96,6 @@ def read_doclens(spark: SparkSession, path: str) -> DataFrame:
     return DOCLENS.read(spark, path).select("doc_id", "dl", "db")
 
 
-def _counts(spark: SparkSession, path: str) -> dict:
-    """The sidecar's EXACT integer totals from the doclens view (one
-    column-pruned aggregate)."""
-    row = (
-        read_doclens(spark, path)
-        .agg(
-            F.count("*").cast("long").alias("n"),
-            F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("tot"),
-        )
-        .collect()[0]
-    )
-    return {"n_docs": int(row.n), "total_tokens": int(row.tot)}
-
-
 def _postings_and_lens(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> tuple[DataFrame, DataFrame]:
@@ -132,17 +119,17 @@ def _postings_and_lens(
 
 
 def build_bm25_index(spark: SparkSession, sf_dir: str, path: str) -> dict:
-    """ONE tokenize pass → postings + doclens + exact-integer stats
+    """ONE tokenize pass → postings + doclens + params/fingerprint
     sidecar. The build materializes the FULL vocabulary's postings —
     the one-time cost every probe afterwards avoids."""
     docs = load_table(spark, sf_dir, "documents")
     postings, lens = _postings_and_lens(docs)
     POSTINGS.write_base(postings, path)
     DOCLENS.write_base(lens, path)
-    return lsm.maintain(spark, path, "bm25", {
+    return artifact.save_meta(path, "bm25", {
         "fingerprint": artifact.source_fingerprint(sf_dir, "documents"),
         "params": {"nb": _NB},
-    }, TABLES, _counts)
+    })
 
 
 def ensure_bm25_index(
@@ -156,7 +143,6 @@ def ensure_bm25_index(
         "bm25", sf_dir, "documents", {"nb": _NB},
         lambda path: build_bm25_index(spark, sf_dir, path),
         root, variant,
-        lambda path, meta: lsm.settle(spark, path, "bm25", meta, TABLES, _counts),
     )
 
 
@@ -172,12 +158,13 @@ def served_bm25_topk(
     """Serve BM25 top-k from the PERSISTED index: the postings scan
     is pruned to the query terms' buckets (literal partition filters)
     with the term equality pushed into the scan; per-term df comes
-    from the same pruned rows (≤ |terms| values collected); corpus
-    scalars ride as sidecar literals whose doubles equal the
-    recomputing operator's aggregates exactly (integer totals).
-    Output (doc_id, score, n_terms_hit, rank) is identical to
+    from the same pruned rows (≤ |terms| values collected); the
+    corpus scalars n_docs and avgdl are scalar subqueries over the
+    doclens view, so they are exact for the view being probed and
+    their doubles equal the recomputing operator's aggregates. Output
+    (doc_id, score, n_terms_hit, rank) is identical to
     operators/search.bm25_topk — the served entry shares its oracle
-    verbatim."""
+    verbatim. A fully deleted index returns zero rows."""
     esc = [t.replace("'", "''") for t in terms]
     nt = len(terms)
     buckets = sorted({term_bucket(t) for t in terms})
@@ -188,8 +175,6 @@ def served_bm25_topk(
         .select("doc_id", "term", "tf")
     )
     dfs = {r.term: int(r.n) for r in post.groupBy("term").agg(F.count("*").alias("n")).collect()}
-    n_docs = float(meta["n_docs"])
-    avgdl = meta["total_tokens"] / meta["n_docs"]
     # pivot the ≤|terms| postings per doc into dense tf{i} columns —
     # the same shape bm25_topk scores (shared bm25_weight_sql text)
     cand = post.groupBy("doc_id").agg(
@@ -201,12 +186,17 @@ def served_bm25_topk(
         ]
     )
     lens = read_doclens(spark, path).select("doc_id", "dl")
+    # corpus scalars: one-row aggregates over the view being probed,
+    # which Catalyst merges into one scalar subquery (NULL avgdl and no
+    # candidate when every doc is deleted)
+    n_docs = lens.select(F.count("*").cast("double")).scalar()
+    avgdl = lens.select(F.avg("dl")).scalar()
     joined = lens.join(F.broadcast(cand), "doc_id").select(
         F.col("doc_id").alias("id"),
         F.col("dl").cast("double").alias("dl"),
         *[F.col(f"tf{i}") for i in range(nt)],
-        F.lit(n_docs).alias("n_docs"),
-        F.lit(float(avgdl)).alias("avgdl"),
+        n_docs.alias("n_docs"),
+        avgdl.alias("avgdl"),
         *[F.lit(float(dfs.get(t, 0))).alias(f"df{i}") for i, t in enumerate(terms)],
     )
     score_expr = " + ".join(bm25_weight_sql(i, k1, b) for i in range(nt))
@@ -230,13 +220,15 @@ def bm25_index_upsert(
     on both tables (write ∝ batch; a replaced doc's OLD postings —
     including ones in buckets the new text never touches — are
     superseded by the tombstone at read time, which retires the old
-    second chase-the-unaffected-buckets pass), and the sidecar's
-    EXACT integer totals update. Older rows physically drop at the
-    quota-triggered compact. Idempotent. Returns the updated meta."""
+    second chase-the-unaffected-buckets pass). Older rows physically
+    drop at the quota-triggered compact. Idempotent. Returns ``meta``
+    unchanged."""
     postings, lens = _postings_and_lens(new_docs)
     POSTINGS.upsert(spark, path, postings, new_docs)
     DOCLENS.upsert(spark, path, lens, new_docs)
-    return lsm.maintain(spark, path, "bm25", meta, TABLES, _counts)
+    for t in TABLES:
+        t.fold(spark, path)
+    return meta
 
 
 def bm25_index_delete(
@@ -244,8 +236,9 @@ def bm25_index_delete(
 ) -> dict:
     """Take-down: doc-id tombstones on both tables (write ∝ doomed
     ids) — the docs' postings and lengths vanish from the VIEW
-    immediately, from disk at the next compact; the sidecar's EXACT
-    integer totals shrink. Idempotent."""
+    immediately, from disk at the next compact. Idempotent. Returns
+    ``meta`` unchanged."""
     for t in TABLES:
         t.delete(spark, path, doomed_ids)
-    return lsm.maintain(spark, path, "bm25", meta, TABLES, _counts)
+        t.fold(spark, path)
+    return meta

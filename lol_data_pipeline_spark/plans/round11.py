@@ -1729,10 +1729,9 @@ def _sql_bm25_upsert() -> str:
 def bm25_index_upsert_entry(spark, sf_dir):
     """Incremental LEXICAL-index maintenance, verified through the
     SERVE path: a document batch (cloned docs under shifted ids — the
-    re-ingest shape) merges into the persisted postings (≤ NB term
-    buckets rewrite; a replaced doc's stale postings are purged even
-    from buckets the new text no longer touches) and doclens (≤ NB
-    doc buckets), and the sidecar's exact integer totals update. The
+    re-ingest shape) merges into the persisted postings (one LSM
+    delta epoch; a replaced doc's stale postings are superseded even
+    in buckets the new text no longer touches) and doclens. The
     entry then SERVES the standing query from the maintained artifact
     — what is verified is that maintenance kept the index
     query-correct (df, N, avgdl all shifted by the batch), against an
@@ -1773,10 +1772,9 @@ def _sql_bm25_delete() -> str:
 @query("bm25_index_delete", sql=_sql_bm25_delete())
 def bm25_index_delete_entry(spark, sf_dir):
     """LEXICAL-index take-down, verified through the SERVE path: a
-    doomed document range vanishes from postings (only the buckets
-    actually holding its rows rewrite; emptied directories drop) and
-    doclens, the sidecar totals shrink exactly, and the standing
-    query served from the maintained artifact matches an oracle that
+    doomed document range vanishes from the postings and doclens
+    views (doc-id tombstones; the rows drop from disk at the
+    compact), and the standing query served from the maintained artifact matches an oracle that
     recomputes BM25 over corpus∖doomed — deletions move every
     surviving score (df and N fall), so serving-after-delete is a
     sharp whole-index check, not a row-absence check. Idempotent; own
@@ -2171,17 +2169,15 @@ def stream_bm25_upsert_multibatch(spark, sf_dir):
     batch (cloned docs under shifted ids) arrives as a four-micro-
     batch ordered replay and each epoch WRITES THROUGH a foreachBatch
     sink into the persisted inverted index via bm25_index_upsert —
-    per epoch, ≤ NB term-bucket partitions and ≤ NB doc-bucket
-    partitions rewrite (dynamic partition overwrite) and the
-    sidecar's exact integer totals advance. The sink re-reads the
-    sidecar at each epoch, so a replayed epoch re-ingests its ids
-    idempotently (stale postings purged before re-insert — identical
-    disk content and identical totals; the exactly-once-by-
-    idempotence discipline streaming/sinks.py documents). What is
+    per epoch, the batch's postings and lengths append as one LSM
+    delta epoch plus doc-id tombstones; the sidecar is the build's
+    and no epoch rewrites it. A replayed epoch re-ingests its ids
+    idempotently (stale postings superseded by the new epoch —
+    identical view content; the exactly-once-by-idempotence
+    discipline streaming/sinks.py documents). What is
     verified is the SERVE path over the post-stream artifact against
     an oracle recomputing BM25 over corpus∪batch from scratch. Own
     index copy (variant="streamup")."""
-    from lol_data_pipeline_spark.operators.artifact import load_meta
     from lol_data_pipeline_spark.operators.text_index import (
         bm25_index_upsert,
         ensure_bm25_index,
@@ -2195,7 +2191,7 @@ def stream_bm25_upsert_multibatch(spark, sf_dir):
     )
     from lol_data_pipeline_spark.streaming.windows import replay_multibatch
 
-    path, _meta = ensure_bm25_index(spark, sf_dir, variant="streamup")
+    path, meta = ensure_bm25_index(spark, sf_dir, variant="streamup")
     docs = T(spark, sf_dir, "documents")
     batch = docs.filter(
         F.col("doc_id").between(_SBUP_LO, _SBUP_HI - 1)
@@ -2203,9 +2199,7 @@ def stream_bm25_upsert_multibatch(spark, sf_dir):
     parts = [batch.filter(F.col("doc_id") % 4 == i) for i in range(4)]
 
     def sink(df, _epoch_id):
-        # current sidecar, not the closure's snapshot — each epoch's
-        # exact totals build on the previous epoch's writes
-        bm25_index_upsert(spark, path, load_meta(path, "bm25"), df)
+        bm25_index_upsert(spark, path, meta, df)
 
     replay_multibatch(
         spark,
@@ -2216,8 +2210,7 @@ def stream_bm25_upsert_multibatch(spark, sf_dir):
         foreach_batch=sink,
     )
     return served_bm25_topk(
-        spark, path, load_meta(path, "bm25"), _BM25_TERMS,
-        k=_BM25_K, k1=_BM25_K1, b=_BM25_B,
+        spark, path, meta, _BM25_TERMS, k=_BM25_K, k1=_BM25_K1, b=_BM25_B
     )
 
 
@@ -2225,8 +2218,8 @@ def stream_bm25_upsert_multibatch(spark, sf_dir):
 # Lexical index observability — monitoring off the ARTIFACT (postings
 # + doclens + sidecar), completing stats parity across all three
 # served families (ann_index_stats, graph_index_stats, this). The
-# sidecar totals ride along as literals so a sidecar-vs-disk drift
-# (a maintenance bug) fails the oracle comparison.
+# meta_* totals are aggregates of the index view itself (the sidecar
+# stores no count), so the oracle checks them against the corpus.
 # ---------------------------------------------------------------------------
 
 
@@ -2260,10 +2253,11 @@ def _sql_bm25_stats() -> str:
 @query("bm25_index_stats", sql=_sql_bm25_stats())
 def bm25_index_stats(spark, sf_dir):
     """Lexical-index OBSERVABILITY: one row of artifact-level health
-    metrics computed from the persisted postings/doclens tables plus
-    the sidecar's totals as literals — so the oracle comparison
-    cross-checks sidecar vs disk (a maintenance bug that drifts the
-    exact integer totals fails here, not in production probes).
+    metrics computed from the persisted postings/doclens tables. The
+    meta_* columns are the totals every BM25 probe derives in its own
+    plan (count and token sum of the doclens view), so a maintenance
+    bug that drifts them fails the oracle here, not in production
+    probes.
     n_postings is the corpus's (doc, term) surface, max_df its most
     common term's reach (the skew that makes a postings bucket hot),
     db_max/min_docs the doc-bucket balance that bounds maintenance
@@ -2275,7 +2269,7 @@ def bm25_index_stats(spark, sf_dir):
         read_postings,
     )
 
-    path, meta = ensure_bm25_index(spark, sf_dir)
+    path, _meta = ensure_bm25_index(spark, sf_dir)
     post = read_postings(spark, path)
     lens = read_doclens(spark, path)
     lstats = lens.agg(
@@ -2307,10 +2301,8 @@ def bm25_index_stats(spark, sf_dir):
         .select(
             "n_docs",
             "total_tokens",
-            F.lit(int(meta["n_docs"])).cast("long").alias("meta_n_docs"),
-            F.lit(int(meta["total_tokens"]))
-            .cast("long")
-            .alias("meta_total_tokens"),
+            F.col("n_docs").alias("meta_n_docs"),
+            F.col("total_tokens").alias("meta_total_tokens"),
             "n_postings",
             "n_terms",
             "max_df",

@@ -477,19 +477,19 @@ def _sql_chunk_stats() -> str:
 @query("chunk_index_stats", sql=_sql_chunk_stats())
 def chunk_index_stats_entry(spark, sf_dir):
     """SUBSTRING-index OBSERVABILITY: per-bucket row / distinct-hash
-    counts of the persisted artifact plus the sidecar totals — the
-    monitoring view for bucket skew (a hot hash bucket concentrates
-    probe-join work there; nb is the lever) and for sidecar drift
-    (totals are emitted from the SIDECAR, so a drifted count FAILS
-    the oracle — the exact-integer drift-fails-oracle design of
-    bm25_index_stats). Computed from the artifact's layout alone: one
-    aggregate over (hb, h, id), no text bytes."""
+    counts of the persisted artifact plus its totals — the monitoring
+    view for bucket skew (a hot hash bucket concentrates probe-join
+    work there; nb is the lever) and for maintenance drift (the
+    meta_* totals are scalar subqueries over the index view, so a
+    write that drifts the view from the corpus FAILS the oracle — the
+    design of bm25_index_stats). Computed from the artifact's layout
+    alone: aggregates over (hb, h, id), no text bytes."""
     from lol_data_pipeline_spark.operators.chunk_index import (
         ensure_chunk_index,
         read_chunk_rows,
     )
 
-    path, meta = ensure_chunk_index(
+    path, _meta = ensure_chunk_index(
         spark, sf_dir, variant="probe", c=_CSD_C, index_where=_CSD_IDX_WHERE
     )
     disk = read_chunk_rows(spark, path)
@@ -503,8 +503,10 @@ def chunk_index_stats_entry(spark, sf_dir):
             "hb",
             "n_rows",
             "n_distinct_h",
-            F.lit(int(meta["n_chunks"])).cast("long").alias("meta_n_chunks"),
-            F.lit(int(meta["n_docs"])).cast("long").alias("meta_n_docs"),
+            disk.select(F.count("*").cast("long")).scalar().alias("meta_n_chunks"),
+            disk.select(F.countDistinct("id").cast("long"))
+            .scalar()
+            .alias("meta_n_docs"),
         )
         .orderBy("hb")
     )
@@ -886,7 +888,7 @@ def sketch_hll_index_retention(spark, sf_dir):
     from lol_data_pipeline_spark.operators.sketch_index import (
         ensure_hll_index,
         hll_index_retention_drop,
-        regs_path,
+        read_regs,
         served_hll_rolling,
     )
 
@@ -895,11 +897,7 @@ def sketch_hll_index_retention(spark, sf_dir):
     path, meta = ensure_hll_index(spark, sf_dir, variant="retention")
     import datetime as _dt
 
-    min_day = (
-        spark.read.parquet(regs_path(path))
-        .agg(F.min("day").alias("mn"))
-        .collect()[0]["mn"]
-    )
+    min_day = read_regs(spark, path).agg(F.min("day").alias("mn")).collect()[0]["mn"]
     hll_index_retention_drop(
         spark, path, meta, keep_from=min_day + _dt.timedelta(days=7)
     )

@@ -175,18 +175,18 @@ def _sql_ngram_stats() -> str:
 @query("ngram_index_stats", sql=_sql_ngram_stats())
 def ngram_index_stats_entry(spark, sf_dir):
     """DECONTAMINATION-index OBSERVABILITY: per-bucket row /
-    distinct-hash counts of the persisted artifact plus the sidecar
-    totals — bucket skew monitoring plus the exact-integer
-    drift-fails-oracle design of chunk_index_stats/bm25_index_stats
-    (totals are emitted from the SIDECAR, so a drifted count fails
-    the value hash). Computed from the artifact's layout alone: one
-    aggregate over (hb, h, id), no text bytes."""
+    distinct-hash counts of the persisted artifact plus its totals —
+    bucket skew monitoring plus the maintenance-drift check of
+    chunk_index_stats/bm25_index_stats (the meta_* totals are scalar
+    subqueries over the index view, so a view that drifted from the
+    corpus fails the value hash). Computed from the artifact's layout
+    alone: aggregates over (hb, h, id), no text bytes."""
     from lol_data_pipeline_spark.operators.chunk_index import (
         ensure_ngram_index,
         read_ngram_rows,
     )
 
-    path, meta = ensure_ngram_index(
+    path, _meta = ensure_ngram_index(
         spark, sf_dir, variant="decon", n=5, index_where=_NG_IDX_WHERE
     )
     disk = read_ngram_rows(spark, path)
@@ -200,8 +200,10 @@ def ngram_index_stats_entry(spark, sf_dir):
             "hb",
             "n_rows",
             "n_distinct_h",
-            F.lit(int(meta["n_grams"])).cast("long").alias("meta_n_grams"),
-            F.lit(int(meta["n_docs"])).cast("long").alias("meta_n_docs"),
+            disk.select(F.count("*").cast("long")).scalar().alias("meta_n_grams"),
+            disk.select(F.countDistinct("id").cast("long"))
+            .scalar()
+            .alias("meta_n_docs"),
         )
         .orderBy("hb")
     )
@@ -830,17 +832,18 @@ def _sql_phash_stats() -> str:
 @query("phash_index_stats", sql=_sql_phash_stats())
 def phash_index_stats_entry(spark, sf_dir):
     """IMAGE-index OBSERVABILITY: per-band row / distinct-chunk
-    counts of the persisted artifact plus the sidecar total — band
+    counts of the persisted artifact plus its image total — band
     bucket-diversity monitoring (a collapsed chunk distribution means
-    degenerate images flooding one bucket) with the exact-integer
-    drift-fails-oracle design of the other *_stats entries. Layout
-    only: one aggregate over (band, chunk, id)."""
+    degenerate images flooding one bucket) with the maintenance-drift
+    check of the other *_stats entries (meta_n_docs is a scalar
+    subquery over the index view). Layout only: aggregates over
+    (band, chunk, id)."""
     from lol_data_pipeline_spark.operators.phash_index import (
         ensure_phash_index,
         read_phash_rows,
     )
 
-    path, meta = ensure_phash_index(spark, sf_dir)
+    path, _meta = ensure_phash_index(spark, sf_dir)
     disk = read_phash_rows(spark, path)
     return (
         disk.groupBy(F.col("band").cast("int").alias("band"))
@@ -852,7 +855,9 @@ def phash_index_stats_entry(spark, sf_dir):
             "band",
             "n_rows",
             "n_distinct_chunk",
-            F.lit(int(meta["n_docs"])).cast("long").alias("meta_n_docs"),
+            disk.select(F.countDistinct("id").cast("long"))
+            .scalar()
+            .alias("meta_n_docs"),
         )
         .orderBy("band")
     )

@@ -624,7 +624,6 @@ def chunk_index_compact_entry(spark, sf_dir):
     from lol_data_pipeline_spark.operators import lsm
     from lol_data_pipeline_spark.operators.chunk_index import (
         CHUNKS,
-        _chunk_counts,
         chunk_index_upsert,
         chunks_path,
         ensure_chunk_index,
@@ -648,6 +647,5 @@ def chunk_index_compact_entry(spark, sf_dir):
     meta = chunk_index_upsert(spark, path, meta, batch)
     CHUNKS.compact(spark, path)
     assert lsm.lsm_epochs(chunks_path(path)) == []
-    meta = lsm.maintain(spark, path, "chunk", meta, (CHUNKS,), _chunk_counts)
     probe = docs.filter(F.pmod(F.col("doc_id"), F.lit(5)) == 0)
     return served_chunk_clean(spark, path, meta, probe)

@@ -111,19 +111,24 @@ def test_paths_roots_and_variants(src, tmp_path, monkeypatch):
     assert len({env for env, _d, _m in artifact.KINDS.values()}) == 10
 
 
-def test_sidecar_write_is_atomic_inside_upsert(spark, sf_dir, tmp_path, monkeypatch):
-    """A sidecar write that dies partway through an upsert of a counted
-    family (BM25) leaves the previous sidecar on disk and parseable (an
-    in-place ``open(path, "w")`` would truncate it first). Its epoch
-    listing then lags the tables', so the next ensure recounts it from
-    the view instead of serving the pre-write counts, and builds
-    nothing."""
+def test_sidecar_write_is_atomic_inside_rebuild(spark, sf_dir, tmp_path, monkeypatch):
+    """A sidecar write that dies partway through a rebuild (its only
+    writer) leaves the previous sidecar on disk and parseable (an
+    in-place ``open(path, "w")`` would truncate it first) and no temp
+    file behind. The rebuild died after its data write, at the sidecar;
+    the next ensure reuses the intact sidecar and builds nothing."""
     from lol_data_pipeline_spark.operators import text_index as ti
     from lol_data_pipeline_spark.operators.lsm import lsm_epochs
 
     root = str(tmp_path)
     path, meta = ti.ensure_bm25_index(spark, sf_dir, root=root)
     sidecar = os.path.join(path, "_text_meta.json")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    batch = docs.filter(F.col("doc_id") < 3).select(
+        (F.col("doc_id") + 970000).alias("doc_id"), "text"
+    )
+    assert ti.bm25_index_upsert(spark, path, meta, batch) == meta
+    assert lsm_epochs(ti.postings_path(path)) == [1]
     real_dump = json.dump
 
     def dies_midway(obj, f, *a, **kw):
@@ -131,16 +136,13 @@ def test_sidecar_write_is_atomic_inside_upsert(spark, sf_dir, tmp_path, monkeypa
         raise OSError("disk full")
 
     monkeypatch.setattr(json, "dump", dies_midway)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    batch = docs.filter(F.col("doc_id") < 3).select(
-        (F.col("doc_id") + 970000).alias("doc_id"), "text"
-    )
     with pytest.raises(OSError, match="disk full"):
-        ti.bm25_index_upsert(spark, path, meta, batch)
+        ti.build_bm25_index(spark, sf_dir, path)
     monkeypatch.setattr(json, "dump", real_dump)
-    # it died after the data write, at the sidecar
-    assert lsm_epochs(ti.postings_path(path)) == [1]
-    assert lsm_epochs(ti.doclens_path(path)) == [1]
+    # it died after the data write (a fresh base generation, logs
+    # cleared), at the sidecar
+    assert lsm_epochs(ti.postings_path(path)) == []
+    assert lsm_epochs(ti.doclens_path(path)) == []
 
     with open(sidecar) as f:
         assert json.load(f) == meta
@@ -150,10 +152,7 @@ def test_sidecar_write_is_atomic_inside_upsert(spark, sf_dir, tmp_path, monkeypa
         raise AssertionError("ensure rebuilt a valid artifact")
 
     monkeypatch.setattr(ti, "build_bm25_index", no_rebuild)
-    path2, meta2 = ti.ensure_bm25_index(spark, sf_dir, root=root)
-    view_docs = ti.read_doclens(spark, path).count()
-    assert path2 == path and meta2["n_docs"] == view_docs != meta["n_docs"]
-    assert artifact.load_meta(path, "bm25") == meta2
+    assert ti.ensure_bm25_index(spark, sf_dir, root=root) == (path, meta)
 
 
 def test_probe_after_compaction_reads_current_rows(

@@ -11,15 +11,16 @@ index (count files touched per upsert at two corpus sizes)".
 
 from __future__ import annotations
 
+import datetime
 import os
 
 import pytest
 from pyspark.sql import functions as F
 
+from lol_data_pipeline_spark.operators.chunk_index import NGRAMS
 from lol_data_pipeline_spark.operators.lsm import (
     delta_path,
     dir_bytes,
-    lsm_compact,
     lsm_epochs,
     lsm_maybe_compact,
     tomb_path,
@@ -121,7 +122,8 @@ def test_view_equals_eager_merge_and_replace_precedence(spark, tmp_path):
         map(tuple, _batch_ngram_rows(b2, 5).collect())
     )
     assert got2 == want2
-    assert meta["n_docs"] == len({r[0] for r in want2})
+    n_docs = read_ngram_rows(spark, path).select("id").distinct().count()
+    assert n_docs == len({r[0] for r in want2})
 
 
 def test_compact_preserves_view_and_clears_log(spark, tmp_path):
@@ -142,7 +144,7 @@ def test_compact_preserves_view_and_clears_log(spark, tmp_path):
     base = chunks_path(path)
     assert lsm_epochs(base)
     before = sorted(map(tuple, read_ngram_rows(spark, path).collect()))
-    assert lsm_compact(spark, base, "id", ["hb"], sort_within=["h"])
+    assert NGRAMS.compact(spark, path)
     assert lsm_epochs(base) == []
     after = sorted(map(tuple, read_ngram_rows(spark, path).collect()))
     assert after == before
@@ -157,7 +159,6 @@ def test_upsert_after_full_delete_and_empty_compact(spark, tmp_path):
     the batch back."""
     from lol_data_pipeline_spark.operators.chunk_index import (
         _batch_ngram_rows,
-        chunks_path,
         ngram_index_delete,
         ngram_index_upsert,
         read_ngram_rows,
@@ -166,16 +167,15 @@ def test_upsert_after_full_delete_and_empty_compact(spark, tmp_path):
     path, meta = _build_ngram(spark, tmp_path, "ng_empty", "doc_id IN (0, 8)")
     doomed = spark.createDataFrame([(0,), (8,)], "doc_id long")
     meta = ngram_index_delete(spark, path, meta, doomed)
-    assert meta["n_docs"] == 0 and meta["n_grams"] == 0
+    assert read_ngram_rows(spark, path).select("id").distinct().count() == 0
     assert read_ngram_rows(spark, path).count() == 0
-    base = chunks_path(path)
-    lsm_compact(spark, base, "id", ["hb"], sort_within=["h"])
+    NGRAMS.compact(spark, path)
     assert read_ngram_rows(spark, path).count() == 0  # schema survives
     b = _batch(spark, n=2)
     meta = ngram_index_upsert(spark, path, meta, b)
     got = set(map(tuple, read_ngram_rows(spark, path).collect()))
     assert got == set(map(tuple, _batch_ngram_rows(b, 5).collect()))
-    assert meta["n_docs"] == 2
+    assert read_ngram_rows(spark, path).select("id").distinct().count() == 2
 
 
 def test_quota_trigger_folds_at_threshold(spark, tmp_path):
@@ -190,9 +190,9 @@ def test_quota_trigger_folds_at_threshold(spark, tmp_path):
     path, meta = _build_ngram(spark, tmp_path, "ng_quota", "doc_id % 16 = 0")
     base = chunks_path(path)
     meta = ngram_index_upsert(spark, path, meta, _batch(spark, n=2))
-    assert not lsm_maybe_compact(spark, base, "id", ["hb"], quota=5)
+    assert not lsm_maybe_compact(spark, base, "id", ["hb"], NGRAMS.ddl, quota=5)
     assert lsm_epochs(base)
-    assert lsm_maybe_compact(spark, base, "id", ["hb"], quota=1)
+    assert lsm_maybe_compact(spark, base, "id", ["hb"], NGRAMS.ddl, quota=1)
     assert lsm_epochs(base) == []
 
 
@@ -266,27 +266,90 @@ def _job_id(spark):
     return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
 
 
-def test_minhash_writes_are_count_free(spark, tmp_path):
-    """Below quota a minhash upsert starts at most 5 Spark jobs and a
-    delete at most 2: no write recounts the index. The sidecar is the
-    build's, byte for byte, after both writes."""
-    from lol_data_pipeline_spark.operators import minhash_index as mh
+def _write_args(spark, module, path):
+    """(upsert batch, delete argument) of one write pair for a family:
+    20 new documents (as media for phash), upserted then deleted; for
+    HLL a late event batch, then a retention drop of the oldest day."""
+    batch = _batch(spark, n=20)
+    if module == "phash_index":
+        media = batch.select(
+            F.col("doc_id").alias("media_id"), F.col("doc_id").alias("src"),
+            F.lit(1).alias("perturb"),
+        )
+        return media, media.select("media_id")
+    if module == "sketch_index":
+        from lol_data_pipeline_spark.io import load_table
+        from lol_data_pipeline_spark.operators.sketch_index import read_regs
 
-    path = str(tmp_path / "mh")
+        events = load_table(spark, SF, "events").filter(
+            F.col("event_id") % 11 == 0
+        ).select(
+            (F.col("user_id") + 1000000).alias("user_id"),
+            (F.col("ts") + F.expr("INTERVAL 30 DAYS")).alias("ts"),
+        )
+        oldest = read_regs(spark, path).agg(F.min("day")).first()[0]
+        return events, oldest + datetime.timedelta(days=1)
+    return batch, batch.select("doc_id")
+
+
+@pytest.mark.parametrize(
+    "module, build, upsert, delete, table, max_jobs",
+    [
+        pytest.param(
+            "minhash_index", "build_minhash_index", "minhash_index_upsert",
+            "minhash_index_delete", "BUCKETS", (5, 2), id="minhash",
+        ),
+        pytest.param(
+            "chunk_index", "build_chunk_index", "chunk_index_upsert",
+            "chunk_index_delete", "CHUNKS", (4, 2), id="chunk",
+        ),
+        pytest.param(
+            "chunk_index", "build_ngram_index", "ngram_index_upsert",
+            "ngram_index_delete", "NGRAMS", (3, 2), id="ngram",
+        ),
+        pytest.param(
+            "text_index", "build_bm25_index", "bm25_index_upsert",
+            "bm25_index_delete", "DOCLENS", (9, 4), id="bm25",
+        ),
+        pytest.param(
+            "phash_index", "build_phash_index", "phash_index_upsert",
+            "phash_index_delete", "BANDS", (3, 2), id="phash",
+        ),
+        pytest.param(
+            "sketch_index", "build_hll_index", "hll_index_upsert",
+            "hll_index_retention_drop", None, (7, 0), id="hll",
+        ),
+    ],
+)
+def test_writes_are_count_free(
+    spark, tmp_path, module, build, upsert, delete, table, max_jobs
+):
+    """Below quota a write starts at most the family's bound of Spark
+    jobs (upsert, delete) and recounts nothing: the sidecar is the
+    build's, byte for byte, after an upsert and a delete, and each
+    write returns the meta it was given."""
+    import importlib
+
+    from lol_data_pipeline_spark.operators import artifact
+
+    mod = importlib.import_module(f"lol_data_pipeline_spark.operators.{module}")
+    path = str(tmp_path / module)
     os.makedirs(path, exist_ok=True)
-    meta = mh.build_minhash_index(spark, SF, path)
-    sidecar = os.path.join(path, "_minhash_meta.json")
+    meta = getattr(mod, build)(spark, SF, path)
+    kind = next(k for k, v in artifact.KINDS.items() if v[2] in os.listdir(path))
+    sidecar = os.path.join(path, artifact.KINDS[kind][2])
     with open(sidecar, "rb") as f:
         built = f.read()
-    batch = _batch(spark, n=20)
+    up, down = _write_args(spark, module, path)
     j0 = _job_id(spark)
-    assert mh.minhash_index_upsert(spark, path, meta, batch) == meta
+    assert getattr(mod, upsert)(spark, path, meta, up) == meta
     j1 = _job_id(spark)
-    assert mh.minhash_index_delete(spark, path, meta, batch.select("doc_id")) == meta
+    assert getattr(mod, delete)(spark, path, meta, down) == meta
     j2 = _job_id(spark)
-    assert lsm_epochs(mh.buckets_path(path)) == [1, 2]  # below quota
-    upsert_jobs, delete_jobs = j1 - j0, j2 - j1
-    assert upsert_jobs <= 5 and delete_jobs <= 2, (upsert_jobs, delete_jobs)
+    if table:
+        assert lsm_epochs(getattr(mod, table).dir(path)) == [1, 2]  # below quota
+    jobs = (j1 - j0, j2 - j1)
+    assert jobs[0] <= max_jobs[0] and jobs[1] <= max_jobs[1], jobs
     with open(sidecar, "rb") as f:
         assert f.read() == built
 
@@ -315,13 +378,13 @@ def test_knn_graph_writes_leave_the_sidecar_alone(spark, tmp_path):
 
 
 def test_chunk_index_compact_leaves_a_settled_sidecar(spark, tmp_path, monkeypatch):
-    """After chunk_index_compact's forced fold the sidecar records the
-    emptied log, so the next ensure of that artifact reuses it with no
-    Spark job instead of recounting the view."""
-    from lol_data_pipeline_spark.operators import lsm
+    """After chunk_index_compact's forced fold the log is empty and the
+    sidecar is still the build's (params and fingerprint, no count or
+    log listing), so the next ensure of that artifact reuses it with no
+    Spark job."""
     from lol_data_pipeline_spark.operators.artifact import load_meta
     from lol_data_pipeline_spark.operators.chunk_index import (
-        CHUNKS,
+        chunks_path,
         ensure_chunk_index,
     )
     from lol_data_pipeline_spark.plans import REGISTRY
@@ -330,7 +393,8 @@ def test_chunk_index_compact_leaves_a_settled_sidecar(spark, tmp_path, monkeypat
     monkeypatch.setenv("SPARK_GRAFT_CHUNK_INDEX_DIR", str(tmp_path))
     REGISTRY["chunk_index_compact"].fn(spark, SF)
     path = os.path.join(str(tmp_path), "chunk_sf0.001_cpt")
-    assert load_meta(path, "chunk")["epochs"] == lsm.epochs(path, (CHUNKS,))
+    assert lsm_epochs(chunks_path(path)) == []
+    assert set(load_meta(path, "chunk")) == {"fingerprint", "params"}
     j0 = _job_id(spark)
     assert ensure_chunk_index(
         spark, SF, variant="cpt", c=_CSD_C, index_where=_CSD_IDX_WHERE

@@ -481,3 +481,27 @@ def test_artifact_reads_declare_schema():
     from tools.plan_audit import audit_bare_reads
 
     assert audit_bare_reads() == []
+
+
+def test_sidecar_written_only_by_builds(tmp_path):
+    """Source-level rule: ``save_meta`` is called only from a function
+    named ``build`` or ``build_*``, so no upsert/delete path can bring
+    back a stored count that every write must recount. The rule fires
+    on a write path that saves the sidecar and passes the build shapes
+    (module-level ``build_*`` and a nested ``build`` closure). Pure
+    AST scan: no Spark session."""
+    from tools.plan_audit import audit_sidecar_writes
+
+    assert audit_sidecar_writes() == []
+    (tmp_path / "fam.py").write_text(
+        "from x import artifact\n"
+        "def build_fam(path):\n"
+        "    return artifact.save_meta(path, 'k', {})\n"
+        "def ensure_fam(path):\n"
+        "    def build(p):\n"
+        "        return artifact.save_meta(p, 'k', {})\n"
+        "    return build(path)\n"
+        "def fam_upsert(path, meta):\n"
+        "    return artifact.save_meta(path, 'k', {**meta, 'n': 1})\n"
+    )
+    assert audit_sidecar_writes(str(tmp_path)) == ["fam.py:fam_upsert"]

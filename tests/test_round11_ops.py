@@ -256,9 +256,9 @@ def test_graph_delete_promotes_survivors_and_drops_emptied(
     # (r14 LSM shape) and their directory drops at the compact
     assert not os.path.isdir(os.path.join(path, "edges", f"code={victim}"))
     assert read_nodes(spark, path, codes=[victim]).count() == 0
-    from lol_data_pipeline_spark.operators.lsm import lsm_compact
+    from lol_data_pipeline_spark.operators.graph_index import NODES
 
-    lsm_compact(spark, os.path.join(path, "nodes"), "vec_id", ["code"])
+    NODES.compact(spark, path)
     assert not os.path.isdir(os.path.join(path, "nodes", f"code={victim}"))
 
 
@@ -705,22 +705,38 @@ def test_bm25_served_equals_inquery(spark, sf_dir):
     assert {term_bucket(t) for t in _BM25_TERMS}  # probe buckets exist
 
 
+def _bm25_totals(spark, path):
+    """(doc count, token sum) of the doclens view: the n_docs and
+    avgdl inputs every BM25 probe aggregates."""
+    from lol_data_pipeline_spark.operators.text_index import read_doclens
+
+    return tuple(
+        read_doclens(spark, path)
+        .agg(F.count("*").alias("n"), F.sum("dl").alias("tot"))
+        .first()
+    )
+
+
 def test_bm25_upsert_replaces_and_is_idempotent(spark, sf_dir, tmp_path_factory):
     """Re-ingest semantics on a test-owned copy: upserting a CHANGED
     version of an existing doc purges its stale postings from every
     bucket (including buckets the new text no longer touches), the
-    sidecar totals track exactly, and a re-run is a no-op."""
-    import json as _json
-
+    view's totals (the n_docs and token sum every probe derives) track
+    exactly, and a re-run is a no-op."""
     from lol_data_pipeline_spark.operators.text_index import (
         bm25_index_upsert,
         ensure_bm25_index,
+        read_doclens,
         read_postings,
     )
 
     root = str(tmp_path_factory.mktemp("bm25_index"))
     path, meta = ensure_bm25_index(spark, sf_dir, root=root)
+    n0, tot0 = _bm25_totals(spark, path)
     victim = 3
+    old_dl = (
+        read_doclens(spark, path).filter(F.col("doc_id") == victim).first().dl
+    )
     old_terms = {
         r.term
         for r in read_postings(spark, path)
@@ -738,19 +754,11 @@ def test_bm25_upsert_replaces_and_is_idempotent(spark, sf_dir, tmp_path_factory)
         .collect()
     }
     assert now == {("zzqx", 2), ("yyqk", 1)}  # stale postings purged
-    assert meta2["n_docs"] == meta["n_docs"]  # replace, not insert
-    # exact totals: re-derive independently from the logical lengths
-    from lol_data_pipeline_spark.operators.text_index import read_doclens
-
-    row = (
-        read_doclens(spark, path)
-        .agg(F.count("*").alias("n"), F.sum("dl").alias("tot"))
-        .collect()[0]
-    )
-    assert meta2["n_docs"] == row.n and meta2["total_tokens"] == row.tot
+    # replace, not insert: same doc count, the victim's length swapped
+    assert _bm25_totals(spark, path) == (n0, tot0 - old_dl + 3)
     meta3 = bm25_index_upsert(spark, path, meta2, batch)
-    assert meta3["n_docs"] == meta2["n_docs"]
-    assert meta3["total_tokens"] == meta2["total_tokens"]
+    assert meta3 == meta2 == meta  # the sidecar is the build's
+    assert _bm25_totals(spark, path) == (n0, tot0 - old_dl + 3)
     again = {
         (r.term, r.tf)
         for r in read_postings(spark, path)
@@ -761,9 +769,9 @@ def test_bm25_upsert_replaces_and_is_idempotent(spark, sf_dir, tmp_path_factory)
 
 
 def test_bm25_delete_drops_emptied_buckets(spark, sf_dir, tmp_path_factory):
-    """Deleting every document leaves no postings directories; the
-    sidecar totals go to zero; partial deletes keep other docs'
-    postings byte-identical."""
+    """A partial delete drops the doomed docs' postings and lengths
+    from the view (its doc count and token sum shrink by exactly
+    theirs) and keeps other docs' postings byte-identical."""
     from lol_data_pipeline_spark.operators.text_index import (
         bm25_index_delete,
         ensure_bm25_index,
@@ -773,6 +781,11 @@ def test_bm25_delete_drops_emptied_buckets(spark, sf_dir, tmp_path_factory):
 
     root = str(tmp_path_factory.mktemp("bm25_del"))
     path, meta = ensure_bm25_index(spark, sf_dir, root=root)
+    n0, tot0 = _bm25_totals(spark, path)
+    doomed_dl = sum(
+        r.dl
+        for r in read_doclens(spark, path).filter(F.col("doc_id") <= 1).collect()
+    )
     ids = spark.createDataFrame([(0,), (1,)], "doc_id long")
     before_other = sorted(
         map(
@@ -789,13 +802,27 @@ def test_bm25_delete_drops_emptied_buckets(spark, sf_dir, tmp_path_factory):
         map(tuple, left.filter(F.col("doc_id") > 1).collect())
     )
     assert after_other == before_other
-    assert meta2["n_docs"] == meta["n_docs"] - 2
-    row = (
-        read_doclens(spark, path)
-        .agg(F.sum("dl").alias("tot"))
-        .collect()[0]
+    assert meta2 == meta
+    assert _bm25_totals(spark, path) == (n0 - 2, tot0 - doomed_dl)
+
+
+def test_bm25_probe_over_fully_deleted_index_is_empty(spark, sf_dir, tmp_path):
+    """Deleting every document and then probing returns zero rows:
+    n_docs is 0 and avgdl NULL in the probe's own plan, and there is
+    no candidate to score."""
+    from lol_data_pipeline_spark.operators.text_index import (
+        bm25_index_delete,
+        ensure_bm25_index,
+        read_doclens,
+        served_bm25_topk,
     )
-    assert meta2["total_tokens"] == row.tot
+    from lol_data_pipeline_spark.plans.extensions import _BM25_TERMS
+
+    path, meta = ensure_bm25_index(spark, sf_dir, root=str(tmp_path))
+    assert served_bm25_topk(spark, path, meta, _BM25_TERMS).count() > 0
+    bm25_index_delete(spark, path, meta, read_doclens(spark, path).select("doc_id"))
+    assert read_doclens(spark, path).count() == 0
+    assert served_bm25_topk(spark, path, meta, _BM25_TERMS).collect() == []
 
 
 # ---------------------------------------------------------------------------
@@ -852,9 +879,9 @@ def test_prf_expansion_reprobes_with_new_literal_terms(spark, sf_dir):
 
 def test_stream_bm25_upsert_replay_is_idempotent(spark, sf_dir):
     """Replaying the whole four-epoch stream must leave identical
-    disk content and identical sidecar totals (exactly-once by
-    idempotence — the discipline the sink documents). The sidecar's
-    ``epochs`` listing is the log position, which a replay advances."""
+    view content and an identical sidecar (exactly-once by
+    idempotence — the discipline the sink documents; the sidecar is
+    the build's, which no epoch rewrites)."""
     import json
     import os
 
@@ -875,15 +902,14 @@ def test_stream_bm25_upsert_replay_is_idempotent(spark, sf_dir):
         meta2 = json.load(f)
     post2 = sorted(map(tuple, read_postings(spark, path).collect()))
     assert first == again
-    meta1.pop("epochs"), meta2.pop("epochs")
     assert meta1 == meta2
     assert post1 == post2
 
 
 def test_bm25_stats_crosschecks_sidecar_vs_disk(spark, sf_dir):
-    """The stats row must agree with itself: sidecar literals equal
-    the disk aggregates (the drift alarm the entry exists for), and
-    the doc buckets partition the corpus."""
+    """The stats row must agree with itself: the meta_* totals (what
+    a probe derives) equal the disk aggregates, and the doc buckets
+    partition the corpus."""
     from lol_data_pipeline_spark.plans import REGISTRY
 
     row = REGISTRY["bm25_index_stats"].fn(spark, sf_dir).collect()[0]

@@ -117,14 +117,16 @@ def test_substring_dedup_planted_span_survives_once(spark):
 
 
 def test_chunk_index_artifact_layout(spark, sf_dir, tmp_path):
-    """Hive layout by hash bucket, h-sorted content, sidecar counts
-    equal to disk truth, and ensure() reuse without rebuild."""
-    import json
+    """Hive layout by hash bucket, h-sorted content, disk and view
+    counts equal to a re-chunking of the indexed docs, and ensure()
+    reuse without rebuild."""
     import os
 
     from lol_data_pipeline_spark.operators.chunk_index import (
+        _batch_chunk_rows,
         chunks_path,
         ensure_chunk_index,
+        read_chunk_rows,
     )
 
     root = str(tmp_path)
@@ -136,8 +138,13 @@ def test_chunk_index_artifact_layout(spark, sf_dir, tmp_path):
     }
     assert dirs <= {f"hb={i}" for i in range(16)}
     disk = spark.read.parquet(chunks_path(path))
-    assert disk.count() == meta["n_chunks"]
-    assert disk.select("id").distinct().count() == meta["n_docs"]
+    want = _batch_chunk_rows(
+        spark.read.parquet(f"{sf_dir}/documents.parquet").filter("doc_id % 5 <> 0"), 8
+    )
+    view = read_chunk_rows(spark, path)
+    for rows in (disk, view):
+        assert rows.count() == want.count()
+        assert rows.select("id").distinct().count() == want.select("id").distinct().count()
     # only the standing side is indexed
     assert disk.filter("id % 5 = 0").count() == 0
     mtime = os.path.getmtime(os.path.join(path, "_chunk_meta.json"))
@@ -231,7 +238,7 @@ def test_hll_index_merge_idempotent(spark, sf_dir, tmp_path):
         for r in spark.read.parquet(regs_path(path)).collect()
     )
     assert snap1 == snap2
-    assert meta2["n_rows"] == meta["n_rows"]
+    assert meta2 == meta  # the sidecar is the build's
     # and merging a day's own events back is also a no-op
     meta3 = hll_index_upsert(spark, path, meta2, ev.select("user_id", "ts"))
     snap3 = sorted(

@@ -3,7 +3,8 @@ partitions must not survive delete/purge paths (dynamic partition
 overwrite only rewrites partitions PRESENT in the written frame),
 the MMR kernel must tolerate zero-norm vectors like the Spark plan
 it replaced (NULL cosine, ignored by max), and HLL retention must
-survive dropping every partition."""
+survive dropping every partition, and keep taking upserts and drops
+after it."""
 
 from __future__ import annotations
 
@@ -21,12 +22,12 @@ def test_chunk_delete_drops_emptied_buckets(spark, tmp_path):
     the emptied bucket directory (under the r14 LSM maintenance shape
     physical reclamation is the compact's job, not the delete's)."""
     from lol_data_pipeline_spark.operators.chunk_index import (
+        CHUNKS,
         build_chunk_index,
         chunk_index_delete,
         chunks_path,
         read_chunk_rows,
     )
-    from lol_data_pipeline_spark.operators.lsm import lsm_compact
 
     path = str(tmp_path / "chunk")
     os.makedirs(path, exist_ok=True)
@@ -49,9 +50,9 @@ def test_chunk_delete_drops_emptied_buckets(spark, tmp_path):
     meta = chunk_index_delete(spark, path, meta, doomed)
     post = read_chunk_rows(spark, path)
     assert post.filter("id = 1").count() == 0, "stale doomed rows in view"
-    assert meta["n_docs"] == 2
-    assert meta["n_chunks"] == post.count()
-    lsm_compact(spark, chunks_path(path), "id", ["hb"], sort_within=["h"])
+    assert post.select("id").distinct().count() == 2
+    assert post.count() == pre.filter("id <> 1").count()
+    CHUNKS.compact(spark, path)
     for hb in exclusive:
         assert not os.path.isdir(
             os.path.join(chunks_path(path), f"hb={hb}")
@@ -60,17 +61,17 @@ def test_chunk_delete_drops_emptied_buckets(spark, tmp_path):
 
 
 def test_chunk_delete_everything_zeroes_sidecar(spark, tmp_path):
-    """Deleting the entire standing set zeroes the sidecar and leaves
-    the table READABLE (no schema-inference crash): the base keeps
-    its parquet footers until the compact, and the post-compact empty
-    base is a schema-bearing file."""
+    """Deleting the entire standing set empties the view, leaves the
+    build's sidecar as it was, and leaves the table READABLE (no
+    schema-inference crash) before and after the compact drops every
+    bucket directory."""
     from lol_data_pipeline_spark.operators.chunk_index import (
+        CHUNKS,
         build_chunk_index,
         chunk_index_delete,
         chunks_path,
         read_chunk_rows,
     )
-    from lol_data_pipeline_spark.operators.lsm import lsm_compact
 
     path = str(tmp_path / "chunk_all")
     os.makedirs(path, exist_ok=True)
@@ -79,10 +80,10 @@ def test_chunk_delete_everything_zeroes_sidecar(spark, tmp_path):
         index_where="doc_id IN (1, 2)",
     )
     doomed = spark.createDataFrame([(1,), (2,)], "doc_id long")
-    meta = chunk_index_delete(spark, path, meta, doomed)
-    assert meta["n_docs"] == 0 and meta["n_chunks"] == 0
+    assert chunk_index_delete(spark, path, meta, doomed) == meta
+    assert read_chunk_rows(spark, path).select("id").distinct().count() == 0
     assert read_chunk_rows(spark, path).count() == 0
-    lsm_compact(spark, chunks_path(path), "id", ["hb"], sort_within=["h"])
+    CHUNKS.compact(spark, path)
     leftover = [
         d for d in os.listdir(chunks_path(path)) if d.startswith("hb=")
     ]
@@ -96,8 +97,8 @@ def test_minhash_delete_drops_emptied_bands(spark, tmp_path):
     standing set empties EVERY band partition: the view hits zero
     immediately, and the compact drops the directories —
     without crashing any later read."""
-    from lol_data_pipeline_spark.operators.lsm import lsm_compact
     from lol_data_pipeline_spark.operators.minhash_index import (
+        BUCKETS,
         build_minhash_index,
         buckets_path,
         minhash_index_delete,
@@ -119,9 +120,7 @@ def test_minhash_delete_drops_emptied_bands(spark, tmp_path):
     meta = minhash_index_delete(spark, path, meta, doomed)
     assert n_docs() == 0
     assert read_minhash_buckets(spark, path).count() == 0
-    lsm_compact(
-        spark, buckets_path(path), "id", ["band"], sort_within=["bkey"]
-    )
+    BUCKETS.compact(spark, path)
     leftover = [
         d for d in os.listdir(buckets_path(path)) if d.startswith("band=")
     ]
@@ -200,28 +199,41 @@ def test_mmr_kernel_two_zero_norms_order_and_null_propagation(spark):
     assert got == [20, 30, 40]
 
 
-def test_hll_retention_beyond_newest_day(spark, tmp_path):
+def test_hll_retention_beyond_newest_day(spark, sf_dir, tmp_path):
     """keep_from past the newest day drops every partition; the
-    sidecar must record n_days=n_rows=0 instead of crashing on the
-    emptied directory (r12 ADVICE low)."""
+    emptied table then reads as empty instead of crashing on schema
+    inference (r12 ADVICE low), and an upsert and a second full drop
+    after it both work."""
+    from lol_data_pipeline_spark.io import load_table
     from lol_data_pipeline_spark.operators.sketch_index import (
         build_hll_index,
         hll_index_retention_drop,
+        hll_index_upsert,
+        read_regs,
         regs_path,
     )
 
     path = str(tmp_path / "hll")
     os.makedirs(path, exist_ok=True)
-    meta = build_hll_index(spark, "/root/testdata/sf0.001", path)
-    assert meta["n_days"] > 0
-    meta = hll_index_retention_drop(
-        spark, path, meta, datetime.date(2100, 1, 1)
-    )
-    assert meta["n_days"] == 0 and meta["n_rows"] == 0
-    leftover = [
-        d for d in os.listdir(regs_path(path)) if d.startswith("day=")
-    ]
-    assert leftover == []
+    meta = build_hll_index(spark, sf_dir, path)
+
+    def n_days():
+        return read_regs(spark, path).select("day").distinct().count()
+
+    def day_dirs():
+        return [d for d in os.listdir(regs_path(path)) if d.startswith("day=")]
+
+    assert n_days() > 0
+    beyond = datetime.date(2100, 1, 1)
+    assert hll_index_retention_drop(spark, path, meta, beyond) == meta
+    assert day_dirs() == []
+    assert read_regs(spark, path).count() == 0
+    batch = load_table(spark, sf_dir, "events").filter(F.col("event_id") % 11 == 0)
+    assert hll_index_upsert(spark, path, meta, batch) == meta
+    assert n_days() == len(day_dirs()) > 0
+    hll_index_retention_drop(spark, path, meta, beyond)
+    assert day_dirs() == []
+    assert read_regs(spark, path).count() == 0
 
 
 def test_phash_planted_twin_caught_disjoint_missed(spark):

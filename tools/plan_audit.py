@@ -349,8 +349,8 @@ def has_unbounded_broadcast(logical_plan: str) -> bool:
 # Parquet schema inference launches a footer-read job per
 # spark.read.parquet call (~75 ms measured, r14) and the serve paths
 # re-read their artifacts on every probe, so every HOT read goes
-# through a declared-schema reader (lsm_view(schema=...),
-# read_index_codes, io.load_table's memo). This rule keeps that
+# through a declared-schema reader (lsm_view's DDL, read_index_codes,
+# sketch_index.read_regs, io.load_table's memo). This rule keeps that
 # structural: any NEW bare .read.parquet() in the engine package must
 # either get a declared schema or be added here with a reason.
 # Allowlist = "module:function" sites verified to be build-once /
@@ -361,13 +361,6 @@ BARE_READ_OK = {
     "io.py:table_schema",  # the schema MEMO's cold path — inference
     # runs once per (table, file generation), then every read declares
     "io.py:compact_parquet",  # maintenance rewrite, once per compact
-    "operators/lsm.py:lsm_view",  # the schema=None fallback branch;
-    # every Table passes its DDL, so only direct lsm_compact calls (the
-    # chunk_index_compact entry, tests) still infer
-    "operators/sketch_index.py:build_hll_index",  # build-once
-    "operators/sketch_index.py:hll_index_upsert",  # maintenance merge
-    # over the register partitions it rewrites (write-staging entry)
-    "operators/sketch_index.py:hll_index_retention_drop",  # maintenance
     "operators/vector_index.py:index_compact",  # maintenance: per-cell
     # counts over the index it is about to rewrite
     "sources/evolution.py:read_events_merged",  # schema-EVOLUTION scan:
@@ -379,8 +372,6 @@ BARE_READ_OK = {
     "plans/round12.py:ann_index_quota_trigger",  # maintenance stats
     "plans/round12.py:ann_index_rebuild_decision",  # maintenance stats
     "plans/round12.py:stream_chunk_probe_multibatch",  # sink readback
-    "plans/round12.py:sketch_hll_index_retention",  # maintenance: day
-    # bounds of the register table it rewrites
     "plans/round13.py:stream_ingest_gate_multibatch",  # sink readback
     "plans/round13.py:stream_phash_probe_multibatch",  # sink readback
     "streaming/windows.py:stage_ordered_batches",  # replay staging
@@ -389,29 +380,29 @@ BARE_READ_OK = {
 }
 
 
-def audit_bare_reads(pkg_root: str | None = None) -> list[str]:
-    """``module:function`` sites calling ``.read.parquet(...)`` (or
-    ``.read.format/load``) WITHOUT a ``.schema(...)`` in the reader
-    chain, excluding the audited allowlist. Empty list = clean."""
+def _calls(pkg_root: str | None = None):
+    """Yield ``("module:function", call)`` for every call in the engine
+    package, ``function`` being the innermost enclosing ``def``
+    (``<module>`` at top level)."""
     import ast
 
     pkg_root = pkg_root or os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "lol_data_pipeline_spark",
     )
-    hits: list[str] = []
     for dirpath, _dirs, files in os.walk(pkg_root):
         for fname in sorted(files):
             if not fname.endswith(".py"):
                 continue
             fpath = os.path.join(dirpath, fname)
             rel = os.path.relpath(fpath, pkg_root)
-            tree = ast.parse(open(fpath).read())
-            # map each node to its enclosing function name
-            func_of: dict[ast.AST, str] = {}
+            with open(fpath) as f:
+                tree = ast.parse(f.read())
 
             def walk(node, fn):
                 for child in ast.iter_child_nodes(node):
+                    if isinstance(child, ast.Call):
+                        yield f"{rel}:{fn}", child
                     nfn = (
                         child.name
                         if isinstance(
@@ -419,39 +410,64 @@ def audit_bare_reads(pkg_root: str | None = None) -> list[str]:
                         )
                         else fn
                     )
-                    func_of[child] = nfn
-                    walk(child, nfn)
+                    yield from walk(child, nfn)
 
-            walk(tree, "<module>")
-            for node in ast.walk(tree):
-                if not (
-                    isinstance(node, ast.Call)
-                    and isinstance(node.func, ast.Attribute)
-                    and node.func.attr == "parquet"
-                ):
-                    continue
-                # walk the attribute/call chain leftward looking for
-                # .read (a reader chain) and .schema(...) in between
-                chain, cur, has_schema, has_read = [], node.func.value, False, False
-                while True:
-                    if isinstance(cur, ast.Call) and isinstance(
-                        cur.func, ast.Attribute
-                    ):
-                        if cur.func.attr == "schema":
-                            has_schema = True
-                        chain.append(cur.func.attr)
-                        cur = cur.func.value
-                    elif isinstance(cur, ast.Attribute):
-                        if cur.attr == "read":
-                            has_read = True
-                        chain.append(cur.attr)
-                        cur = cur.value
-                    else:
-                        break
-                if has_read and not has_schema:
-                    site = f"{rel}:{func_of.get(node, '<module>')}"
-                    if site not in BARE_READ_OK:
-                        hits.append(site)
+            yield from walk(tree, "<module>")
+
+
+def audit_bare_reads(pkg_root: str | None = None) -> list[str]:
+    """``module:function`` sites calling ``.read.parquet(...)`` (or
+    ``.read.format/load``) WITHOUT a ``.schema(...)`` in the reader
+    chain, excluding the audited allowlist. Empty list = clean."""
+    import ast
+
+    hits: list[str] = []
+    for site, node in _calls(pkg_root):
+        if not (
+            isinstance(node.func, ast.Attribute) and node.func.attr == "parquet"
+        ):
+            continue
+        # walk the attribute/call chain leftward looking for .read (a
+        # reader chain) and .schema(...) in between
+        cur, has_schema, has_read = node.func.value, False, False
+        while True:
+            if isinstance(cur, ast.Call) and isinstance(cur.func, ast.Attribute):
+                if cur.func.attr == "schema":
+                    has_schema = True
+                cur = cur.func.value
+            elif isinstance(cur, ast.Attribute):
+                if cur.attr == "read":
+                    has_read = True
+                cur = cur.value
+            else:
+                break
+        if has_read and not has_schema and site not in BARE_READ_OK:
+            hits.append(site)
+    return sorted(set(hits))
+
+
+# --- source-level rule: a sidecar is written by its build alone ---
+# An artifact's JSON sidecar holds what its build decided (fingerprint,
+# params, trained values) and nothing a write changes: a count kept
+# there must be recounted after every upsert/delete, a full-view job
+# per write, and lags the tables when a writer dies between the two.
+# Reads derive counts from the view in their own plan instead. So
+# ``save_meta`` may only be called from a function named ``build`` or
+# ``build_*``, with no allowlist.
+
+
+def audit_sidecar_writes(pkg_root: str | None = None) -> list[str]:
+    """``module:function`` sites calling ``save_meta`` from a function
+    not named ``build`` or ``build_*``. Empty list = clean."""
+    import ast
+
+    hits = []
+    for site, node in _calls(pkg_root):
+        f = node.func
+        name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
+        fn = site.split(":", 1)[1]
+        if name == "save_meta" and not (fn == "build" or fn.startswith("build_")):
+            hits.append(site)
     return sorted(set(hits))
 
 
