@@ -176,6 +176,19 @@ def _minhash_agg_cols(k: int) -> list[Column]:
     ]
 
 
+def shingle_array_signatures(base: DataFrame, k: int) -> DataFrame:
+    """(id, h0..h{k-1}) MinHash signatures of a shingle-array frame
+    (id, sh_arr, ...) from :func:`_doc_shingle_arrays`: explode the
+    arrays, one md5 base hash per shingle, then the k affine-permutation
+    mins in one aggregate. The one derivation shared by the symmetric
+    pairs, the incremental probe and the persisted index's build,
+    upsert and served probe (operators/minhash_index.py)."""
+    sh = base.select("id", F.explode("sh_arr").alias("shingle")).withColumn(
+        "bh", F.pmod(md5_long(F.col("shingle")), F.lit(_MINHASH_P))
+    )
+    return sh.groupBy("id").agg(*_minhash_agg_cols(k))
+
+
 def minhash_signatures(
     docs: DataFrame, k: int = 16, n: int = 3, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -219,13 +232,10 @@ def minhash_lsh_pairs(
     # once. This is the scale play too — a production run persists
     # (or writes) the shingle/signature tables and reuses them.
     base = tracked_persist(_doc_shingle_arrays(docs, n, text_col, id_col))
-    sh = base.select("id", F.explode("sh_arr").alias("shingle")).withColumn(
-        "bh", F.pmod(md5_long(F.col("shingle")), F.lit(_MINHASH_P))
-    )
     # Materialize signatures too: the bucket self-join otherwise
     # re-evaluates the md5→aggregate pipeline on each side (exchange
     # reuse does not cross a broadcast conversion).
-    sigs = tracked_persist(sh.groupBy("id").agg(*_minhash_agg_cols(k)))
+    sigs = tracked_persist(shingle_array_signatures(base, k))
     buckets = minhash_band_buckets(sigs, k, bands)
     # Bucket self-join streams candidate pairs through the join
     # operator (mega-buckets distribute over tasks; AQE splits skewed
@@ -359,13 +369,8 @@ def minhash_lsh_probe(
     base = tracked_persist(
         _doc_shingle_arrays(docs, n, text_col, id_col, extra=flag_col)
     )
-    sh = base.select("id", F.explode("sh_arr").alias("shingle")).withColumn(
-        "bh", F.pmod(md5_long(F.col("shingle")), F.lit(_MINHASH_P))
-    )
     sigs = tracked_persist(
-        sh.groupBy("id").agg(*_minhash_agg_cols(k)).join(
-            base.select("id", flag), "id"
-        )
+        shingle_array_signatures(base, k).join(base.select("id", flag), "id")
     )
     buckets = minhash_band_buckets(sigs, k, bands, carry=[flag])
     new_side = buckets.filter(F.col(flag)).drop(flag)

@@ -5,25 +5,26 @@ then SERVE graph-walk queries from the persisted edges and MAINTAIN
 the artifact bucket-locally — the graph-family twin of
 operators/vector_index.py's IVF+PQ lifecycle.
 
-Round 10 proved the beam walk in-query (plans/round10.py
-ann_graph_beam_topk) but rebuilt the kNN graph per run — the same
-recompute-vs-serve gap the IVF family closed that round. This module
-closes it for the graph axis:
+The in-query beam walk (plans/round10.py ann_graph_beam_topk)
+rebuilds the kNN graph per run — the same recompute-vs-serve gap the
+IVF family closed. This module closes it for the graph axis:
 
 - BUILD (once, amortized): LSH-code the corpus (sign of the dot with
   the first ``n_planes`` corpus vectors — deterministic, and the
   literal plane vectors persist in the sidecar so maintenance never
   depends on the source still containing them), then the bucket
-  SELF-join top-k edge construction (Σ bucket², never N²) — the same
-  construction as operators/similarity.knn_graph, with the bucket
-  code KEPT as a column. Both tables are written hive-partitioned by
+  SELF-join top-k edge construction (Σ bucket², never N²) —
+  operators/similarity.bucket_edges, the one edge definition the
+  in-query similarity.knn_graph also runs, with the bucket code KEPT
+  as a column. Both tables are written hive-partitioned by
   ``code``: edges only ever form WITHIN a bucket, so the bucket is
   the graph's natural maintenance unit — any node change touches
   exactly one partition of each table.
-- SERVE (per query batch): the beam walk reads the persisted edge
-  table; the walk itself is the bounded-round broadcast-only kernel
-  round 10 proved (frontier = Q×B rows, lineage-truncated per round)
-  — the data-bound graph build is GONE from the query path.
+- SERVE (per query batch): :func:`served_beam_topk` scans the
+  persisted edge table and runs :func:`beam_walk`, the package's one
+  beam-round loop (frontier = Q×B rows, lineage-truncated per
+  round), which the in-query ann_graph_beam_topk runs too — the
+  data-bound graph build is GONE from the query path.
 - MAINTAIN (incremental): a new vector batch is coded against the
   FROZEN sidecar planes (pure projection). The NODES table — the big
   bytes, it holds the embeddings — takes a batch-bounded LSM write
@@ -67,7 +68,7 @@ from lol_data_pipeline_spark.io import (
     write_upsert_partitions,
 )
 from lol_data_pipeline_spark.operators import artifact, lsm
-from lol_data_pipeline_spark.operators.similarity import dot, with_norm
+from lol_data_pipeline_spark.operators.similarity import bucket_edges, cosine, dot
 
 
 def assign_codes(
@@ -97,48 +98,6 @@ def assign_codes(
         F.col(id_col).alias("vec_id"),
         x.alias("embedding"),
         code.alias("code"),
-    )
-
-
-def bucket_edges(nodes: DataFrame, k: int) -> DataFrame:
-    """Top-k cosine edges WITHIN each bucket of a (vec_id, embedding,
-    code) node set — the one edge-construction definition, used by
-    both the full build and bucket-local maintenance so they cannot
-    drift. Same pair math as similarity.knn_graph: norms materialized
-    once per row (bit-identical to cosine() — same fold order), pairs
-    form only inside a bucket (Σ bucket²), per-source top-k via a
-    keyed window."""
-    coded = with_norm(nodes, "embedding")
-    left = coded.select(
-        F.col("vec_id").alias("src_id"),
-        F.col("embedding").alias("svec"),
-        F.col("nrm").alias("snrm"),
-        "code",
-    )
-    right = coded.select(
-        F.col("vec_id").alias("dst_id"),
-        F.col("embedding").alias("dvec"),
-        F.col("nrm").alias("dnrm"),
-        F.col("code").alias("dcode"),
-    )
-    scored = left.join(
-        right,
-        (F.col("code") == F.col("dcode")) & (F.col("src_id") != F.col("dst_id")),
-    ).select(
-        "code",
-        "src_id",
-        "dst_id",
-        F.round(
-            dot(F.col("svec"), F.col("dvec")) / (F.col("snrm") * F.col("dnrm")), 6
-        ).alias("sim"),
-    )
-    w = Window.partitionBy("src_id").orderBy(
-        F.col("sim").desc(), F.col("dst_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("code", "src_id", "dst_id", "sim", "rank")
     )
 
 
@@ -328,48 +287,52 @@ def graph_delete(
     return affected
 
 
-def served_beam_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    queries: DataFrame,
-    k: int = 5,
-    beam: int = 8,
-    rounds: int = 3,
-    entry_n: int = 4,
-    index_root: str | None = None,
-    entries: DataFrame | None = None,
-) -> DataFrame:
-    """Serve graph-ANN top-k from the PERSISTED edge table: the
-    bounded beam walk of plans/round10.py's ann_graph_beam_topk with
-    the in-query graph build replaced by a scan of the at-rest
-    artifact — the walk is the ONLY per-query cost (frontier = Q×B
-    rows, broadcast joins, lineage-truncated rounds); the Σ bucket²
-    build is amortized into ensure_knn_graph_index. Output schema
-    and values are identical to the in-query entry, which is why the
-    served entry shares its oracle verbatim."""
-    from lol_data_pipeline_spark.caching import tracked_persist, truncate_lineage
-    from lol_data_pipeline_spark.operators.similarity import cosine
+def entry_frontier(emb: DataFrame, queries: DataFrame, entry_n: int) -> DataFrame:
+    """The default beam seed (query_id, cand): every query crossed
+    with the ``entry_n`` lowest corpus ids — deterministic entry
+    nodes, Q×entry_n rows."""
+    return queries.select(F.col("vec_id").alias("query_id")).crossJoin(
+        emb.filter(F.col("vec_id") < entry_n).select(F.col("vec_id").alias("cand"))
+    )
 
-    path, _meta = ensure_knn_graph_index(spark, sf_dir, root=index_root)
-    edges = tracked_persist(read_edges(spark, path).select("src_id", "dst_id"))
-    emb = load_table(spark, sf_dir, "embeddings")
+
+def beam_walk(
+    edges: DataFrame,
+    emb: DataFrame,
+    queries: DataFrame,
+    frontier: DataFrame,
+    k: int,
+    beam: int,
+    rounds: int,
+) -> DataFrame:
+    """The graph-ANN beam walk, (query_id, match_id, sim, rank): from
+    the seed ``frontier`` (query_id, cand), ``rounds`` times expand
+    frontier ∪ graph-neighbours(frontier) over ``edges`` (src_id,
+    dst_id), score every candidate by exact cosine against its query
+    (``queries`` and ``emb`` are (vec_id, embedding) frames) and keep
+    the top-``beam`` per query; the top-``k`` of the last scored set
+    is the answer. The one beam-round loop of the package: the
+    served walk (:func:`served_beam_topk`) runs it over the persisted
+    edge table, ``ann_graph_beam_topk`` over its in-query kNN graph.
+
+    Plan shape per round: the frontier is Q×beam rows, broadcast on
+    the score join (the corpus is filter-joined by broadcast candidate
+    ids, never shuffled). The frontier is read twice by the next round
+    (union left + edge-join right), so its lineage is cut per round to
+    keep the plan constant-size instead of doubling per round."""
+    from lol_data_pipeline_spark.caching import tracked_persist, truncate_lineage
+
+    edges = tracked_persist(edges.select("src_id", "dst_id"))
     q = queries.select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
     corpus = emb.select(
         F.col("vec_id").alias("cand"), F.col("embedding").alias("cvec")
     )
-    if entries is not None:
-        # PER-QUERY entry points (query_id, cand) — e.g. routed by
-        # another index (the IVF-routes/graph-walks hybrid). Bounded
-        # by the caller's contract, like the query set itself.
-        frontier = entries.select("query_id", "cand")
-    else:
-        frontier = q.select("query_id").crossJoin(
-            emb.filter(F.col("vec_id") < entry_n).select(
-                F.col("vec_id").alias("cand")
-            )
-        )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("sim").desc(), F.col("cand").asc()
+    )
+    frontier = frontier.select("query_id", "cand")
     scored = None
     for _r in range(rounds):
         expanded = frontier.unionByName(
@@ -387,19 +350,44 @@ def served_beam_topk(
                 F.round(cosine(F.col("qvec"), F.col("cvec")), 6).alias("sim"),
             )
         )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("sim").desc(), F.col("cand").asc()
-        )
         frontier = truncate_lineage(
             scored.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") <= beam)
             .select("query_id", "cand")
         )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("cand").asc()
-    )
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)
         .select("query_id", F.col("cand").alias("match_id"), "sim", "rank")
+    )
+
+
+def served_beam_topk(
+    spark: SparkSession,
+    sf_dir: str,
+    queries: DataFrame,
+    k: int = 5,
+    beam: int = 8,
+    rounds: int = 3,
+    entry_n: int = 4,
+    index_root: str | None = None,
+    entries: DataFrame | None = None,
+) -> DataFrame:
+    """Serve graph-ANN top-k from the PERSISTED edge table: ensure
+    the index, scan its edges, seed the frontier and run
+    :func:`beam_walk` — the walk is the ONLY per-query cost, the
+    Σ bucket² build is amortized into ensure_knn_graph_index. The
+    seed is ``entries`` (query_id, cand) when given — PER-QUERY entry
+    points, e.g. routed by another index (the IVF-routes/graph-walks
+    hybrid), bounded by the caller's contract like the query set —
+    and otherwise :func:`entry_frontier`'s ``entry_n`` lowest ids.
+    Output schema and values are identical to the in-query
+    ann_graph_beam_topk (same kernel, equal edges), which is why the
+    served entry shares its oracle."""
+    path, _meta = ensure_knn_graph_index(spark, sf_dir, root=index_root)
+    emb = load_table(spark, sf_dir, "embeddings")
+    if entries is None:
+        entries = entry_frontier(emb, queries, entry_n)
+    return beam_walk(
+        read_edges(spark, path), emb, queries, entries, k, beam, rounds
     )

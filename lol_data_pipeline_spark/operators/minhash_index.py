@@ -50,10 +50,9 @@ from lol_data_pipeline_spark.operators.dedup import (
     _affine_params,
     _doc_shingle_arrays,
     _jaccard_verify,
-    _minhash_agg_cols,
     _MINHASH_P,
-    md5_long,
     minhash_band_buckets,
+    shingle_array_signatures,
 )
 
 BUCKETS = lsm.Table(
@@ -75,11 +74,7 @@ def _batch_buckets(docs: DataFrame, k: int, bands: int, n: int) -> DataFrame:
     shingle pass, one signature aggregate, one explode (the shared
     build/probe/maintain derivation, so the three cannot drift)."""
     base = _doc_shingle_arrays(docs, n, "text", "doc_id")
-    sh = base.select("id", F.explode("sh_arr").alias("shingle")).withColumn(
-        "bh", F.pmod(md5_long(F.col("shingle")), F.lit(_MINHASH_P))
-    )
-    sigs = sh.groupBy("id").agg(*_minhash_agg_cols(k))
-    return minhash_band_buckets(sigs, k, bands)
+    return minhash_band_buckets(shingle_array_signatures(base, k), k, bands)
 
 
 def build_minhash_index(
@@ -149,10 +144,7 @@ def served_minhash_probe(
     base_new = tracked_persist(
         _doc_shingle_arrays(batch_docs, n, "text", "doc_id")
     )
-    sh = base_new.select("id", F.explode("sh_arr").alias("shingle")).withColumn(
-        "bh", F.pmod(md5_long(F.col("shingle")), F.lit(_MINHASH_P))
-    )
-    sigs = sh.groupBy("id").agg(*_minhash_agg_cols(k))
+    sigs = shingle_array_signatures(base_new, k)
     new_buckets = minhash_band_buckets(sigs, k, bands).alias("a")
     idx = read_minhash_buckets(spark, path).alias("b")
     cand = tracked_persist(

@@ -311,67 +311,78 @@ def lsh_topk(
     )
 
 
-def knn_graph(
-    corpus: DataFrame,
-    n_planes: int = 6,
-    k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """k-NN graph over the whole corpus: every vector's top-k
-    neighbours among vectors sharing its LSH code.
-
-    The graph-construction twin of :func:`lsh_topk` — there the
-    query set is small and broadcasts; here EVERY node is a query,
-    so the candidate generation must be a bucket SELF-JOIN: vectors
-    are shuffled once by their ``n_planes``-bit hyperplane code and
-    pairs form only within a bucket (Σ bucket² work, never N²).
-    Edges rank per-source with a keyed window (partitioned by
-    ``src_id`` — never a global sort).
-
-    Scale: one shuffle by code for the self-join, one by src for the
-    top-k window. Bucket skew is the same lever as the dedup family:
-    more planes → smaller buckets (recall drops; production would
-    OR several band codes). The k-NN graph is the input to
-    graph-based near-dup clustering (`dedup_components`) and to
-    k-NN-graph ANN indexes built offline.
-    """
-    from lol_data_pipeline_spark.caching import tracked_persist
-
-    wc = widen(corpus)
-    # Persist the coded corpus WITH its precomputed L2 norm: it feeds
-    # BOTH sides of the self-join (without the persist the
-    # plane-assignment cross join + groupBy runs twice), and the
-    # materialized norm moves the two O(dim) norm folds from every
-    # one of the Σ bucket² pairs to once per row (with_norm keeps the
-    # result bit-identical to cosine() — same op order).
-    coded = tracked_persist(
-        with_norm(wc.join(_lsh_codes(wc, n_planes, id_col, vec_col), id_col), vec_col)
-    )
+def bucket_edges(nodes: DataFrame, k: int) -> DataFrame:
+    """(code, src_id, dst_id, sim, rank): top-k cosine edges WITHIN
+    each bucket of a (vec_id, embedding, code) node set — the one
+    kNN edge construction, shared by :func:`knn_graph` and the
+    persisted graph index's build and bucket-local maintenance
+    (operators/graph_index.py), so they cannot drift. Norms are
+    materialized once per row (bit-identical to cosine() — same fold
+    order), pairs form only inside a bucket (Σ bucket², never N²),
+    and edges rank per source with a keyed window (never a global
+    sort)."""
+    coded = with_norm(nodes, "embedding")
     left = coded.select(
-        F.col(id_col).alias("src_id"), F.col(vec_col).alias("svec"),
-        F.col("nrm").alias("snrm"), "code"
+        F.col("vec_id").alias("src_id"),
+        F.col("embedding").alias("svec"),
+        F.col("nrm").alias("snrm"),
+        "code",
     )
     right = coded.select(
-        F.col(id_col).alias("dst_id"), F.col(vec_col).alias("dvec"),
-        F.col("nrm").alias("dnrm"), F.col("code").alias("dcode")
+        F.col("vec_id").alias("dst_id"),
+        F.col("embedding").alias("dvec"),
+        F.col("nrm").alias("dnrm"),
+        F.col("code").alias("dcode"),
     )
     scored = left.join(
         right,
         (F.col("code") == F.col("dcode")) & (F.col("src_id") != F.col("dst_id")),
     ).select(
+        "code",
         "src_id",
         "dst_id",
         F.round(
             dot(F.col("svec"), F.col("dvec")) / (F.col("snrm") * F.col("dnrm")), 6
         ).alias("sim"),
     )
-    w = Window.partitionBy("src_id").orderBy(F.col("sim").desc(), F.col("dst_id").asc())
+    w = Window.partitionBy("src_id").orderBy(
+        F.col("sim").desc(), F.col("dst_id").asc()
+    )
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)
-        .select("src_id", "dst_id", "sim", "rank")
+        .select("code", "src_id", "dst_id", "sim", "rank")
     )
+
+
+def knn_graph(corpus: DataFrame, n_planes: int = 6, k: int = 3) -> DataFrame:
+    """k-NN graph over a (vec_id, embedding) corpus: every vector's
+    top-k neighbours among vectors sharing its ``n_planes``-bit LSH
+    code, as (src_id, dst_id, sim, rank).
+
+    The graph-construction twin of :func:`lsh_topk` — there the
+    query set is small and broadcasts; here EVERY node is a query,
+    so candidates come from a bucket SELF-join. The corpus is coded
+    (:func:`_lsh_codes`), persisted — it feeds both sides of the
+    self-join, and without the persist the plane cross join + groupBy
+    would run twice — and handed to :func:`bucket_edges`; the bucket
+    code is dropped from the result.
+
+    Scale: one shuffle by code for the self-join, one by src for the
+    top-k window. Bucket skew is the same lever as the dedup family:
+    more planes → smaller buckets (recall drops; production would
+    OR several band codes). The graph feeds the in-query beam walk
+    (`ann_graph_beam_topk`); the persisted graph index builds the
+    same edges through :func:`bucket_edges` against frozen planes.
+    """
+    from lol_data_pipeline_spark.caching import tracked_persist
+
+    wc = widen(corpus)
+    codes = _lsh_codes(wc, n_planes, "vec_id", "embedding")
+    coded = tracked_persist(
+        wc.join(codes, "vec_id").select("vec_id", "embedding", "code")
+    )
+    return bucket_edges(coded, k).drop("code")
 
 
 def cosine_topk_arrow(

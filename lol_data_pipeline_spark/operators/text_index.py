@@ -157,11 +157,12 @@ def served_bm25_topk(
 ) -> DataFrame:
     """Serve BM25 top-k from the PERSISTED index: the postings scan
     is pruned to the query terms' buckets (literal partition filters)
-    with the term equality pushed into the scan; per-term df comes
-    from the same pruned rows (≤ |terms| values collected); the
-    corpus scalars n_docs and avgdl are scalar subqueries over the
-    doclens view, so they are exact for the view being probed and
-    their doubles equal the recomputing operator's aggregates. Output
+    with the term equality pushed into the scan; per-term df is a
+    scalar subquery over the same pruned rows, and the corpus
+    scalars n_docs and avgdl are scalar subqueries over the doclens
+    view, so building the probe starts no Spark job, the scalars are
+    exact for the view being probed and their doubles equal the
+    recomputing operator's aggregates. Output
     (doc_id, score, n_terms_hit, rank) is identical to
     operators/search.bm25_topk — the served entry shares its oracle
     verbatim. A fully deleted index returns zero rows."""
@@ -174,7 +175,6 @@ def served_bm25_topk(
         .filter(F.col("term").isin(list(terms)))
         .select("doc_id", "term", "tf")
     )
-    dfs = {r.term: int(r.n) for r in post.groupBy("term").agg(F.count("*").alias("n")).collect()}
     # pivot the ≤|terms| postings per doc into dense tf{i} columns —
     # the same shape bm25_topk scores (shared bm25_weight_sql text)
     cand = post.groupBy("doc_id").agg(
@@ -186,18 +186,25 @@ def served_bm25_topk(
         ]
     )
     lens = read_doclens(spark, path).select("doc_id", "dl")
-    # corpus scalars: one-row aggregates over the view being probed,
-    # which Catalyst merges into one scalar subquery (NULL avgdl and no
-    # candidate when every doc is deleted)
+    # corpus scalars and per-term df: one-row aggregates over the view
+    # being probed and over the pruned postings, attached as scalar
+    # subqueries (NULL avgdl and no candidate when every doc is
+    # deleted; df 0 for a term with no postings)
     n_docs = lens.select(F.count("*").cast("double")).scalar()
     avgdl = lens.select(F.avg("dl")).scalar()
+    dfs = [
+        post.select(
+            F.count(F.when(F.col("term") == t, 1)).cast("double")
+        ).scalar()
+        for t in terms
+    ]
     joined = lens.join(F.broadcast(cand), "doc_id").select(
         F.col("doc_id").alias("id"),
         F.col("dl").cast("double").alias("dl"),
         *[F.col(f"tf{i}") for i in range(nt)],
         n_docs.alias("n_docs"),
         avgdl.alias("avgdl"),
-        *[F.lit(float(dfs.get(t, 0))).alias(f"df{i}") for i, t in enumerate(terms)],
+        *[df.alias(f"df{i}") for i, df in enumerate(dfs)],
     )
     score_expr = " + ".join(bm25_weight_sql(i, k1, b) for i in range(nt))
     hits_expr = " + ".join(

@@ -319,6 +319,9 @@ def dedup_simhash(spark, sf_dir):
 # ann_* — similarity search over embeddings
 # =========================================================================
 
+# The corpus as DOUBLE[] vectors — the `e` CTE the vector oracles read.
+E_CTE = "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS x FROM embeddings)"
+
 SQL_COS = (
     "round(list_inner_product(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[])) / "
     "(sqrt(list_inner_product(CAST({a} AS DOUBLE[]), CAST({a} AS DOUBLE[]))) * "
@@ -899,7 +902,7 @@ def kmeans_ctes(
     )
     seed_src = "es" if train_where else "e"
     ctes = [
-        "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS x FROM embeddings)",
+        E_CTE,
     ]
     if train_where:
         ctes.append(f"es AS (SELECT * FROM e WHERE {train_where})")
@@ -1682,35 +1685,66 @@ def dedup_substring(spark, sf_dir):
 # =========================================================================
 
 
-# The LSH-bucketed k-NN edge derivation (planes → codes → bucket
-# self-join → per-source rank), shared VERBATIM by the emb_knn_graph
-# oracle and the graph-beam-search oracle (plans/round10.py) so the
-# two cannot drift — `ranked WHERE rank <= 3` IS the edge list.
-KNN_EDGE_CTES = f"""planes AS (SELECT vec_id AS plane_id, embedding AS pvec FROM embeddings WHERE vec_id < 6),
-    codes AS (
-      SELECT e.vec_id,
-             CAST(sum(CASE WHEN round(list_inner_product(CAST(e.embedding AS DOUBLE[]), CAST(p.pvec AS DOUBLE[])), 6) >= 0
+# The kNN graph's fixed shape (LSH planes, edges per source), shared by
+# every graph-family entry and oracle.
+_GRAPH_PLANES = 6
+_GRAPH_K = 3
+
+
+def knn_codes_sql(src: str) -> str:
+    """SELECT of (vec_id, code) over a (vec_id, x DOUBLE[]) CTE
+    ``src``: bit j = rounded sign of the dot with plane j."""
+    return f"""SELECT a.vec_id,
+             CAST(sum(CASE WHEN round(list_inner_product(a.x, p.pvec), 6) >= 0
                       THEN CAST(power(2, p.plane_id) AS BIGINT) ELSE 0 END) AS BIGINT) AS code
-      FROM embeddings e CROSS JOIN planes p GROUP BY 1
-    ),
-    scored AS (
-      SELECT a.vec_id AS src_id, b.vec_id AS dst_id,
-             {SQL_COS.format(a='ea.embedding', b='eb.embedding')} AS sim
-      FROM codes a JOIN codes b ON a.code = b.code AND a.vec_id <> b.vec_id
-      JOIN embeddings ea ON ea.vec_id = a.vec_id
-      JOIN embeddings eb ON eb.vec_id = b.vec_id
-    ), ranked AS (
-      SELECT src_id, dst_id, sim,
+      FROM {src} a CROSS JOIN planes p GROUP BY 1"""
+
+
+def knn_edge_ctes(
+    src: str, affected: str = "SELECT DISTINCT code FROM gcodes"
+) -> list[str]:
+    """The kNN edge-construction oracle chain over a (vec_id, x
+    DOUBLE[]) CTE ``src`` — the DuckDB twin of
+    operators/similarity.bucket_edges. ``planes`` are the first
+    ``_GRAPH_PLANES`` ORIGINAL corpus vectors (always from ``e``: maintenance codes
+    new batches against frozen planes, so the planes never come from
+    a widened set); ``gcodes`` are the rounded-sign bucket codes;
+    ``gaffected`` (the SELECT ``affected``, default every bucket)
+    restricts ``gscored``, the within-bucket cosine pairs; ``granked``
+    ranks them per source, so ``granked WHERE rank <= _GRAPH_K`` IS
+    the edge list. The caller defines ``e`` (:data:`E_CTE`) and
+    ``src``."""
+    cos = (
+        "round(list_inner_product(va.x, vb.x) / "
+        "(sqrt(list_inner_product(va.x, va.x)) * "
+        "sqrt(list_inner_product(vb.x, vb.x))), 6)"
+    )
+    return [
+        f"planes AS (SELECT vec_id AS plane_id, x AS pvec FROM e WHERE vec_id < {_GRAPH_PLANES})",
+        f"gcodes AS (\n      {knn_codes_sql(src)}\n    )",
+        f"gaffected AS ({affected})",
+        f"""gscored AS (
+      SELECT a.code, a.vec_id AS src_id, b.vec_id AS dst_id, {cos} AS sim
+      FROM gcodes a
+      JOIN gaffected f ON a.code = f.code
+      JOIN gcodes b ON b.code = a.code AND b.vec_id <> a.vec_id
+      JOIN {src} va ON va.vec_id = a.vec_id
+      JOIN {src} vb ON vb.vec_id = b.vec_id
+    )""",
+        """granked AS (
+      SELECT code, src_id, dst_id, sim,
              CAST(row_number() OVER (PARTITION BY src_id ORDER BY sim DESC, dst_id) AS BIGINT) AS rank
-      FROM scored
-    )"""
+      FROM gscored
+    )""",
+    ]
 
 
 @query(
     "emb_knn_graph",
-    sql=f"""
-    WITH {KNN_EDGE_CTES}
-    SELECT * FROM ranked WHERE rank <= 3
+    sql="WITH "
+    + ",\n".join([E_CTE] + knn_edge_ctes("e"))
+    + f"""
+    SELECT src_id, dst_id, sim, rank FROM granked WHERE rank <= {_GRAPH_K}
     """,
 )
 def emb_knn_graph(spark, sf_dir):
@@ -1723,7 +1757,7 @@ def emb_knn_graph(spark, sf_dir):
     input to graph-based dedup clustering and offline k-NN-graph ANN
     indexes."""
     emb = T(spark, sf_dir, "embeddings")
-    return sim.knn_graph(emb, n_planes=6, k=3)
+    return sim.knn_graph(emb, n_planes=_GRAPH_PLANES, k=_GRAPH_K)
 
 
 # =========================================================================

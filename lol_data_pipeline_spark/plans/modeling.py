@@ -874,16 +874,13 @@ _LP_ROUNDS = 2
 
 
 def _sql_label_prop() -> str:
-    from lol_data_pipeline_spark.plans.round11 import (
+    from lol_data_pipeline_spark.plans.extensions import (
         _GRAPH_K,
-        _knn_edge_ctes_over,
+        E_CTE,
+        knn_edge_ctes,
     )
 
-    edge_ctes = _knn_edge_ctes_over("e")
-    gaff = "gaffected AS (SELECT DISTINCT code FROM gcodes)"
-    ctes = [
-        "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS x FROM embeddings)"
-    ] + edge_ctes[:2] + [gaff] + edge_ctes[2:]
+    ctes = [E_CTE] + knn_edge_ctes("e")
     ctes.append(
         f"gedges AS (SELECT src_id, dst_id FROM granked WHERE rank <= {_GRAPH_K})"
     )

@@ -544,55 +544,69 @@ _BEAM_R = 3  # expansion rounds (bounded — graph diameter at toy scale)
 _BEAM_ENTRY_N = 4  # deterministic entry points: the lowest vec_ids
 
 
-def _sql_graph_beam() -> str:
-    from lol_data_pipeline_spark.plans.extensions import KNN_EDGE_CTES, SQL_COS
+_BEAM_QUERIES = (
+    f"(vec_id >= {_KMQ_LO} AND vec_id < {_KMQ_HI})"
+    f" OR (vec_id >= {_KMQ_TAIL_LO} AND vec_id < {_KMQ_TAIL_HI})"
+)
 
+
+def beam_ctes(queries: str, k: int, entries: str | None = None) -> list[str]:
+    """The beam-walk oracle chain — the DuckDB twin of
+    operators/graph_index.beam_walk — over the kNN edge chain
+    (extensions.knn_edge_ctes over ``e``): ``gedges``; ``bqset``, the
+    ``e`` rows matching the predicate ``queries``; ``bf0``, the seed
+    (the SELECT ``entries`` of (query_id, cand), default every query
+    × the ``_BEAM_ENTRY_N`` lowest ids); per round r the expansion
+    ``bx{r}``, its cosine scores ``bs{r}`` and the top-``_BEAM_B``
+    frontier ``bf{r}``; and ``btop`` (query_id, match_id, sim, rank),
+    the top-``k`` of the last round."""
+    from lol_data_pipeline_spark.plans.extensions import _GRAPH_K, SQL_COS
+
+    seed = entries or f"""
+      SELECT q.query_id, n.vec_id AS cand
+      FROM bqset q CROSS JOIN (SELECT vec_id FROM e WHERE vec_id < {_BEAM_ENTRY_N}) n
+    """
     ctes = [
-        KNN_EDGE_CTES,
-        "edges AS (SELECT src_id, dst_id FROM ranked WHERE rank <= 3)",
-        f"""qset AS (
-      SELECT vec_id AS query_id, embedding AS qvec FROM embeddings
-      WHERE (vec_id >= {_KMQ_LO} AND vec_id < {_KMQ_HI})
-         OR (vec_id >= {_KMQ_TAIL_LO} AND vec_id < {_KMQ_TAIL_HI})
-    )""",
-        f"""f0 AS (
-      SELECT q.query_id, e.vec_id AS cand
-      FROM qset q CROSS JOIN (SELECT vec_id FROM embeddings WHERE vec_id < {_BEAM_ENTRY_N}) e
-    )""",
+        f"gedges AS (SELECT src_id, dst_id FROM granked WHERE rank <= {_GRAPH_K})",
+        f"bqset AS (SELECT vec_id AS query_id, x AS qvec FROM e WHERE {queries})",
+        f"bf0 AS ({seed})",
     ]
     for r in range(1, _BEAM_R + 1):
-        ctes.append(f"""x{r} AS (
-      SELECT query_id, cand FROM f{r - 1}
+        ctes.append(f"""bx{r} AS (
+      SELECT query_id, cand FROM bf{r - 1}
       UNION
       SELECT f.query_id, ed.dst_id AS cand
-      FROM f{r - 1} f JOIN edges ed ON ed.src_id = f.cand
+      FROM bf{r - 1} f JOIN gedges ed ON ed.src_id = f.cand
     )""")
-        ctes.append(f"""s{r} AS (
-      SELECT x.query_id, x.cand,
-             {SQL_COS.format(a='q.qvec', b='c.embedding')} AS sim
-      FROM x{r} x
-      JOIN qset q ON q.query_id = x.query_id
-      JOIN embeddings c ON c.vec_id = x.cand
-      WHERE x.cand <> x.query_id
+        ctes.append(f"""bs{r} AS (
+      SELECT x2.query_id, x2.cand,
+             {SQL_COS.format(a='q.qvec', b='c.x')} AS sim
+      FROM bx{r} x2
+      JOIN bqset q ON q.query_id = x2.query_id
+      JOIN e c ON c.vec_id = x2.cand
+      WHERE x2.cand <> x2.query_id
     )""")
-        ctes.append(f"""f{r} AS (
+        ctes.append(f"""bf{r} AS (
       SELECT query_id, cand FROM (
         SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, cand) AS rn
-        FROM s{r}
+        FROM bs{r}
       ) WHERE rn <= {_BEAM_B}
     )""")
-    return (
-        "WITH "
-        + ",\n    ".join(ctes)
-        + f"""
-    SELECT query_id, CAST(cand AS BIGINT) AS match_id, sim, rank
-    FROM (
-      SELECT query_id, cand, sim,
-             CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, cand) AS BIGINT) AS rank
-      FROM s{_BEAM_R}
-    ) WHERE rank <= {_K}
-    """
-    )
+    ctes.append(f"""btop AS (
+      SELECT query_id, CAST(cand AS BIGINT) AS match_id, sim, rank FROM (
+        SELECT query_id, cand, sim,
+               CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, cand) AS BIGINT) AS rank
+        FROM bs{_BEAM_R}
+      ) WHERE rank <= {k}
+    )""")
+    return ctes
+
+
+def _sql_graph_beam() -> str:
+    from lol_data_pipeline_spark.plans.extensions import E_CTE, knn_edge_ctes
+
+    ctes = [E_CTE] + knn_edge_ctes("e") + beam_ctes(_BEAM_QUERIES, _K)
+    return "WITH " + ",\n".join(ctes) + "\n    SELECT * FROM btop\n    "
 
 
 @query("ann_graph_beam_topk", sql=_sql_graph_beam())
@@ -600,78 +614,40 @@ def ann_graph_beam_topk(spark, sf_dir):
     """GRAPH-based ANN: beam search over the k-NN graph — the third
     index-family axis (quantization = ann_ivfpq_*, hashing =
     ann_lsh_*, graph = this), the serving pattern HNSW/NSG-style
-    indexes use, as bounded-round DataFrame algebra. From {n}
-    deterministic entry nodes, {r} expansion rounds: frontier ∪
-    graph-neighbors(frontier) → exact cosine score → keep the top-{b}
-    beam per query; final top-k from the last scored set. The graph
-    is the emb_knn_graph edge list (LSH-bucketed top-3 neighbors,
-    Σ bucket² build — at 100 TB it is an AT-REST artifact built
-    once, like the IVF index).
+    indexes use, as bounded-round DataFrame algebra. The graph is
+    built in-query by similarity.knn_graph (LSH-bucketed top-3
+    neighbours, Σ bucket² — the emb_knn_graph edge list) and walked
+    by operators/graph_index.beam_walk, the same kernel the served
+    entries run over the persisted edges: from {n} deterministic
+    entry nodes, {r} rounds of frontier ∪ graph-neighbours(frontier)
+    → exact cosine → top-{b} beam per query; the final top-k comes
+    from the last scored set. At 100 TB the graph is an AT-REST
+    artifact built once (ann_graph_beam_served_topk).
 
-    Plan shape per round: the frontier is Q×{b} rows (BROADCAST on
-    both the edge join and the score join — the corpus and the edge
-    table are filter-joined by broadcast candidate ids, never
-    shuffled); rounds are a bounded driver loop over lazy plans with
-    NO collect. Oracle: the edge CTEs shared VERBATIM with
-    emb_knn_graph, then the identical rounds unrolled. Bounded
-    everything: entries, beam, rounds, k — constant work per query
-    at any corpus size once the graph exists."""
-    from lol_data_pipeline_spark.caching import tracked_persist, truncate_lineage
-    from lol_data_pipeline_spark.operators.similarity import cosine, knn_graph
+    Bounded everything: entries, beam, rounds, k — constant work per
+    query at any corpus size once the graph exists. Oracle: the kNN
+    edge chain (extensions.knn_edge_ctes, shared with emb_knn_graph)
+    and the beam rounds (beam_ctes, shared with every beam oracle)."""
+    from lol_data_pipeline_spark.operators.graph_index import (
+        beam_walk,
+        entry_frontier,
+    )
+    from lol_data_pipeline_spark.operators.similarity import knn_graph
+    from lol_data_pipeline_spark.plans.extensions import _GRAPH_K, _GRAPH_PLANES
 
     emb = T(spark, sf_dir, "embeddings")
-    edges = tracked_persist(
-        knn_graph(emb, n_planes=6, k=3).select("src_id", "dst_id")
-    )
     q = emb.filter(
         (F.col("vec_id").between(_KMQ_LO, _KMQ_HI - 1))
         | (F.col("vec_id").between(_KMQ_TAIL_LO, _KMQ_TAIL_HI - 1))
-    ).select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"))
-    corpus = emb.select(
-        F.col("vec_id").alias("cand"), F.col("embedding").alias("cvec")
     )
-    frontier = q.select("query_id").crossJoin(
-        emb.filter(F.col("vec_id") < _BEAM_ENTRY_N).select(
-            F.col("vec_id").alias("cand")
-        )
-    )
-    scored = None
-    for _r in range(_BEAM_R):
-        expanded = frontier.unionByName(
-            frontier.join(edges, frontier.cand == edges.src_id).select(
-                "query_id", F.col("dst_id").alias("cand")
-            )
-        ).distinct()
-        scored = (
-            corpus.join(F.broadcast(expanded), "cand")
-            .join(F.broadcast(q), "query_id")
-            .filter(F.col("cand") != F.col("query_id"))
-            .select(
-                "query_id",
-                "cand",
-                F.round(cosine(F.col("qvec"), F.col("cvec")), 6).alias("sim"),
-            )
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("sim").desc(), F.col("cand").asc()
-        )
-        # the frontier is referenced twice next round (union left +
-        # edge-join right) — cut its lineage per round (Q×B rows) so
-        # the plan stays constant-size instead of doubling per round.
-        frontier = truncate_lineage(
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= _BEAM_B)
-            .select("query_id", "cand")
-        )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("cand").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= _K)
-        .select(
-            "query_id", F.col("cand").alias("match_id"), "sim", "rank"
-        )
+    return beam_walk(
+        knn_graph(emb, n_planes=_GRAPH_PLANES, k=_GRAPH_K),
+        emb,
+        q,
+        entry_frontier(emb, q, _BEAM_ENTRY_N),
+        _K,
+        _BEAM_B,
+        _BEAM_R,
     )
 
 

@@ -54,6 +54,13 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from lol_data_pipeline_spark.plans.extensions import (
+    _GRAPH_K,
+    _GRAPH_PLANES,
+    E_CTE,
+    knn_codes_sql,
+    knn_edge_ctes,
+)
 from lol_data_pipeline_spark.plans.queries import T, query
 from lol_data_pipeline_spark.plans.round9 import (
     _K,
@@ -65,8 +72,10 @@ from lol_data_pipeline_spark.plans.round9 import (
 from lol_data_pipeline_spark.plans.round10 import (
     _BEAM_B,
     _BEAM_ENTRY_N,
+    _BEAM_QUERIES,
     _BEAM_R,
     _sql_graph_beam,
+    beam_ctes,
 )
 
 # Graph-maintenance batches: deterministic transforms of bounded id
@@ -77,8 +86,6 @@ from lol_data_pipeline_spark.plans.round10 import (
 _GUP_LO, _GUP_HI = 150, 170
 _GUP_SHIFT = 200000
 _GDEL_LO, _GDEL_HI = 60, 80
-_GRAPH_PLANES = 6
-_GRAPH_K = 3
 
 
 @query("ann_graph_beam_served_topk", sql=_sql_graph_beam())
@@ -112,51 +119,12 @@ def ann_graph_beam_served_topk(spark, sf_dir):
     )
 
 
-def _knn_edge_ctes_over(src: str) -> list[str]:
-    """Edge-construction oracle CTEs over an arbitrary corpus CTE
-    ``src`` providing (vec_id, x DOUBLE[]): frozen planes (the first
-    {n} ORIGINAL corpus vectors — maintenance codes new batches
-    against the sidecar's frozen literals, so the oracle's planes
-    must come from `e`, never from the widened set), rounded-sign
-    bucket codes, within-bucket cosine pairs, per-source rank. The
-    same construction as extensions.KNN_EDGE_CTES, parameterized so
-    the maintenance oracles can point it at corpus∪batch or
-    corpus∖doomed."""
-    cos = (
-        "round(list_inner_product(va.x, vb.x) / "
-        "(sqrt(list_inner_product(va.x, va.x)) * "
-        "sqrt(list_inner_product(vb.x, vb.x))), 6)"
-    )
-    return [
-        f"planes AS (SELECT vec_id AS plane_id, x AS pvec FROM e WHERE vec_id < {_GRAPH_PLANES})",
-        f"""gcodes AS (
-      SELECT a.vec_id,
-             CAST(sum(CASE WHEN round(list_inner_product(a.x, p.pvec), 6) >= 0
-                      THEN CAST(power(2, p.plane_id) AS BIGINT) ELSE 0 END) AS BIGINT) AS code
-      FROM {src} a CROSS JOIN planes p GROUP BY 1
-    )""",
-        f"""gscored AS (
-      SELECT a.code, a.vec_id AS src_id, b.vec_id AS dst_id, {cos} AS sim
-      FROM gcodes a
-      JOIN gaffected f ON a.code = f.code
-      JOIN gcodes b ON b.code = a.code AND b.vec_id <> a.vec_id
-      JOIN {src} va ON va.vec_id = a.vec_id
-      JOIN {src} vb ON vb.vec_id = b.vec_id
-    )""",
-        f"""granked AS (
-      SELECT code, src_id, dst_id, sim,
-             CAST(row_number() OVER (PARTITION BY src_id ORDER BY sim DESC, dst_id) AS BIGINT) AS rank
-      FROM gscored
-    )""",
-    ]
-
-
 def _sql_graph_upsert_for(lo: int, hi: int, shift: int) -> str:
     """The graph-upsert oracle parameterized by batch range/shift —
     one definition shared by the batch entry (graph_index_upsert) and
     its streaming twin, so the two cannot drift."""
     ctes = [
-        "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS x FROM embeddings)",
+        E_CTE,
         f"""allv AS (
       SELECT vec_id, x FROM e
       UNION ALL
@@ -165,9 +133,9 @@ def _sql_graph_upsert_for(lo: int, hi: int, shift: int) -> str:
       FROM e WHERE vec_id >= {lo} AND vec_id < {hi}
     )""",
     ]
-    edge_ctes = _knn_edge_ctes_over("allv")
-    gaff = f"gaffected AS (SELECT DISTINCT code FROM gcodes WHERE vec_id >= {shift})"
-    ctes += edge_ctes[:2] + [gaff] + edge_ctes[2:]
+    ctes += knn_edge_ctes(
+        "allv", f"SELECT DISTINCT code FROM gcodes WHERE vec_id >= {shift}"
+    )
     return (
         "WITH "
         + ",\n".join(ctes)
@@ -230,27 +198,20 @@ def graph_index_upsert(spark, sf_dir):
 
 def _sql_graph_delete() -> str:
     ctes = [
-        "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS x FROM embeddings)",
+        E_CTE,
         f"""surv AS (
       SELECT vec_id, x FROM e
       WHERE vec_id < {_GDEL_LO} OR vec_id >= {_GDEL_HI}
     )""",
     ]
-    edge_ctes = _knn_edge_ctes_over("surv")
     # affected buckets come from the DOOMED ids' codes — computed on
     # the FULL corpus coding (the doomed rows still exist there),
     # while edges recompute over the survivors only.
-    gaff = f"""gall AS (
-      SELECT a.vec_id,
-             CAST(sum(CASE WHEN round(list_inner_product(a.x, p.pvec), 6) >= 0
-                      THEN CAST(power(2, p.plane_id) AS BIGINT) ELSE 0 END) AS BIGINT) AS code
-      FROM e a CROSS JOIN planes p GROUP BY 1
-    ),
-    gaffected AS (
-      SELECT DISTINCT code FROM gall
-      WHERE vec_id >= {_GDEL_LO} AND vec_id < {_GDEL_HI}
-    )"""
-    ctes += edge_ctes[:2] + [gaff] + edge_ctes[2:]
+    ctes += knn_edge_ctes(
+        "surv",
+        f"""SELECT DISTINCT code FROM ({knn_codes_sql("e")})
+      WHERE vec_id >= {_GDEL_LO} AND vec_id < {_GDEL_HI}""",
+    )
     return (
         "WITH "
         + ",\n".join(ctes)
@@ -1154,11 +1115,7 @@ def ann_index_stats(spark, sf_dir):
 
 
 def _sql_graph_stats() -> str:
-    edge_ctes = _knn_edge_ctes_over("e")
-    gaff = "gaffected AS (SELECT DISTINCT code FROM gcodes)"
-    ctes = [
-        "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS x FROM embeddings)"
-    ] + edge_ctes[:2] + [gaff] + edge_ctes[2:]
+    ctes = [E_CTE] + knn_edge_ctes("e")
     return (
         "WITH "
         + ",\n".join(ctes)
@@ -1224,61 +1181,21 @@ def graph_index_stats(spark, sf_dir):
 
 
 def _sql_graph_recall() -> str:
-    from lol_data_pipeline_spark.plans.extensions import KNN_EDGE_CTES, SQL_COS
+    from lol_data_pipeline_spark.plans.extensions import SQL_COS
 
-    ctes = [
-        KNN_EDGE_CTES,
-        "edges AS (SELECT src_id, dst_id FROM ranked WHERE rank <= 3)",
-        f"""qset AS (
-      SELECT vec_id AS query_id, embedding AS qvec FROM embeddings
-      WHERE (vec_id >= {_KMQ_LO} AND vec_id < {_KMQ_HI})
-         OR (vec_id >= {_KMQ_TAIL_LO} AND vec_id < {_KMQ_TAIL_HI})
-    )""",
-        f"""f0 AS (
-      SELECT q.query_id, e.vec_id AS cand
-      FROM qset q CROSS JOIN (SELECT vec_id FROM embeddings WHERE vec_id < {_BEAM_ENTRY_N}) e
-    )""",
-    ]
-    for r in range(1, _BEAM_R + 1):
-        ctes.append(f"""x{r} AS (
-      SELECT query_id, cand FROM f{r - 1}
-      UNION
-      SELECT f.query_id, ed.dst_id AS cand
-      FROM f{r - 1} f JOIN edges ed ON ed.src_id = f.cand
-    )""")
-        ctes.append(f"""s{r} AS (
-      SELECT x.query_id, x.cand,
-             {SQL_COS.format(a='q.qvec', b='c.embedding')} AS sim
-      FROM x{r} x
-      JOIN qset q ON q.query_id = x.query_id
-      JOIN embeddings c ON c.vec_id = x.cand
-      WHERE x.cand <> x.query_id
-    )""")
-        ctes.append(f"""f{r} AS (
-      SELECT query_id, cand FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, cand) AS rn
-        FROM s{r}
-      ) WHERE rn <= {_BEAM_B}
-    )""")
+    ctes = [E_CTE] + knn_edge_ctes("e") + beam_ctes(_BEAM_QUERIES, _K)
     return (
         "WITH "
-        + ",\n    ".join(ctes)
+        + ",\n".join(ctes)
         + f""",
-    beam AS (
-      SELECT query_id, cand AS match_id FROM (
-        SELECT query_id, cand,
-               row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, cand) AS rank
-        FROM s{_BEAM_R}
-      ) WHERE rank <= {_K}
-    ),
     ex AS (
       SELECT query_id, match_id FROM (
         SELECT q.query_id, c.vec_id AS match_id,
                row_number() OVER (
                  PARTITION BY q.query_id
-                 ORDER BY {SQL_COS.format(a='q.qvec', b='c.embedding')} DESC, c.vec_id
+                 ORDER BY {SQL_COS.format(a='q.qvec', b='c.x')} DESC, c.vec_id
                ) AS rank
-        FROM qset q JOIN embeddings c ON c.vec_id <> q.query_id
+        FROM bqset q JOIN e c ON c.vec_id <> q.query_id
       ) WHERE rank <= {_K}
     )
     SELECT x.query_id,
@@ -1286,7 +1203,7 @@ def _sql_graph_recall() -> str:
            CAST(sum(CASE WHEN b.match_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit,
            round(CAST(sum(CASE WHEN b.match_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
                  / count(*), 6) AS recall_at_5
-    FROM ex x LEFT JOIN beam b
+    FROM ex x LEFT JOIN btop b
       ON b.query_id = x.query_id AND b.match_id = x.match_id
     GROUP BY 1
     ORDER BY x.query_id
@@ -1496,8 +1413,9 @@ def _sql_hybrid_index() -> str:
              {SQL_COS.format(a='a.qvec', b='e2.embedding')} AS sim
       FROM approx a JOIN embeddings e2 ON e2.vec_id = a.match_id
       WHERE a.arank <= {_REFINE * _HYB_ENTRY_K}
-    ),
-    bf0 AS (
+    )"""
+    )
+    entries = f"""
       SELECT query_id, match_id AS cand FROM (
         SELECT query_id, match_id,
                row_number() OVER (
@@ -1505,57 +1423,9 @@ def _sql_hybrid_index() -> str:
                ) AS rnk
         FROM rcand
       ) WHERE rnk <= {_HYB_ENTRY_K}
-    )"""
-    )
-    edge_ctes = _knn_edge_ctes_over("e")
-    gaff = "gaffected AS (SELECT DISTINCT code FROM gcodes)"
-    graph = (
-        ",\n    "
-        + ",\n".join(edge_ctes[:2] + [gaff] + edge_ctes[2:])
-        + f""",
-    gedges AS (SELECT src_id, dst_id FROM granked WHERE rank <= {_GRAPH_K}),
-    bqset AS (
-      SELECT vec_id AS query_id, x AS qvec FROM e
-      WHERE (vec_id >= {_KMQ_LO} AND vec_id < {_KMQ_HI})
-         OR (vec_id >= {_KMQ_TAIL_LO} AND vec_id < {_KMQ_TAIL_HI})
-    )"""
-    )
-    rounds = []
-    for r in range(1, _BEAM_R + 1):
-        rounds.append(f""",
-    bx{r} AS (
-      SELECT query_id, cand FROM bf{r - 1}
-      UNION
-      SELECT f.query_id, ed.dst_id AS cand
-      FROM bf{r - 1} f JOIN gedges ed ON ed.src_id = f.cand
-    ),
-    bs{r} AS (
-      SELECT x2.query_id, x2.cand,
-             {SQL_COS.format(a='q.qvec', b='c.x')} AS sim
-      FROM bx{r} x2
-      JOIN bqset q ON q.query_id = x2.query_id
-      JOIN e c ON c.vec_id = x2.cand
-      WHERE x2.cand <> x2.query_id
-    ),
-    bf{r} AS (
-      SELECT query_id, cand FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, cand) AS rn
-        FROM bs{r}
-      ) WHERE rn <= {_BEAM_B}
-    )""")
-    return (
-        head
-        + graph
-        + "".join(rounds)
-        + f"""
-    SELECT query_id, CAST(cand AS BIGINT) AS match_id, sim, rank
-    FROM (
-      SELECT query_id, cand, sim,
-             CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, cand) AS BIGINT) AS rank
-      FROM bs{_BEAM_R}
-    ) WHERE rank <= {_K}
     """
-    )
+    graph = knn_edge_ctes("e") + beam_ctes(_BEAM_QUERIES, _K, entries)
+    return head + ",\n" + ",\n".join(graph) + "\n    SELECT * FROM btop\n    "
 
 
 @query("ann_hybrid_index_topk", sql=_sql_hybrid_index())
@@ -1604,11 +1474,7 @@ _PAIR_TAU = 0.35
 
 
 def _sql_graph_sim_pairs() -> str:
-    edge_ctes = _knn_edge_ctes_over("e")
-    gaff = "gaffected AS (SELECT DISTINCT code FROM gcodes)"
-    ctes = [
-        "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS x FROM embeddings)"
-    ] + edge_ctes[:2] + [gaff] + edge_ctes[2:]
+    ctes = [E_CTE] + knn_edge_ctes("e")
     return (
         "WITH "
         + ",\n".join(ctes)
@@ -3166,41 +3032,9 @@ def _sql_rrf3_fusion() -> str:
         train_where=_SAMPLE_WHERE,
     )
     lex = _sql_bm25(_BM25_TERMS, _RRF_NL, _BM25_K1, _BM25_B)
-    edge_ctes = _knn_edge_ctes_over("e")
-    gaff = "gaffected AS (SELECT DISTINCT code FROM gcodes)"
-    graph_ctes = (
-        ",\n    ".join(edge_ctes[:2] + [gaff] + edge_ctes[2:])
-        + f""",
-    gedges AS (SELECT src_id, dst_id FROM granked WHERE rank <= {_GRAPH_K}),
-    bqset AS (SELECT vec_id AS query_id, x AS qvec FROM e WHERE vec_id = {_RRF_Q}),
-    bf0 AS (
-      SELECT q.query_id, n.vec_id AS cand
-      FROM bqset q CROSS JOIN (SELECT vec_id FROM e WHERE vec_id < {_BEAM_ENTRY_N}) n
-    )"""
+    graph_ctes = ",\n    ".join(
+        knn_edge_ctes("e") + beam_ctes(f"vec_id = {_RRF_Q}", _RRF_NG)
     )
-    rounds = []
-    for r in range(1, _BEAM_R + 1):
-        rounds.append(f""",
-    bx{r} AS (
-      SELECT query_id, cand FROM bf{r - 1}
-      UNION
-      SELECT f.query_id, ed.dst_id AS cand
-      FROM bf{r - 1} f JOIN gedges ed ON ed.src_id = f.cand
-    ),
-    bs{r} AS (
-      SELECT x2.query_id, x2.cand,
-             {SQL_COS.format(a='q.qvec', b='c.x')} AS sim
-      FROM bx{r} x2
-      JOIN bqset q ON q.query_id = x2.query_id
-      JOIN e c ON c.vec_id = x2.cand
-      WHERE x2.cand <> x2.query_id
-    ),
-    bf{r} AS (
-      SELECT query_id, cand FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, cand) AS rn
-        FROM bs{r}
-      ) WHERE rn <= {_BEAM_B}
-    )""")
     return (
         "WITH "
         + ",\n".join(ctes)
@@ -3237,14 +3071,8 @@ def _sql_rrf3_fusion() -> str:
         WHERE a.arank <= {_REFINE * _RRF_NV}
       ) WHERE rank_vec <= {_RRF_NV}
     ),
-    {graph_ctes}{"".join(rounds)},
-    gtop AS (
-      SELECT cand AS doc_id, rank_graph FROM (
-        SELECT cand,
-               CAST(row_number() OVER (ORDER BY sim DESC, cand) AS BIGINT) AS rank_graph
-        FROM bs{_BEAM_R}
-      ) WHERE rank_graph <= {_RRF_NG}
-    ),
+    {graph_ctes},
+    gtop AS (SELECT match_id AS doc_id, rank AS rank_graph FROM btop),
     lexleg AS (SELECT doc_id, CAST(rank AS BIGINT) AS rank_lex FROM ({lex})),
     fused2 AS (
       SELECT COALESCE(l.doc_id, v.doc_id) AS doc_id, l.rank_lex, v.rank_vec

@@ -22,7 +22,7 @@ import pytest
 
 from lol_data_pipeline_spark.io import TABLES, table_path
 from lol_data_pipeline_spark.plans import REGISTRY
-from tools.check_parity import compare
+from tools.check_parity import compare, materialize_ctes
 
 ORACLED = sorted(name for name, spec in REGISTRY.items() if spec.sql)
 
@@ -57,6 +57,30 @@ def test_oracle_parity(name, spark, duck):
     duck_cols = [d[0] for d in res.description]
     duck_rows = res.fetchall()
     issues = compare(name, spark_rows, duck_rows, spark_cols, duck_cols)
+    assert not issues, f"{name}: " + " | ".join(issues)
+
+
+@pytest.mark.parametrize("name", ["emb_knn_graph", "ann_graph_beam_topk"])
+def test_graph_oracle_chains_fast(name, spark, sf_dir):
+    """Fast-gate parity at sf0.001 for the two entries whose oracles
+    are the shared graph chains alone: the kNN edge CTEs
+    (extensions.knn_edge_ctes) and the beam rounds
+    (round10.beam_ctes), which every other graph-family oracle
+    builds on. The full sweep above covers the rest, marked slow."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{table_path(sf_dir, t)}'")
+    spec = REGISTRY[name]
+    sdf = spec.fn(spark, sf_dir)
+    res = con.execute(materialize_ctes(spec.sql))
+    issues = compare(
+        name,
+        [tuple(r) for r in sdf.collect()],
+        res.fetchall(),
+        sdf.columns,
+        [d[0] for d in res.description],
+    )
+    con.close()
     assert not issues, f"{name}: " + " | ".join(issues)
 
 

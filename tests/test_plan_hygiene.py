@@ -505,3 +505,39 @@ def test_sidecar_written_only_by_builds(tmp_path):
         "    return artifact.save_meta(path, 'k', {**meta, 'n': 1})\n"
     )
     assert audit_sidecar_writes(str(tmp_path)) == ["fam.py:fam_upsert"]
+
+
+def test_driver_actions_are_allowlisted(tmp_path):
+    """Source-level ratchet: every driver action (collect, count,
+    first, take, toPandas, truncate_lineage) under operators/ and
+    plans/ sits on tools/plan_audit.DRIVER_ACTION_OK with a reason,
+    and every entry there still names a live action site, so the list
+    only shrinks as kernels fuse into lazy plans. The in-query beam
+    walk runs the shared graph_index.beam_walk, so it has no entry of
+    its own. The rule fires on a fake package's un-listed collect and
+    checkpoint, not on a lazy grouped count, a column function or a
+    module outside operators/ and plans/. Pure AST scan: no Spark
+    session."""
+    from tools.plan_audit import DRIVER_ACTION_OK, audit_driver_actions
+
+    assert audit_driver_actions() == []
+    assert set(DRIVER_ACTION_OK) <= set(audit_driver_actions(allow={}))
+    assert "plans/round10.py:ann_graph_beam_topk" not in DRIVER_ACTION_OK
+    assert all(
+        r.split(":", 1)[0] in ("build-once", "maintenance", "query-bounded")
+        for r in DRIVER_ACTION_OK.values()
+    )
+    (tmp_path / "operators").mkdir()
+    (tmp_path / "operators" / "fam.py").write_text(
+        "from pyspark.sql import functions as F\n"
+        "def probe(df):\n"
+        "    return [r.id for r in df.collect()]\n"
+        "def stats(df):\n"
+        "    return df.groupBy('k').count().select(F.count('*'))\n"
+        "def rounds(df):\n"
+        "    return truncate_lineage(df)\n"
+    )
+    (tmp_path / "io.py").write_text("def size(df):\n    return df.count()\n")
+    assert audit_driver_actions(str(tmp_path)) == [
+        "operators/fam.py:probe", "operators/fam.py:rounds"
+    ]

@@ -705,6 +705,23 @@ def test_bm25_served_equals_inquery(spark, sf_dir):
     assert {term_bucket(t) for t in _BM25_TERMS}  # probe buckets exist
 
 
+def test_bm25_probe_builds_with_no_job(spark, sf_dir):
+    """Building a served BM25 probe starts no Spark job: the per-term
+    df, n_docs and avgdl are scalar subqueries of the probe's own
+    plan, not values collected while it is built."""
+    from lol_data_pipeline_spark.operators.text_index import (
+        ensure_bm25_index,
+        served_bm25_topk,
+    )
+    from lol_data_pipeline_spark.plans.extensions import _BM25_TERMS
+
+    path, meta = ensure_bm25_index(spark, sf_dir)
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    before = sched.nextJobId()
+    served_bm25_topk(spark, path, meta, _BM25_TERMS)
+    assert sched.nextJobId() == before
+
+
 def _bm25_totals(spark, path):
     """(doc count, token sum) of the doclens view: the n_docs and
     avgdl inputs every BM25 probe aggregates."""

@@ -24,11 +24,11 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tools.stream_ab import _calib, _calib_mc, _run  # noqa: E402
+from bench import _calibrate, _calibrate_mc  # noqa: E402
+from tools.stream_ab import _run  # noqa: E402
 
 ENTRY = "ref_ingest_pipeline"
 CONTROL = "ref_dedup_distinct"
@@ -45,7 +45,7 @@ def main() -> None:
     args = ap.parse_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    calib0, mc0 = _calib(), _calib_mc()
+    calib0, mc0 = _calibrate(), _calibrate_mc()
     spark = get_spark("ingest_ab")
     aged_n = 0
     if args.mode == "aged":
@@ -68,7 +68,7 @@ def main() -> None:
     for _ in range(3):
         t_entry.append(_run(spark, ENTRY, sf_dir, runs=1))
         t_control.append(_run(spark, CONTROL, sf_dir, runs=1))
-    calib1, mc1 = _calib(), _calib_mc()
+    calib1, mc1 = _calibrate(), _calibrate_mc()
     print(
         json.dumps(
             {

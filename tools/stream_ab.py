@@ -35,39 +35,11 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import _calibrate, _calibrate_mc  # noqa: E402
 from lol_data_pipeline_spark.session import get_spark  # noqa: E402
 from lol_data_pipeline_spark.plans import REGISTRY  # noqa: E402
 
 STREAM_ENTRIES = ["stream_tumbling_window", "stream_session_window", "stream_dedup"]
-
-
-def _calib() -> float:
-    t0 = time.perf_counter()
-    x = 0
-    for i in range(10_000_000):
-        x += i * i
-    return round(time.perf_counter() - t0, 3)
-
-
-def _calib_worker(_: int) -> float:
-    t0 = time.perf_counter()
-    x = 0
-    for i in range(5_000_000):
-        x += i * i
-    return time.perf_counter() - t0
-
-
-def _calib_mc(n: int = 32) -> dict:
-    import multiprocessing as mp
-
-    t0 = time.perf_counter()
-    with mp.get_context("fork").Pool(n) as p:
-        per = p.map(_calib_worker, range(n))
-    return {
-        "wall": round(time.perf_counter() - t0, 3),
-        "max": round(max(per), 3),
-        "mean": round(sum(per) / len(per), 3),
-    }
 
 
 def _run(spark, name: str, sf_dir: str, runs: int = 3) -> float:
@@ -90,7 +62,7 @@ def main() -> None:
     args = ap.parse_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    calib0, mc0 = _calib(), _calib_mc()
+    calib0, mc0 = _calibrate(), _calibrate_mc()
     spark = get_spark("stream_ab")
     aged_n = 0
     if args.mode == "aged":
@@ -108,7 +80,7 @@ def main() -> None:
             ).save()
             aged_n += 1
     entries = {n: _run(spark, n, sf_dir) for n in STREAM_ENTRIES}
-    calib1, mc1 = _calib(), _calib_mc()
+    calib1, mc1 = _calibrate(), _calibrate_mc()
     print(
         json.dumps(
             {
