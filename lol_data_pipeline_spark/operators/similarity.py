@@ -669,6 +669,45 @@ def pq_encode(
     )
 
 
+def pq_seeds(corpus: DataFrame, ncent: int) -> list[list[float]]:
+    """The PQ codebook every IVF+PQ entry and the index build encode
+    against: the ``ncent`` lowest-id vectors as doubles, collected
+    once (a codebook-sized, deterministic collect the oracles
+    re-derive as ``vec_id < ncent``)."""
+    rows = (
+        corpus.orderBy("vec_id")
+        .limit(ncent)
+        .select(F.col("embedding").cast("array<double>").alias("c"))
+        .collect()
+    )
+    return [[float(v) for v in r.c] for r in rows]
+
+
+def adc_scored(
+    cand: DataFrame,
+    probes: DataFrame,
+    cols: list,
+    xhat: str = "xhat",
+    cells: bool = True,
+) -> DataFrame:
+    """The ADC scored join of the PQ family: candidates ⋈ broadcast
+    probe rows — on ``cell_id = pcell`` when ``cells`` (IVF), always
+    excluding the query itself — projected to ``cols`` plus
+    ``approx = ⟨qvec, x̂⟩``. ``xhat`` is the reconstruction's SQL (the
+    residual variant passes its ``c + r̂``). The one spelling of the
+    asymmetric distance, shared by the in-query entries and the
+    served index."""
+    cond = F.col("match_id") != F.col("query_id")
+    if cells:
+        cond = (F.col("cell_id") == F.col("pcell")) & cond
+    return cand.join(F.broadcast(probes), cond).select(
+        *cols,
+        F.expr(_DOT_SQL.format(a="CAST(qvec AS array<double>)", b=xhat)).alias(
+            "approx"
+        ),
+    )
+
+
 def _adc_refine_topk(
     scored: DataFrame, k: int, refine: int, extra_cols: tuple[str, ...] = ()
 ) -> DataFrame:
@@ -730,14 +769,8 @@ def pq_cosine_topk(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
     )
     xhat = pq_encode(corpus, seeds, m=m, dsub=dsub, id_col=id_col, vec_col=vec_col)
-    scored = xhat.join(F.broadcast(q), F.col("match_id") != F.col("query_id")).select(
-        "query_id",
-        "match_id",
-        "qvec",
-        "cvec",
-        F.expr(
-            _DOT_SQL.format(a="CAST(qvec AS array<double>)", b="xhat")
-        ).alias("approx"),
+    scored = adc_scored(
+        xhat, q, ["query_id", "match_id", "qvec", "cvec"], cells=False
     )
     return _adc_refine_topk(scored, k, refine)
 
@@ -817,22 +850,17 @@ def ivfpq_residual_topk(
         F.col("cell_id").alias("pcell"),
         "probe_rank",
     )
-    scored = enc.join(
-        F.broadcast(qprobe),
-        (F.col("cell_id") == F.col("pcell"))
-        & (F.col("match_id") != F.col("query_id")),
-    ).select(
-        "query_id",
-        "match_id",
-        "qvec",
-        F.col(vec_col).alias("cvec"),
-        F.col("probe_rank").cast("long").alias("probe_rank"),
-        F.expr(
-            _DOT_SQL.format(
-                a="CAST(qvec AS array<double>)",
-                b="zip_with(cv, xhat, (u, v) -> u + v)",
-            )
-        ).alias("approx"),
+    scored = adc_scored(
+        enc,
+        qprobe,
+        [
+            "query_id",
+            "match_id",
+            "qvec",
+            F.col(vec_col).alias("cvec"),
+            F.col("probe_rank").cast("long").alias("probe_rank"),
+        ],
+        xhat="zip_with(cv, xhat, (u, v) -> u + v)",
     )
     return _adc_refine_topk(scored, k, refine, extra_cols=("probe_rank",))
 
@@ -892,19 +920,16 @@ def ivfpq_topk(
         F.col("cell_id").alias("pcell"),
         "probe_rank",
     )
-    scored = enc.join(
-        F.broadcast(qprobe),
-        (F.col("cell_id") == F.col("pcell"))
-        & (F.col("match_id") != F.col("query_id")),
-    ).select(
-        "query_id",
-        "match_id",
-        "qvec",
-        "cvec",
-        F.col("probe_rank").cast("long").alias("probe_rank"),
-        F.expr(
-            _DOT_SQL.format(a="CAST(qvec AS array<double>)", b="xhat")
-        ).alias("approx"),
+    scored = adc_scored(
+        enc,
+        qprobe,
+        [
+            "query_id",
+            "match_id",
+            "qvec",
+            "cvec",
+            F.col("probe_rank").cast("long").alias("probe_rank"),
+        ],
     )
     return _adc_refine_topk(scored, k, refine, extra_cols=("probe_rank",))
 

@@ -8,33 +8,38 @@ This executes the repo's central 100 TB claim (SCALE.md, round 9):
 "at 100 TB the assignment becomes an index BUILD — cell_id as a
 partition column; probes become partition pruning". Concretely:
 
-- BUILD (once, amortized over every query): sample-trained kmeans
-  coarse quantizer (1-in-4 ids — codebook quality needs samples, not
-  the corpus), full-corpus cell assignment as a join-free projection
-  against the literal trained centroids, PQ encode to m small-int
-  codes per vector (``pq_encode(emit="codes")`` — m bytes/vector,
-  the storage win), written hive-partitioned by ``cell_id``
-  (io.write_overwrite). The codebook + PQ seeds persist in a
+- BUILD (once, amortized over every query): :func:`train_and_encode`
+  — the stages the in-query flagship runs too — trains the kmeans
+  coarse quantizer on a 1-in-4 id sample (codebook quality needs
+  samples, not the corpus), assigns the full corpus as a join-free
+  projection against the literal trained centroids, and PQ-encodes
+  to m small-int codes per vector (``pq_encode(emit="codes")`` — m
+  bytes/vector, the storage win); :func:`build_ivfpq_index` writes
+  them hive-partitioned by ``cell_id`` (io.write_overwrite). The
+  codebook + PQ seeds persist in a
   ``_index_meta.json`` sidecar INSIDE the index directory (the
   leading underscore keeps it invisible to the parquet reader, like
   ``_SUCCESS``), alongside a source-content fingerprint so a
   regenerated corpus rebuilds instead of serving stale cells.
-- SERVE (per query batch): probe selection is the same join-free
-  posexplode-over-literal-centroids projection the in-query entries
-  use (:func:`ivf_probe_rows` — ONE definition, plans/round9.py
-  imports it too); the probed cell ids (bounded by the codebook
-  size, ≤ k cells total regardless of query count) become LITERAL
-  partition filters on the index scan, so Spark prunes to nprobe
-  directories and reads ONLY the m code columns — at 100 TB the
-  probe touches nprobe/C of the files and m/ (dim·4) of the bytes,
-  multiplicatively. Decode back to the ADC reconstruction x̂ is a
-  pure projection against the sidecar codebook
-  (:func:`pq_decode_expr` — the SAME literal doubles pq_encode's
-  in-query xhat carries, so served results are bit-identical to the
-  recomputing flagship and share its DuckDB oracle). Exact-cosine
-  rescore joins the bounded refine·k candidate set back to the
-  full-precision source table (broadcast of the candidates; the
-  corpus is never shuffled).
+- SERVE (per query batch): one body, :func:`_served_topk`, serves
+  one probe width (:func:`served_ivfpq_topk`) or several
+  (:func:`served_ivfpq_topk_multi`). Probe selection is the same
+  join-free posexplode-over-literal-centroids projection the
+  in-query flagship uses (:func:`ivf_probe_rows`); the probed cell
+  ids (bounded by the codebook size, ≤ k cells total regardless of
+  query count) become LITERAL partition filters on the index scan,
+  so Spark prunes to nprobe directories and reads ONLY the m code
+  columns — at 100 TB the probe touches nprobe/C of the files and
+  m/(dim·4) of the bytes, multiplicatively. Decode back to the ADC
+  reconstruction x̂ is a pure projection against the sidecar
+  codebook (:func:`pq_decode_expr` — the SAME literal doubles
+  pq_encode's in-query xhat carries, so served results are
+  bit-identical to the recomputing flagship and share its DuckDB
+  oracle), scored by the PQ family's one ADC join
+  (:func:`similarity.adc_scored`). Exact-cosine rescore joins the
+  bounded refine·k candidate set back to the full-precision source
+  table (broadcast of the candidates; the corpus is never
+  shuffled).
 - MAINTAIN (incremental): :func:`index_upsert` assigns a NEW vector
   batch to the FROZEN persisted codebook (pure projection — no
   retraining), merges per affected partition (existing rows minus
@@ -62,11 +67,17 @@ from lol_data_pipeline_spark.operators import artifact
 from lol_data_pipeline_spark.operators.clustering import _cc, kmeans_cells, kmeans_train
 from lol_data_pipeline_spark.operators.similarity import (
     _arr_sql,
-    _DOT_SQL,
+    adc_scored,
     cosine,
     dot,
     pq_encode,
+    pq_seeds,
 )
+
+
+def _cents(meta: dict) -> list[tuple[int, list[float]]]:
+    """The sidecar's trained centroids as (cell id, doubles)."""
+    return [(int(c), [float(v) for v in cv]) for c, cv in meta["cents"]]
 
 
 def pq_code_cols(m: int) -> list[str]:
@@ -150,6 +161,46 @@ def auto_cells(n: int, lo: int = 8) -> int:
     return k
 
 
+def train_and_encode(
+    emb: DataFrame,
+    k: int,
+    rounds: int,
+    m: int,
+    dsub: int,
+    ncent: int,
+    sample_mod: int,
+    dim: int,
+    emit: str,
+) -> tuple[list[tuple[int, list[float]]], list[list[float]], DataFrame]:
+    """The IVF+PQ build stages, shared by :func:`build_ivfpq_index`
+    and the in-query flagship (plans/round9.ann_ivfpq_kmeans_topk):
+    Lloyd training on the 1-in-``sample_mod`` id sample, full-corpus
+    cell assignment against the literal trained centroids, the
+    ``ncent`` lowest-id PQ seeds (:func:`similarity.pq_seeds`), and
+    the PQ encode. Returns (cents, seeds, encoded): ``emit="codes"``
+    gives the persisted form (vec_id, cell_id, code*), ``emit="xhat"``
+    the in-query ADC form (match_id, cvec, cell_id, xhat)."""
+    cents = kmeans_train(
+        emb.filter(F.col("vec_id") % sample_mod == 0),
+        k=k,
+        rounds=rounds,
+        dim=dim,
+    )
+    cells = kmeans_cells(emb, k=k, rounds=rounds, dim=dim, cents=cents)
+    seeds = pq_seeds(emb, ncent)
+    enc = pq_encode(
+        cells,
+        seeds,
+        m=m,
+        dsub=dsub,
+        keep=["cell_id"],
+        id_alias="vec_id" if emit == "codes" else "match_id",
+        widen_input=False,
+        emit=emit,
+    )
+    return cents, seeds, enc
+
+
 def build_ivfpq_index(
     spark: SparkSession,
     sf_dir: str,
@@ -176,29 +227,8 @@ def build_ivfpq_index(
         # explicit k so their unrolled cross-engine oracles stay
         # static; production builds pass k=None)
         k = auto_cells(emb.count())
-    cents = kmeans_train(
-        emb.filter(F.col("vec_id") % sample_mod == 0),
-        k=k,
-        rounds=rounds,
-        dim=dim,
-    )
-    cells = kmeans_cells(emb, k=k, rounds=rounds, dim=dim, cents=cents)
-    seed_rows = (
-        emb.orderBy("vec_id")
-        .limit(ncent)
-        .select(F.col("embedding").cast("array<double>").alias("c"))
-        .collect()
-    )
-    seeds = [[float(v) for v in r.c] for r in seed_rows]
-    codes = pq_encode(
-        cells,
-        seeds,
-        m=m,
-        dsub=dsub,
-        keep=["cell_id"],
-        id_alias="vec_id",
-        widen_input=False,
-        emit="codes",
+    cents, seeds, codes = train_and_encode(
+        emb, k, rounds, m, dsub, ncent, sample_mod, dim, emit="codes"
     )
     write_overwrite(codes, path, partition_by=["cell_id"])
     return artifact.save_meta(path, "ivfpq", {
@@ -271,22 +301,23 @@ def read_index_codes(
     return df.select("vec_id", "cell_id", *pq_code_cols(m))
 
 
-def served_ivfpq_topk(
+def _served_topk(
     spark: SparkSession,
     sf_dir: str,
     queries: DataFrame,
-    k: int = 5,
-    refine: int = 4,
-    nprobe: int = 2,
+    widths: list[int],
+    k: int,
+    refine: int,
     index_root: str | None = None,
     keep_vec: bool = False,
     filter_ids: DataFrame | None = None,
 ) -> DataFrame:
-    """Serve top-k from the PERSISTED index: probe → pruned code scan
-    → decode → ADC rank → bounded exact rescore. Output schema and
-    values are identical to the in-query flagship
-    (plans/round9.py ann_ivfpq_kmeans_topk): (query_id, match_id,
-    probe_rank, sim, rank).
+    """The one served body: probe at max(``widths``) → pruned code
+    scan → decode → ADC scored join (:func:`similarity.adc_scored`)
+    → per width, the top ``refine·k`` by approx among the cells that
+    width probes → ONE exact rescore of every width's candidates →
+    per (width, query) top-k. Returns (nprobe, query_id, match_id,
+    probe_rank, sim, rank[, cvec]).
 
     The probed-cell collect is bounded by the CODEBOOK size (≤ k
     distinct cells exist no matter how many queries probe), so the
@@ -294,14 +325,13 @@ def served_ivfpq_topk(
     from lol_data_pipeline_spark.io import load_table
 
     path, meta = ensure_ivfpq_index(spark, sf_dir, root=index_root)
-    cents = [(int(c), [float(v) for v in cv]) for c, cv in meta["cents"]]
     p = meta["params"]
-    qprobe = ivf_probe_rows(queries, cents, nprobe)
+    top = max(widths)
+    qprobe = ivf_probe_rows(queries, _cents(meta), top)
     probed = sorted(
         int(r.pcell) for r in qprobe.select("pcell").distinct().collect()
     )
-    idx = read_index_codes(spark, path, meta, cells=probed)
-    xhat = idx.select(
+    xhat = read_index_codes(spark, path, meta, cells=probed).select(
         F.col("vec_id").alias("match_id"),
         "cell_id",
         pq_decode_expr(meta["seeds"], p["m"], p["dsub"]).alias("xhat"),
@@ -316,35 +346,36 @@ def served_ivfpq_topk(
             "match_id",
             "semi",
         )
-    scored = xhat.join(
-        F.broadcast(qprobe),
-        (F.col("cell_id") == F.col("pcell"))
-        & (F.col("match_id") != F.col("query_id")),
-    ).select(
-        "query_id",
-        "match_id",
-        "qvec",
-        "probe_rank",
-        F.expr(
-            _DOT_SQL.format(a="CAST(qvec AS array<double>)", b="xhat")
-        ).alias("approx"),
+    scored = adc_scored(
+        xhat, qprobe, ["query_id", "match_id", "qvec", "probe_rank"]
     )
     aw = Window.partitionBy("query_id").orderBy(
         F.col("approx").desc(), F.col("match_id").asc()
     )
-    cand = (
-        scored.withColumn("arank", F.row_number().over(aw))
-        .filter(F.col("arank") <= refine * k)
-        .select("query_id", "match_id", "qvec", "probe_rank")
-    )
+    cand = None
+    for n in sorted(set(widths)):
+        c = (
+            (scored if n == top else scored.filter(F.col("probe_rank") <= n))
+            .withColumn("arank", F.row_number().over(aw))
+            .filter(F.col("arank") <= refine * k)
+            .select(
+                F.lit(n).cast("long").alias("nprobe"),
+                "query_id",
+                "match_id",
+                "qvec",
+                "probe_rank",
+            )
+        )
+        cand = c if cand is None else cand.unionByName(c)
     # Exact rescore against the full-precision SOURCE table (the
-    # index stores only codes): candidates are bounded (Q·refine·k
-    # rows) → broadcast them; the source is filter-joined, never
-    # shuffled.
+    # index stores only codes): candidates are bounded (widths·Q·
+    # refine·k rows) → broadcast them; the source is filter-joined,
+    # never shuffled, and joined once for every width.
     src = load_table(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("match_id"), F.col("embedding").alias("cvec")
     )
     resc = src.join(F.broadcast(cand), "match_id").select(
+        "nprobe",
         "query_id",
         "match_id",
         "probe_rank",
@@ -354,17 +385,45 @@ def served_ivfpq_topk(
         # them through here saves those stages a second corpus join
         *(["cvec"] if keep_vec else []),
     )
-    w = Window.partitionBy("query_id").orderBy(
+    w = Window.partitionBy("nprobe", "query_id").orderBy(
         F.col("sim").desc(), F.col("match_id").asc()
-    )
-    out_cols = ["query_id", "match_id", "probe_rank", "sim", "rank"] + (
-        ["cvec"] if keep_vec else []
     )
     return (
         resc.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)
-        .select(*out_cols)
+        .select(
+            "nprobe",
+            "query_id",
+            "match_id",
+            "probe_rank",
+            "sim",
+            "rank",
+            *(["cvec"] if keep_vec else []),
+        )
     )
+
+
+def served_ivfpq_topk(
+    spark: SparkSession,
+    sf_dir: str,
+    queries: DataFrame,
+    k: int = 5,
+    refine: int = 4,
+    nprobe: int = 2,
+    index_root: str | None = None,
+    keep_vec: bool = False,
+    filter_ids: DataFrame | None = None,
+) -> DataFrame:
+    """Serve top-k from the PERSISTED index at one probe width: the
+    shared served body (:func:`_served_topk`) at ``[nprobe]``. Output
+    schema and values are identical to the in-query flagship
+    (plans/round9.py ann_ivfpq_kmeans_topk): (query_id, match_id,
+    probe_rank, sim, rank[, cvec]). ``filter_ids`` (one id column)
+    pre-filters the candidates before ADC ranking."""
+    return _served_topk(
+        spark, sf_dir, queries, [nprobe], k, refine,
+        index_root, keep_vec, filter_ids,
+    ).drop("nprobe")
 
 
 def assign_to_index(new_vecs: DataFrame, meta: dict) -> DataFrame:
@@ -375,7 +434,7 @@ def assign_to_index(new_vecs: DataFrame, meta: dict) -> DataFrame:
     from lol_data_pipeline_spark.operators.clustering import _assign_expr
 
     p = meta["params"]
-    cents = [(int(c), [float(v) for v in cv]) for c, cv in meta["cents"]]
+    cents = _cents(meta)
     x = F.col("embedding").cast("array<double>")
     assigned = new_vecs.select(
         "vec_id",
@@ -408,7 +467,7 @@ def index_delete(
     embedding). Returns the affected cell ids."""
     from lol_data_pipeline_spark.operators.clustering import _assign_expr
 
-    cents = [(int(c), [float(v) for v in cv]) for c, cv in meta["cents"]]
+    cents = _cents(meta)
     x = F.col("embedding").cast("array<double>")
     assigned = doomed.select(
         "vec_id", _assign_expr(x, dot(x, x), cents).cast("long").alias("cell_id")
@@ -496,7 +555,7 @@ def index_compact(
     Returns (affected cell ids, moves as (vec_id, from, to))."""
     p = meta["params"]
     k = p["k"]
-    cents = [(int(c), [float(v) for v in cv]) for c, cv in meta["cents"]]
+    cents = _cents(meta)
     counts = {
         int(r.cell_id): int(r.n)
         for r in spark.read.parquet(path)
@@ -596,79 +655,12 @@ def served_ivfpq_topk_multi(
     index_root: str | None = None,
 ) -> DataFrame:
     """Serve top-k at SEVERAL probe widths from ONE plan — the shape
-    a recall-vs-nprobe evaluation wants: probe once at max(nprobes)
-    (probe_rank identifies which width found each cell), scan the
-    union of probed partitions once, decode once, then per width
-    filter probe_rank ≤ nprobe and rank. All widths' bounded
-    candidates union BEFORE the exact rescore, so the full-precision
-    source is joined ONCE (broadcast candidates) instead of once per
-    width. Per (nprobe, query) the rows are identical to
-    served_ivfpq_topk(nprobe=...) — the per-width ADC/rescore
-    windows see exactly the same inputs in the same order.
+    a recall-vs-nprobe evaluation wants: the shared served body
+    (:func:`_served_topk`) probes once at max(nprobes), scans the
+    union of probed partitions once, decodes once, and rescores every
+    width's candidates against the source in one join. Per (nprobe,
+    query) the rows are identical to served_ivfpq_topk(nprobe=...)
+    (tests/test_round11_ops.py pins it).
 
     Returns (nprobe, query_id, match_id, probe_rank, sim, rank)."""
-    from lol_data_pipeline_spark.io import load_table
-
-    path, meta = ensure_ivfpq_index(spark, sf_dir, root=index_root)
-    cents = [(int(c), [float(v) for v in cv]) for c, cv in meta["cents"]]
-    p = meta["params"]
-    widths = sorted(set(int(n) for n in nprobes))
-    qprobe = ivf_probe_rows(queries, cents, max(widths))
-    probed = sorted(
-        int(r.pcell) for r in qprobe.select("pcell").distinct().collect()
-    )
-    idx = read_index_codes(spark, path, meta, cells=probed)
-    xhat = idx.select(
-        F.col("vec_id").alias("match_id"),
-        "cell_id",
-        pq_decode_expr(meta["seeds"], p["m"], p["dsub"]).alias("xhat"),
-    )
-    scored = xhat.join(
-        F.broadcast(qprobe),
-        (F.col("cell_id") == F.col("pcell"))
-        & (F.col("match_id") != F.col("query_id")),
-    ).select(
-        "query_id",
-        "match_id",
-        "qvec",
-        "probe_rank",
-        F.expr(
-            _DOT_SQL.format(a="CAST(qvec AS array<double>)", b="xhat")
-        ).alias("approx"),
-    )
-    cand = None
-    for np_ in widths:
-        aw = Window.partitionBy("query_id").orderBy(
-            F.col("approx").desc(), F.col("match_id").asc()
-        )
-        c = (
-            scored.filter(F.col("probe_rank") <= np_)
-            .withColumn("arank", F.row_number().over(aw))
-            .filter(F.col("arank") <= refine * k)
-            .select(
-                F.lit(np_).cast("long").alias("nprobe"),
-                "query_id",
-                "match_id",
-                "qvec",
-                "probe_rank",
-            )
-        )
-        cand = c if cand is None else cand.unionByName(c)
-    src = load_table(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").alias("match_id"), F.col("embedding").alias("cvec")
-    )
-    resc = src.join(F.broadcast(cand), "match_id").select(
-        "nprobe",
-        "query_id",
-        "match_id",
-        "probe_rank",
-        F.round(cosine(F.col("qvec"), F.col("cvec")), 6).alias("sim"),
-    )
-    w = Window.partitionBy("nprobe", "query_id").orderBy(
-        F.col("sim").desc(), F.col("match_id").asc()
-    )
-    return (
-        resc.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("nprobe", "query_id", "match_id", "probe_rank", "sim", "rank")
-    )
+    return _served_topk(spark, sf_dir, queries, nprobes, k, refine, index_root)

@@ -862,6 +862,17 @@ def corpus_leakage_safe_split(spark, sf_dir):
     )
 
 
+def km_dist_sql(x: str = "e.x") -> str:
+    """d²(x, c.c) as the oracles spell it — |x|² − 2⟨x, c⟩ + |c|² with
+    list_inner_product folds, bit-equal to the Spark side's
+    ``dot(x, x) - 2 * dot(x, c) + _cc(c)``. The one distance of the
+    kmeans assignment, the IVF probe and the compaction oracles."""
+    return (
+        f"list_inner_product({x}, {x}) - 2 * list_inner_product({x}, c.c) "
+        "+ list_inner_product(c.c, c.c)"
+    )
+
+
 def kmeans_ctes(
     k: int,
     assigns: int,
@@ -886,9 +897,7 @@ def kmeans_ctes(
     ``train_where``: when set, seeds and every TRAINING assignment
     (``a{i}`` for i < assigns − 1) read from the filtered sample
     ``es`` and only the FINAL assignment reads the full corpus —
-    the sampled-codebook index build of the 100 TB path. Empty
-    (default) keeps the chain byte-identical to the unsampled form
-    every pre-existing oracle stamps.
+    the sampled-codebook index build of the 100 TB path.
 
     ``assign_src``: CTE name the FINAL assignment reads (default
     ``e``, the corpus). The incremental index-maintenance oracle
@@ -896,10 +905,7 @@ def kmeans_ctes(
     chain and points the final assignment at it — training stays on
     the original sample (the codebook is FROZEN), only the
     assignment set widens."""
-    dist = (
-        "list_inner_product(e.x, e.x) - 2 * list_inner_product(e.x, c.c) "
-        "+ list_inner_product(c.c, c.c)"
-    )
+    dist = km_dist_sql()
     seed_src = "es" if train_where else "e"
     ctes = [
         E_CTE,
@@ -976,8 +982,7 @@ def _sql_bm25(
 ) -> str:
     """``src``/``head`` let the BM25-index maintenance oracles
     (plans/round11.py) point the identical scoring chain at a
-    corpus∪batch or corpus∖doomed CTE; defaults produce the
-    byte-identical string text_search_bm25 stamped."""
+    corpus∪batch or corpus∖doomed CTE."""
     from lol_data_pipeline_spark.operators.search import bm25_weight_sql
 
     nt = len(terms)
@@ -1313,13 +1318,40 @@ def graph_pagerank(spark, sf_dir):
 _PQ_M, _PQ_DSUB, _PQ_NCENT, _PQ_K, _PQ_REFINE = 8, 8, 16, 5, 4
 
 
-@query(
-    "ann_pq_topk",
-    sql=f"""
-    WITH q AS (
-      SELECT vec_id AS query_id, embedding AS qvec FROM embeddings WHERE vec_id < 10
-    ),
-    cents AS (
+def _pq_xhat_ctes(src: str = "embeddings", xcol: str = "", emit: str = "xhat") -> str:
+    """The raw-vector PQ encode→reconstruct oracle block (codebook =
+    the lowest-``_PQ_NCENT`` vectors, per-subspace argmin by (d², j),
+    xhat = concatenated chosen sub-centroids), shared by the
+    ann_pq_topk oracle and every IVF+PQ oracle in plans/round9–11 so
+    they cannot drift — the same one-definition rule the Spark side
+    gets from pq_encode. (ann_ivfpq_residual_topk's block is structurally
+    different — it encodes residuals and reconstructs c + r̂ — and
+    stays separate.)
+
+    ``src``/``xcol`` point the encode at another CTE whose
+    vector column is already DOUBLE[]; ``emit="codes"`` ends the
+    block with the m argmin code ids per vector (``codes``) instead
+    of the reconstruction — the PERSISTED index form the
+    index-maintenance oracle (plans/round10.py) re-derives."""
+    xexpr = (
+        "CAST(x.embedding AS DOUBLE[])" if src == "embeddings" else f"x.{xcol}"
+    )
+    xhat_tail = """xhat AS (
+      SELECT vec_id AS match_id, flatten(list(cs ORDER BY s)) AS xh
+      FROM chosen GROUP BY 1
+    )"""
+    codes_tail = """codes AS (
+      SELECT vec_id, array_to_string(list(j ORDER BY s), ',') AS codes
+      FROM chosen GROUP BY 1
+    )"""
+    if emit == "xhat":
+        pick, tail = "cs", xhat_tail
+    elif emit == "codes":
+        pick, tail = "j", codes_tail
+    else:  # "both": the compaction oracle needs the reconstruction
+        # (distances) AND the stored codes (disk content) at once
+        pick, tail = "cs, j", xhat_tail + ",\n    " + codes_tail
+    return f"""cents AS (
       SELECT vec_id AS j, CAST(embedding AS DOUBLE[]) AS c
       FROM embeddings WHERE vec_id < {_PQ_NCENT}
     ),
@@ -1334,8 +1366,8 @@ _PQ_M, _PQ_DSUB, _PQ_NCENT, _PQ_K, _PQ_REFINE = 8, 8, 16, 5, 4
     ),
     xs2 AS (
       SELECT x.vec_id, s.s,
-             list_slice(CAST(x.embedding AS DOUBLE[]), s.s * {_PQ_DSUB} + 1, s.s * {_PQ_DSUB} + {_PQ_DSUB}) AS xsl
-      FROM embeddings x CROSS JOIN sub s
+             list_slice({xexpr}, s.s * {_PQ_DSUB} + 1, s.s * {_PQ_DSUB} + {_PQ_DSUB}) AS xsl
+      FROM {src} x CROSS JOIN sub s
     ),
     d AS (
       SELECT xs2.vec_id, xs2.s, c.j, c.cs,
@@ -1344,14 +1376,22 @@ _PQ_M, _PQ_DSUB, _PQ_NCENT, _PQ_K, _PQ_REFINE = 8, 8, 16, 5, 4
       FROM xs2 JOIN cs2 c ON c.s = xs2.s
     ),
     chosen AS (
-      SELECT vec_id, s, cs FROM (
+      SELECT vec_id, s, {pick} FROM (
         SELECT *, row_number() OVER (PARTITION BY vec_id, s ORDER BY d2, j) AS rn FROM d
       ) WHERE rn = 1
     ),
-    xhat AS (
-      SELECT vec_id AS match_id, flatten(list(cs ORDER BY s)) AS xh
-      FROM chosen GROUP BY 1
+    {tail}"""
+
+
+
+
+@query(
+    "ann_pq_topk",
+    sql=f"""
+    WITH q AS (
+      SELECT vec_id AS query_id, embedding AS qvec FROM embeddings WHERE vec_id < 10
     ),
+    {_pq_xhat_ctes()},
     approx AS (
       SELECT qq.query_id, h.match_id, qq.qvec,
              row_number() OVER (
@@ -1386,17 +1426,10 @@ def ann_pq_topk(spark, sf_dir):
     identical codebook from the table, so encode→rank→rescore is
     reproduced end-to-end. See operators/similarity.py:pq_cosine_topk."""
     emb = T(spark, sf_dir, "embeddings")
-    seed_rows = (
-        emb.orderBy("vec_id")
-        .limit(_PQ_NCENT)
-        .select(F.col("embedding").cast("array<double>").alias("c"))
-        .collect()
-    )
-    seeds = [[float(v) for v in r.c] for r in seed_rows]
     return sim.pq_cosine_topk(
         emb,
         emb.filter(F.col("vec_id") < 10),
-        seeds,
+        sim.pq_seeds(emb, _PQ_NCENT),
         m=_PQ_M,
         dsub=_PQ_DSUB,
         k=_PQ_K,

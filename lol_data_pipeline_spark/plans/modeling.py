@@ -51,8 +51,9 @@ Scale notes (100 TB):
   √N rows. The only corpus-sized work is one id-equi join of the
   (vec_id, cell_id) index scan against the vector table — codes and
   text never move. The oracle re-derives the index build's cell
-  assignment (the standing kmeans_ctes chain every served-IVF entry
-  stamps), so served assignments are verified, not trusted.
+  assignment (round9._codebook_ctes, the codebook chain every
+  IVF+PQ oracle shares), so served assignments are verified, not
+  trusted.
 - corpus_quality_logreg: per training round the shuffle is N_FEAT
   partial BIGINT rows at ANY corpus size (map-side combined integer
   sums), driver traffic one row; the feature projection is pure
@@ -83,21 +84,11 @@ def _sql_semdedup_head() -> tuple[str, str]:
     """Shared oracle head for the SemDeDup family: the index-build
     re-derivation + within-cell pair mining + per-dropped-id keeper
     ranking. Returns (cte_block, cells_cte_name)."""
-    from lol_data_pipeline_spark.plans.extensions import SQL_COS, kmeans_ctes
-    from lol_data_pipeline_spark.plans.round9 import (
-        _IVF_CELLS,
-        _KM_ROUNDS,
-        _SAMPLE_WHERE,
-    )
+    from lol_data_pipeline_spark.plans.extensions import SQL_COS
+    from lol_data_pipeline_spark.plans.round9 import _CB_CELLS, _codebook_ctes
 
-    ctes = kmeans_ctes(
-        _IVF_CELLS,
-        assigns=_KM_ROUNDS + 1,
-        updates=_KM_ROUNDS,
-        dim=64,
-        train_where=_SAMPLE_WHERE,
-    )
-    cells = f"a{_KM_ROUNDS}"
+    ctes = _codebook_ctes()
+    cells = _CB_CELLS
     sim = SQL_COS.format(a="a.x", b="b.x")
     head = (
         "WITH "
@@ -138,7 +129,7 @@ def _semdedup_nodes(spark, sf_dir):
     from lol_data_pipeline_spark.operators.vector_index import (
         ensure_ivfpq_index,
     )
-    from lol_data_pipeline_spark.plans.round10 import _INDEX_PARAMS
+    from lol_data_pipeline_spark.plans.round9 import _INDEX_PARAMS
 
     from lol_data_pipeline_spark.operators.vector_index import (
         read_index_codes,
@@ -1003,21 +994,11 @@ _SDP_MOD = 5  # the arriving batch: vec_id % 5 == 0
 
 
 def _sql_semdedup_probe() -> str:
-    from lol_data_pipeline_spark.plans.extensions import SQL_COS, kmeans_ctes
-    from lol_data_pipeline_spark.plans.round9 import (
-        _IVF_CELLS,
-        _KM_ROUNDS,
-        _SAMPLE_WHERE,
-    )
+    from lol_data_pipeline_spark.plans.extensions import SQL_COS
+    from lol_data_pipeline_spark.plans.round9 import _CB_CELLS, _codebook_ctes
 
-    ctes = kmeans_ctes(
-        _IVF_CELLS,
-        assigns=_KM_ROUNDS + 1,
-        updates=_KM_ROUNDS,
-        dim=64,
-        train_where=_SAMPLE_WHERE,
-    )
-    cells = f"a{_KM_ROUNDS}"
+    ctes = _codebook_ctes()
+    cells = _CB_CELLS
     sim = SQL_COS.format(a="q.x", b="s.x")
     return (
         "WITH "
@@ -1060,7 +1041,7 @@ def stream_semdedup_probe_multibatch(spark, sf_dir):
     from lol_data_pipeline_spark.operators.vector_index import (
         ensure_ivfpq_index,
     )
-    from lol_data_pipeline_spark.plans.round10 import _INDEX_PARAMS
+    from lol_data_pipeline_spark.plans.round9 import _INDEX_PARAMS
     from lol_data_pipeline_spark.streaming.windows import replay_multibatch
 
     path, meta = ensure_ivfpq_index(spark, sf_dir, **_INDEX_PARAMS)
@@ -1173,21 +1154,15 @@ def retrieval_hard_negatives_served(spark, sf_dir):
     )
     from lol_data_pipeline_spark.plans.round9 import (
         _K,
-        _KMQ_HI,
-        _KMQ_LO,
-        _KMQ_TAIL_HI,
-        _KMQ_TAIL_LO,
         _NPROBE,
         _REFINE,
+        _fair_queries,
     )
 
     k2 = _K + _NEG
     refine2, rem = divmod(_REFINE * _K, k2)
     assert rem == 0, "band must equal the flagship's refine*k"
-    queries = T(spark, sf_dir, "embeddings").filter(
-        (F.col("vec_id").between(_KMQ_LO, _KMQ_HI - 1))
-        | (F.col("vec_id").between(_KMQ_TAIL_LO, _KMQ_TAIL_HI - 1))
-    )
+    queries = _fair_queries(T(spark, sf_dir, "embeddings"))
     return served_ivfpq_topk(
         spark, sf_dir, queries, k=k2, refine=refine2, nprobe=_NPROBE
     ).filter(F.col("rank") > _K)

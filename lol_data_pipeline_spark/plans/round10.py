@@ -42,32 +42,17 @@ from pyspark.sql import functions as F
 
 from lol_data_pipeline_spark.plans.queries import T, query
 from lol_data_pipeline_spark.plans.round9 import (
-    _IVF_CELLS,
+    _CB_CELLS,
+    _INDEX_PARAMS,
     _K,
-    _KM_ROUNDS,
-    _KMQ_HI,
-    _KMQ_LO,
-    _KMQ_TAIL_HI,
-    _KMQ_TAIL_LO,
     _NPROBE,
-    _PQ_DSUB,
     _PQ_M,
-    _PQ_NCENT,
     _REFINE,
-    _SAMPLE_MOD,
-    _SAMPLE_WHERE,
+    _codebook_ctes,
+    _fair_queries,
+    _fair_sql,
     _pq_xhat_ctes,
     _sql_ivfpq_kmeans,
-)
-
-_INDEX_PARAMS = dict(
-    k=_IVF_CELLS,
-    rounds=_KM_ROUNDS,
-    m=_PQ_M,
-    dsub=_PQ_DSUB,
-    ncent=_PQ_NCENT,
-    sample_mod=_SAMPLE_MOD,
-    dim=64,
 )
 
 # Incremental-maintenance batch: a deterministic TRANSFORM of a
@@ -96,26 +81,14 @@ def ann_ivfpq_served_topk(spark, sf_dir):
     (broadcast) against the full-precision source table."""
     from lol_data_pipeline_spark.operators.vector_index import served_ivfpq_topk
 
-    queries = T(spark, sf_dir, "embeddings").filter(
-        (F.col("vec_id").between(_KMQ_LO, _KMQ_HI - 1))
-        | (F.col("vec_id").between(_KMQ_TAIL_LO, _KMQ_TAIL_HI - 1))
-    )
+    queries = _fair_queries(T(spark, sf_dir, "embeddings"))
     return served_ivfpq_topk(
         spark, sf_dir, queries, k=_K, refine=_REFINE, nprobe=_NPROBE
     )
 
 
 def _sql_index_upsert() -> str:
-    from lol_data_pipeline_spark.plans.extensions import kmeans_ctes
-
-    ctes = kmeans_ctes(
-        _IVF_CELLS,
-        assigns=_KM_ROUNDS + 1,
-        updates=_KM_ROUNDS,
-        dim=64,
-        train_where=_SAMPLE_WHERE,
-        assign_src="allv",
-    )
+    ctes = _codebook_ctes(assign_src="allv")
     # Splice the corpus∪batch CTE right after (e, es) — DuckDB CTEs
     # may only reference earlier ones, and the final assignment
     # (assign_src) reads allv.
@@ -127,17 +100,16 @@ def _sql_index_upsert() -> str:
       FROM e WHERE vec_id >= {_UP_LO} AND vec_id < {_UP_HI}
     )"""
     ctes = ctes[:2] + [allv] + ctes[2:]
-    cells = f"a{_KM_ROUNDS}"
     return (
         "WITH "
         + ",\n".join(ctes)
         + f""",
-    {_pq_xhat_ctes(src=cells, xcol="x", emit="codes")},
+    {_pq_xhat_ctes(src=_CB_CELLS, xcol="x", emit="codes")},
     affected AS (
-      SELECT DISTINCT cluster FROM {cells} WHERE vec_id >= {_UP_SHIFT}
+      SELECT DISTINCT cluster FROM {_CB_CELLS} WHERE vec_id >= {_UP_SHIFT}
     )
     SELECT a.vec_id, CAST(a.cluster AS BIGINT) AS cell_id, c.codes
-    FROM {cells} a
+    FROM {_CB_CELLS} a
     JOIN codes c USING (vec_id)
     JOIN affected f ON a.cluster = f.cluster
     ORDER BY vec_id
@@ -190,23 +162,13 @@ def ann_index_upsert(spark, sf_dir):
 
 
 def _sql_stream_assign() -> str:
-    from lol_data_pipeline_spark.plans.extensions import kmeans_ctes
-
-    ctes = kmeans_ctes(
-        _IVF_CELLS,
-        assigns=_KM_ROUNDS + 1,
-        updates=_KM_ROUNDS,
-        dim=64,
-        train_where=_SAMPLE_WHERE,
-    )
-    cells = f"a{_KM_ROUNDS}"
     return (
         "WITH "
-        + ",\n".join(ctes)
+        + ",\n".join(_codebook_ctes())
         + f""",
-    {_pq_xhat_ctes(src=cells, xcol="x", emit="codes")}
+    {_pq_xhat_ctes(src=_CB_CELLS, xcol="x", emit="codes")}
     SELECT a.vec_id, CAST(a.cluster AS BIGINT) AS cell_id, c.codes
-    FROM {cells} a JOIN codes c USING (vec_id)
+    FROM {_CB_CELLS} a JOIN codes c USING (vec_id)
     ORDER BY vec_id
     """
     )
@@ -340,8 +302,7 @@ def _sql_mmr() -> str:
     ctes = [
         f"""qset AS (
       SELECT vec_id AS query_id, embedding AS qvec FROM embeddings
-      WHERE (vec_id >= {_KMQ_LO} AND vec_id < {_KMQ_HI})
-         OR (vec_id >= {_KMQ_TAIL_LO} AND vec_id < {_KMQ_TAIL_HI})
+      WHERE {_fair_sql()}
     )""",
         f"""pool AS (
       SELECT query_id, cand, rel FROM (
@@ -423,10 +384,9 @@ def ann_mmr_rerank(spark, sf_dir):
 
     lam = _MMR_LAM
     emb = T(spark, sf_dir, "embeddings")
-    q = emb.filter(
-        (F.col("vec_id").between(_KMQ_LO, _KMQ_HI - 1))
-        | (F.col("vec_id").between(_KMQ_TAIL_LO, _KMQ_TAIL_HI - 1))
-    ).select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"))
+    q = _fair_queries(emb).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
+    )
     scored = emb.join(
         F.broadcast(q), F.col("vec_id") != F.col("query_id")
     ).select(
@@ -464,27 +424,17 @@ _DEL_LO, _DEL_HI = 40, 60
 
 
 def _sql_index_delete() -> str:
-    from lol_data_pipeline_spark.plans.extensions import kmeans_ctes
-
-    ctes = kmeans_ctes(
-        _IVF_CELLS,
-        assigns=_KM_ROUNDS + 1,
-        updates=_KM_ROUNDS,
-        dim=64,
-        train_where=_SAMPLE_WHERE,
-    )
-    cells = f"a{_KM_ROUNDS}"
     return (
         "WITH "
-        + ",\n".join(ctes)
+        + ",\n".join(_codebook_ctes())
         + f""",
-    {_pq_xhat_ctes(src=cells, xcol="x", emit="codes")},
+    {_pq_xhat_ctes(src=_CB_CELLS, xcol="x", emit="codes")},
     affected AS (
-      SELECT DISTINCT cluster FROM {cells}
+      SELECT DISTINCT cluster FROM {_CB_CELLS}
       WHERE vec_id >= {_DEL_LO} AND vec_id < {_DEL_HI}
     )
     SELECT a.vec_id, CAST(a.cluster AS BIGINT) AS cell_id, c.codes
-    FROM {cells} a
+    FROM {_CB_CELLS} a
     JOIN codes c USING (vec_id)
     JOIN affected f ON a.cluster = f.cluster
     WHERE a.vec_id < {_DEL_LO} OR a.vec_id >= {_DEL_HI}
@@ -544,12 +494,6 @@ _BEAM_R = 3  # expansion rounds (bounded — graph diameter at toy scale)
 _BEAM_ENTRY_N = 4  # deterministic entry points: the lowest vec_ids
 
 
-_BEAM_QUERIES = (
-    f"(vec_id >= {_KMQ_LO} AND vec_id < {_KMQ_HI})"
-    f" OR (vec_id >= {_KMQ_TAIL_LO} AND vec_id < {_KMQ_TAIL_HI})"
-)
-
-
 def beam_ctes(queries: str, k: int, entries: str | None = None) -> list[str]:
     """The beam-walk oracle chain — the DuckDB twin of
     operators/graph_index.beam_walk — over the kNN edge chain
@@ -605,7 +549,7 @@ def beam_ctes(queries: str, k: int, entries: str | None = None) -> list[str]:
 def _sql_graph_beam() -> str:
     from lol_data_pipeline_spark.plans.extensions import E_CTE, knn_edge_ctes
 
-    ctes = [E_CTE] + knn_edge_ctes("e") + beam_ctes(_BEAM_QUERIES, _K)
+    ctes = [E_CTE] + knn_edge_ctes("e") + beam_ctes(_fair_sql(), _K)
     return "WITH " + ",\n".join(ctes) + "\n    SELECT * FROM btop\n    "
 
 
@@ -636,10 +580,7 @@ def ann_graph_beam_topk(spark, sf_dir):
     from lol_data_pipeline_spark.plans.extensions import _GRAPH_K, _GRAPH_PLANES
 
     emb = T(spark, sf_dir, "embeddings")
-    q = emb.filter(
-        (F.col("vec_id").between(_KMQ_LO, _KMQ_HI - 1))
-        | (F.col("vec_id").between(_KMQ_TAIL_LO, _KMQ_TAIL_HI - 1))
-    )
+    q = _fair_queries(emb)
     return beam_walk(
         knn_graph(emb, n_planes=_GRAPH_PLANES, k=_GRAPH_K),
         emb,

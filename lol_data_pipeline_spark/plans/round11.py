@@ -63,16 +63,17 @@ from lol_data_pipeline_spark.plans.extensions import (
 )
 from lol_data_pipeline_spark.plans.queries import T, query
 from lol_data_pipeline_spark.plans.round9 import (
+    _CB_CELLS,
+    _CB_CENTS,
     _K,
-    _KMQ_HI,
-    _KMQ_LO,
-    _KMQ_TAIL_HI,
-    _KMQ_TAIL_LO,
+    _codebook_ctes,
+    _fair_queries,
+    _fair_sql,
+    _serve_head,
 )
 from lol_data_pipeline_spark.plans.round10 import (
     _BEAM_B,
     _BEAM_ENTRY_N,
-    _BEAM_QUERIES,
     _BEAM_R,
     _sql_graph_beam,
     beam_ctes,
@@ -104,10 +105,7 @@ def ann_graph_beam_served_topk(spark, sf_dir):
     change."""
     from lol_data_pipeline_spark.operators.graph_index import served_beam_topk
 
-    queries = T(spark, sf_dir, "embeddings").filter(
-        (F.col("vec_id").between(_KMQ_LO, _KMQ_HI - 1))
-        | (F.col("vec_id").between(_KMQ_TAIL_LO, _KMQ_TAIL_HI - 1))
-    )
+    queries = _fair_queries(T(spark, sf_dir, "embeddings"))
     return served_beam_topk(
         spark,
         sf_dir,
@@ -271,79 +269,20 @@ def graph_index_delete(spark, sf_dir):
 
 def _sql_served_pool_head() -> str:
     """Oracle CTE chain reproducing the SERVED IVF+PQ pool: the
-    sampled-trained codebook + probe + ADC + exact rescore of
-    plans/round9.py's _sql_ivfpq_kmeans, ending in a
-    ``pool``(query_id, cand, rel) CTE of the top-{pool} rescored
-    candidates per query — exactly what served_ivfpq_topk(k=pool)
-    returns, because serving is bit-identical to recomputation
+    shared codebook and serve chain (round9._serve_head) cut at
+    refine·pool, ending in a ``pool``(query_id, cand, rel) CTE of the
+    top-{pool} rescored candidates per query — exactly what
+    served_ivfpq_topk(k=pool) returns, because serving is
+    bit-identical to recomputation
     (tests/test_round10_ops.py::test_decode_matches_inquery_encode_bitwise)."""
-    from lol_data_pipeline_spark.plans.extensions import SQL_COS, kmeans_ctes
-    from lol_data_pipeline_spark.plans.round9 import (
-        _IVF_CELLS,
-        _KM_ROUNDS,
-        _NPROBE,
-        _REFINE,
-        _SAMPLE_WHERE,
-        _pq_xhat_ctes,
-    )
+    from lol_data_pipeline_spark.plans.round9 import _REFINE
     from lol_data_pipeline_spark.plans.round10 import _MMR_POOL
 
-    ctes = kmeans_ctes(
-        _IVF_CELLS,
-        assigns=_KM_ROUNDS + 1,
-        updates=_KM_ROUNDS,
-        dim=64,
-        train_where=_SAMPLE_WHERE,
-    )
-    cells = f"a{_KM_ROUNDS}"
-    trained = f"c{_KM_ROUNDS}"
-    dist = (
-        "list_inner_product(e.x, e.x) - 2 * list_inner_product(e.x, c.c) "
-        "+ list_inner_product(c.c, c.c)"
-    )
-    return (
-        "WITH "
-        + ",\n".join(ctes)
-        + f""",
-    qprobe AS (
-      SELECT vec_id AS query_id, x AS qvec, cid AS pcell, rn AS probe_rank
-      FROM (
-        SELECT e.vec_id, e.x, c.cid,
-               row_number() OVER (PARTITION BY e.vec_id
-                                  ORDER BY {dist}, c.cid) AS rn
-        FROM e CROSS JOIN {trained} c
-        WHERE (e.vec_id >= {_KMQ_LO} AND e.vec_id < {_KMQ_HI})
-           OR (e.vec_id >= {_KMQ_TAIL_LO} AND e.vec_id < {_KMQ_TAIL_HI})
-      ) WHERE rn <= {_NPROBE}
-    ),
-    {_pq_xhat_ctes()},
-    approx AS (
-      SELECT q.query_id, cl.vec_id AS match_id, q.qvec,
-             row_number() OVER (
-               PARTITION BY q.query_id
-               ORDER BY list_inner_product(q.qvec, h.xh) DESC,
-                        cl.vec_id
-             ) AS arank
-      FROM qprobe q
-      JOIN {cells} cl ON cl.cluster = q.pcell AND cl.vec_id <> q.query_id
-      JOIN xhat h ON h.match_id = cl.vec_id
-    ),
-    cand AS (
-      SELECT a.query_id, a.match_id,
-             {SQL_COS.format(a='a.qvec', b='e.embedding')} AS sim
-      FROM approx a JOIN embeddings e ON e.vec_id = a.match_id
-      WHERE a.arank <= {_REFINE * _MMR_POOL}
-    ),
+    return _serve_head(_fair_sql("e"), _REFINE * _MMR_POOL) + f""",
     pool AS (
-      SELECT query_id, match_id AS cand, sim AS rel FROM (
-        SELECT query_id, match_id, sim,
-               row_number() OVER (
-                 PARTITION BY query_id ORDER BY sim DESC, match_id
-               ) AS rnk
-        FROM cand
-      ) WHERE rnk <= {_MMR_POOL}
+      SELECT query_id, match_id AS cand, sim AS rel FROM served
+      WHERE rank <= {_MMR_POOL}
     )"""
-    )
 
 
 def _sql_mmr_rounds_tail() -> str:
@@ -433,10 +372,7 @@ def ann_served_mmr_rerank(spark, sf_dir):
     from lol_data_pipeline_spark.plans.round10 import _MMR_LAM, _MMR_K, _MMR_POOL
 
     emb = T(spark, sf_dir, "embeddings")
-    queries = emb.filter(
-        (F.col("vec_id").between(_KMQ_LO, _KMQ_HI - 1))
-        | (F.col("vec_id").between(_KMQ_TAIL_LO, _KMQ_TAIL_HI - 1))
-    )
+    queries = _fair_queries(emb)
     # keep_vec threads the candidate vectors (for the diversity
     # terms) through the rescore stage's existing corpus join — the
     # pool stage costs NO extra scan beyond the serve itself
@@ -477,32 +413,14 @@ def _compact_chain_sql() -> tuple[str, str]:
     keep-rank → next-nearest reassignment, through ``newassign`` —
     shared by the ann_index_compact oracle and the quota-trigger
     oracle (plans/round12.py) so the two compaction derivations
-    cannot drift. Emitted text is byte-identical to what
-    _sql_index_compact inlined before the extraction."""
-    from lol_data_pipeline_spark.plans.extensions import kmeans_ctes
-    from lol_data_pipeline_spark.plans.round9 import (
-        _IVF_CELLS,
-        _KM_ROUNDS,
-        _SAMPLE_WHERE,
-        _pq_xhat_ctes,
-    )
+    cannot drift."""
+    from lol_data_pipeline_spark.plans.extensions import km_dist_sql
+    from lol_data_pipeline_spark.plans.round9 import _IVF_CELLS, _pq_xhat_ctes
 
-    ctes = kmeans_ctes(
-        _IVF_CELLS,
-        assigns=_KM_ROUNDS + 1,
-        updates=_KM_ROUNDS,
-        dim=64,
-        train_where=_SAMPLE_WHERE,
-    )
-    cells = f"a{_KM_ROUNDS}"
-    trained = f"c{_KM_ROUNDS}"
-    d2 = (
-        "list_inner_product({x}, {x}) - 2 * list_inner_product({x}, c.c) "
-        "+ list_inner_product(c.c, c.c)"
-    )
+    cells, trained = _CB_CELLS, _CB_CENTS
     prefix = (
         "WITH "
-        + ",\n".join(ctes)
+        + ",\n".join(_codebook_ctes())
         + f""",
     {_pq_xhat_ctes(src=cells, xcol="x", emit="both")},
     stats AS (SELECT cluster, count(*) AS n FROM {cells} GROUP BY 1),
@@ -513,7 +431,7 @@ def _compact_chain_sql() -> tuple[str, str]:
     overq AS (SELECT s.cluster FROM stats s, tot t WHERE s.n > t.quota),
     own AS (
       SELECT a.vec_id, a.cluster AS cell_id, h.xh,
-             {d2.format(x="h.xh")} AS d2own
+             {km_dist_sql("h.xh")} AS d2own
       FROM {cells} a
       JOIN overq v ON v.cluster = a.cluster
       JOIN xhat h ON h.match_id = a.vec_id
@@ -533,7 +451,7 @@ def _compact_chain_sql() -> tuple[str, str]:
         SELECT m.vec_id, c.cid,
                row_number() OVER (
                  PARTITION BY m.vec_id
-                 ORDER BY {d2.format(x="m.xh")}, c.cid
+                 ORDER BY {km_dist_sql("m.xh")}, c.cid
                ) AS rn2
         FROM moverrows m CROSS JOIN {trained} c
         WHERE c.cid <> m.cell_id
@@ -592,7 +510,7 @@ def ann_index_compact(spark, sf_dir):
         pq_code_cols,
         read_index_codes,
     )
-    from lol_data_pipeline_spark.plans.round10 import _INDEX_PARAMS
+    from lol_data_pipeline_spark.plans.round9 import _INDEX_PARAMS
     from lol_data_pipeline_spark.plans.round9 import _PQ_M
 
     # compaction mutates in place and a single pass can leave a
@@ -745,22 +663,9 @@ _SUP_SHIFT = 300000
 
 
 def _sql_stream_upsert() -> str:
-    from lol_data_pipeline_spark.plans.extensions import kmeans_ctes
-    from lol_data_pipeline_spark.plans.round9 import (
-        _IVF_CELLS,
-        _KM_ROUNDS,
-        _SAMPLE_WHERE,
-        _pq_xhat_ctes,
-    )
+    from lol_data_pipeline_spark.plans.round9 import _pq_xhat_ctes
 
-    ctes = kmeans_ctes(
-        _IVF_CELLS,
-        assigns=_KM_ROUNDS + 1,
-        updates=_KM_ROUNDS,
-        dim=64,
-        train_where=_SAMPLE_WHERE,
-        assign_src="allv",
-    )
+    ctes = _codebook_ctes(assign_src="allv")
     allv = f"""allv AS (
       SELECT vec_id, x FROM e
       UNION ALL
@@ -769,7 +674,7 @@ def _sql_stream_upsert() -> str:
       FROM e WHERE vec_id >= {_SUP_LO} AND vec_id < {_SUP_HI}
     )"""
     ctes = ctes[:2] + [allv] + ctes[2:]
-    cells = f"a{_KM_ROUNDS}"
+    cells = _CB_CELLS
     return (
         "WITH "
         + ",\n".join(ctes)
@@ -811,7 +716,7 @@ def stream_ann_upsert_multibatch(spark, sf_dir):
         pq_code_cols,
         read_index_codes,
     )
-    from lol_data_pipeline_spark.plans.round10 import _INDEX_PARAMS
+    from lol_data_pipeline_spark.plans.round9 import _INDEX_PARAMS
     from lol_data_pipeline_spark.plans.round9 import _PQ_M
     from lol_data_pipeline_spark.streaming.windows import replay_multibatch
 
@@ -865,39 +770,17 @@ _RECALL_NPROBES = (1, 2, 4)
 
 
 def _sql_served_recall() -> str:
-    from lol_data_pipeline_spark.plans.extensions import SQL_COS, kmeans_ctes
-    from lol_data_pipeline_spark.plans.round9 import (
-        _IVF_CELLS,
-        _K,
-        _KM_ROUNDS,
-        _REFINE,
-        _SAMPLE_WHERE,
-        _pq_xhat_ctes,
-    )
+    """Per probe width, the serve chain's top-k (one chain for every
+    width of _RECALL_NPROBES, as served_ivfpq_topk_multi serves them)
+    left-joined to the brute-force top-k."""
+    from lol_data_pipeline_spark.plans.extensions import SQL_COS
+    from lol_data_pipeline_spark.plans.round9 import _REFINE
 
-    ctes = kmeans_ctes(
-        _IVF_CELLS,
-        assigns=_KM_ROUNDS + 1,
-        updates=_KM_ROUNDS,
-        dim=64,
-        train_where=_SAMPLE_WHERE,
-    )
-    cells = f"a{_KM_ROUNDS}"
-    trained = f"c{_KM_ROUNDS}"
-    dist = (
-        "list_inner_product(e.x, e.x) - 2 * list_inner_product(e.x, c.c) "
-        "+ list_inner_product(c.c, c.c)"
-    )
-    fair = (
-        f"(vec_id >= {_KMQ_LO} AND vec_id < {_KMQ_HI})"
-        f" OR (vec_id >= {_KMQ_TAIL_LO} AND vec_id < {_KMQ_TAIL_HI})"
-    )
-    head = (
-        "WITH "
-        + ",\n".join(ctes)
-        + f""",
-    {_pq_xhat_ctes()},
-    qe AS (SELECT vec_id AS query_id, x AS qvec FROM e WHERE {fair}),
+    hit = "CASE WHEN a.match_id IS NOT NULL THEN 1 ELSE 0 END"
+    return _serve_head(
+        _fair_sql("e"), _REFINE * _K, widths=_RECALL_NPROBES
+    ) + f""",
+    qe AS (SELECT vec_id AS query_id, x AS qvec FROM e WHERE {_fair_sql()}),
     se AS (
       SELECT qe.query_id, c.vec_id AS match_id,
              {SQL_COS.format(a='qe.qvec', b='c.x')} AS sim
@@ -909,66 +792,18 @@ def _sql_served_recall() -> str:
                row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, match_id) AS rank
         FROM se
       ) WHERE rank <= {_K}
-    ),
-    qprobeall AS (
-      SELECT vec_id AS query_id, x AS qvec, cid AS pcell, rn
-      FROM (
-        SELECT e.vec_id, e.x, c.cid,
-               row_number() OVER (PARTITION BY e.vec_id
-                                  ORDER BY {dist}, c.cid) AS rn
-        FROM e CROSS JOIN {trained} c
-        WHERE {fair.replace('vec_id', 'e.vec_id')}
-      ) WHERE rn <= {max(_RECALL_NPROBES)}
-    )"""
     )
-    per_np = []
-    for np_ in _RECALL_NPROBES:
-        per_np.append(f""",
-    approx{np_} AS (
-      SELECT q.query_id, cl.vec_id AS match_id, q.qvec,
-             row_number() OVER (
-               PARTITION BY q.query_id
-               ORDER BY list_inner_product(q.qvec, h.xh) DESC, cl.vec_id
-             ) AS arank
-      FROM qprobeall q
-      JOIN {cells} cl ON cl.cluster = q.pcell AND cl.vec_id <> q.query_id
-      JOIN xhat h ON h.match_id = cl.vec_id
-      WHERE q.rn <= {np_}
-    ),
-    ranked{np_} AS (
-      SELECT query_id, match_id FROM (
-        SELECT c2.query_id, c2.match_id,
-               row_number() OVER (
-                 PARTITION BY c2.query_id ORDER BY c2.sim DESC, c2.match_id
-               ) AS rank
-        FROM (
-          SELECT a.query_id, a.match_id,
-                 {SQL_COS.format(a='a.qvec', b='e2.embedding')} AS sim
-          FROM approx{np_} a JOIN embeddings e2 ON e2.vec_id = a.match_id
-          WHERE a.arank <= {_REFINE * _K}
-        ) c2
-      ) WHERE rank <= {_K}
-    )""")
-    finals = "\n    UNION ALL\n    ".join(
-        f"""SELECT CAST({np_} AS BIGINT) AS nprobe, x.query_id,
+    SELECT CAST(w.nprobe AS BIGINT) AS nprobe, x.query_id,
            CAST(count(*) AS BIGINT) AS n_exact,
-           CAST(sum(CASE WHEN a.match_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit,
-           round(CAST(sum(CASE WHEN a.match_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-                 / count(*), 6) AS recall_at_5
-    FROM exact x LEFT JOIN ranked{np_} a
-      ON a.query_id = x.query_id AND a.match_id = x.match_id
-    GROUP BY 1, 2"""
-        for np_ in _RECALL_NPROBES
-    )
-    return (
-        head
-        + "".join(per_np)
-        + f"""
-    SELECT * FROM (
-    {finals}
-    ) ORDER BY nprobe, query_id
+           CAST(sum({hit}) AS BIGINT) AS n_hit,
+           round(CAST(sum({hit}) AS DOUBLE) / count(*), 6) AS recall_at_5
+    FROM exact x CROSS JOIN widths w
+    LEFT JOIN served a
+      ON a.nprobe = w.nprobe AND a.query_id = x.query_id
+     AND a.match_id = x.match_id AND a.rank <= {_K}
+    GROUP BY 1, 2
+    ORDER BY 1, 2
     """
-    )
 
 
 @query("ann_served_recall_eval", sql=_sql_served_recall())
@@ -992,10 +827,7 @@ def ann_served_recall_eval(spark, sf_dir):
     from lol_data_pipeline_spark.plans.round9 import _REFINE
 
     emb = T(spark, sf_dir, "embeddings")
-    queries = emb.filter(
-        (F.col("vec_id").between(_KMQ_LO, _KMQ_HI - 1))
-        | (F.col("vec_id").between(_KMQ_TAIL_LO, _KMQ_TAIL_HI - 1))
-    )
+    queries = _fair_queries(emb)
     exact = sim.cosine_topk(emb, queries, k=_K).select("query_id", "match_id")
     # one multi-width plan: probe once at max(nprobe), ONE pruned
     # index scan, per-width ADC windows, one shared rescore — not
@@ -1042,30 +874,16 @@ def ann_served_recall_eval(spark, sf_dir):
 
 
 def _sql_index_stats() -> str:
-    from lol_data_pipeline_spark.plans.extensions import kmeans_ctes
     from lol_data_pipeline_spark.plans.queries import snap_sql
-    from lol_data_pipeline_spark.plans.round9 import (
-        _IVF_CELLS,
-        _KM_ROUNDS,
-        _SAMPLE_WHERE,
-    )
 
-    ctes = kmeans_ctes(
-        _IVF_CELLS,
-        assigns=_KM_ROUNDS + 1,
-        updates=_KM_ROUNDS,
-        dim=64,
-        train_where=_SAMPLE_WHERE,
-    )
-    cells = f"a{_KM_ROUNDS}"
     frac = snap_sql("CAST(s.n_members AS DOUBLE) / t.total")
     return (
         "WITH "
-        + ",\n".join(ctes)
+        + ",\n".join(_codebook_ctes())
         + f""",
     stats AS (
       SELECT CAST(cluster AS BIGINT) AS cell_id, CAST(count(*) AS BIGINT) AS n_members
-      FROM {cells} GROUP BY 1
+      FROM {_CB_CELLS} GROUP BY 1
     ),
     tot AS (SELECT sum(n_members) AS total FROM stats)
     SELECT s.cell_id, s.n_members,
@@ -1092,7 +910,7 @@ def ann_index_stats(spark, sf_dir):
         ensure_ivfpq_index,
         read_index_codes,
     )
-    from lol_data_pipeline_spark.plans.round10 import _INDEX_PARAMS
+    from lol_data_pipeline_spark.plans.round9 import _INDEX_PARAMS
 
     path, _meta = ensure_ivfpq_index(spark, sf_dir, **_INDEX_PARAMS)
     counts = (
@@ -1183,7 +1001,7 @@ def graph_index_stats(spark, sf_dir):
 def _sql_graph_recall() -> str:
     from lol_data_pipeline_spark.plans.extensions import SQL_COS
 
-    ctes = [E_CTE] + knn_edge_ctes("e") + beam_ctes(_BEAM_QUERIES, _K)
+    ctes = [E_CTE] + knn_edge_ctes("e") + beam_ctes(_fair_sql(), _K)
     return (
         "WITH "
         + ",\n".join(ctes)
@@ -1228,10 +1046,7 @@ def ann_graph_recall_eval(spark, sf_dir):
     from lol_data_pipeline_spark.operators.graph_index import served_beam_topk
 
     emb = T(spark, sf_dir, "embeddings")
-    queries = emb.filter(
-        (F.col("vec_id").between(_KMQ_LO, _KMQ_HI - 1))
-        | (F.col("vec_id").between(_KMQ_TAIL_LO, _KMQ_TAIL_HI - 1))
-    )
+    queries = _fair_queries(emb)
     exact = sim.cosine_topk(emb, queries, k=_K).select("query_id", "match_id")
     beam = served_beam_topk(
         spark,
@@ -1350,82 +1165,24 @@ _HYB_ENTRY_K = 4
 
 def _sql_hybrid_index() -> str:
     """Two persisted artifacts composed: the IVF+PQ serve chain
-    yields each query's top-{ek} candidates as PER-QUERY entry
-    points; the beam walk expands them over the k-NN graph edges.
-    CTE names: kmeans_ctes owns e/es/c*/a*/s*, the PQ chain owns
-    cents/sub/cs2/xs2/d/chosen/xhat, the graph chain owns g*-names,
-    beam rounds are b*-prefixed — zero collisions by construction."""
-    from lol_data_pipeline_spark.plans.extensions import SQL_COS, kmeans_ctes
-    from lol_data_pipeline_spark.plans.round9 import (
-        _IVF_CELLS,
-        _KM_ROUNDS,
-        _NPROBE,
-        _REFINE,
-        _SAMPLE_WHERE,
-        _pq_xhat_ctes,
-    )
+    (round9._serve_head) yields each query's top-{ek} candidates as
+    PER-QUERY entry points; the beam walk expands them over the k-NN
+    graph edges. CTE names: kmeans_ctes owns e/es/c*/a*/s*, the serve
+    chain qprobe/widths/approx/served and the PQ block's
+    cents/sub/cs2/xs2/d/chosen/xhat, the graph chain g*-names, beam
+    rounds b*-names — zero collisions by construction."""
+    from lol_data_pipeline_spark.plans.round9 import _REFINE
 
-    cells = f"a{_KM_ROUNDS}"
-    trained = f"c{_KM_ROUNDS}"
-    dist = (
-        "list_inner_product(e.x, e.x) - 2 * list_inner_product(e.x, c.c) "
-        "+ list_inner_product(c.c, c.c)"
+    entries = (
+        f"SELECT query_id, match_id AS cand FROM served WHERE rank <= {_HYB_ENTRY_K}"
     )
-    fair = (
-        f"(e.vec_id >= {_KMQ_LO} AND e.vec_id < {_KMQ_HI})"
-        f" OR (e.vec_id >= {_KMQ_TAIL_LO} AND e.vec_id < {_KMQ_TAIL_HI})"
+    graph = knn_edge_ctes("e") + beam_ctes(_fair_sql(), _K, entries)
+    return (
+        _serve_head(_fair_sql("e"), _REFINE * _HYB_ENTRY_K)
+        + ",\n"
+        + ",\n".join(graph)
+        + "\n    SELECT * FROM btop\n    "
     )
-    ctes = kmeans_ctes(
-        _IVF_CELLS,
-        assigns=_KM_ROUNDS + 1,
-        updates=_KM_ROUNDS,
-        dim=64,
-        train_where=_SAMPLE_WHERE,
-    )
-    head = (
-        "WITH "
-        + ",\n".join(ctes)
-        + f""",
-    qprobe AS (
-      SELECT vec_id AS query_id, x AS qvec, cid AS pcell, rn AS probe_rank
-      FROM (
-        SELECT e.vec_id, e.x, c.cid,
-               row_number() OVER (PARTITION BY e.vec_id
-                                  ORDER BY {dist}, c.cid) AS rn
-        FROM e CROSS JOIN {trained} c
-        WHERE {fair}
-      ) WHERE rn <= {_NPROBE}
-    ),
-    {_pq_xhat_ctes()},
-    approx AS (
-      SELECT q.query_id, cl.vec_id AS match_id, q.qvec,
-             row_number() OVER (
-               PARTITION BY q.query_id
-               ORDER BY list_inner_product(q.qvec, h.xh) DESC,
-                        cl.vec_id
-             ) AS arank
-      FROM qprobe q
-      JOIN {cells} cl ON cl.cluster = q.pcell AND cl.vec_id <> q.query_id
-      JOIN xhat h ON h.match_id = cl.vec_id
-    ),
-    rcand AS (
-      SELECT a.query_id, a.match_id,
-             {SQL_COS.format(a='a.qvec', b='e2.embedding')} AS sim
-      FROM approx a JOIN embeddings e2 ON e2.vec_id = a.match_id
-      WHERE a.arank <= {_REFINE * _HYB_ENTRY_K}
-    )"""
-    )
-    entries = f"""
-      SELECT query_id, match_id AS cand FROM (
-        SELECT query_id, match_id,
-               row_number() OVER (
-                 PARTITION BY query_id ORDER BY sim DESC, match_id
-               ) AS rnk
-        FROM rcand
-      ) WHERE rnk <= {_HYB_ENTRY_K}
-    """
-    graph = knn_edge_ctes("e") + beam_ctes(_BEAM_QUERIES, _K, entries)
-    return head + ",\n" + ",\n".join(graph) + "\n    SELECT * FROM btop\n    "
 
 
 @query("ann_hybrid_index_topk", sql=_sql_hybrid_index())
@@ -1447,10 +1204,7 @@ def ann_hybrid_index_topk(spark, sf_dir):
     from lol_data_pipeline_spark.plans.round9 import _NPROBE, _REFINE
 
     emb = T(spark, sf_dir, "embeddings")
-    queries = emb.filter(
-        (F.col("vec_id").between(_KMQ_LO, _KMQ_HI - 1))
-        | (F.col("vec_id").between(_KMQ_TAIL_LO, _KMQ_TAIL_HI - 1))
-    )
+    queries = _fair_queries(emb)
     entries = served_ivfpq_topk(
         spark, sf_dir, queries, k=_HYB_ENTRY_K, refine=_REFINE, nprobe=_NPROBE
     ).select("query_id", F.col("match_id").alias("cand"))
@@ -1684,86 +1438,45 @@ _RRF_K = 10  # fused final top-k
 _RRF_C = 60  # standard RRF constant
 
 
-def _sql_rrf_fusion() -> str:
-    """Vector leg re-derives the IVF+PQ serve chain for the single
-    query (codebook train → probe → ADC rank → bounded rescore);
-    lexical leg is the verbatim BM25 chain as a subquery; fusion is
-    a FULL OUTER JOIN so one-leg docs keep their reciprocal-rank
-    contribution (the other leg's term coalesces to 0)."""
+def _rrf_e6(*ranks: str) -> str:
+    """The fused score of both RRF entries, in both engines: round(10^6
+    · Σ 1/(C + rank)) over the legs' rank columns, a leg that missed
+    the doc contributing 0."""
+    terms = " + ".join(f"COALESCE(1.0 / ({_RRF_C} + {r}), 0.0)" for r in ranks)
+    return f"CAST(round(1000000 * ({terms})) AS BIGINT)"
+
+
+def _rrf_head() -> str:
+    """The two legs both fusion oracles share: the IVF+PQ serve chain
+    (round9._serve_head) for the single query, its top-{nv} as
+    ``vtop``(doc_id, rank_vec), and the verbatim BM25 chain's
+    top-{nl} as ``lexleg``(doc_id, rank_lex)."""
     from lol_data_pipeline_spark.plans.extensions import (
         _BM25_B,
         _BM25_K1,
         _BM25_TERMS,
-        SQL_COS,
         _sql_bm25,
-        kmeans_ctes,
     )
-    from lol_data_pipeline_spark.plans.round9 import (
-        _IVF_CELLS,
-        _KM_ROUNDS,
-        _NPROBE,
-        _REFINE,
-        _SAMPLE_WHERE,
-        _pq_xhat_ctes,
-    )
+    from lol_data_pipeline_spark.plans.round9 import _REFINE
 
-    cells = f"a{_KM_ROUNDS}"
-    trained = f"c{_KM_ROUNDS}"
-    dist = (
-        "list_inner_product(e.x, e.x) - 2 * list_inner_product(e.x, c.c) "
-        "+ list_inner_product(c.c, c.c)"
-    )
-    ctes = kmeans_ctes(
-        _IVF_CELLS,
-        assigns=_KM_ROUNDS + 1,
-        updates=_KM_ROUNDS,
-        dim=64,
-        train_where=_SAMPLE_WHERE,
-    )
     lex = _sql_bm25(_BM25_TERMS, _RRF_NL, _BM25_K1, _BM25_B)
-    return (
-        "WITH "
-        + ",\n".join(ctes)
-        + f""",
-    {_pq_xhat_ctes()},
-    qprobe AS (
-      SELECT vec_id AS query_id, x AS qvec, cid AS pcell
-      FROM (
-        SELECT e.vec_id, e.x, c.cid,
-               row_number() OVER (PARTITION BY e.vec_id
-                                  ORDER BY {dist}, c.cid) AS rn
-        FROM e CROSS JOIN {trained} c
-        WHERE e.vec_id = {_RRF_Q}
-      ) WHERE rn <= {_NPROBE}
-    ),
-    approx AS (
-      SELECT q.query_id, cl.vec_id AS match_id, q.qvec,
-             row_number() OVER (
-               PARTITION BY q.query_id
-               ORDER BY list_inner_product(q.qvec, h.xh) DESC, cl.vec_id
-             ) AS arank
-      FROM qprobe q
-      JOIN {cells} cl ON cl.cluster = q.pcell AND cl.vec_id <> q.query_id
-      JOIN xhat h ON h.match_id = cl.vec_id
-    ),
+    return _serve_head(f"e.vec_id = {_RRF_Q}", _REFINE * _RRF_NV) + f""",
     vtop AS (
-      SELECT match_id AS doc_id, rank_vec FROM (
-        SELECT a.match_id,
-               CAST(row_number() OVER (
-                 ORDER BY {SQL_COS.format(a='a.qvec', b='e2.embedding')} DESC,
-                          a.match_id
-               ) AS BIGINT) AS rank_vec
-        FROM approx a JOIN embeddings e2 ON e2.vec_id = a.match_id
-        WHERE a.arank <= {_REFINE * _RRF_NV}
-      ) WHERE rank_vec <= {_RRF_NV}
+      SELECT match_id AS doc_id, rank AS rank_vec FROM served
+      WHERE rank <= {_RRF_NV}
     ),
-    lexleg AS (SELECT doc_id, CAST(rank AS BIGINT) AS rank_lex FROM ({lex})),
+    lexleg AS (SELECT doc_id, CAST(rank AS BIGINT) AS rank_lex FROM ({lex}))"""
+
+
+def _sql_rrf_fusion() -> str:
+    """Both legs from :func:`_rrf_head`; fusion is a FULL OUTER JOIN
+    so one-leg docs keep their reciprocal-rank contribution (the
+    other leg's term coalesces to 0)."""
+    return _rrf_head() + f""",
     fused AS (
       SELECT COALESCE(l.doc_id, v.doc_id) AS doc_id,
              l.rank_lex, v.rank_vec,
-             CAST(round(1000000 * (COALESCE(1.0 / ({_RRF_C} + l.rank_lex), 0.0)
-                                   + COALESCE(1.0 / ({_RRF_C} + v.rank_vec), 0.0)))
-                  AS BIGINT) AS rrf_e6
+             {_rrf_e6("l.rank_lex", "v.rank_vec")} AS rrf_e6
       FROM lexleg l FULL OUTER JOIN vtop v ON v.doc_id = l.doc_id
     )
     SELECT doc_id, rank_lex, rank_vec, rrf_e6,
@@ -1772,25 +1485,12 @@ def _sql_rrf_fusion() -> str:
     FROM fused
     QUALIFY final_rank <= {_RRF_K}
     """
-    )
 
 
-@query("retrieval_rrf_served", sql=_sql_rrf_fusion())
-def retrieval_rrf_served(spark, sf_dir):
-    """Two-tower retrieval served ENTIRELY from persisted artifacts:
-    the lexical leg probes the BM25 inverted index (query terms →
-    literal bucket filters; operators/text_index.py) for its top-{nl},
-    the vector leg probes the IVF+PQ index (probe → pruned code scan →
-    bounded rescore; operators/vector_index.py) for the query
-    embedding's top-{nv}, and Reciprocal Rank Fusion merges them
-    union-style — a doc found by only one leg keeps that leg's
-    1/(C+rank) contribution instead of vanishing (FULL OUTER join, the
-    difference from ann_hybrid_rerank's rerank-a-lexical-pool shape).
-    RRF fuses RANKS, so the fusion is exact integer-rational
-    arithmetic at any corpus size. At 100 TB neither leg scans the
-    corpus: the lexical probe reads |terms| postings buckets, the
-    vector probe nprobe/C of the code partitions, and the fusion
-    joins two ≤{nl}+{nv}-row broadcast sets."""
+def _rrf_legs(spark, sf_dir):
+    """The served lexical (BM25 top-{nl}) and vector (IVF+PQ top-{nv})
+    legs both fusion entries run, full-outer-joined on the doc id:
+    (q, fused(doc_id, rank_lex, rank_vec)), ``q`` the query row."""
     from lol_data_pipeline_spark.operators.text_index import (
         ensure_bm25_index,
         served_bm25_topk,
@@ -1814,35 +1514,52 @@ def retrieval_rrf_served(spark, sf_dir):
         F.col("match_id").alias("vdoc"),
         F.col("rank").cast("long").alias("rank_vec"),
     )
-    fused = (
-        lex.join(vec, lex.doc_id == vec.vdoc, "full_outer")
-        .select(
-            F.coalesce(lex.doc_id, F.col("vdoc")).alias("doc_id"),
-            "rank_lex",
-            "rank_vec",
-        )
-        .withColumn(
-            "rrf_e6",
-            F.expr(
-                f"CAST(round(1000000 * (COALESCE(1.0 / ({_RRF_C} + rank_lex), 0.0)"
-                f" + COALESCE(1.0 / ({_RRF_C} + rank_vec), 0.0))) AS BIGINT)"
-            ),
-        )
+    return q, lex.join(vec, lex.doc_id == vec.vdoc, "full_outer").select(
+        F.coalesce(lex.doc_id, F.col("vdoc")).alias("doc_id"),
+        "rank_lex",
+        "rank_vec",
     )
+
+
+def _rrf_topk(fused, ranks: list[str]):
+    """``rrf_e6`` over ``ranks`` and the fused top-{k} ranked by
+    (rrf_e6 DESC, doc_id) — no unpartitioned window:
+    TakeOrderedAndProject + the bounded k×k broadcast rank derivation
+    (operators/relational.py)."""
     from lol_data_pipeline_spark.operators.relational import global_topk_ranked
 
-    # no unpartitioned window: TakeOrderedAndProject + the bounded
-    # k×k broadcast rank derivation (operators/relational.py)
     topk = global_topk_ranked(
-        fused, [("rrf_e6", True), ("doc_id", False)], _RRF_K, rank_col="final_rank"
+        fused.withColumn("rrf_e6", F.expr(_rrf_e6(*ranks))),
+        [("rrf_e6", True), ("doc_id", False)],
+        _RRF_K,
+        rank_col="final_rank",
     )
     return topk.select(
         "doc_id",
-        "rank_lex",
-        "rank_vec",
+        *ranks,
         "rrf_e6",
         F.col("final_rank").cast("long").alias("final_rank"),
     ).orderBy("final_rank")
+
+
+@query("retrieval_rrf_served", sql=_sql_rrf_fusion())
+def retrieval_rrf_served(spark, sf_dir):
+    """Two-tower retrieval served ENTIRELY from persisted artifacts:
+    the lexical leg probes the BM25 inverted index (query terms →
+    literal bucket filters; operators/text_index.py) for its top-{nl},
+    the vector leg probes the IVF+PQ index (probe → pruned code scan →
+    bounded rescore; operators/vector_index.py) for the query
+    embedding's top-{nv}, and Reciprocal Rank Fusion merges them
+    union-style — a doc found by only one leg keeps that leg's
+    1/(C+rank) contribution instead of vanishing (FULL OUTER join, the
+    difference from ann_hybrid_rerank's rerank-a-lexical-pool shape).
+    RRF fuses RANKS, so the fusion is exact integer-rational
+    arithmetic at any corpus size. At 100 TB neither leg scans the
+    corpus: the lexical probe reads |terms| postings buckets, the
+    vector probe nprobe/C of the code partitions, and the fusion
+    joins two ≤{nl}+{nv}-row broadcast sets."""
+    _q, fused = _rrf_legs(spark, sf_dir)
+    return _rrf_topk(fused, ["rank_lex", "rank_vec"])
 
 
 # ---------------------------------------------------------------------------
@@ -2419,10 +2136,6 @@ def _pca_head() -> str:
     from lol_data_pipeline_spark.plans.round10 import _PI_ROUNDS
 
     R = _PI_ROUNDS
-    fair = (
-        f"(vec_id >= {_KMQ_LO} AND vec_id < {_KMQ_HI})"
-        f" OR (vec_id >= {_KMQ_TAIL_LO} AND vec_id < {_KMQ_TAIL_HI})"
-    )
     zq = ",\n             ".join(
         f"list_inner_product(x, (SELECT v FROM d{d}v{R})) AS qz{d}"
         for d in range(_PR_DIRS)
@@ -2439,7 +2152,7 @@ def _pca_head() -> str:
     qz AS (
       SELECT vec_id AS query_id, x AS qvec,
              {zq}
-      FROM e WHERE {fair}
+      FROM e WHERE {_fair_sql()}
     ),
     cz AS (
       SELECT vec_id AS match_id,
@@ -2507,10 +2220,7 @@ def ann_pca_topk(spark, sf_dir):
     # fresh training run
     dirs = ensure_power_dirs(spark, sf_dir, r=_PR_DIRS, rounds=_PI_ROUNDS, dim=64)
     x = F.col("embedding")
-    q = emb.filter(
-        (F.col("vec_id").between(_KMQ_LO, _KMQ_HI - 1))
-        | (F.col("vec_id").between(_KMQ_TAIL_LO, _KMQ_TAIL_HI - 1))
-    ).select(
+    q = _fair_queries(emb).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qvec"),
         *[
@@ -2786,70 +2496,20 @@ def dedup_minhash_pairs_served(spark, sf_dir):
 
 
 def _sql_filtered_served() -> str:
+    """The serve chain with the label predicate on the probed cells'
+    members, applied before ADC ranking as the served pre-filter
+    does."""
     from lol_data_pipeline_spark.plans.curation import _FILT_K, _FILT_LABEL, _FILT_NQ
-    from lol_data_pipeline_spark.plans.extensions import SQL_COS, kmeans_ctes
-    from lol_data_pipeline_spark.plans.round9 import (
-        _IVF_CELLS,
-        _KM_ROUNDS,
-        _NPROBE,
-        _REFINE,
-        _SAMPLE_WHERE,
-        _pq_xhat_ctes,
-    )
+    from lol_data_pipeline_spark.plans.round9 import _REFINE
 
-    ctes = kmeans_ctes(
-        _IVF_CELLS, assigns=_KM_ROUNDS + 1, updates=_KM_ROUNDS, dim=64,
-        train_where=_SAMPLE_WHERE,
-    )
-    cells = f"a{_KM_ROUNDS}"
-    trained = f"c{_KM_ROUNDS}"
-    dist = (
-        "list_inner_product(e.x, e.x) - 2 * list_inner_product(e.x, c.c) "
-        "+ list_inner_product(c.c, c.c)"
-    )
-    return (
-        "WITH "
-        + ",\n".join(ctes)
-        + f""",
-    qprobe AS (
-      SELECT vec_id AS query_id, x AS qvec, cid AS pcell, rn AS probe_rank
-      FROM (
-        SELECT e.vec_id, e.x, c.cid,
-               row_number() OVER (PARTITION BY e.vec_id
-                                  ORDER BY {dist}, c.cid) AS rn
-        FROM e CROSS JOIN {trained} c
-        WHERE e.vec_id < {_FILT_NQ}
-      ) WHERE rn <= {_NPROBE}
-    ),
-    {_pq_xhat_ctes()},
-    approx AS (
-      SELECT q.query_id, cl.vec_id AS match_id, lf.label, q.qvec,
-             CAST(q.probe_rank AS BIGINT) AS probe_rank,
-             row_number() OVER (
-               PARTITION BY q.query_id
-               ORDER BY list_inner_product(q.qvec, h.xh) DESC,
-                        cl.vec_id
-             ) AS arank
-      FROM qprobe q
-      JOIN {cells} cl ON cl.cluster = q.pcell AND cl.vec_id <> q.query_id
-      JOIN embeddings lf ON lf.vec_id = cl.vec_id AND lf.label = {_FILT_LABEL}
-      JOIN xhat h ON h.match_id = cl.vec_id
-    ),
-    rcand AS (
-      SELECT a.query_id, a.match_id, a.label, a.probe_rank,
-             {SQL_COS.format(a='a.qvec', b='e2.embedding')} AS sim
-      FROM approx a JOIN embeddings e2 ON e2.vec_id = a.match_id
-      WHERE a.arank <= {_REFINE * _FILT_K}
-    )
-    SELECT query_id, match_id, label, probe_rank, sim, rank FROM (
-      SELECT query_id, match_id, label, probe_rank, sim,
-             CAST(row_number() OVER (
-               PARTITION BY query_id ORDER BY sim DESC, match_id
-             ) AS BIGINT) AS rank
-      FROM rcand
-    ) WHERE rank <= {_FILT_K}
+    member = f"cl.vec_id IN (SELECT vec_id FROM embeddings WHERE label = {_FILT_LABEL})"
+    return _serve_head(
+        f"e.vec_id < {_FILT_NQ}", _REFINE * _FILT_K, member=member
+    ) + f"""
+    SELECT s.query_id, s.match_id, lf.label, s.probe_rank, s.sim, s.rank
+    FROM served s JOIN embeddings lf ON lf.vec_id = s.match_id
+    WHERE s.rank <= {_FILT_K}
     """
-    )
 
 
 @query("ann_filtered_served_topk", sql=_sql_filtered_served())
@@ -2951,10 +2611,7 @@ def ann_pca_recall_eval(spark, sf_dir):
     from lol_data_pipeline_spark.plans import REGISTRY
 
     emb = T(spark, sf_dir, "embeddings")
-    queries = emb.filter(
-        (F.col("vec_id").between(_KMQ_LO, _KMQ_HI - 1))
-        | (F.col("vec_id").between(_KMQ_TAIL_LO, _KMQ_TAIL_HI - 1))
-    )
+    queries = _fair_queries(emb)
     exact = sim.cosine_topk(emb, queries, k=_K).select("query_id", "match_id")
     pca = (
         REGISTRY["ann_pca_topk"]
@@ -2996,95 +2653,25 @@ _RRF_NG = 10  # graph pool size (bounded by the beam's scored set)
 
 
 def _sql_rrf3_fusion() -> str:
-    """Three legs re-derived end-to-end: the IVF serve chain and the
-    lexical chain exactly as _sql_rrf_fusion builds them, plus the
-    beam unroll over the persisted-edge construction for the single
-    query (entries = the beam's default lowest-id nodes); fusion
-    chains two FULL OUTER joins through a coalesced doc_id."""
-    from lol_data_pipeline_spark.plans.extensions import (
-        _BM25_B,
-        _BM25_K1,
-        _BM25_TERMS,
-        SQL_COS,
-        _sql_bm25,
-        kmeans_ctes,
-    )
-    from lol_data_pipeline_spark.plans.round9 import (
-        _IVF_CELLS,
-        _KM_ROUNDS,
-        _NPROBE,
-        _REFINE,
-        _SAMPLE_WHERE,
-        _pq_xhat_ctes,
-    )
-
-    cells = f"a{_KM_ROUNDS}"
-    trained = f"c{_KM_ROUNDS}"
-    dist = (
-        "list_inner_product(e.x, e.x) - 2 * list_inner_product(e.x, c.c) "
-        "+ list_inner_product(c.c, c.c)"
-    )
-    ctes = kmeans_ctes(
-        _IVF_CELLS,
-        assigns=_KM_ROUNDS + 1,
-        updates=_KM_ROUNDS,
-        dim=64,
-        train_where=_SAMPLE_WHERE,
-    )
-    lex = _sql_bm25(_BM25_TERMS, _RRF_NL, _BM25_K1, _BM25_B)
+    """Three legs re-derived end-to-end: the IVF and lexical legs of
+    :func:`_rrf_head`, plus the beam unroll over the persisted-edge
+    construction for the single query (entries = the beam's default
+    lowest-id nodes); fusion chains two FULL OUTER joins through a
+    coalesced doc_id."""
     graph_ctes = ",\n    ".join(
         knn_edge_ctes("e") + beam_ctes(f"vec_id = {_RRF_Q}", _RRF_NG)
     )
-    return (
-        "WITH "
-        + ",\n".join(ctes)
-        + f""",
-    {_pq_xhat_ctes()},
-    qprobe AS (
-      SELECT vec_id AS query_id, x AS qvec, cid AS pcell
-      FROM (
-        SELECT e.vec_id, e.x, c.cid,
-               row_number() OVER (PARTITION BY e.vec_id
-                                  ORDER BY {dist}, c.cid) AS rn
-        FROM e CROSS JOIN {trained} c
-        WHERE e.vec_id = {_RRF_Q}
-      ) WHERE rn <= {_NPROBE}
-    ),
-    approx AS (
-      SELECT q.query_id, cl.vec_id AS match_id, q.qvec,
-             row_number() OVER (
-               PARTITION BY q.query_id
-               ORDER BY list_inner_product(q.qvec, h.xh) DESC, cl.vec_id
-             ) AS arank
-      FROM qprobe q
-      JOIN {cells} cl ON cl.cluster = q.pcell AND cl.vec_id <> q.query_id
-      JOIN xhat h ON h.match_id = cl.vec_id
-    ),
-    vtop AS (
-      SELECT match_id AS doc_id, rank_vec FROM (
-        SELECT a.match_id,
-               CAST(row_number() OVER (
-                 ORDER BY {SQL_COS.format(a='a.qvec', b='e2.embedding')} DESC,
-                          a.match_id
-               ) AS BIGINT) AS rank_vec
-        FROM approx a JOIN embeddings e2 ON e2.vec_id = a.match_id
-        WHERE a.arank <= {_REFINE * _RRF_NV}
-      ) WHERE rank_vec <= {_RRF_NV}
-    ),
+    rrf = _rrf_e6("f.rank_lex", "f.rank_vec", "g.rank_graph")
+    return _rrf_head() + f""",
     {graph_ctes},
     gtop AS (SELECT match_id AS doc_id, rank AS rank_graph FROM btop),
-    lexleg AS (SELECT doc_id, CAST(rank AS BIGINT) AS rank_lex FROM ({lex})),
     fused2 AS (
       SELECT COALESCE(l.doc_id, v.doc_id) AS doc_id, l.rank_lex, v.rank_vec
       FROM lexleg l FULL OUTER JOIN vtop v ON v.doc_id = l.doc_id
     ),
     fused AS (
       SELECT COALESCE(f.doc_id, g.doc_id) AS doc_id,
-             f.rank_lex, f.rank_vec, g.rank_graph,
-             CAST(round(1000000 * (COALESCE(1.0 / ({_RRF_C} + f.rank_lex), 0.0)
-                                   + COALESCE(1.0 / ({_RRF_C} + f.rank_vec), 0.0)
-                                   + COALESCE(1.0 / ({_RRF_C} + g.rank_graph), 0.0)))
-                  AS BIGINT) AS rrf_e6
+             f.rank_lex, f.rank_vec, g.rank_graph, {rrf} AS rrf_e6
       FROM fused2 f FULL OUTER JOIN gtop g ON g.doc_id = f.doc_id
     )
     SELECT doc_id, rank_lex, rank_vec, rank_graph, rrf_e6,
@@ -3093,7 +2680,6 @@ def _sql_rrf3_fusion() -> str:
     FROM fused
     QUALIFY final_rank <= {_RRF_K}
     """
-    )
 
 
 @query("retrieval_rrf3_served", sql=_sql_rrf3_fusion())
@@ -3113,30 +2699,8 @@ def retrieval_rrf3_served(spark, sf_dir):
     arithmetic on ≤{nl}+{nv}+{ng} rows. The oracle re-derives all
     three serve chains and both fusion joins in one statement."""
     from lol_data_pipeline_spark.operators.graph_index import served_beam_topk
-    from lol_data_pipeline_spark.operators.relational import global_topk_ranked
-    from lol_data_pipeline_spark.operators.text_index import (
-        ensure_bm25_index,
-        served_bm25_topk,
-    )
-    from lol_data_pipeline_spark.operators.vector_index import served_ivfpq_topk
-    from lol_data_pipeline_spark.plans.extensions import (
-        _BM25_B,
-        _BM25_K1,
-        _BM25_TERMS,
-    )
-    from lol_data_pipeline_spark.plans.round9 import _NPROBE, _REFINE
 
-    path, meta = ensure_bm25_index(spark, sf_dir)
-    lex = served_bm25_topk(
-        spark, path, meta, _BM25_TERMS, k=_RRF_NL, k1=_BM25_K1, b=_BM25_B
-    ).select("doc_id", F.col("rank").cast("long").alias("rank_lex"))
-    q = T(spark, sf_dir, "embeddings").filter(F.col("vec_id") == _RRF_Q)
-    vec = served_ivfpq_topk(
-        spark, sf_dir, q, k=_RRF_NV, refine=_REFINE, nprobe=_NPROBE
-    ).select(
-        F.col("match_id").alias("vdoc"),
-        F.col("rank").cast("long").alias("rank_vec"),
-    )
+    q, fused2 = _rrf_legs(spark, sf_dir)
     graph = served_beam_topk(
         spark, sf_dir, q, k=_RRF_NG, beam=_BEAM_B, rounds=_BEAM_R,
         entry_n=_BEAM_ENTRY_N,
@@ -3144,36 +2708,10 @@ def retrieval_rrf3_served(spark, sf_dir):
         F.col("match_id").alias("gdoc"),
         F.col("rank").cast("long").alias("rank_graph"),
     )
-    fused2 = lex.join(vec, lex.doc_id == vec.vdoc, "full_outer").select(
-        F.coalesce(lex.doc_id, F.col("vdoc")).alias("doc_id"),
-        "rank_lex",
-        "rank_vec",
-    )
-    fused = (
-        fused2.join(graph, fused2.doc_id == graph.gdoc, "full_outer")
-        .select(
-            F.coalesce(fused2.doc_id, F.col("gdoc")).alias("doc_id"),
-            "rank_lex",
-            "rank_vec",
-            "rank_graph",
-        )
-        .withColumn(
-            "rrf_e6",
-            F.expr(
-                f"CAST(round(1000000 * (COALESCE(1.0 / ({_RRF_C} + rank_lex), 0.0)"
-                f" + COALESCE(1.0 / ({_RRF_C} + rank_vec), 0.0)"
-                f" + COALESCE(1.0 / ({_RRF_C} + rank_graph), 0.0))) AS BIGINT)"
-            ),
-        )
-    )
-    topk = global_topk_ranked(
-        fused, [("rrf_e6", True), ("doc_id", False)], _RRF_K, rank_col="final_rank"
-    )
-    return topk.select(
-        "doc_id",
+    fused = fused2.join(graph, fused2.doc_id == graph.gdoc, "full_outer").select(
+        F.coalesce(fused2.doc_id, F.col("gdoc")).alias("doc_id"),
         "rank_lex",
         "rank_vec",
         "rank_graph",
-        "rrf_e6",
-        F.col("final_rank").cast("long").alias("final_rank"),
-    ).orderBy("final_rank")
+    )
+    return _rrf_topk(fused, ["rank_lex", "rank_vec", "rank_graph"])

@@ -170,7 +170,7 @@ def ann_index_quota_trigger(spark, sf_dir):
         ensure_ivfpq_index,
         index_compact,
     )
-    from lol_data_pipeline_spark.plans.round10 import _INDEX_PARAMS
+    from lol_data_pipeline_spark.plans.round9 import _INDEX_PARAMS
 
     path, meta = ensure_ivfpq_index(
         spark, sf_dir, variant="trigger", **_INDEX_PARAMS
@@ -585,29 +585,20 @@ _RB_DEN = 8
 
 
 def _sql_rebuild_decision() -> str:
-    from lol_data_pipeline_spark.plans.extensions import kmeans_ctes
     from lol_data_pipeline_spark.plans.queries import snap_sql
     from lol_data_pipeline_spark.plans.round9 import (
+        _CB_CELLS,
         _IVF_CELLS,
-        _KM_ROUNDS,
-        _SAMPLE_WHERE,
+        _codebook_ctes,
     )
 
-    ctes = kmeans_ctes(
-        _IVF_CELLS,
-        assigns=_KM_ROUNDS + 1,
-        updates=_KM_ROUNDS,
-        dim=64,
-        train_where=_SAMPLE_WHERE,
-    )
-    cells = f"a{_KM_ROUNDS}"
     frac = snap_sql("CAST(m.n_movers AS DOUBLE) / m.total")
     return (
         "WITH "
-        + ",\n".join(ctes)
+        + ",\n".join(_codebook_ctes())
         + f""",
     stats AS (
-      SELECT cluster, CAST(count(*) AS BIGINT) AS n FROM {cells} GROUP BY 1
+      SELECT cluster, CAST(count(*) AS BIGINT) AS n FROM {_CB_CELLS} GROUP BY 1
     ),
     tot AS (
       SELECT CAST(sum(n) AS BIGINT) AS total,
@@ -649,7 +640,7 @@ def ann_index_rebuild_decision(spark, sf_dir):
     from lol_data_pipeline_spark.operators.vector_index import (
         ensure_ivfpq_index,
     )
-    from lol_data_pipeline_spark.plans.round10 import _INDEX_PARAMS
+    from lol_data_pipeline_spark.plans.round9 import _INDEX_PARAMS
 
     path, meta = ensure_ivfpq_index(spark, sf_dir, **_INDEX_PARAMS)
     k = meta["params"]["k"]

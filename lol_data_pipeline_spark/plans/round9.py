@@ -39,9 +39,17 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from lol_data_pipeline_spark.plans.extensions import (
+    _PQ_DSUB,
+    _PQ_M,
+    _PQ_NCENT,
+    SQL_COS,
+    _pq_xhat_ctes,
+    km_dist_sql,
+    kmeans_ctes,
+)
 from lol_data_pipeline_spark.plans.queries import T, query
 
-_PQ_M, _PQ_DSUB, _PQ_NCENT = 8, 8, 16
 _IVF_CELLS = 8
 _NPROBE = 2
 _NQ = 10
@@ -67,77 +75,113 @@ _KMQ_TAIL_LO, _KMQ_TAIL_HI = 490, 500
 # the flagship composes from the sampled codebook).
 _SAMPLE_MOD = 4
 _SAMPLE_WHERE = f"vec_id % {_SAMPLE_MOD} = 0"
+# The persisted index's build parameters (vector_index.build_ivfpq_index);
+# the flagship trains and encodes with the same ones.
+_INDEX_PARAMS = dict(
+    k=_IVF_CELLS,
+    rounds=_KM_ROUNDS,
+    m=_PQ_M,
+    dsub=_PQ_DSUB,
+    ncent=_PQ_NCENT,
+    sample_mod=_SAMPLE_MOD,
+    dim=64,
+)
+# the sampled codebook's final cells and centroids (see _codebook_ctes)
+_CB_CELLS, _CB_CENTS = f"a{_KM_ROUNDS}", f"c{_KM_ROUNDS}"
 
 
-def _pq_xhat_ctes(src: str = "embeddings", xcol: str = "", emit: str = "xhat") -> str:
-    """The raw-vector PQ encode→reconstruct oracle block (codebook =
-    lowest-{nc} vectors, per-subspace argmin by (d², j), xhat =
-    concatenated chosen sub-centroids), shared VERBATIM by the
-    ann_ivfpq_topk and ann_ivfpq_kmeans_topk oracles so the two
-    cannot drift — the same one-definition rule the Spark side gets
-    from pq_encode. (ann_ivfpq_residual_topk's block is structurally
-    different — it encodes residuals and reconstructs c + r̂ — and
-    stays separate.)
-
-    Defaults produce the byte-identical block those stamped oracles
-    recorded. ``src``/``xcol`` point the encode at another CTE whose
-    vector column is already DOUBLE[]; ``emit="codes"`` ends the
-    block with the m argmin code ids per vector (``codes``) instead
-    of the reconstruction — the PERSISTED index form the
-    index-maintenance oracle (plans/round10.py) re-derives."""
-    xexpr = (
-        "CAST(x.embedding AS DOUBLE[])" if src == "embeddings" else f"x.{xcol}"
+def _fair_queries(df):
+    """The fair query set's rows of ``df`` (any frame with vec_id)."""
+    return df.filter(
+        F.col("vec_id").between(_KMQ_LO, _KMQ_HI - 1)
+        | F.col("vec_id").between(_KMQ_TAIL_LO, _KMQ_TAIL_HI - 1)
     )
-    xhat_tail = """xhat AS (
-      SELECT vec_id AS match_id, flatten(list(cs ORDER BY s)) AS xh
-      FROM chosen GROUP BY 1
+
+
+def _fair_sql(alias: str = "") -> str:
+    """The fair query set as an oracle predicate on ``alias.vec_id``
+    (bare ``vec_id`` when no alias is given)."""
+    v = f"{alias}.vec_id" if alias else "vec_id"
+    return (
+        f"({v} >= {_KMQ_LO} AND {v} < {_KMQ_HI})"
+        f" OR ({v} >= {_KMQ_TAIL_LO} AND {v} < {_KMQ_TAIL_HI})"
+    )
+
+
+def _codebook_ctes(assign_src: str = "e") -> list[str]:
+    """The sampled-trained codebook every IVF+PQ oracle re-derives —
+    build_ivfpq_index's training and assignment: extensions.
+    kmeans_ctes with ``_IVF_CELLS`` cells and ``_KM_ROUNDS`` Lloyd
+    rounds on the ``_SAMPLE_WHERE`` sample; cells ``_CB_CELLS``, centroids
+    ``_CB_CENTS``. ``assign_src`` is the CTE the final assignment
+    reads: the upsert oracles splice a corpus∪batch CTE after
+    ``e``/``es`` and point it there."""
+    return kmeans_ctes(
+        _IVF_CELLS, assigns=_KM_ROUNDS + 1, updates=_KM_ROUNDS, dim=64,
+        train_where=_SAMPLE_WHERE, assign_src=assign_src,
+    )
+
+
+def _serve_head(
+    queries: str, cut: int, widths: tuple[int, ...] = (_NPROBE,), member: str = ""
+) -> str:
+    """``WITH`` the codebook (:func:`_codebook_ctes`) and the IVF+PQ
+    serve chain over it, the oracle twin of vector_index._served_topk:
+
+    - ``qprobe``: each ``e`` row matching ``queries`` (the query set)
+      with its max(``widths``) nearest trained cells, by (d², cid);
+    - the PQ ``xhat`` block (:func:`_pq_xhat_ctes`);
+    - ``widths``: one row per probe width ``nprobe``;
+    - ``approx``: per width and query, the members of the cells that
+      width probes (never the query itself; only those matching the
+      ``member`` predicate on ``cl.vec_id``, when given) ranked by
+      ⟨q, x̂⟩;
+    - ``served``: the top ``cut`` of each (nprobe, query) rescored by
+      exact cosine and ranked — (nprobe, query_id, match_id,
+      probe_rank, sim, rank)."""
+    keep = f" AND {member}" if member else ""
+    rows = " UNION ALL ".join(f"SELECT {w} AS nprobe" for w in widths)
+    return "WITH " + ",\n".join(_codebook_ctes()) + f""",
+    qprobe AS (
+      SELECT vec_id AS query_id, x AS qvec, cid AS pcell, rn AS probe_rank
+      FROM (
+        SELECT e.vec_id, e.x, c.cid,
+               row_number() OVER (PARTITION BY e.vec_id
+                                  ORDER BY {km_dist_sql()}, c.cid) AS rn
+        FROM e CROSS JOIN {_CB_CENTS} c
+        WHERE {queries}
+      ) WHERE rn <= {max(widths)}
+    ),
+    {_pq_xhat_ctes()},
+    widths AS ({rows}),
+    approx AS (
+      SELECT w.nprobe, q.query_id, cl.vec_id AS match_id, q.qvec,
+             CAST(q.probe_rank AS BIGINT) AS probe_rank,
+             row_number() OVER (
+               PARTITION BY w.nprobe, q.query_id
+               ORDER BY list_inner_product(q.qvec, h.xh) DESC, cl.vec_id
+             ) AS arank
+      FROM qprobe q
+      JOIN widths w ON q.probe_rank <= w.nprobe
+      JOIN {_CB_CELLS} cl
+        ON cl.cluster = q.pcell AND cl.vec_id <> q.query_id{keep}
+      JOIN xhat h ON h.match_id = cl.vec_id
+    ),
+    served AS (
+      SELECT nprobe, query_id, match_id, probe_rank, sim,
+             CAST(row_number() OVER (
+               PARTITION BY nprobe, query_id ORDER BY sim DESC, match_id
+             ) AS BIGINT) AS rank
+      FROM (
+        SELECT a.nprobe, a.query_id, a.match_id, a.probe_rank,
+               {SQL_COS.format(a='a.qvec', b='e2.embedding')} AS sim
+        FROM approx a JOIN embeddings e2 ON e2.vec_id = a.match_id
+        WHERE a.arank <= {cut}
+      )
     )"""
-    codes_tail = """codes AS (
-      SELECT vec_id, array_to_string(list(j ORDER BY s), ',') AS codes
-      FROM chosen GROUP BY 1
-    )"""
-    if emit == "xhat":
-        pick, tail = "cs", xhat_tail
-    elif emit == "codes":
-        pick, tail = "j", codes_tail
-    else:  # "both": the compaction oracle needs the reconstruction
-        # (distances) AND the stored codes (disk content) at once
-        pick, tail = "cs, j", xhat_tail + ",\n    " + codes_tail
-    return f"""cents AS (
-      SELECT vec_id AS j, CAST(embedding AS DOUBLE[]) AS c
-      FROM embeddings WHERE vec_id < {_PQ_NCENT}
-    ),
-    sub AS (SELECT unnest(generate_series(0, {_PQ_M - 1})) AS s),
-    cs2 AS (
-      SELECT s.s, c.j, list_slice(c.c, s.s * {_PQ_DSUB} + 1, s.s * {_PQ_DSUB} + {_PQ_DSUB}) AS cs,
-             list_inner_product(
-               list_slice(c.c, s.s * {_PQ_DSUB} + 1, s.s * {_PQ_DSUB} + {_PQ_DSUB}),
-               list_slice(c.c, s.s * {_PQ_DSUB} + 1, s.s * {_PQ_DSUB} + {_PQ_DSUB})
-             ) AS cc
-      FROM cents c CROSS JOIN sub s
-    ),
-    xs2 AS (
-      SELECT x.vec_id, s.s,
-             list_slice({xexpr}, s.s * {_PQ_DSUB} + 1, s.s * {_PQ_DSUB} + {_PQ_DSUB}) AS xsl
-      FROM {src} x CROSS JOIN sub s
-    ),
-    d AS (
-      SELECT xs2.vec_id, xs2.s, c.j, c.cs,
-             list_inner_product(xs2.xsl, xs2.xsl)
-               - 2 * list_inner_product(xs2.xsl, c.cs) + c.cc AS d2
-      FROM xs2 JOIN cs2 c ON c.s = xs2.s
-    ),
-    chosen AS (
-      SELECT vec_id, s, {pick} FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id, s ORDER BY d2, j) AS rn FROM d
-      ) WHERE rn = 1
-    ),
-    {tail}"""
 
 
 def _sql_ivfpq() -> str:
-    from lol_data_pipeline_spark.plans.extensions import SQL_COS
-
     return f"""
     WITH cent AS (
       SELECT vec_id AS cell_id, embedding AS centvec
@@ -202,18 +246,11 @@ def ann_ivfpq_topk(spark, sf_dir):
     from lol_data_pipeline_spark.operators import similarity as sim
 
     emb = T(spark, sf_dir, "embeddings")
-    seed_rows = (
-        emb.orderBy("vec_id")
-        .limit(_PQ_NCENT)
-        .select(F.col("embedding").cast("array<double>").alias("c"))
-        .collect()
-    )
-    seeds = [[float(v) for v in r.c] for r in seed_rows]
     return sim.ivfpq_topk(
         emb,
         emb.filter(F.col("vec_id") < _NQ),
         emb.filter(F.col("vec_id") < _IVF_CELLS),
-        seeds,
+        sim.pq_seeds(emb, _PQ_NCENT),
         nprobe=_NPROBE,
         m=_PQ_M,
         dsub=_PQ_DSUB,
@@ -223,8 +260,6 @@ def ann_ivfpq_topk(spark, sf_dir):
 
 
 def _sql_ivfpq_residual() -> str:
-    from lol_data_pipeline_spark.plans.extensions import SQL_COS
-
     return f"""
     WITH cent AS (
       SELECT vec_id AS cell_id, embedding AS centvec
@@ -368,8 +403,6 @@ def ann_ivfpq_residual_topk(spark, sf_dir):
 
 
 def _sql_ivf_kmeans(train_where: str = "") -> str:
-    from lol_data_pipeline_spark.plans.extensions import SQL_COS, kmeans_ctes
-
     ctes = kmeans_ctes(
         _IVF_CELLS, assigns=_KM_ROUNDS + 1, updates=_KM_ROUNDS, dim=64,
         train_where=train_where,
@@ -382,8 +415,7 @@ def _sql_ivf_kmeans(train_where: str = "") -> str:
     q AS (
       SELECT vec_id AS query_id, x AS qvec, cluster AS qcell
       FROM {cells}
-      WHERE (vec_id >= {_KMQ_LO} AND vec_id < {_KMQ_HI})
-         OR (vec_id >= {_KMQ_TAIL_LO} AND vec_id < {_KMQ_TAIL_HI})
+      WHERE {_fair_sql()}
     ),
     scored AS (
       SELECT q.query_id, c.vec_id AS match_id,
@@ -404,67 +436,14 @@ def _sql_ivf_kmeans(train_where: str = "") -> str:
 
 
 def _sql_ivfpq_kmeans(rank_pred: str | None = None) -> str:
-    """``rank_pred`` overrides the final rank window (default
-    ``rank <= {_K}`` — byte-identical to the stamped oracle); the
-    hard-negative entry (plans/modeling.py) passes the (k, k+neg]
-    band over the SAME candidate chain."""
-    from lol_data_pipeline_spark.plans.extensions import SQL_COS, kmeans_ctes
-
-    ctes = kmeans_ctes(
-        _IVF_CELLS, assigns=_KM_ROUNDS + 1, updates=_KM_ROUNDS, dim=64,
-        train_where=_SAMPLE_WHERE,
-    )
-    cells = f"a{_KM_ROUNDS}"
-    trained = f"c{_KM_ROUNDS}"
-    dist = (
-        "list_inner_product(e.x, e.x) - 2 * list_inner_product(e.x, c.c) "
-        "+ list_inner_product(c.c, c.c)"
-    )
-    return (
-        "WITH "
-        + ",\n".join(ctes)
-        + f""",
-    qprobe AS (
-      SELECT vec_id AS query_id, x AS qvec, cid AS pcell, rn AS probe_rank
-      FROM (
-        SELECT e.vec_id, e.x, c.cid,
-               row_number() OVER (PARTITION BY e.vec_id
-                                  ORDER BY {dist}, c.cid) AS rn
-        FROM e CROSS JOIN {trained} c
-        WHERE (e.vec_id >= {_KMQ_LO} AND e.vec_id < {_KMQ_HI})
-           OR (e.vec_id >= {_KMQ_TAIL_LO} AND e.vec_id < {_KMQ_TAIL_HI})
-      ) WHERE rn <= {_NPROBE}
-    ),
-    {_pq_xhat_ctes()},
-    approx AS (
-      SELECT q.query_id, cl.vec_id AS match_id, q.qvec,
-             CAST(q.probe_rank AS BIGINT) AS probe_rank,
-             row_number() OVER (
-               PARTITION BY q.query_id
-               ORDER BY list_inner_product(q.qvec, h.xh) DESC,
-                        cl.vec_id
-             ) AS arank
-      FROM qprobe q
-      JOIN {cells} cl ON cl.cluster = q.pcell AND cl.vec_id <> q.query_id
-      JOIN xhat h ON h.match_id = cl.vec_id
-    ),
-    cand AS (
-      SELECT a.query_id, a.match_id, a.probe_rank,
-             {SQL_COS.format(a='a.qvec', b='e.embedding')} AS sim
-      FROM approx a JOIN embeddings e ON e.vec_id = a.match_id
-      WHERE a.arank <= {_REFINE * _K}
-    ),
-    ranked AS (
-      SELECT query_id, match_id, probe_rank, sim,
-             CAST(row_number() OVER (
-               PARTITION BY query_id ORDER BY sim DESC, match_id
-             ) AS BIGINT) AS rank
-      FROM cand
-    )
+    """The flagship's oracle: codebook + serve chain over the fair
+    query set, final ``rank <= _K``; ``rank_pred`` overrides that
+    window (the hard-negative entry in plans/modeling.py passes the
+    (k, k+neg] band over the SAME candidate chain)."""
+    return _serve_head(_fair_sql("e"), _REFINE * _K) + f"""
     SELECT query_id, match_id, probe_rank, sim, rank
-    FROM ranked WHERE {rank_pred or f"rank <= {_K}"}
+    FROM served WHERE {rank_pred or f"rank <= {_K}"}
     """
-    )
 
 
 @query("ann_ivfpq_kmeans_topk", sql=_sql_ivfpq_kmeans())
@@ -486,63 +465,24 @@ def ann_ivfpq_kmeans_topk(spark, sf_dir):
     projections against literal trained centroids (probe = posexplode
     of slice(array_sort(d², cid), 1, nprobe)); the PQ encode is a
     pure projection. Queries come from the seed-disjoint bounded id
-    ranges (constant 20 at any SF). The oracle re-derives the
-    trained codebook (shared kmeans_ctes), probe ranks, PQ codes,
-    ADC order, and rescore end-to-end."""
-    from lol_data_pipeline_spark.operators.clustering import (
-        kmeans_cells,
-        kmeans_train,
+    ranges (constant 20 at any SF). Each stage is the served index's
+    own definition: vector_index.train_and_encode (the build's
+    training, assignment, seeds and encode), vector_index.
+    ivf_probe_rows, and the PQ family's ADC join similarity.
+    adc_scored. The oracle is the shared codebook chain
+    (_codebook_ctes) and serve chain (_serve_head) every served-IVF
+    oracle builds on."""
+    from lol_data_pipeline_spark.operators import similarity as sim
+    from lol_data_pipeline_spark.operators.vector_index import (
+        ivf_probe_rows,
+        train_and_encode,
     )
-    from lol_data_pipeline_spark.operators.vector_index import ivf_probe_rows
 
     emb = T(spark, sf_dir, "embeddings")
-    cents = kmeans_train(
-        emb.filter(F.col("vec_id") % _SAMPLE_MOD == 0),
-        k=_IVF_CELLS,
-        rounds=_KM_ROUNDS,
-        dim=64,
-    )
-    cells = kmeans_cells(
-        emb, k=_IVF_CELLS, rounds=_KM_ROUNDS, dim=64, cents=cents
-    )
-
-    # Probe selection via the ONE shared definition (vector_index.
-    # ivf_probe_rows): join-free posexplode over literal trained
-    # centroids, |c|² through clustering._cc whose fold order is
-    # bit-parity-critical against the oracle's list_inner_product.
-    qprobe = ivf_probe_rows(
-        emb.filter(
-            (F.col("vec_id").between(_KMQ_LO, _KMQ_HI - 1))
-            | (F.col("vec_id").between(_KMQ_TAIL_LO, _KMQ_TAIL_HI - 1))
-        ),
-        cents,
-        _NPROBE,
-    )
-    from lol_data_pipeline_spark.operators import similarity as sim
-
-    seed_rows = (
-        emb.orderBy("vec_id")
-        .limit(_PQ_NCENT)
-        .select(F.col("embedding").cast("array<double>").alias("c"))
-        .collect()
-    )
-    seeds = [[float(v) for v in r.c] for r in seed_rows]
-    enc = sim.pq_encode(
-        cells, seeds, m=_PQ_M, dsub=_PQ_DSUB, keep=["cell_id"], widen_input=False
-    )
-    scored = enc.join(
-        F.broadcast(qprobe),
-        (F.col("cell_id") == F.col("pcell"))
-        & (F.col("match_id") != F.col("query_id")),
-    ).select(
-        "query_id",
-        "match_id",
-        "qvec",
-        "cvec",
-        "probe_rank",
-        F.expr(
-            sim._DOT_SQL.format(a="CAST(qvec AS array<double>)", b="xhat")
-        ).alias("approx"),
+    cents, _seeds, enc = train_and_encode(emb, **_INDEX_PARAMS, emit="xhat")
+    qprobe = ivf_probe_rows(_fair_queries(emb), cents, _NPROBE)
+    scored = sim.adc_scored(
+        enc, qprobe, ["query_id", "match_id", "qvec", "cvec", "probe_rank"]
     )
     return sim._adc_refine_topk(scored, _K, _REFINE, extra_cols=("probe_rank",))
 
@@ -567,33 +507,7 @@ def ann_ivf_kmeans_topk(spark, sf_dir):
     occupancy (cell skew is scan skew at probe time), and a ~43%
     lower quantization error — all pinned against the seeded index
     in tests/test_round9_ops.py."""
-    from lol_data_pipeline_spark.operators.clustering import kmeans_cells
-    from lol_data_pipeline_spark.operators.similarity import cosine
-
-    emb = T(spark, sf_dir, "embeddings")
-    cells = kmeans_cells(emb, k=_IVF_CELLS, rounds=_KM_ROUNDS, dim=64)
-    queries = cells.filter(
-        (F.col("vec_id").between(_KMQ_LO, _KMQ_HI - 1))
-        | (F.col("vec_id").between(_KMQ_TAIL_LO, _KMQ_TAIL_HI - 1))
-    ).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qvec"),
-        F.col("cell_id").alias("qcell"),
-    )
-    scored = cells.join(
-        F.broadcast(queries),
-        (F.col("cell_id") == F.col("qcell")) & (F.col("vec_id") != F.col("query_id")),
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("match_id"),
-        F.round(cosine(F.col("qvec"), F.col("embedding")), 6).alias("sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("match_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= _K)
-        .select("query_id", "match_id", "sim", "rank")
-    )
+    return _ivf_kmeans_topk(spark, sf_dir, sampled=False)
 
 
 @query(
@@ -615,6 +529,16 @@ def ann_ivf_kmeans_sampled_topk(spark, sf_dir):
     reads the corpus). tests/test_round9_ops.py pins that sampled
     training keeps the quantization-error win over the seeded index
     and stays within noise of full training on recall."""
+    return _ivf_kmeans_topk(spark, sf_dir, sampled=True)
+
+
+def _ivf_kmeans_topk(spark, sf_dir, sampled: bool):
+    """The trained-IVF body of ann_ivf_kmeans_topk and its sampled
+    twin: Lloyd training on the corpus or, when ``sampled``, on the
+    ``_SAMPLE_MOD`` id sample (the ``train_where`` of
+    :func:`_sql_ivf_kmeans`); full-corpus assignment against the
+    literal trained centroids; each fair query scans its own cell
+    with exact cosine."""
     from lol_data_pipeline_spark.operators.clustering import (
         kmeans_cells,
         kmeans_train,
@@ -622,19 +546,12 @@ def ann_ivf_kmeans_sampled_topk(spark, sf_dir):
     from lol_data_pipeline_spark.operators.similarity import cosine
 
     emb = T(spark, sf_dir, "embeddings")
-    cents = kmeans_train(
-        emb.filter(F.col("vec_id") % _SAMPLE_MOD == 0),
-        k=_IVF_CELLS,
-        rounds=_KM_ROUNDS,
-        dim=64,
-    )
+    train = emb.filter(F.col("vec_id") % _SAMPLE_MOD == 0) if sampled else emb
+    cents = kmeans_train(train, k=_IVF_CELLS, rounds=_KM_ROUNDS, dim=64)
     cells = kmeans_cells(
         emb, k=_IVF_CELLS, rounds=_KM_ROUNDS, dim=64, cents=cents
     )
-    queries = cells.filter(
-        (F.col("vec_id").between(_KMQ_LO, _KMQ_HI - 1))
-        | (F.col("vec_id").between(_KMQ_TAIL_LO, _KMQ_TAIL_HI - 1))
-    ).select(
+    queries = _fair_queries(cells).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qvec"),
         F.col("cell_id").alias("qcell"),

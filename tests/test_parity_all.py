@@ -60,13 +60,24 @@ def test_oracle_parity(name, spark, duck):
     assert not issues, f"{name}: " + " | ".join(issues)
 
 
-@pytest.mark.parametrize("name", ["emb_knn_graph", "ann_graph_beam_topk"])
+@pytest.mark.parametrize(
+    "name",
+    [
+        "emb_knn_graph",
+        "ann_graph_beam_topk",
+        "ann_ivfpq_kmeans_topk",
+        "ann_ivfpq_served_topk",
+    ],
+)
 def test_graph_oracle_chains_fast(name, spark, sf_dir):
-    """Fast-gate parity at sf0.001 for the two entries whose oracles
-    are the shared graph chains alone: the kNN edge CTEs
+    """Fast-gate parity at sf0.001 for the entries whose oracles are
+    the shared chains alone: the kNN edge CTEs
     (extensions.knn_edge_ctes) and the beam rounds
-    (round10.beam_ctes), which every other graph-family oracle
-    builds on. The full sweep above covers the rest, marked slow."""
+    (round10.beam_ctes), which every other graph-family oracle builds
+    on, and the IVF+PQ codebook and serve chain (round9._serve_head),
+    which every IVF+PQ oracle builds on — checked against the
+    in-query flagship and the served index. The full sweep above
+    covers the rest, marked slow."""
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{table_path(sf_dir, t)}'")

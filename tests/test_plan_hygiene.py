@@ -541,3 +541,23 @@ def test_driver_actions_are_allowlisted(tmp_path):
     assert audit_driver_actions(str(tmp_path)) == [
         "operators/fam.py:probe", "operators/fam.py:rounds"
     ]
+
+
+def test_plan_audit_cli_fails_on_source_rules_before_spark(
+    tmp_path, monkeypatch, capsys
+):
+    """The CLI entry runs the three source-level rules first and exits
+    1 on a package with an unlisted collect, without starting Spark
+    (get_spark is replaced by a function that fails the test)."""
+    import tools.plan_audit as pa
+
+    def no_spark(*_a, **_k):
+        raise AssertionError("the CLI started Spark")
+
+    monkeypatch.setattr(pa, "get_spark", no_spark)
+    (tmp_path / "plans").mkdir()
+    (tmp_path / "plans" / "fam.py").write_text(
+        "def probe(df):\n    return df.collect()\n"
+    )
+    assert pa.main("unused", str(tmp_path)) == 1
+    assert "audit_driver_actions: plans/fam.py:probe" in capsys.readouterr().out

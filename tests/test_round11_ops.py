@@ -485,6 +485,30 @@ def test_served_recall_improves_with_nprobe_on_average(spark, sf_dir):
     assert any(c[4] > c[1] for c in by_q.values())
 
 
+def test_served_multi_width_rows_equal_single_width(spark, sf_dir):
+    """One served body serves every probe width: per width n of the
+    recall entry, served_ivfpq_topk(nprobe=n) returns exactly the
+    rows served_ivfpq_topk_multi gives for nprobe = n."""
+    from lol_data_pipeline_spark.operators.vector_index import (
+        served_ivfpq_topk,
+        served_ivfpq_topk_multi,
+    )
+    from lol_data_pipeline_spark.plans.round9 import _K, _REFINE, _fair_queries
+    from lol_data_pipeline_spark.plans.round11 import _RECALL_NPROBES
+
+    queries = _fair_queries(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
+    multi = served_ivfpq_topk_multi(
+        spark, sf_dir, queries, list(_RECALL_NPROBES), k=_K, refine=_REFINE
+    ).collect()
+    for n in _RECALL_NPROBES:
+        single = served_ivfpq_topk(
+            spark, sf_dir, queries, k=_K, refine=_REFINE, nprobe=n
+        )
+        assert single.columns == ["query_id", "match_id", "probe_rank", "sim", "rank"]
+        want = sorted(tuple(r)[1:] for r in multi if r.nprobe == n)
+        assert want and sorted(map(tuple, single.collect())) == want, n
+
+
 def test_power_topr_orthogonal_and_consistent(spark, sf_dir):
     """Deflation contracts against numpy ground truth: direction 0
     reproduces the single-direction entry exactly; both directions

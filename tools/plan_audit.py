@@ -30,6 +30,12 @@ Flags raised per query:
                  works at sf0.1 and OOMs the driver at 100 TB; such
                  joins must be threshold-decided, not hinted.
 
+The source-level rules run first, without Spark: bare parquet reads
+(``audit_bare_reads``), sidecar writes outside a build
+(``audit_sidecar_writes``) and unlisted driver actions
+(``audit_driver_actions``). If any of them flags a site, the audit
+prints the sites and exits 1 before starting Spark.
+
 Exit code 1 if any unexpected flag fires — usable as a CI gate.
 """
 
@@ -503,23 +509,19 @@ DRIVER_ACTION_OK = {
     "operators/lsm.py:lsm_compact": "maintenance: one-row emptiness probe before a fold",
     "operators/similarity.py:cosine_topk_arrow": "query-bounded: the capped query set"
     " broadcast to the Arrow scorer",
-    "operators/vector_index.py:build_ivfpq_index": "build-once: corpus count for auto-k"
-    " and the seed codebook",
+    "operators/similarity.py:pq_seeds": "query-bounded: the ncent PQ seed vectors"
+    " (every in-query PQ entry and the IVF+PQ build)",
+    "operators/vector_index.py:build_ivfpq_index": "build-once: corpus count for auto-k",
     "operators/vector_index.py:ensure_ivfpq_index": "build-once: auto-k corpus count"
     " (scale-probe override only)",
-    "operators/vector_index.py:served_ivfpq_topk": "query-bounded: <= Q x nprobe probed"
-    " cell ids for partition pruning",
-    "operators/vector_index.py:served_ivfpq_topk_multi": "query-bounded: <= Q x nprobe"
-    " probed cell ids for partition pruning",
+    "operators/vector_index.py:_served_topk": "query-bounded: <= Q x nprobe probed"
+    " cell ids for partition pruning (every served width)",
     "operators/vector_index.py:index_upsert": "maintenance: the batch's cell ids",
     "operators/vector_index.py:index_delete": "maintenance: the affected cell ids",
     "operators/vector_index.py:index_compact": "maintenance: per-cell stats and cell ids",
-    "plans/extensions.py:ann_pq_topk": "query-bounded: the 16 PQ seed vectors",
     "plans/modeling.py:_lr_train_weights": "query-bounded: row count, then one"
     " gradient row per descent round",
-    "plans/round9.py:ann_ivfpq_topk": "query-bounded: the PQ seed vectors",
     "plans/round9.py:ann_ivfpq_residual_topk": "query-bounded: the PQ seed residuals",
-    "plans/round9.py:ann_ivfpq_kmeans_topk": "query-bounded: the PQ seed vectors",
     "plans/round11.py:stream_ann_upsert_multibatch": "maintenance: the replayed"
     " batch's cell ids",
     "plans/round11.py:stream_graph_upsert_multibatch": "maintenance: the replayed"
@@ -611,8 +613,31 @@ def audit(spark, sf_dir: str) -> int:
     return bad
 
 
-if __name__ == "__main__":
-    sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+def source_audit(pkg_root: str | None = None) -> int:
+    """Run the three source-level rules, print every flagged site and
+    return how many there are."""
+    rules = (audit_bare_reads, audit_sidecar_writes, audit_driver_actions)
+    n_bad = 0
+    for rule in rules:
+        for site in rule(pkg_root):
+            print(f"{rule.__name__}: {site}")
+            n_bad += 1
+    return n_bad
+
+
+def main(sf: str, pkg_root: str | None = None) -> int:
+    """The CLI: the source rules over ``pkg_root`` (default the engine
+    package), then, only if they are clean, the physical-plan audit
+    at ``sf``. Returns the exit code."""
+    n_src = source_audit(pkg_root)
+    if n_src:
+        print(f"\n{n_src} source-level sites flagged; plan audit not run")
+        return 1
     n_bad = audit(get_spark("plan_audit"), sf)
     print(f"\n{n_bad} queries with unexpected plan flags")
-    sys.exit(1 if n_bad else 0)
+    return 1 if n_bad else 0
+
+
+if __name__ == "__main__":
+    sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+    sys.exit(main(sf))
