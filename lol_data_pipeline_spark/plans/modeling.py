@@ -1033,7 +1033,6 @@ def stream_semdedup_probe_multibatch(spark, sf_dir):
     standing corpus is never re-scanned per epoch and no streaming
     state accumulates."""
     import os
-    import shutil as _sh
 
     from lol_data_pipeline_spark.caching import tracked_persist
     from lol_data_pipeline_spark.operators import similarity as sim
@@ -1042,7 +1041,7 @@ def stream_semdedup_probe_multibatch(spark, sf_dir):
         ensure_ivfpq_index,
     )
     from lol_data_pipeline_spark.plans.round9 import _INDEX_PARAMS
-    from lol_data_pipeline_spark.streaming.windows import replay_multibatch
+    from lol_data_pipeline_spark.streaming.sinks import replay_epochs
 
     path, meta = ensure_ivfpq_index(spark, sf_dir, **_INDEX_PARAMS)
     emb = sim.with_norm(T(spark, sf_dir, "embeddings"), "embedding")
@@ -1072,12 +1071,11 @@ def stream_semdedup_probe_multibatch(spark, sf_dir):
     out = os.path.join(
         os.path.dirname(path), f"stream_sdprobe_{os.path.basename(path)}"
     )
-    _sh.rmtree(out, ignore_errors=True)
     cents = [
         (int(c), [float(v) for v in cv]) for c, cv in meta["cents"]
     ]
 
-    def sink(df, epoch_id):
+    def probe(df):
         x = F.col("embedding").cast("array<double>")
         assigned = df.select(
             "vec_id",
@@ -1087,7 +1085,7 @@ def stream_semdedup_probe_multibatch(spark, sf_dir):
                 "cell_id"
             ),
         )
-        pairs = (
+        return (
             assigned.join(standing, "cell_id")
             .select(
                 "vec_id",
@@ -1101,20 +1099,9 @@ def stream_semdedup_probe_multibatch(spark, sf_dir):
             )
             .filter(F.col("sim") >= _SD_TAU)
         )
-        pairs.write.mode("overwrite").parquet(
-            os.path.join(out, f"epoch={int(epoch_id)}")
-        )
 
-    replay_multibatch(
-        spark,
-        parts,
-        lambda stream: stream,
-        mode="append",
-        key=f"sdprobe:{sf_dir}",
-        foreach_batch=sink,
-    )
     return (
-        spark.read.parquet(out)
+        replay_epochs(spark, parts, probe, out, f"sdprobe:{sf_dir}")
         .select("vec_id", "match_id", "sim", "cell_id")
         .orderBy("vec_id", "match_id")
     )

@@ -53,6 +53,7 @@ from lol_data_pipeline_spark.plans.round9 import (
     _fair_sql,
     _pq_xhat_ctes,
     _sql_ivfpq_kmeans,
+    _swapped_batch,
 )
 
 # Incremental-maintenance batch: a deterministic TRANSFORM of a
@@ -88,21 +89,9 @@ def ann_ivfpq_served_topk(spark, sf_dir):
 
 
 def _sql_index_upsert() -> str:
-    ctes = _codebook_ctes(assign_src="allv")
-    # Splice the corpus∪batch CTE right after (e, es) — DuckDB CTEs
-    # may only reference earlier ones, and the final assignment
-    # (assign_src) reads allv.
-    allv = f"""allv AS (
-      SELECT vec_id, x FROM e
-      UNION ALL
-      SELECT vec_id + {_UP_SHIFT} AS vec_id,
-             list_concat(list_slice(x, 33, 64), list_slice(x, 1, 32)) AS x
-      FROM e WHERE vec_id >= {_UP_LO} AND vec_id < {_UP_HI}
-    )"""
-    ctes = ctes[:2] + [allv] + ctes[2:]
     return (
         "WITH "
-        + ",\n".join(ctes)
+        + ",\n".join(_codebook_ctes((_UP_LO, _UP_HI, _UP_SHIFT)))
         + f""",
     {_pq_xhat_ctes(src=_CB_CELLS, xcol="x", emit="codes")},
     affected AS (
@@ -143,14 +132,7 @@ def ann_index_upsert(spark, sf_dir):
     path, meta = ensure_ivfpq_index(
         spark, sf_dir, variant="upsert", **_INDEX_PARAMS
     )
-    emb = T(spark, sf_dir, "embeddings")
-    x = F.col("embedding").cast("array<double>")
-    batch = emb.filter(
-        F.col("vec_id").between(_UP_LO, _UP_HI - 1)
-    ).select(
-        (F.col("vec_id") + _UP_SHIFT).alias("vec_id"),
-        F.concat(F.slice(x, 33, 32), F.slice(x, 1, 32)).alias("embedding"),
-    )
+    batch = _swapped_batch(T(spark, sf_dir, "embeddings"), _UP_LO, _UP_HI, _UP_SHIFT)
     new_codes = assign_to_index(batch, meta)
     affected = index_upsert(spark, path, meta, new_codes)
     disk = read_index_codes(spark, path, meta, cells=affected)

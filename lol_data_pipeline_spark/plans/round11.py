@@ -70,6 +70,8 @@ from lol_data_pipeline_spark.plans.round9 import (
     _fair_queries,
     _fair_sql,
     _serve_head,
+    _swapped_batch,
+    _swapped_batch_cte,
 )
 from lol_data_pipeline_spark.plans.round10 import (
     _BEAM_B,
@@ -121,16 +123,7 @@ def _sql_graph_upsert_for(lo: int, hi: int, shift: int) -> str:
     """The graph-upsert oracle parameterized by batch range/shift —
     one definition shared by the batch entry (graph_index_upsert) and
     its streaming twin, so the two cannot drift."""
-    ctes = [
-        E_CTE,
-        f"""allv AS (
-      SELECT vec_id, x FROM e
-      UNION ALL
-      SELECT vec_id + {shift} AS vec_id,
-             list_concat(list_slice(x, 33, 64), list_slice(x, 1, 32)) AS x
-      FROM e WHERE vec_id >= {lo} AND vec_id < {hi}
-    )""",
-    ]
+    ctes = [E_CTE, _swapped_batch_cte(lo, hi, shift)]
     ctes += knn_edge_ctes(
         "allv", f"SELECT DISTINCT code FROM gcodes WHERE vec_id >= {shift}"
     )
@@ -177,12 +170,7 @@ def graph_index_upsert(spark, sf_dir):
     path, meta = ensure_knn_graph_index(
         spark, sf_dir, variant="upsert", n_planes=_GRAPH_PLANES, k=_GRAPH_K
     )
-    emb = T(spark, sf_dir, "embeddings")
-    x = F.col("embedding").cast("array<double>")
-    batch = emb.filter(F.col("vec_id").between(_GUP_LO, _GUP_HI - 1)).select(
-        (F.col("vec_id") + _GUP_SHIFT).alias("vec_id"),
-        F.concat(F.slice(x, 33, 32), F.slice(x, 1, 32)).alias("embedding"),
-    )
+    batch = _swapped_batch(T(spark, sf_dir, "embeddings"), _GUP_LO, _GUP_HI, _GUP_SHIFT)
     affected = graph_upsert(spark, path, meta, batch)
     disk = read_edges(spark, path, codes=affected)
     return disk.select(
@@ -665,19 +653,10 @@ _SUP_SHIFT = 300000
 def _sql_stream_upsert() -> str:
     from lol_data_pipeline_spark.plans.round9 import _pq_xhat_ctes
 
-    ctes = _codebook_ctes(assign_src="allv")
-    allv = f"""allv AS (
-      SELECT vec_id, x FROM e
-      UNION ALL
-      SELECT vec_id + {_SUP_SHIFT} AS vec_id,
-             list_concat(list_slice(x, 33, 64), list_slice(x, 1, 32)) AS x
-      FROM e WHERE vec_id >= {_SUP_LO} AND vec_id < {_SUP_HI}
-    )"""
-    ctes = ctes[:2] + [allv] + ctes[2:]
     cells = _CB_CELLS
     return (
         "WITH "
-        + ",\n".join(ctes)
+        + ",\n".join(_codebook_ctes((_SUP_LO, _SUP_HI, _SUP_SHIFT)))
         + f""",
     {_pq_xhat_ctes(src=cells, xcol="x", emit="codes")},
     affected AS (
@@ -723,12 +702,7 @@ def stream_ann_upsert_multibatch(spark, sf_dir):
     path, meta = ensure_ivfpq_index(
         spark, sf_dir, variant="streamup", **_INDEX_PARAMS
     )
-    emb = T(spark, sf_dir, "embeddings")
-    x = F.col("embedding").cast("array<double>")
-    batch = emb.filter(F.col("vec_id").between(_SUP_LO, _SUP_HI - 1)).select(
-        (F.col("vec_id") + _SUP_SHIFT).alias("vec_id"),
-        F.concat(F.slice(x, 33, 32), F.slice(x, 1, 32)).alias("embedding"),
-    )
+    batch = _swapped_batch(T(spark, sf_dir, "embeddings"), _SUP_LO, _SUP_HI, _SUP_SHIFT)
     parts = [batch.filter(F.col("vec_id") % 4 == i) for i in range(4)]
 
     def build(stream):
@@ -1121,12 +1095,7 @@ def stream_graph_upsert_multibatch(spark, sf_dir):
     path, meta = ensure_knn_graph_index(
         spark, sf_dir, variant="streamup", n_planes=_GRAPH_PLANES, k=_GRAPH_K
     )
-    emb = T(spark, sf_dir, "embeddings")
-    x = F.col("embedding").cast("array<double>")
-    batch = emb.filter(F.col("vec_id").between(_GSUP_LO, _GSUP_HI - 1)).select(
-        (F.col("vec_id") + _GSUP_SHIFT).alias("vec_id"),
-        F.concat(F.slice(x, 33, 32), F.slice(x, 1, 32)).alias("embedding"),
-    )
+    batch = _swapped_batch(T(spark, sf_dir, "embeddings"), _GSUP_LO, _GSUP_HI, _GSUP_SHIFT)
     parts = [batch.filter(F.col("vec_id") % 4 == i) for i in range(4)]
 
     def build(stream):
@@ -2292,13 +2261,12 @@ def stream_minhash_probe_multibatch(spark, sf_dir):
     the standing corpus is never re-tokenized and no streaming state
     accumulates."""
     import os
-    import shutil as _sh
 
     from lol_data_pipeline_spark.operators.minhash_index import (
         ensure_minhash_index,
         served_minhash_probe,
     )
-    from lol_data_pipeline_spark.streaming.windows import replay_multibatch
+    from lol_data_pipeline_spark.streaming.sinks import replay_epochs
 
     path, meta = ensure_minhash_index(
         spark, sf_dir, variant="probe",
@@ -2315,26 +2283,16 @@ def stream_minhash_probe_multibatch(spark, sf_dir):
     out = os.path.join(
         os.path.dirname(path), f"stream_probe_{os.path.basename(path)}"
     )
-    _sh.rmtree(out, ignore_errors=True)
-
-    def sink(df, epoch_id):
-        pairs = served_minhash_probe(
-            spark, path, meta, df, verify_docs=docs, threshold=_MH_TAU
-        )
-        pairs.write.mode("overwrite").parquet(
-            os.path.join(out, f"epoch={int(epoch_id)}")
-        )
-
-    replay_multibatch(
-        spark,
-        parts,
-        lambda stream: stream,
-        mode="append",
-        key=f"minhash_probe:{sf_dir}",
-        foreach_batch=sink,
-    )
     return (
-        spark.read.parquet(out)
+        replay_epochs(
+            spark,
+            parts,
+            lambda df: served_minhash_probe(
+                spark, path, meta, df, verify_docs=docs, threshold=_MH_TAU
+            ),
+            out,
+            f"minhash_probe:{sf_dir}",
+        )
         .select("id_new", "id_index", "jaccard")
         .orderBy("id_new", "id_index")
     )

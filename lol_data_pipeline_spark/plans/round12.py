@@ -526,13 +526,12 @@ def stream_chunk_probe_multibatch(spark, sf_dir):
     substring gate: per trigger, batch-sized chunking + one keyed
     equi-join; no streaming state accumulates."""
     import os
-    import shutil as _sh
 
     from lol_data_pipeline_spark.operators.chunk_index import (
         ensure_chunk_index,
         served_chunk_clean,
     )
-    from lol_data_pipeline_spark.streaming.windows import replay_multibatch
+    from lol_data_pipeline_spark.streaming.sinks import replay_epochs
 
     path, meta = ensure_chunk_index(
         spark, sf_dir, variant="probe", c=_CSD_C, index_where=_CSD_IDX_WHERE
@@ -548,24 +547,14 @@ def stream_chunk_probe_multibatch(spark, sf_dir):
     out = os.path.join(
         os.path.dirname(path), f"stream_clean_{os.path.basename(path)}"
     )
-    _sh.rmtree(out, ignore_errors=True)
-
-    def sink(df, epoch_id):
-        cleaned = served_chunk_clean(spark, path, meta, df)
-        cleaned.write.mode("overwrite").parquet(
-            os.path.join(out, f"epoch={int(epoch_id)}")
-        )
-
-    replay_multibatch(
-        spark,
-        parts,
-        lambda stream: stream,
-        mode="append",
-        key=f"chunk_clean:{sf_dir}",
-        foreach_batch=sink,
-    )
     return (
-        spark.read.parquet(out)
+        replay_epochs(
+            spark,
+            parts,
+            lambda df: served_chunk_clean(spark, path, meta, df),
+            out,
+            f"chunk_clean:{sf_dir}",
+        )
         .select("doc_id", "n_chunks", "n_dup", "clean_text")
         .orderBy("doc_id")
     )

@@ -542,7 +542,7 @@ def stream_ingest_gate_multibatch(spark, sf_dir):
         _CSD_C,
         _CSD_IDX_WHERE,
     )
-    from lol_data_pipeline_spark.streaming.windows import replay_multibatch
+    from lol_data_pipeline_spark.streaming.sinks import replay_epochs
 
     docs = T(spark, sf_dir, "documents")
     # fresh private artifact copies: the replay mutates them
@@ -578,10 +578,9 @@ def stream_ingest_gate_multibatch(spark, sf_dir):
         for i in range(4)
     ]
     out = os.path.join(os.path.dirname(cpath), "stream_gate_out")
-    _sh.rmtree(out, ignore_errors=True)
     state = {"cmeta": cmeta, "nmeta": nmeta}
 
-    def sink(df, epoch_id):
+    def gate(df):
         scored = _lr_scored_over(df, w).select(
             "doc_id", F.col("pred").alias("q_pred")
         )
@@ -615,10 +614,9 @@ def stream_ingest_gate_multibatch(spark, sf_dir):
                 ),
             )
             .withColumn("decision", F.expr(_GATE_DECISION_SQL))
+            # eager: the decisions are fixed before the upserts below
+            # change the indexes they were scored against
             .localCheckpoint()
-        )
-        decisions.write.mode("overwrite").parquet(
-            os.path.join(out, f"epoch={int(epoch_id)}")
         )
         accepted = df.join(
             decisions.filter(F.col("decision") == "accept").select("doc_id"),
@@ -630,17 +628,10 @@ def stream_ingest_gate_multibatch(spark, sf_dir):
         state["nmeta"] = ngram_index_upsert(
             spark, npath, state["nmeta"], accepted
         )
+        return decisions
 
-    replay_multibatch(
-        spark,
-        parts,
-        lambda stream: stream,
-        mode="append",
-        key=f"ingest_gate:{sf_dir}",
-        foreach_batch=sink,
-    )
     return (
-        spark.read.parquet(out)
+        replay_epochs(spark, parts, gate, out, f"ingest_gate:{sf_dir}")
         .select(
             "doc_id", "source", "q_pred", "n_chunks", "n_dup",
             "contaminated", "decision",
@@ -874,13 +865,12 @@ def stream_phash_probe_multibatch(spark, sf_dir):
     oracle. The ingest-time image-dedup gate shape: per trigger,
     batch-sized signing + one (band, chunk) equi-join."""
     import os
-    import shutil as _sh
 
     from lol_data_pipeline_spark.operators.phash_index import (
         ensure_phash_index,
         served_phash_pairs,
     )
-    from lol_data_pipeline_spark.streaming.windows import replay_multibatch
+    from lol_data_pipeline_spark.streaming.sinks import replay_epochs
 
     path, meta = ensure_phash_index(spark, sf_dir)
     docs = T(spark, sf_dir, "documents")
@@ -894,23 +884,14 @@ def stream_phash_probe_multibatch(spark, sf_dir):
         for i in range(4)
     ]
     out = os.path.join(os.path.dirname(path), "stream_phash_out")
-    _sh.rmtree(out, ignore_errors=True)
-
-    def sink(df, epoch_id):
-        served_phash_pairs(spark, path, meta, df).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out, f"epoch={int(epoch_id)}"))
-
-    replay_multibatch(
-        spark,
-        parts,
-        lambda stream: stream,
-        mode="append",
-        key=f"phash_probe:{sf_dir}",
-        foreach_batch=sink,
-    )
     return (
-        spark.read.parquet(out)
+        replay_epochs(
+            spark,
+            parts,
+            lambda df: served_phash_pairs(spark, path, meta, df),
+            out,
+            f"phash_probe:{sf_dir}",
+        )
         .select("probe_id", "match_id", "hamming")
         .orderBy("probe_id", "match_id")
     )

@@ -108,18 +108,47 @@ def _fair_sql(alias: str = "") -> str:
     )
 
 
-def _codebook_ctes(assign_src: str = "e") -> list[str]:
+def _swapped_batch(emb, lo: int, hi: int, shift: int):
+    """The upsert entries' new-vector batch: embeddings with
+    ``lo`` ≤ vec_id < ``hi``, their two 32-dim halves swapped, under
+    ids shifted by ``shift`` — genuinely new vectors that both engines
+    derive from the shared testdata (oracle twin:
+    :func:`_swapped_batch_cte`)."""
+    x = F.col("embedding").cast("array<double>")
+    return emb.filter(F.col("vec_id").between(lo, hi - 1)).select(
+        (F.col("vec_id") + shift).alias("vec_id"),
+        F.concat(F.slice(x, 33, 32), F.slice(x, 1, 32)).alias("embedding"),
+    )
+
+
+def _swapped_batch_cte(lo: int, hi: int, shift: int) -> str:
+    """``allv``: the corpus ``e`` plus :func:`_swapped_batch`."""
+    return f"""allv AS (
+      SELECT vec_id, x FROM e
+      UNION ALL
+      SELECT vec_id + {shift} AS vec_id,
+             list_concat(list_slice(x, 33, 64), list_slice(x, 1, 32)) AS x
+      FROM e WHERE vec_id >= {lo} AND vec_id < {hi}
+    )"""
+
+
+def _codebook_ctes(batch: tuple[int, int, int] | None = None) -> list[str]:
     """The sampled-trained codebook every IVF+PQ oracle re-derives —
     build_ivfpq_index's training and assignment: extensions.
     kmeans_ctes with ``_IVF_CELLS`` cells and ``_KM_ROUNDS`` Lloyd
     rounds on the ``_SAMPLE_WHERE`` sample; cells ``_CB_CELLS``, centroids
-    ``_CB_CENTS``. ``assign_src`` is the CTE the final assignment
-    reads: the upsert oracles splice a corpus∪batch CTE after
-    ``e``/``es`` and point it there."""
-    return kmeans_ctes(
+    ``_CB_CENTS``. With an upsert ``batch`` = (lo, hi, shift), the
+    final assignment reads corpus ∪ :func:`_swapped_batch_cte` instead
+    of the corpus (training stays on the sample: the codebook is
+    frozen); ``allv`` is spliced right after ``e``/``es`` because a
+    DuckDB CTE may only reference earlier ones."""
+    ctes = kmeans_ctes(
         _IVF_CELLS, assigns=_KM_ROUNDS + 1, updates=_KM_ROUNDS, dim=64,
-        train_where=_SAMPLE_WHERE, assign_src=assign_src,
+        train_where=_SAMPLE_WHERE, assign_src="allv" if batch else "e",
     )
+    if batch:
+        ctes[2:2] = [_swapped_batch_cte(*batch)]
+    return ctes
 
 
 def _serve_head(

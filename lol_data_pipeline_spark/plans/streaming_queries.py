@@ -11,42 +11,26 @@ from __future__ import annotations
 from lol_data_pipeline_spark.plans.queries import query
 from lol_data_pipeline_spark.streaming import windows as sw
 
-
-@query(
-    "stream_tumbling_window",
-    sql="""
+# Each twin pair below (single-trigger entry, replayed entry) shares one
+# oracle: the replay must reproduce the one-trigger answer exactly.
+_TUMBLING_SQL = """
     SELECT make_timestamp(CAST(floor(epoch(ts) / 3600) AS BIGINT) * 3600 * 1000000) AS window_start,
            event_type,
            CAST(count(*) AS BIGINT) AS n,
            round(sum(value), 2) AS sum_value
     FROM events
     GROUP BY 1, 2
-    """,
-)
-def stream_tumbling_window(spark, sf_dir):
-    """Tumbling 1h windows per event_type via readStream→writeStream."""
-    return sw.tumbling_counts(spark, sf_dir)
+    """
 
-
-@query(
-    "stream_sliding_window",
-    sql="""
+_SLIDING_SQL = """
     SELECT make_timestamp((CAST(floor(epoch(ts) / 1800) AS BIGINT) * 1800 - k * 1800) * 1000000) AS window_start,
            CAST(count(*) AS BIGINT) AS n,
            round(sum(value), 2) AS sum_value
     FROM events, (VALUES (0), (1)) offs(k)
     GROUP BY 1
-    """,
-)
-def stream_sliding_window(spark, sf_dir):
-    """Sliding 1h/30m windows: every event contributes to two
-    windows (the oracle cross-joins the two slide offsets)."""
-    return sw.sliding_counts(spark, sf_dir)
+    """
 
-
-@query(
-    "stream_session_window",
-    sql="""
+_SESSION_SQL = """
     WITH marked AS (
       SELECT user_id, ts, value,
              CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
@@ -63,8 +47,45 @@ def stream_sliding_window(spark, sf_dir):
            round(sum(value), 2) AS sum_value
     FROM numbered
     GROUP BY user_id, sess_id
-    """,
-)
+    """
+
+_DEDUP_SQL = "SELECT DISTINCT user_id, event_type FROM events"
+
+_JOIN_SQL = """
+    SELECT c.user_id, c.event_id AS click_id, p.event_id AS purchase_id,
+           round(p.value, 2) AS purchase_value
+    FROM events c JOIN events p
+      ON p.user_id = c.user_id
+     AND c.event_type = 'click' AND p.event_type = 'purchase'
+     AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTE
+    """
+
+_TOPK_SQL = """
+    SELECT user_id, CAST(rnk AS INTEGER) AS rnk, value, event_id
+    FROM (
+      SELECT user_id, value, event_id,
+             row_number() OVER (PARTITION BY user_id
+                                ORDER BY value DESC, event_id) AS rnk
+      FROM events
+    )
+    WHERE rnk <= 3
+    """
+
+
+@query("stream_tumbling_window", sql=_TUMBLING_SQL)
+def stream_tumbling_window(spark, sf_dir):
+    """Tumbling 1h windows per event_type via readStream→writeStream."""
+    return sw.tumbling_counts(spark, sf_dir)
+
+
+@query("stream_sliding_window", sql=_SLIDING_SQL)
+def stream_sliding_window(spark, sf_dir):
+    """Sliding 1h/30m windows: every event contributes to two
+    windows (the oracle cross-joins the two slide offsets)."""
+    return sw.sliding_counts(spark, sf_dir)
+
+
+@query("stream_session_window", sql=_SESSION_SQL)
 def stream_session_window(spark, sf_dir):
     """Per-user 30-minute-gap session windows via
     F.session_window in a streaming aggregation; the oracle computes
@@ -97,10 +118,7 @@ def stream_stateful_totals(spark, sf_dir):
     )
 
 
-@query(
-    "stream_dedup",
-    sql="SELECT DISTINCT user_id, event_type FROM events",
-)
+@query("stream_dedup", sql=_DEDUP_SQL)
 def stream_dedup(spark, sf_dir):
     """Stateful streaming dropDuplicates on (user_id, event_type);
     with the full replay the surviving set equals batch DISTINCT,
@@ -108,10 +126,7 @@ def stream_dedup(spark, sf_dir):
     return sw.streaming_dedup(spark, sf_dir)
 
 
-@query(
-    "stream_dedup_multibatch",
-    sql="SELECT DISTINCT user_id, event_type FROM events",
-)
+@query("stream_dedup_multibatch", sql=_DEDUP_SQL)
 def stream_dedup_multibatch(spark, sf_dir):
     """Streaming dropDuplicates over a four-batch ordered replay:
     the seen-keys state store must survive every trigger boundary —
@@ -144,17 +159,7 @@ def stream_totals_multibatch(spark, sf_dir):
     return running_user_totals_multibatch(spark, sf_dir)
 
 
-@query(
-    "stream_join_click_purchase",
-    sql="""
-    SELECT c.user_id, c.event_id AS click_id, p.event_id AS purchase_id,
-           round(p.value, 2) AS purchase_value
-    FROM events c JOIN events p
-      ON p.user_id = c.user_id
-     AND c.event_type = 'click' AND p.event_type = 'purchase'
-     AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTE
-    """,
-)
+@query("stream_join_click_purchase", sql=_JOIN_SQL)
 def stream_join_click_purchase(spark, sf_dir):
     """Watermarked stream-stream inner join with a time-range
     constraint (purchases ≤30 min after a click, same user)."""
@@ -181,7 +186,6 @@ def stream_ingest_ids(spark, sf_dir):
     range() scan — exactly-once: page-cursor offsets mean a replayed
     batch re-reads exactly its own pages, never re-emits others."""
     from lol_data_pipeline_spark.sources.datasource import MatchIdDataSource
-    from lol_data_pipeline_spark.streaming.windows import run_to_completion
 
     spark.dataSource.register(MatchIdDataSource)
     stream = (
@@ -192,22 +196,10 @@ def stream_ingest_ids(spark, sf_dir):
         .option("max_pages", 6)
         .load()
     )
-    return run_to_completion(stream, mode="append")
+    return sw.run_to_completion(stream, mode="append")
 
 
-@query(
-    "stream_user_topk",
-    sql="""
-    SELECT user_id, CAST(rnk AS INTEGER) AS rnk, value, event_id
-    FROM (
-      SELECT user_id, value, event_id,
-             row_number() OVER (PARTITION BY user_id
-                                ORDER BY value DESC, event_id) AS rnk
-      FROM events
-    )
-    WHERE rnk <= 3
-    """,
-)
+@query("stream_user_topk", sql=_TOPK_SQL)
 def stream_user_topk(spark, sf_dir):
     """Per-user top-3 events by value as a custom stateful streaming
     operator (bounded per-key state over an unbounded stream): the
@@ -220,17 +212,7 @@ def stream_user_topk(spark, sf_dir):
     return running_user_topk(spark, sf_dir, k=3)
 
 
-@query(
-    "stream_tumbling_multibatch",
-    sql="""
-    SELECT make_timestamp(CAST(floor(epoch(ts) / 3600) AS BIGINT) * 3600 * 1000000) AS window_start,
-           event_type,
-           CAST(count(*) AS BIGINT) AS n,
-           round(sum(value), 2) AS sum_value
-    FROM events
-    GROUP BY 1, 2
-    """,
-)
+@query("stream_tumbling_multibatch", sql=_TUMBLING_SQL)
 def stream_tumbling_multibatch(spark, sf_dir):
     """Tumbling windows over a four-micro-batch time-ordered replay
     (append mode, sentinel-flushed): windows spanning batch
@@ -241,27 +223,7 @@ def stream_tumbling_multibatch(spark, sf_dir):
     return sw.tumbling_counts_multibatch(spark, sf_dir)
 
 
-@query(
-    "stream_session_multibatch",
-    sql="""
-    WITH marked AS (
-      SELECT user_id, ts, value,
-             CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                       < INTERVAL 30 MINUTE
-                  THEN 0 ELSE 1 END AS new_sess
-      FROM events
-    ), numbered AS (
-      SELECT *, sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts
-                                    ROWS UNBOUNDED PRECEDING) AS sess_id
-      FROM marked
-    )
-    SELECT user_id, min(ts) AS session_start,
-           CAST(count(*) AS BIGINT) AS n_events,
-           round(sum(value), 2) AS sum_value
-    FROM numbered
-    GROUP BY user_id, sess_id
-    """,
-)
+@query("stream_session_multibatch", sql=_SESSION_SQL)
 def stream_session_multibatch(spark, sf_dir):
     """Session windows over a four-batch time-ordered replay — the
     hardest cross-batch state: a session still open at a slice
@@ -274,19 +236,7 @@ def stream_session_multibatch(spark, sf_dir):
     return sw.session_windows_multibatch(spark, sf_dir)
 
 
-@query(
-    "stream_topk_multibatch",
-    sql="""
-    SELECT user_id, CAST(rnk AS INTEGER) AS rnk, value, event_id
-    FROM (
-      SELECT user_id, value, event_id,
-             row_number() OVER (PARTITION BY user_id
-                                ORDER BY value DESC, event_id) AS rnk
-      FROM events
-    )
-    WHERE rnk <= 3
-    """,
-)
+@query("stream_topk_multibatch", sql=_TOPK_SQL)
 def stream_topk_multibatch(spark, sf_dir):
     """Per-user top-3 via applyInPandasWithState over a two-batch
     replay (trimmed from four, then three: as the bench's multibatch
@@ -303,17 +253,7 @@ def stream_topk_multibatch(spark, sf_dir):
     return running_user_topk_multibatch(spark, sf_dir, k=3)
 
 
-@query(
-    "stream_join_multibatch",
-    sql="""
-    SELECT c.user_id, c.event_id AS click_id, p.event_id AS purchase_id,
-           round(p.value, 2) AS purchase_value
-    FROM events c JOIN events p
-      ON p.user_id = c.user_id
-     AND c.event_type = 'click' AND p.event_type = 'purchase'
-     AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTE
-    """,
-)
+@query("stream_join_multibatch", sql=_JOIN_SQL)
 def stream_join_multibatch(spark, sf_dir):
     """Stream-stream inner join over a four-batch time-ordered
     replay: clicks buffer in join state across micro-batches until
@@ -440,16 +380,7 @@ def stream_incremental_view(spark, sf_dir):
     return incremental_view_multibatch(spark, sf_dir)
 
 
-@query(
-    "stream_sliding_multibatch",
-    sql="""
-    SELECT make_timestamp((CAST(floor(epoch(ts) / 1800) AS BIGINT) * 1800 - k * 1800) * 1000000) AS window_start,
-           CAST(count(*) AS BIGINT) AS n,
-           round(sum(value), 2) AS sum_value
-    FROM events, (VALUES (0), (1)) offs(k)
-    GROUP BY 1
-    """,
-)
+@query("stream_sliding_multibatch", sql=_SLIDING_SQL)
 def stream_sliding_multibatch(spark, sf_dir):
     """Sliding 1h/30m windows over a four-batch replay — TWO open
     windows per key span each slice boundary (overlapping-window
@@ -507,8 +438,6 @@ def stream_cdf_multibatch(spark, sf_dir):
     window); the 20 per-group counters are mergeable state folded
     per micro-batch, and the final snapshot must equal the batch
     aggregate."""
-    from lol_data_pipeline_spark.streaming import windows as sw
-
     return sw.cdf_counters_multibatch(spark, sf_dir)
 
 

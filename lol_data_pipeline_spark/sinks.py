@@ -96,7 +96,7 @@ def write_stream_doc_store(
     per-partition writer, prefixed by a delete-of-this-epoch so a
     replayed batch replaces itself instead of duplicating (the
     foreachBatch exactly-once idiom). Returns epochs written."""
-    from lol_data_pipeline_spark.streaming.windows import _ckpt_dir
+    from lol_data_pipeline_spark.streaming.windows import _drain
 
     seen: list[int] = []
 
@@ -113,16 +113,7 @@ def write_stream_doc_store(
             lambda rows: _insert_partition(rows, connect, collection, epoch=epoch_id)
         )
 
-    q = (
-        agg.writeStream.outputMode(mode)
-        .foreachBatch(sink)
-        .option("checkpointLocation", _ckpt_dir())
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(agg.writeStream.outputMode(mode).foreachBatch(sink))
     return seen
 
 

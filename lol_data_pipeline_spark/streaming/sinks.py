@@ -8,9 +8,16 @@ replay, the standard exactly-once pattern on object storage).
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import DataFrame
 
-from lol_data_pipeline_spark.streaming.windows import _ckpt_dir
+from lol_data_pipeline_spark.streaming.windows import _drain, replay_multibatch
+
+
+def _write_epoch(df: DataFrame, out_dir: str, epoch_id: int) -> None:
+    df.write.mode("overwrite").parquet(os.path.join(out_dir, f"epoch={int(epoch_id)}"))
 
 
 def write_stream_foreach_batch(
@@ -24,19 +31,29 @@ def write_stream_foreach_batch(
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         seen.append(epoch_id)
-        batch_df.write.mode("overwrite").parquet(f"{out_dir}/epoch={epoch_id}")
+        _write_epoch(batch_df, out_dir, epoch_id)
 
-    q = (
-        agg.writeStream.outputMode(mode)
-        .foreachBatch(sink)
-        .option("checkpointLocation", _ckpt_dir())
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(agg.writeStream.outputMode(mode).foreachBatch(sink))
     return seen
+
+
+def replay_epochs(spark, parts, fn, out_dir: str, key: str) -> DataFrame:
+    """The epoch sink: replay ``parts`` as ordered micro-batches
+    (windows.replay_multibatch), overwrite ``out_dir/epoch=N`` with
+    ``fn(batch)`` for each epoch N, and read every epoch back.
+    ``out_dir`` is emptied first. A replayed epoch rewrites identical
+    content, so the union of epochs is exactly-once by idempotence;
+    for a per-batch-stateless ``fn`` it equals ``fn`` over the whole
+    input."""
+    shutil.rmtree(out_dir, ignore_errors=True)
+
+    def sink(batch_df: DataFrame, epoch_id: int) -> None:
+        _write_epoch(fn(batch_df), out_dir, epoch_id)
+
+    replay_multibatch(
+        spark, parts, lambda stream: stream, "append", key, foreach_batch=sink
+    )
+    return spark.read.parquet(out_dir)
 
 
 def incremental_view_multibatch(spark, sf_dir: str):
@@ -63,17 +80,12 @@ def incremental_view_multibatch(spark, sf_dir: str):
     batch aggregate — a lost batch, double merge, or non-associative
     partial would diverge.
     """
-    import os
-    import shutil
     import tempfile
 
     from pyspark.sql import functions as F
 
     from lol_data_pipeline_spark.io import load_table
-    from lol_data_pipeline_spark.streaming.windows import (
-        replay_multibatch,
-        time_slices,
-    )
+    from lol_data_pipeline_spark.streaming.windows import time_slices
 
     ev = load_table(spark, sf_dir, "events").select("event_type", "value", "ts")
     parts = time_slices(ev, "ts", n=4)

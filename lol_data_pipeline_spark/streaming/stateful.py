@@ -29,13 +29,10 @@ STATE_DDL = "n bigint, s double"
 # 32 regressed on state-store overhead, see
 # windows.run_to_completion). ONE definition instead of a literal at
 # every call site (r14 ADVICE); production sizes this to state
-# volume via SPARK_GRAFT_PY_STATE_PARTITIONS. The JVM-stateful
-# window/dedup/join callers keep run_to_completion's default of 4
-# (r12 tuning) — there each extra partition is a state-store
-# snapshot per trigger.
-import os as _os
-
-PY_STATE_PARTITIONS = int(_os.environ.get("SPARK_GRAFT_PY_STATE_PARTITIONS", "16"))
+# volume. The JVM-stateful window/dedup/join callers keep
+# run_to_completion's default of 4 (r12 tuning) — there each extra
+# partition is a state-store snapshot per trigger.
+PY_STATE_PARTITIONS = 16
 
 
 def _update_totals(

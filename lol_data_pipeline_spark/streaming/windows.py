@@ -1,27 +1,51 @@
-"""Structured Streaming window operators over the events table.
+"""Structured Streaming queries over the events table.
 
-The reference has no streaming (SURVEY §2.7); these provide the
-north-star streaming surface: tumbling / sliding / session windows
-driven through a real ``readStream`` → ``writeStream`` pipeline.
+The reference has no streaming (SURVEY §2.7); this module is the
+north-star streaming surface, driven through a real ``readStream`` →
+``writeStream`` pipeline. Each query is defined ONCE, as a function
+of a stream DataFrame that returns the streaming query, and runs
+unchanged as a single trigger or as a multi-batch replay:
 
-Batch parquet replay through the file source + memory sink +
-``processAllAvailable()`` makes the streaming result deterministic
-and lets the DuckDB oracle verify it like any batch query. At scale
-the same plans run unchanged against Kafka with watermarks bounding
-state (the gap semantics and window alignment are identical).
+- the four query shapes: :func:`_window_counts` (tumbling, sliding and the
+  late-data test; window slide and key columns are arguments),
+  :func:`_session_counts`, :func:`_first_pairs` (dropDuplicates) and
+  :func:`_click_purchase` (the stream-stream join, ``how`` an
+  argument);
+- single-trigger entries (``tumbling_counts``, ``click_purchase_join``,
+  …) run ``_events_stream`` → shape → :func:`run_to_completion`;
+- replayed entries (``*_multibatch``, ``late_data_drop``) stage time
+  slices (:func:`time_slices`, plus a :func:`_marker` row where a
+  watermark must be flushed) and run
+  :func:`replay_multibatch`\\ ``(parts, shape)``;
+- the drain, :func:`_drain`, is the one start → process all
+  available → stop sequence; it takes its checkpoint from
+  :func:`_ckpt_dir` and removes it after the stop. The memory sink
+  (``run_to_completion``), the foreachBatch replay and the sinks in
+  ``streaming/sinks.py`` and ``sinks.py`` all go through it;
+- the epoch sink, ``streaming.sinks.replay_epochs``, replays batches
+  through a function whose result it writes to ``out/epoch=N`` and
+  reads back.
+
+Batch parquet replay through the file source makes the streaming
+result deterministic and lets the DuckDB oracle verify it like any
+batch query. At scale the same plans run unchanged against Kafka with
+watermarks bounding state (the gap semantics and window alignment
+are identical).
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
+import shutil
 import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
-from lol_data_pipeline_spark.io import table_path, ts_from_epoch
+from lol_data_pipeline_spark.io import load_table, table_path, ts_from_epoch
 
 
 def _stage_dir(parquet_file: str) -> str:
@@ -56,7 +80,6 @@ def events_max_ts(spark: SparkSession, sf_dir: str):
     """max(ts) of the events table — 1-row scalar, memoized on the
     source files' content fingerprint so regenerated testdata never
     serves a stale horizon."""
-    from lol_data_pipeline_spark.io import load_table
     from lol_data_pipeline_spark.operators.artifact import source_fingerprint
 
     key = (sf_dir, source_fingerprint(sf_dir, "events"))
@@ -103,6 +126,23 @@ def _ckpt_dir() -> str:
     return tempfile.mkdtemp(prefix="ckpt_", dir=base)
 
 
+def _drain(writer: DataStreamWriter) -> None:
+    """Start ``writer`` on a fresh checkpoint, process all available
+    input, stop the query and remove the checkpoint — the one start →
+    drain → stop sequence every bounded query in the engine runs.
+    ``_ckpt_dir`` is looked up when the drain runs, so rebinding this
+    module's ``_ckpt_dir`` moves every checkpoint."""
+    ckpt = _ckpt_dir()
+    try:
+        q = writer.option("checkpointLocation", ckpt).start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+
+
 def run_to_completion(
     agg: DataFrame, mode: str = "complete", state_partitions: int = 4
 ) -> DataFrame:
@@ -128,17 +168,7 @@ def run_to_completion(
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     try:
-        q = (
-            agg.writeStream.outputMode(mode)
-            .format("memory")
-            .queryName(qname)
-            .option("checkpointLocation", _ckpt_dir())
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        _drain(agg.writeStream.outputMode(mode).format("memory").queryName(qname))
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(qname)
@@ -151,8 +181,6 @@ def stage_ordered_batches(parts, key: str) -> str:
     micro-batches in exactly this order. Caller removes the dir when
     the stream has been drained. pid-suffixed: the driver's gate and
     a concurrent pytest run must not race on each other's staging."""
-    import shutil
-
     h = hashlib.md5(key.encode()).hexdigest()[:12]
     stage = os.path.join(tempfile.gettempdir(), f"stream_mb_{h}_{os.getpid()}")
     if os.path.isdir(stage):
@@ -211,8 +239,6 @@ def replay_multibatch(
     micro-batch — a single-batch replay exercises none of that
     (r4 verdict: 'single-batch replay cannot regress state-eviction
     /ordering bugs')."""
-    import shutil
-
     parts = list(parts)
     # the staged files were written FROM parts[0..n]'s frames, so
     # the frames' own schema IS the files' schema — declaring it
@@ -242,17 +268,7 @@ def replay_multibatch(
             return run_to_completion(
                 build(stream), mode=mode, state_partitions=state_partitions
             )
-        q = (
-            build(stream)
-            .writeStream.outputMode(mode)
-            .foreachBatch(foreach_batch)
-            .option("checkpointLocation", _ckpt_dir())
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        _drain(build(stream).writeStream.outputMode(mode).foreachBatch(foreach_batch))
         return None
     finally:
         shutil.rmtree(stage, ignore_errors=True)
@@ -295,13 +311,254 @@ def time_slices(ev: DataFrame, order_col: str = "ts", n: int = 4) -> list:
     return parts
 
 
+def _marker(ev: DataFrame, mx, offset: str, tag: str = "sentinel") -> DataFrame:
+    """One fabricated row with ``ev``'s columns: ``ts`` = ``mx`` +
+    ``INTERVAL offset``, ``event_type`` = ``tag``, ``value`` 0.0 and
+    every other (id) column −1, so the entries can filter it out.
+    ``spark.range``, not a scan+limit over the events table: no I/O,
+    and still present when the real slices are empty, so the
+    watermark always advances."""
+    fill = {
+        "ts": F.lit(mx) + F.expr(f"INTERVAL {offset}"),
+        "event_type": F.lit(tag),
+        "value": F.lit(0.0),
+    }
+    return ev.sparkSession.range(1).select(
+        *[fill.get(c, F.lit(-1).cast("long")).alias(c) for c in ev.columns]
+    )
+
+
+def _replay_events(spark, sf_dir, cols, build, key, flush=False) -> DataFrame:
+    """``build`` over the events table's ``cols`` replayed as four
+    time-ordered micro-batches (:func:`time_slices`), append mode.
+    ``flush`` adds a far-future marker batch (max ts + 1 day) whose
+    watermark closes every real window or session; its own never
+    closes, and the callers filter it out regardless."""
+    ev = load_table(spark, sf_dir, "events").select(*cols)
+    parts = time_slices(ev, "ts", 4)
+    if flush:
+        parts.append(_marker(ev, events_max_ts(spark, sf_dir), "1 DAY"))
+    return replay_multibatch(spark, parts, build, "append", f"{key}:{sf_dir}")
+
+
+# --- the four query shapes; each takes a stream and returns the query ---
+
+
+def _window_counts(stream: DataFrame, *keys: str, slide: str | None = None) -> DataFrame:
+    """(count, rounded sum of value) per epoch-aligned 1-hour window
+    (sliding every ``slide`` when given) and ``keys``, under a
+    30-minute watermark. Complete mode in one trigger drops nothing,
+    so the single-trigger entries share the replayed entries' delay."""
+    return (
+        stream.withWatermark("ts", "30 minutes")
+        .groupBy(F.window("ts", "1 hour", slide).alias("w"), *keys)
+        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
+        .select(F.col("w.start").alias("window_start"), *keys, "n", "sum_value")
+    )
+
+
+def _session_counts(stream: DataFrame) -> DataFrame:
+    """Per-user sessions with a 30-minute inactivity gap. An event at
+    exactly prev_ts + gap starts a NEW session (the window is
+    [start, last + gap)), which the oracle mirrors with a strict `<`
+    on the lag difference."""
+    return (
+        stream.withWatermark("ts", "1 hour")
+        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
+        .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("sum_value"))
+        .select("user_id", F.col("w.start").alias("session_start"), "n_events", "sum_value")
+    )
+
+
+def _first_pairs(stream: DataFrame) -> DataFrame:
+    """First arrival per (user_id, event_type); later duplicates are
+    dropped statefully. Append mode emits survivors at once; the
+    watermark only bounds the seen-keys state at scale."""
+    return (
+        stream.withWatermark("ts", "1 hour")
+        .dropDuplicates(["user_id", "event_type"])
+        .select("user_id", "event_type")
+    )
+
+
+def _click_purchase(stream: DataFrame, how: str = "inner") -> DataFrame:
+    """Clicks joined to the same user's purchases ≤ 30 min later.
+    Each side's 1-hour watermark sits AFTER its event_type filter, so
+    it tracks that side's own max event time; the query watermark is
+    the min of the two. The 1 h delay dominates the 30 min match
+    window, so under time-ordered arrival eviction never beats a
+    legitimate match (a purchase in batch i+1 implies watermark ≤
+    purchase_ts − 1 h < click_ts + 30 min)."""
+    clicks = (
+        stream.filter(F.col("event_type") == "click")
+        .select(
+            F.col("user_id").alias("c_user"),
+            F.col("ts").alias("click_ts"),
+            F.col("event_id").alias("click_id"),
+        )
+        .withWatermark("click_ts", "1 hour")
+    )
+    purchases = (
+        stream.filter(F.col("event_type") == "purchase")
+        .select(
+            F.col("user_id").alias("p_user"),
+            F.col("ts").alias("purchase_ts"),
+            F.col("event_id").alias("purchase_id"),
+            F.col("value"),
+        )
+        .withWatermark("purchase_ts", "1 hour")
+    )
+    return clicks.join(
+        purchases,
+        (F.col("c_user") == F.col("p_user"))
+        & (F.col("purchase_ts") >= F.col("click_ts"))
+        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 30 MINUTES")),
+        how,
+    ).select(
+        F.col("c_user").alias("user_id"),
+        "click_id",
+        "purchase_id",
+        F.round("value", 2).alias("purchase_value"),
+    )
+
+
+# --- single-trigger entries: the whole table in one micro-batch ---
+
+
+def tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """1-hour tumbling windows per event_type (epoch-aligned)."""
+    return run_to_completion(_window_counts(_events_stream(spark, sf_dir), "event_type"))
+
+
+def sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """1-hour windows sliding every 30 minutes — each event lands in
+    exactly two windows."""
+    return run_to_completion(
+        _window_counts(_events_stream(spark, sf_dir), slide="30 minutes")
+    )
+
+
+def session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-user session windows with a 30-minute inactivity gap."""
+    return run_to_completion(_session_counts(_events_stream(spark, sf_dir)))
+
+
+def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming deduplication on (user_id, event_type); the bounded
+    replay fits one micro-batch, so the result is exact."""
+    return run_to_completion(_first_pairs(_events_stream(spark, sf_dir)), mode="append")
+
+
+def click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream-stream inner join: purchases within 30 minutes of a
+    click by the same user. Both sides carry watermarks and the join
+    has a time-range constraint, so each side's buffered state is
+    evicted once the other side's watermark passes — the canonical
+    bounded-state streaming join."""
+    return run_to_completion(_click_purchase(_events_stream(spark, sf_dir)), mode="append")
+
+
+def click_purchase_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream-stream LEFT OUTER join: every click, with its matching
+    purchases within 30 minutes — or null-extended once the
+    purchase-side watermark passes the click's match window (the
+    state-eviction point). Unlike the inner join, the outer result
+    is watermark-dependent by design: clicks too close to the end of
+    the (bounded) stream never get their null row because the
+    watermark never passes them; the oracle models the same cutoff
+    (max event ts − 1 h watermark − 30 min window)."""
+    return run_to_completion(
+        _click_purchase(_events_stream(spark, sf_dir), "left_outer"), mode="append"
+    )
+
+
+# --- replayed entries: four time-ordered micro-batches ---
+
+
+def tumbling_counts_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tumbling 1h windows per event_type over the four-batch replay
+    plus a flush marker, append mode. Hour windows SPAN the slice
+    boundaries, so a window's partial counts must be persisted in the
+    state store at the end of one micro-batch and restored in the
+    next, and append mode emits each window exactly once when the
+    watermark passes it. Lost state, double emission, or early
+    eviction all change the result and fail the oracle (the plain
+    batch aggregate)."""
+    res = _replay_events(
+        spark, sf_dir, ("event_id", "ts", "event_type", "value"),
+        lambda s: _window_counts(s, "event_type"), "tumbling_mb", flush=True,
+    )
+    return res.filter(F.col("window_start") <= F.lit(events_max_ts(spark, sf_dir)))
+
+
+def sliding_counts_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sliding 1h/30m windows over the four-batch replay plus a flush
+    marker, append mode — the overlapping-window state case: a slice
+    boundary leaves up to TWO partially-counted windows per key in
+    the state store, both of which must restore and keep
+    accumulating in later batches."""
+    res = _replay_events(
+        spark, sf_dir, ("event_id", "ts", "value"),
+        lambda s: _window_counts(s, slide="30 minutes"), "sliding_mb", flush=True,
+    )
+    return res.filter(F.col("window_start") <= F.lit(events_max_ts(spark, sf_dir)))
+
+
+def session_windows_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Session windows over the four-batch replay plus a flush marker
+    (user_id −1, filtered out) — the hardest cross-batch state shape:
+    a session OPEN at a slice boundary must be extended (or merged)
+    by next-batch events instead of being emitted early or
+    restarted, and append mode may emit it only once its end + gap
+    is behind the watermark."""
+    res = _replay_events(
+        spark, sf_dir, ("event_id", "ts", "user_id", "value"),
+        _session_counts, "session_mb", flush=True,
+    )
+    return res.filter(F.col("user_id") >= 0)
+
+
+def streaming_dedup_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """dropDuplicates over the four-batch replay. A (user_id,
+    event_type) pair first seen in slice 0 recurs in later slices, so
+    a seen-keys state lost or not restored between triggers RE-EMITS
+    it and the row count exceeds the batch DISTINCT oracle."""
+    return _replay_events(
+        spark, sf_dir, ("user_id", "event_type", "ts"), _first_pairs, "dedup_mb"
+    )
+
+
+def click_purchase_join_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Inner click→purchase join over the four-batch replay: a click
+    near a slice boundary must be BUFFERED in join state across
+    micro-batches until its purchase arrives; over-eager eviction
+    across the boundary would drop matches and fail the oracle (the
+    plain batch join)."""
+    return _replay_events(
+        spark, sf_dir, ("event_id", "ts", "event_type", "user_id", "value"),
+        _click_purchase, "join_mb",
+    )
+
+
+def click_purchase_left_join_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LEFT OUTER click→purchase join over the four-batch replay.
+    Beyond the inner twin's buffering, null extension must fire
+    exactly once per unmatched click, at the trigger where the
+    min-of-sides watermark passes click_ts + 30 min — emitting the
+    null early (then matching later) or re-emitting it after a
+    restore would add rows over the oracle. The final set equals the
+    single-trigger entry's (shared oracle)."""
+    return _replay_events(
+        spark, sf_dir, ("event_id", "ts", "event_type", "user_id", "value"),
+        lambda s: _click_purchase(s, "left_outer"), "ljoin_mb",
+    )
+
+
 def late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermark NEGATIVE test: late rows must actually be DROPPED.
 
-    Every other streaming entry replays the whole table in one
-    micro-batch, so the watermark never rejects anything and removing
-    it would not change the answer. Here the replay is four ordered
-    micro-batches (``maxFilesPerTrigger=1``, files mtime-ordered):
+    The replay is four ordered micro-batches (``maxFilesPerTrigger=1``,
+    files mtime-ordered):
 
       1. on-time bulk: events with ``event_id % 7 != 0``;
       2. a single filler row at max_ts + 1 h. Needed because Spark's
@@ -316,7 +573,7 @@ def late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
          beyond the 30-min watermark by then, so every row is
          DROPPED by the late-record filter (2 h ≫ 30 min keeps the
          check clear of <=/< boundary semantics);
-      4. a far-future sentinel (+1 day) that pushes the final
+      4. a far-future marker (+1 day) that pushes the final
          watermark past every real window so append mode emits them
          all; its window never closes and is filtered out.
 
@@ -325,461 +582,17 @@ def late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     the delay large) and the late rows merge back in: the parity row
     fails. That is the point.
     """
-    from lol_data_pipeline_spark.io import load_table
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
     )
-    # 1-row scalar for staging bounds — memoized, not a per-run rescan.
-    mx = events_max_ts(spark, sf_dir)
+    mx = events_max_ts(spark, sf_dir)  # 1-row scalar, memoized
     on_time = ev.filter(F.col("event_id") % 7 != 0)
     late = ev.filter(
         (F.col("event_id") % 7 == 0)
         & (F.col("ts") <= F.lit(mx) - F.expr("INTERVAL 2 HOURS"))
     )
-    def _marker(offset_expr: str, tag: str):
-        # one fabricated row — spark.range, not a scan+limit over the
-        # events table (no I/O, and still present when on_time is
-        # empty, so the watermark always advances)
-        return spark.range(1).select(
-            F.lit(-1).cast("long").alias("event_id"),
-            (F.lit(mx) + F.expr(offset_expr)).alias("ts"),
-            F.lit(tag).alias("event_type"),
-            F.lit(0.0).alias("value"),
-        )
-
-    filler = _marker("INTERVAL 1 HOUR", "filler")
-    sentinel = _marker("INTERVAL 1 DAY", "sentinel")
-
-    def build(stream):
-        return (
-            stream.withWatermark("ts", "30 minutes")
-            .groupBy(F.window("ts", "1 hour").alias("w"))
-            .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
-            .select(F.col("w.start").alias("window_start"), "n", "sum_value")
-        )
-
-    res = replay_multibatch(
-        spark,
-        (on_time, filler, late, sentinel),
-        build,
-        "append",
-        f"late_drop:{sf_dir}",
-    )
-    return res.filter(F.col("window_start") <= F.lit(mx))
-
-
-def tumbling_counts_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 1h windows per event_type over a FOUR-micro-batch
-    time-ordered replay (plus a far-future sentinel batch), append
-    mode.
-
-    What this regresses that the single-batch twin
-    (:func:`tumbling_counts`) cannot: hour windows SPAN the slice
-    boundaries, so a window's partial counts must be persisted in the
-    state store at the end of one micro-batch and restored in the
-    next; the watermark advances per batch and append mode emits each
-    window exactly once when the watermark passes it. Lost state,
-    double emission, or early eviction all change the result and fail
-    the oracle (the plain batch aggregate).
-
-    The sentinel (max_ts + 1 day) pushes the final watermark past
-    every real window so they all flush; its own window never closes
-    and is filtered by the ``window_start <= max_ts`` guard."""
-    from lol_data_pipeline_spark.io import load_table
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "event_type", "value"
-    )
-    mx = events_max_ts(spark, sf_dir)  # 1-row scalar, memoized
-    sentinel = spark.range(1).select(
-        F.lit(-1).cast("long").alias("event_id"),
-        (F.lit(mx) + F.expr("INTERVAL 1 DAY")).alias("ts"),
-        F.lit("sentinel").alias("event_type"),
-        F.lit(0.0).alias("value"),
-    )
-    parts = time_slices(ev, "ts", 4) + [sentinel]
-
-    def build(stream):
-        return (
-            stream.withWatermark("ts", "30 minutes")
-            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-            .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
-            .select(F.col("w.start").alias("window_start"), "event_type", "n", "sum_value")
-        )
-
-    res = replay_multibatch(
-        spark, parts, build, "append", f"tumbling_mb:{sf_dir}"
-    )
-    return res.filter(F.col("window_start") <= F.lit(mx))
-
-
-def click_purchase_join_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream inner join (purchases ≤30 min after a click,
-    same user) over a four-micro-batch time-ordered replay: a click
-    near a slice boundary must be BUFFERED in join state across one
-    or more micro-batches until its purchase arrives in a later
-    batch. The 1 h watermark strictly dominates the 30 min match
-    window, so eviction can never beat a legitimate match (a matching
-    purchase in batch i+1 implies watermark ≤ purchase_ts − 1 h <
-    click_ts + 30 min, the click's eviction bound) — over-eager
-    eviction across the batch boundary would drop matches and fail
-    the oracle (the plain batch join)."""
-    from lol_data_pipeline_spark.io import load_table
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "event_type", "user_id", "value"
-    )
-    parts = time_slices(ev, "ts", 4)
-
-    def build(stream):
-        clicks = (
-            stream.filter(F.col("event_type") == "click")
-            .select(
-                F.col("user_id").alias("c_user"),
-                F.col("ts").alias("click_ts"),
-                F.col("event_id").alias("click_id"),
-            )
-            .withWatermark("click_ts", "1 hour")
-        )
-        purchases = (
-            stream.filter(F.col("event_type") == "purchase")
-            .select(
-                F.col("user_id").alias("p_user"),
-                F.col("ts").alias("purchase_ts"),
-                F.col("event_id").alias("purchase_id"),
-                F.col("value"),
-            )
-            .withWatermark("purchase_ts", "1 hour")
-        )
-        return clicks.join(
-            purchases,
-            (F.col("c_user") == F.col("p_user"))
-            & (F.col("purchase_ts") >= F.col("click_ts"))
-            & (
-                F.col("purchase_ts")
-                <= F.col("click_ts") + F.expr("INTERVAL 30 MINUTES")
-            ),
-        ).select(
-            F.col("c_user").alias("user_id"),
-            "click_id",
-            "purchase_id",
-            F.round("value", 2).alias("purchase_value"),
-        )
-
-    return replay_multibatch(spark, parts, build, "append", f"join_mb:{sf_dir}")
-
-
-def session_windows_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user 30-minute-gap session windows over a four-micro-batch
-    time-ordered replay — the hardest cross-batch state shape:
-    a session OPEN at a slice boundary must be extended (or merged)
-    by next-batch events instead of being emitted early or restarted,
-    and append mode may emit a session only once its end + gap is
-    behind the watermark. The far-future sentinel (tagged user_id −1,
-    filtered from the result) closes every real session; the oracle
-    is the batch gaps-and-islands computation."""
-    from lol_data_pipeline_spark.io import load_table
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "value"
-    )
-    mx = events_max_ts(spark, sf_dir)  # 1-row scalar, memoized
-    sentinel = spark.range(1).select(
-        F.lit(-1).cast("long").alias("event_id"),
-        (F.lit(mx) + F.expr("INTERVAL 1 DAY")).alias("ts"),
-        F.lit(-1).cast("long").alias("user_id"),
-        F.lit(0.0).alias("value"),
-    )
-    parts = time_slices(ev, "ts", 4) + [sentinel]
-
-    def build(stream):
-        return (
-            stream.withWatermark("ts", "1 hour")
-            .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-            .agg(
-                F.count("*").alias("n_events"),
-                F.round(F.sum("value"), 2).alias("sum_value"),
-            )
-            .select(
-                "user_id",
-                F.col("w.start").alias("session_start"),
-                "n_events",
-                "sum_value",
-            )
-        )
-
-    res = replay_multibatch(
-        spark, parts, build, "append", f"session_mb:{sf_dir}"
-    )
-    return res.filter(F.col("user_id") >= 0)
-
-
-def tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """1-hour tumbling windows per event_type (epoch-aligned)."""
-    ev = _events_stream(spark, sf_dir)
-    agg = (
-        ev.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n", "sum_value")
-    )
-    return run_to_completion(agg)
-
-
-def sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """1-hour windows sliding every 30 minutes — each event lands in
-    exactly two windows."""
-    ev = _events_stream(spark, sf_dir)
-    agg = (
-        ev.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
-        .select(F.col("w.start").alias("window_start"), "n", "sum_value")
-    )
-    return run_to_completion(agg)
-
-
-def session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user session windows with a 30-minute inactivity gap.
-
-    Session semantics: an event at exactly prev_ts + gap starts a NEW
-    session (window is [start, last+gap)), which the oracle mirrors
-    with a strict `<` on the lag difference.
-    """
-    ev = _events_stream(spark, sf_dir)
-    agg = (
-        ev.withWatermark("ts", "1 hour")
-        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("sum_value"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            "n_events",
-            "sum_value",
-        )
-    )
-    return run_to_completion(agg)
-
-
-def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming deduplication: first arrival per (user_id,
-    event_type) wins, duplicates dropped statefully as the stream
-    runs. The watermark bounds the dedup state at scale (late
-    arrivals beyond it may re-emit; the bounded replay here fits one
-    micro-batch, so the result is exact)."""
-    ev = _events_stream(spark, sf_dir)
-    dd = (
-        ev.withWatermark("ts", "1 hour")
-        .dropDuplicates(["user_id", "event_type"])
-        .select("user_id", "event_type")
-    )
-    return run_to_completion(dd, mode="append")
-
-
-def streaming_dedup_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming dropDuplicates across a FOUR-micro-batch ordered
-    replay — the cross-batch twin of :func:`streaming_dedup`. The
-    seen-keys state must survive batch boundaries: a (user_id,
-    event_type) pair first seen in slice 0 recurs in later slices
-    (the events table repeats pairs over time), so if the state store
-    were lost or not restored between triggers those duplicates would
-    RE-EMIT and the row count would exceed the batch DISTINCT oracle
-    — the result is identity-dependent on cross-batch state, which a
-    single-batch replay cannot check. Append mode: dropDuplicates
-    emits survivors immediately (no watermark wait); the watermark
-    exists to bound state at scale."""
-    from lol_data_pipeline_spark.io import load_table
-
-    ev = load_table(spark, sf_dir, "events").select("user_id", "event_type", "ts")
-
-    def build(stream):
-        return (
-            stream.withWatermark("ts", "1 hour")
-            .dropDuplicates(["user_id", "event_type"])
-            .select("user_id", "event_type")
-        )
-
-    return replay_multibatch(
-        spark, time_slices(ev, "ts", 4), build, "append", f"dedup_mb:{sf_dir}"
-    )
-
-
-def click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream inner join: purchases within 30 minutes of a
-    click by the same user. Both sides carry watermarks and the join
-    has a time-range constraint, so each side's buffered state is
-    evicted once the other side's watermark passes — the canonical
-    bounded-state streaming join."""
-    clicks = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("click_ts"),
-            F.col("event_id").alias("click_id"),
-        )
-        .withWatermark("click_ts", "1 hour")
-    )
-    purchases = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("value"),
-        )
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    j = clicks.join(
-        purchases,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 30 MINUTES")),
-    ).select(
-        F.col("c_user").alias("user_id"),
-        "click_id",
-        "purchase_id",
-        F.round("value", 2).alias("purchase_value"),
-    )
-    return run_to_completion(j, mode="append")
-
-
-def click_purchase_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream LEFT OUTER join: every click, with its matching
-    purchases within 30 minutes — or null-extended once the
-    purchase-side watermark passes the click's match window (the
-    state-eviction point). Unlike the inner join, the outer result
-    is watermark-dependent by design: clicks too close to the end of
-    the (bounded) stream never get their null row because the
-    watermark never passes them; the oracle models the same cutoff
-    (max event ts − 1 h watermark − 30 min window)."""
-    clicks = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("click_ts"),
-            F.col("event_id").alias("click_id"),
-        )
-        .withWatermark("click_ts", "1 hour")
-    )
-    purchases = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("value"),
-        )
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    j = clicks.join(
-        purchases,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 30 MINUTES")),
-        "left_outer",
-    ).select(
-        F.col("c_user").alias("user_id"),
-        "click_id",
-        "purchase_id",
-        F.round("value", 2).alias("purchase_value"),
-    )
-    return run_to_completion(j, mode="append")
-
-
-def click_purchase_left_join_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LEFT OUTER click↔purchase join over a four-micro-batch
-    time-ordered replay. Cross-batch obligations beyond the inner
-    twin (:func:`click_purchase_join_multibatch`): (1) a click
-    buffered over a batch boundary must still match a purchase
-    arriving batches later; (2) null extension must fire exactly
-    once per unmatched click, at the trigger where the min-of-sides
-    watermark passes click_ts + 30 min — emitting the null early
-    (then matching later) or re-emitting it after a restore would
-    add rows over the oracle. Ordered slices + the 1 h watermark
-    dominating the 30 min window guarantee no legitimate match is
-    ever evicted first, so the final set equals the single-batch
-    entry's (shared oracle)."""
-    from lol_data_pipeline_spark.io import load_table
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "event_type", "user_id", "value"
-    )
-    parts = time_slices(ev, "ts", 4)
-
-    def build(stream):
-        clicks = (
-            stream.filter(F.col("event_type") == "click")
-            .select(
-                F.col("user_id").alias("c_user"),
-                F.col("ts").alias("click_ts"),
-                F.col("event_id").alias("click_id"),
-            )
-            .withWatermark("click_ts", "1 hour")
-        )
-        purchases = (
-            stream.filter(F.col("event_type") == "purchase")
-            .select(
-                F.col("user_id").alias("p_user"),
-                F.col("ts").alias("purchase_ts"),
-                F.col("event_id").alias("purchase_id"),
-                F.col("value"),
-            )
-            .withWatermark("purchase_ts", "1 hour")
-        )
-        return clicks.join(
-            purchases,
-            (F.col("c_user") == F.col("p_user"))
-            & (F.col("purchase_ts") >= F.col("click_ts"))
-            & (
-                F.col("purchase_ts")
-                <= F.col("click_ts") + F.expr("INTERVAL 30 MINUTES")
-            ),
-            "left_outer",
-        ).select(
-            F.col("c_user").alias("user_id"),
-            "click_id",
-            "purchase_id",
-            F.round("value", 2).alias("purchase_value"),
-        )
-
-    return replay_multibatch(spark, parts, build, "append", f"ljoin_mb:{sf_dir}")
-
-
-def sliding_counts_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding 1h/30m windows over a FOUR-micro-batch time-ordered
-    replay (plus sentinel), append mode — the overlapping-window
-    state case: every event belongs to TWO open windows, so a slice
-    boundary leaves up to two partially-counted windows per key in
-    the state store, both of which must restore and keep
-    accumulating in later batches. The tumbling twin
-    (:func:`tumbling_counts_multibatch`) holds one open window per
-    key; overlap is what this entry adds. Sentinel flushes the tail;
-    its never-closing windows are filtered by the max-ts guard."""
-    from lol_data_pipeline_spark.io import load_table
-
-    ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "value")
-    mx = events_max_ts(spark, sf_dir)  # 1-row scalar, memoized
-    sentinel = spark.range(1).select(
-        F.lit(-1).cast("long").alias("event_id"),
-        (F.lit(mx) + F.expr("INTERVAL 1 DAY")).alias("ts"),
-        F.lit(0.0).alias("value"),
-    )
-    parts = time_slices(ev, "ts", 4) + [sentinel]
-
-    def build(stream):
-        return (
-            stream.withWatermark("ts", "30 minutes")
-            .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
-            .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
-            .select(F.col("w.start").alias("window_start"), "n", "sum_value")
-        )
-
-    res = replay_multibatch(spark, parts, build, "append", f"sliding_mb:{sf_dir}")
+    parts = (on_time, _marker(ev, mx, "1 HOUR", "filler"), late, _marker(ev, mx, "1 DAY"))
+    res = replay_multibatch(spark, parts, _window_counts, "append", f"late_drop:{sf_dir}")
     return res.filter(F.col("window_start") <= F.lit(mx))
 
 
@@ -799,8 +612,6 @@ def cdf_counters_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate — which is what the DuckDB oracle checks. Lost or
     double-merged counter state across any of the 4 triggers fails
     parity."""
-    from lol_data_pipeline_spark.io import load_table
-
     ev = load_table(spark, sf_dir, "events").select("ts", "event_type", "value")
     b = ev.agg(F.min("value").alias("mn"), F.max("value").alias("mx")).collect()[0]
     mn, mx = float(b["mn"]), float(b["mx"])

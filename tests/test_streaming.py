@@ -76,14 +76,14 @@ def test_watermark_drops_late_data(spark, tmp_path):
         .agg(F.count("*").alias("n"))
         .select(F.col("w.start").alias("ws"), "n")
     )
-    import tempfile, uuid
+    import uuid
 
     qname = f"late_{uuid.uuid4().hex[:8]}"
     q = (
         agg.writeStream.outputMode("append")
         .format("memory")
         .queryName(qname)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_late_"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )
     try:
@@ -423,3 +423,64 @@ def test_totals_multibatch_state_accumulates(spark, sf_dir):
     assert joined.filter(F.col("n_events") != F.col("bn")).count() == 0
     last_slice = time_slices(ev, "ts", 4)[-1]
     assert last_slice.count() < ev.count()  # a reset would undercount
+
+
+def test_drain_removes_its_checkpoints(spark, tmp_path, monkeypatch):
+    """Every bounded query removes its checkpoint once it has stopped:
+    the memory sink, both replay sink shapes and the epoch-dir
+    foreachBatch sink each make one checkpoint through the module's
+    ``_ckpt_dir`` and leave none behind."""
+    import tempfile
+
+    from pyspark.sql import Row
+
+    made = []
+
+    def ckpt_dir():
+        made.append(tempfile.mkdtemp(prefix="ckpt_", dir=tmp_path))
+        return made[-1]
+
+    monkeypatch.setattr(sw, "_ckpt_dir", ckpt_dir)
+    schema = "event_id long, event_type string"
+    src = str(tmp_path / "src")
+    spark.createDataFrame([(1, "a"), (2, "a"), (3, "b")], schema).coalesce(
+        1
+    ).write.parquet(src)
+
+    def counts():
+        return spark.readStream.schema(schema).parquet(src).groupBy("event_type").count()
+
+    got = sw.run_to_completion(counts()).collect()
+    assert sorted(got) == [Row(event_type="a", count=2), Row(event_type="b", count=1)]
+    parts = [spark.createDataFrame([(i, "a")], schema) for i in range(2)]
+    assert sw.replay_multibatch(spark, parts, lambda s: s, "append", "ckpt_mem").count() == 2
+    seen = []
+    sw.replay_multibatch(
+        spark, parts, lambda s: s, "append", "ckpt_fb",
+        foreach_batch=lambda df, epoch_id: seen.append(epoch_id),
+    )
+    assert len(seen) == 2
+    assert write_stream_foreach_batch(counts(), str(tmp_path / "fb"))
+    assert len(made) == 4
+    assert not list(tmp_path.glob("ckpt_*"))
+
+
+@pytest.mark.parametrize(
+    "single, replayed",
+    [
+        ("stream_tumbling_window", "stream_tumbling_multibatch"),
+        ("stream_sliding_window", "stream_sliding_multibatch"),
+        ("stream_session_window", "stream_session_multibatch"),
+        ("stream_dedup", "stream_dedup_multibatch"),
+        ("stream_join_click_purchase", "stream_join_multibatch"),
+        ("stream_user_topk", "stream_topk_multibatch"),
+        ("stream_join_left_outer", "stream_join_left_outer_multibatch"),
+    ],
+)
+def test_twin_entries_share_one_oracle(single, replayed):
+    """A replayed entry must reproduce its single-trigger twin's
+    answer, so both are checked against the same oracle."""
+    from lol_data_pipeline_spark.plans import REGISTRY
+
+    assert REGISTRY[single].sql
+    assert REGISTRY[single].sql == REGISTRY[replayed].sql

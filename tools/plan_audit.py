@@ -373,14 +373,11 @@ BARE_READ_OK = {
     # mergeSchema inference is the operator's semantics
     "plans/modeling.py:corpus_semdedup_probe_replay",  # standing side
     # of the stream replay entry, read once per replay
-    "plans/modeling.py:stream_semdedup_probe_multibatch",  # sink readback
-    "plans/round11.py:stream_minhash_probe_multibatch",  # sink readback
+    "plans/modeling.py:stream_semdedup_probe_multibatch",  # standing side
     "plans/round12.py:ann_index_quota_trigger",  # maintenance stats
     "plans/round12.py:ann_index_rebuild_decision",  # maintenance stats
-    "plans/round12.py:stream_chunk_probe_multibatch",  # sink readback
-    "plans/round13.py:stream_ingest_gate_multibatch",  # sink readback
-    "plans/round13.py:stream_phash_probe_multibatch",  # sink readback
     "streaming/windows.py:stage_ordered_batches",  # replay staging
+    "streaming/sinks.py:replay_epochs",  # epoch-sink readback
     "streaming/sinks.py:merge_batch",  # incremental-view state swap
     "streaming/sinks.py:incremental_view_multibatch",  # state readback
 }
