@@ -403,6 +403,21 @@ def _calibrate_mc(n: int = 32) -> dict:
     }
 
 
+def noop_run(spark, sf_dir: str, name: str) -> float:
+    """Wall seconds to build ``REGISTRY[name]`` and run it into the
+    noop sink: the one timed run every measuring tool shares."""
+    t0 = time.perf_counter()
+    REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    return time.perf_counter() - t0
+
+
+def warm_min(spark, sf_dir: str, name: str, runs: int) -> float:
+    """One warm run (JIT, file listing, index build), then the min of
+    ``runs`` timed :func:`noop_run` calls, rounded to ms."""
+    noop_run(spark, sf_dir, name)
+    return round(min(noop_run(spark, sf_dir, name) for _ in range(runs)), 3)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     calib = _calibrate()
@@ -412,20 +427,13 @@ def main() -> None:
     for name in HEADLINE:
         if name not in REGISTRY:
             continue
-        df = REGISTRY[name].fn(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()  # warm (JIT, file listing)
-        best = float("inf")
         # min-of-3 for the frozen BASELINE_SET (the 2x-gate comparison;
         # r07 lost 66% of the gate headroom to one bursty-host run that
         # the single pre-run calibration probe never saw), min-of-2 for
         # the rest — +~1 baseline-set pass of wall for a far lower
         # chance that host interference writes the number of record
         runs = 3 if name in BASELINE_SET else 2
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        timings[name] = round(best, 3)
+        timings[name] = warm_min(spark, sf_dir, name, runs)
     # second probe AFTER the timed set: interference is bursty, a
     # single instant's sample proved blind in r07 — before/after pair
     # shows whether the host degraded DURING the measurement

@@ -66,6 +66,8 @@ from lol_data_pipeline_spark.plans.round9 import (
     _CB_CELLS,
     _CB_CENTS,
     _K,
+    _cloned_docs,
+    _cloned_docs_cte,
     _codebook_ctes,
     _fair_queries,
     _fair_sql,
@@ -1304,13 +1306,7 @@ def text_bm25_served(spark, sf_dir):
 
 
 def _sql_bm25_upsert() -> str:
-    head = f"""alldocs AS (
-      SELECT doc_id, text FROM documents
-      UNION ALL
-      SELECT doc_id + {_BMUP_SHIFT} AS doc_id, text FROM documents
-      WHERE doc_id >= {_BMUP_LO} AND doc_id < {_BMUP_HI}
-    ),
-    """
+    head = _cloned_docs_cte(_BMUP_LO, _BMUP_HI, _BMUP_SHIFT)
     return _bm25_oracle(src="alldocs", head=head)
 
 
@@ -1340,9 +1336,9 @@ def bm25_index_upsert_entry(spark, sf_dir):
 
     path, meta = ensure_bm25_index(spark, sf_dir, variant="upsert")
     docs = T(spark, sf_dir, "documents")
-    batch = docs.filter(
-        F.col("doc_id").between(_BMUP_LO, _BMUP_HI - 1)
-    ).select((F.col("doc_id") + _BMUP_SHIFT).alias("doc_id"), "text")
+    batch = _cloned_docs(
+        docs, F.col("doc_id").between(_BMUP_LO, _BMUP_HI - 1), _BMUP_SHIFT
+    )
     meta = bm25_index_upsert(spark, path, meta, batch)
     return served_bm25_topk(
         spark, path, meta, _BM25_TERMS, k=_BM25_K, k1=_BM25_K1, b=_BM25_B
@@ -1705,13 +1701,7 @@ _SBUP_SHIFT = 120000
 
 
 def _sql_stream_bm25_upsert() -> str:
-    head = f"""alldocs AS (
-      SELECT doc_id, text FROM documents
-      UNION ALL
-      SELECT doc_id + {_SBUP_SHIFT} AS doc_id, text FROM documents
-      WHERE doc_id >= {_SBUP_LO} AND doc_id < {_SBUP_HI}
-    ),
-    """
+    head = _cloned_docs_cte(_SBUP_LO, _SBUP_HI, _SBUP_SHIFT)
     return _bm25_oracle(src="alldocs", head=head)
 
 
@@ -1745,9 +1735,9 @@ def stream_bm25_upsert_multibatch(spark, sf_dir):
 
     path, meta = ensure_bm25_index(spark, sf_dir, variant="streamup")
     docs = T(spark, sf_dir, "documents")
-    batch = docs.filter(
-        F.col("doc_id").between(_SBUP_LO, _SBUP_HI - 1)
-    ).select((F.col("doc_id") + _SBUP_SHIFT).alias("doc_id"), "text")
+    batch = _cloned_docs(
+        docs, F.col("doc_id").between(_SBUP_LO, _SBUP_HI - 1), _SBUP_SHIFT
+    )
     parts = [batch.filter(F.col("doc_id") % 4 == i) for i in range(4)]
 
     def sink(df, _epoch_id):
@@ -1945,13 +1935,7 @@ def dedup_minhash_served(spark, sf_dir):
 
 
 def _sql_mh_upsert() -> str:
-    head = f"""alldocs AS (
-      SELECT doc_id, text FROM documents
-      UNION ALL
-      SELECT doc_id + {_MHUP_SHIFT} AS doc_id, text FROM documents
-      WHERE doc_id >= {_MHUP_LO} AND doc_id < {_MHUP_HI}
-    ),
-    """
+    head = _cloned_docs_cte(_MHUP_LO, _MHUP_HI, _MHUP_SHIFT)
     return _sql_minhash_probe(
         head=head, src="alldocs",
         new_cond=f"a.doc_id % 5 = 0 AND a.doc_id < {_MHUP_SHIFT}",
@@ -1983,9 +1967,9 @@ def minhash_index_upsert_entry(spark, sf_dir):
         k=_MH_K, bands=_MH_BANDS, n=_MH_N, index_where=_MH_IDX_WHERE,
     )
     docs = T(spark, sf_dir, "documents")
-    batch = docs.filter(
-        F.col("doc_id").between(_MHUP_LO, _MHUP_HI - 1)
-    ).select((F.col("doc_id") + _MHUP_SHIFT).alias("doc_id"), "text")
+    batch = _cloned_docs(
+        docs, F.col("doc_id").between(_MHUP_LO, _MHUP_HI - 1), _MHUP_SHIFT
+    )
     meta = minhash_index_upsert(spark, path, meta, batch)
     probe = docs.filter(F.pmod(F.col("doc_id"), F.lit(5)) == 0)
     verify = docs.select("doc_id", "text").unionByName(batch)

@@ -21,6 +21,7 @@ import shutil
 from pyspark.sql import functions as F
 
 from lol_data_pipeline_spark.plans.queries import T, query
+from lol_data_pipeline_spark.plans.round9 import _cloned_docs, _cloned_docs_cte
 
 # ---------------------------------------------------------------------------
 # ann_index_autosize — the k ∝ √N sizing rule as a decision table.
@@ -367,13 +368,7 @@ def corpus_substring_dedup_served(spark, sf_dir):
 
 
 def _sql_chunk_upsert() -> str:
-    head = f"""alldocs AS (
-      SELECT doc_id, text FROM documents
-      UNION ALL
-      SELECT doc_id + {_CHUP_SHIFT} AS doc_id, text FROM documents
-      WHERE doc_id >= {_CHUP_LO} AND doc_id < {_CHUP_HI}
-    ),
-    """
+    head = _cloned_docs_cte(_CHUP_LO, _CHUP_HI, _CHUP_SHIFT)
     return _sql_chunk_clean(
         head=head,
         src="alldocs",
@@ -406,9 +401,9 @@ def chunk_index_upsert_entry(spark, sf_dir):
         spark, sf_dir, variant="upsert", c=_CSD_C, index_where=_CSD_IDX_WHERE
     )
     docs = T(spark, sf_dir, "documents")
-    batch = docs.filter(
-        F.col("doc_id").between(_CHUP_LO, _CHUP_HI - 1)
-    ).select((F.col("doc_id") + _CHUP_SHIFT).alias("doc_id"), "text")
+    batch = _cloned_docs(
+        docs, F.col("doc_id").between(_CHUP_LO, _CHUP_HI - 1), _CHUP_SHIFT
+    )
     meta = chunk_index_upsert(spark, path, meta, batch)
     probe = docs.filter(F.pmod(F.col("doc_id"), F.lit(5)) == 0)
     return served_chunk_clean(spark, path, meta, probe)

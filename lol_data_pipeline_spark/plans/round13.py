@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from lol_data_pipeline_spark.plans.queries import T, query
+from lol_data_pipeline_spark.plans.round9 import _cloned_docs
 
 # the decontamination corpus split shared with corpus_decontaminate /
 # corpus_decontaminate_served: src0/src1 are the benchmark, the rest
@@ -59,6 +60,17 @@ def _sql_decon(
     """
 
 
+def _nup_batch(docs):
+    """The contaminated-ingest batch: src0 docs with doc_id % 3 = 0,
+    cloned under ``_NUP_SHIFT`` ids (oracle: :func:`_sql_ngram_upsert`,
+    which also tags them ``'clone'``)."""
+    return _cloned_docs(
+        docs,
+        (F.col("source") == "src0") & (F.pmod(F.col("doc_id"), F.lit(3)) == 0),
+        _NUP_SHIFT,
+    )
+
+
 def _sql_ngram_upsert() -> str:
     head = f"""alldocs AS (
       SELECT doc_id, source, text FROM documents
@@ -94,9 +106,7 @@ def ngram_index_upsert_entry(spark, sf_dir):
         spark, sf_dir, variant="nup", n=5, index_where=_NG_IDX_WHERE
     )
     docs = T(spark, sf_dir, "documents")
-    batch = docs.filter(
-        (F.col("source") == "src0") & (F.pmod(F.col("doc_id"), F.lit(3)) == 0)
-    ).select((F.col("doc_id") + _NUP_SHIFT).alias("doc_id"), "text")
+    batch = _nup_batch(docs)
     meta = ngram_index_upsert(spark, path, meta, batch)
     bench = docs.filter(F.col("source").isin("src0", "src1"))
     return served_contamination(spark, path, meta, bench, min_shared=3)
@@ -237,9 +247,7 @@ def stream_ngram_upsert_multibatch(spark, sf_dir):
         spark, sf_dir, variant="nstream", n=5, index_where=_NG_IDX_WHERE
     )
     docs = T(spark, sf_dir, "documents")
-    batch = docs.filter(
-        (F.col("source") == "src0") & (F.pmod(F.col("doc_id"), F.lit(3)) == 0)
-    ).select((F.col("doc_id") + _NUP_SHIFT).alias("doc_id"), "text")
+    batch = _nup_batch(docs)
     parts = [
         batch.filter(F.pmod(F.col("doc_id"), F.lit(4)) == i) for i in range(4)
     ]

@@ -20,6 +20,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from lol_data_pipeline_spark.plans.queries import T, query
+from lol_data_pipeline_spark.plans.round9 import _cloned_docs
 
 _VID_SHIFT = 600000  # re-encoded twin clips
 _VID_DISJOINT = 999331  # unrelated pixel field for the miss control
@@ -641,9 +642,9 @@ def chunk_index_compact_entry(spark, sf_dir):
         spark, sf_dir, variant="cpt", c=_CSD_C, index_where=_CSD_IDX_WHERE
     )
     docs = T(spark, sf_dir, "documents")
-    batch = docs.filter(
-        F.col("doc_id").between(_CHUP_LO, _CHUP_HI - 1)
-    ).select((F.col("doc_id") + _CHUP_SHIFT).alias("doc_id"), "text")
+    batch = _cloned_docs(
+        docs, F.col("doc_id").between(_CHUP_LO, _CHUP_HI - 1), _CHUP_SHIFT
+    )
     meta = chunk_index_upsert(spark, path, meta, batch)
     CHUNKS.compact(spark, path)
     assert lsm.lsm_epochs(chunks_path(path)) == []

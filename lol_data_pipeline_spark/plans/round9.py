@@ -132,6 +132,28 @@ def _swapped_batch_cte(lo: int, hi: int, shift: int) -> str:
     )"""
 
 
+def _cloned_docs(docs, where, shift: int):
+    """The document upsert entries' batch: the ``documents`` rows
+    matching ``where``, text unchanged, under ids shifted by
+    ``shift`` — the re-ingest shape (oracle twin for an id range:
+    :func:`_cloned_docs_cte`)."""
+    return docs.filter(where).select(
+        (F.col("doc_id") + shift).alias("doc_id"), "text"
+    )
+
+
+def _cloned_docs_cte(lo: int, hi: int, shift: int) -> str:
+    """``alldocs``: the corpus plus :func:`_cloned_docs` of
+    ``lo`` ≤ doc_id < ``hi``, as the ``WITH {head}`` of an oracle."""
+    return f"""alldocs AS (
+      SELECT doc_id, text FROM documents
+      UNION ALL
+      SELECT doc_id + {shift} AS doc_id, text FROM documents
+      WHERE doc_id >= {lo} AND doc_id < {hi}
+    ),
+    """
+
+
 def _codebook_ctes(batch: tuple[int, int, int] | None = None) -> list[str]:
     """The sampled-trained codebook every IVF+PQ oracle re-derives —
     build_ivfpq_index's training and assignment: extensions.

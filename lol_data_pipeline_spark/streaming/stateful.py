@@ -15,9 +15,14 @@ from typing import Any
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from lol_data_pipeline_spark.streaming.windows import _events_stream, run_to_completion
+from lol_data_pipeline_spark.streaming.windows import (
+    _events_stream,
+    _replay_events,
+    run_to_completion,
+)
 
 OUTPUT_DDL = "user_id bigint, n_events bigint, sum_value double"
 STATE_DDL = "n bigint, s double"
@@ -91,13 +96,6 @@ def running_user_totals_multibatch(spark: SparkSession, sf_dir: str) -> DataFram
     single-batch replay cannot provide. The memory sink keeps one
     snapshot per key per batch it appeared in; n_events is strictly
     increasing, so max_by(n_events) selects the final state."""
-    from lol_data_pipeline_spark.io import load_table
-    from lol_data_pipeline_spark.streaming.windows import (
-        replay_multibatch,
-        time_slices,
-    )
-
-    ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "value")
 
     def build(stream):
         return stream.groupBy("user_id").applyInPandasWithState(
@@ -108,12 +106,10 @@ def running_user_totals_multibatch(spark: SparkSession, sf_dir: str) -> DataFram
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
 
-    res = replay_multibatch(
-        spark, time_slices(ev, "ts", 4), build, "update",
-        f"totals_mb:{sf_dir}", state_partitions=PY_STATE_PARTITIONS,
+    res = _replay_events(
+        spark, sf_dir, ("user_id", "ts", "value"), build, "totals_mb",
+        mode="update", state_partitions=PY_STATE_PARTITIONS,
     )
-    import pyspark.sql.functions as F
-
     return (
         res.groupBy("user_id")
         .agg(
@@ -236,16 +232,6 @@ def running_user_topk_multibatch(
     appeared in; the state carries an update counter and the final
     filter keeps each user's LAST snapshot (a per-user max — a keyed
     aggregate, no global window)."""
-    from lol_data_pipeline_spark.streaming.windows import (
-        replay_multibatch,
-        time_slices,
-    )
-
-    from lol_data_pipeline_spark.io import load_table
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "value", "event_id"
-    )
 
     def build(stream):
         return stream.groupBy("user_id").applyInPandasWithState(
@@ -258,12 +244,10 @@ def running_user_topk_multibatch(
 
     # Python-stateful: per-key pandas work parallelizes across
     # partitions — 16 measured best (run_to_completion docstring).
-    res = replay_multibatch(
-        spark, time_slices(ev, "ts", 2), build, "update",
-        f"topk_mb:{sf_dir}", state_partitions=PY_STATE_PARTITIONS,
+    res = _replay_events(
+        spark, sf_dir, ("user_id", "ts", "value", "event_id"), build, "topk_mb",
+        mode="update", slices=2, state_partitions=PY_STATE_PARTITIONS,
     )
-    import pyspark.sql.functions as F
-
     last = res.groupBy(F.col("user_id").alias("u")).agg(F.max("upd").alias("last_upd"))
     return (
         res.join(
@@ -380,15 +364,6 @@ def latest_per_key_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge-order comparison surfaces as a stale row vs the batch
     row_number() oracle. The memory sink appends one snapshot per
     key per batch; the update counter keeps each key's last."""
-    from lol_data_pipeline_spark.io import load_table
-    from lol_data_pipeline_spark.streaming.windows import (
-        replay_multibatch,
-        time_slices,
-    )
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "value", "event_id"
-    )
 
     def build(stream):
         return stream.groupBy("user_id").applyInPandasWithState(
@@ -399,12 +374,10 @@ def latest_per_key_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
 
-    res = replay_multibatch(
-        spark, time_slices(ev, "ts", 4), build, "update",
-        f"cdc_mb:{sf_dir}", state_partitions=PY_STATE_PARTITIONS,
+    res = _replay_events(
+        spark, sf_dir, ("user_id", "ts", "value", "event_id"), build, "cdc_mb",
+        mode="update", state_partitions=PY_STATE_PARTITIONS,
     )
-    import pyspark.sql.functions as F
-
     last = res.groupBy(F.col("user_id").alias("u")).agg(F.max("upd").alias("last_upd"))
     return (
         res.join(last, (res["user_id"] == last["u"]) & (res["upd"] == last["last_upd"]))
@@ -460,15 +433,6 @@ def alert_transitions_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     append-only by construction (a transition happens once), so the
     update-mode memory sink's concatenation of per-batch emissions IS
     the final answer — no last-snapshot filter needed, unlike top-k."""
-    from lol_data_pipeline_spark.io import load_table
-    from lol_data_pipeline_spark.streaming.windows import (
-        replay_multibatch,
-        time_slices,
-    )
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id", "value"
-    )
 
     def build(stream):
         return stream.groupBy("user_id").applyInPandasWithState(
@@ -479,9 +443,9 @@ def alert_transitions_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
 
-    return replay_multibatch(
-        spark, time_slices(ev, "ts", 4), build, "update",
-        f"alert_mb:{sf_dir}", state_partitions=PY_STATE_PARTITIONS,
+    return _replay_events(
+        spark, sf_dir, ("user_id", "ts", "event_id", "value"), build, "alert_mb",
+        mode="update", state_partitions=PY_STATE_PARTITIONS,
     )
 
 
@@ -521,17 +485,6 @@ def feed_freshness_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     as either a short count or a stale high-water mark. The memory
     sink keeps one snapshot per feed per batch; n_events is strictly
     increasing, so max_by(n_events) selects the final state."""
-    import pyspark.sql.functions as F
-
-    from lol_data_pipeline_spark.io import load_table
-    from lol_data_pipeline_spark.streaming.windows import (
-        replay_multibatch,
-        time_slices,
-    )
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_type", "ts", F.unix_micros("ts").alias("ts_us")
-    )
 
     def build(stream):
         return stream.groupBy("event_type").applyInPandasWithState(
@@ -542,9 +495,9 @@ def feed_freshness_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
 
-    res = replay_multibatch(
-        spark, time_slices(ev, "ts", 4), build, "update",
-        f"fresh_mb:{sf_dir}", state_partitions=PY_STATE_PARTITIONS,
+    res = _replay_events(
+        spark, sf_dir, ("event_type", "ts", F.unix_micros("ts").alias("ts_us")),
+        build, "fresh_mb", mode="update", state_partitions=PY_STATE_PARTITIONS,
     )
     return res.groupBy("event_type").agg(
         F.max("n_events").alias("n_events"),

@@ -328,17 +328,25 @@ def _marker(ev: DataFrame, mx, offset: str, tag: str = "sentinel") -> DataFrame:
     )
 
 
-def _replay_events(spark, sf_dir, cols, build, key, flush=False) -> DataFrame:
-    """``build`` over the events table's ``cols`` replayed as four
-    time-ordered micro-batches (:func:`time_slices`), append mode.
-    ``flush`` adds a far-future marker batch (max ts + 1 day) whose
-    watermark closes every real window or session; its own never
-    closes, and the callers filter it out regardless."""
+def _replay_events(
+    spark, sf_dir, cols, build, key, flush=False,
+    mode="append", slices=4, state_partitions=4,
+) -> DataFrame:
+    """``build`` over the events table's ``cols`` replayed as
+    ``slices`` time-ordered micro-batches (:func:`time_slices`) in
+    output ``mode``. ``flush`` adds a far-future marker batch (max ts
+    + 1 day) whose watermark closes every real window or session; its
+    own never closes, and the callers filter it out regardless.
+    ``state_partitions`` goes to :func:`replay_multibatch` (the
+    Python-stateful callers pass ``stateful.PY_STATE_PARTITIONS``)."""
     ev = load_table(spark, sf_dir, "events").select(*cols)
-    parts = time_slices(ev, "ts", 4)
+    parts = time_slices(ev, "ts", slices)
     if flush:
         parts.append(_marker(ev, events_max_ts(spark, sf_dir), "1 DAY"))
-    return replay_multibatch(spark, parts, build, "append", f"{key}:{sf_dir}")
+    return replay_multibatch(
+        spark, parts, build, mode, f"{key}:{sf_dir}",
+        state_partitions=state_partitions,
+    )
 
 
 # --- the four query shapes; each takes a stream and returns the query ---

@@ -1,8 +1,9 @@
 """Mechanical doc/config sync guards.
 
 The registry count in COVERAGE.md went stale twice in one session
-(review findings both times); bench.py and dump_plans.py silently
-skip unknown names, so a typo there drops coverage without failing
+(review findings both times); bench.py silently skips unknown names
+and tools/measure.py's SHOWCASE is read only when PLANS.md is
+regenerated, so a typo there drops coverage without failing
 anything. These tests make all three drift classes CI failures.
 """
 
@@ -34,11 +35,11 @@ def test_bench_headline_names_resolve():
     assert not missing_b, f"bench.BASELINE_SET names not in REGISTRY: {missing_b}"
 
 
-def test_dump_plans_showcase_names_resolve():
-    import tools.dump_plans as dp
+def test_measure_showcase_names_resolve():
+    import tools.measure as measure
 
-    missing = [n for n, _ in dp.SHOWCASE if n not in REGISTRY]
-    assert not missing, f"dump_plans.SHOWCASE names not in REGISTRY: {missing}"
+    missing = [n for n, _ in measure.SHOWCASE if n not in REGISTRY]
+    assert not missing, f"measure.SHOWCASE names not in REGISTRY: {missing}"
 
 
 def test_every_oracled_entry_mentioned_in_coverage():

@@ -17,12 +17,10 @@ from __future__ import annotations
 
 import os
 
-import duckdb
 import pytest
 
-from lol_data_pipeline_spark.io import TABLES, table_path
 from lol_data_pipeline_spark.plans import REGISTRY
-from tools.check_parity import compare, materialize_ctes
+from tools.check_parity import compare, materialize_ctes, oracle_connection
 
 ORACLED = sorted(name for name, spec in REGISTRY.items() if spec.sql)
 
@@ -37,11 +35,7 @@ SF_GATE = (
 
 @pytest.fixture(scope="module")
 def duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{table_path(SF_GATE, t)}'"
-        )
+    con = oracle_connection(SF_GATE)
     yield con
     con.close()
 
@@ -78,9 +72,7 @@ def test_graph_oracle_chains_fast(name, spark, sf_dir):
     which every IVF+PQ oracle builds on — checked against the
     in-query flagship and the served index. The full sweep above
     covers the rest, marked slow."""
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{table_path(sf_dir, t)}'")
+    con = oracle_connection(sf_dir)
     spec = REGISTRY[name]
     sdf = spec.fn(spark, sf_dir)
     res = con.execute(materialize_ctes(spec.sql))

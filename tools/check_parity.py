@@ -4,6 +4,9 @@ Runs every REGISTRY entry's Spark plan and DuckDB oracle SQL (every
 CTE materialized) on the same sf dir and compares row count, column
 names, and order-insensitive values (exact after normalization; float
 drift is reported separately because it would break a value-hash).
+The runner loop (:func:`run_gate`) is shared with
+tools/driver_gauntlet.py, which swaps in the driver's session and
+comparator.
 
 Usage: python tools/check_parity.py [sf_dir] [query ...]
 """
@@ -12,12 +15,17 @@ from __future__ import annotations
 
 import datetime as dt
 import math
+import os
 import re
 import sys
+from collections.abc import Callable
+from typing import NamedTuple
 
 import duckdb
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+import tools  # noqa: E402,F401  (the root for Spark's workers too)
 
 from lol_data_pipeline_spark.io import TABLES, table_path  # noqa: E402
 from lol_data_pipeline_spark.session import get_spark  # noqa: E402
@@ -209,40 +217,83 @@ def compare(name, spark_rows, duck_rows, spark_cols, duck_cols):
     return issues
 
 
-def main():
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 and "/" in sys.argv[1] else "/root/testdata/sf0.01"
-    only = [a for a in sys.argv[1:] if "/" not in a]
-    spark = get_spark("parity-check")
+class Gate(NamedTuple):
+    """What one parity gate compares; :func:`run_gate` does the rest."""
+
+    fetch: Callable  # Spark DataFrame -> (columns, rows)
+    fetch_oracle: Callable  # DuckDB result -> (columns, rows)
+    compare: Callable  # (name, spark rows, oracle rows, spark cols, oracle cols) -> issues
+    prepare_sql: Callable  # registered oracle SQL -> the SQL run
+    rows_only: Callable | None  # raises on bad oracle-less rows; None skips those
+
+
+ROWS = Gate(
+    fetch=lambda sdf: (sdf.columns, [tuple(r) for r in sdf.collect()]),
+    fetch_oracle=lambda res: ([d[0] for d in res.description], res.fetchall()),
+    compare=compare,
+    prepare_sql=materialize_ctes,
+    rows_only=None,
+)
+
+
+def oracle_connection(sf_dir: str):
+    """A DuckDB connection with one view per testdata table of ``sf_dir``."""
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{table_path(sf_dir, t)}'")
-    n_pass = n_fail = n_skip = 0
-    for name, spec in REGISTRY.items():
-        if only and name not in only:
+    return con
+
+
+def sf_and_names(argv: list[str]) -> tuple[str, list[str]]:
+    """``[sf_dir] [name ...]``: the argument that is a path (has a '/')
+    or an existing directory is the sf dir."""
+    dirs = [a for a in argv if "/" in a or os.path.isdir(a)]
+    return (dirs[0] if dirs else "/root/testdata/sf0.01"), [a for a in argv if a not in dirs]
+
+
+def run_gate(spark, sf_dir, names, plans, oracles, gate: Gate, label: str) -> int:
+    """Check each of ``names``: ``plans[name](spark, sf_dir)`` against
+    ``oracles.get(name)`` over DuckDB views of ``sf_dir``, compared by
+    ``gate``, plus the oracle-type and dtype audits. Prints one line
+    per entry and a ``label`` tally; returns 1 on any failure."""
+    con = oracle_connection(sf_dir)
+    n_pass = n_fail = n_rows_only = 0
+    for name in names:
+        if name not in plans:
+            print(f"✗ {name}: NOT IN REGISTRY")
+            n_fail += 1
             continue
-        if spec.sql is None:
+        sql = oracles.get(name)
+        if sql is None and gate.rows_only is None:
             print(f"  SKIP (no oracle) {name}")
-            n_skip += 1
+            n_rows_only += 1
             continue
         try:
-            sdf = spec.fn(spark, sf_dir)
-            spark_cols = sdf.columns
-            spark_rows = [tuple(r) for r in sdf.collect()]
+            sdf = plans[name](spark, sf_dir)
+            spark_cols, spark_rows = gate.fetch(sdf)
         except Exception as e:
             print(f"✗ {name}: SPARK ERROR {type(e).__name__}: {str(e)[:300]}")
             n_fail += 1
             continue
-        sql = materialize_ctes(spec.sql)
+        if sql is None:
+            try:
+                gate.rows_only(spark_rows)
+            except Exception as e:
+                print(f"✗ {name}: CANON-CRASH rows-only: {type(e).__name__}")
+                n_fail += 1
+                continue
+            print(f"~ {name}: rows-only ({len(spark_rows)} rows)")
+            n_rows_only += 1
+            continue
+        sql = gate.prepare_sql(sql)
         try:
             type_flags = audit_oracle_types(con, sql)
-            res = con.execute(sql)
-            duck_cols = [d[0] for d in res.description]
-            duck_rows = res.fetchall()
+            duck_cols, duck_rows = gate.fetch_oracle(con.execute(sql))
         except Exception as e:
             print(f"✗ {name}: DUCKDB ERROR {str(e)[:300]}")
             n_fail += 1
             continue
-        issues = compare(name, spark_rows, duck_rows, spark_cols, duck_cols)
+        issues = gate.compare(name, spark_rows, duck_rows, spark_cols, duck_cols)
         if type_flags:
             issues.append(f"ORACLE-TYPE {type_flags}")
         dtype_flags = audit_dtype_agreement(sdf.schema, con, sql)
@@ -254,8 +305,19 @@ def main():
         else:
             print(f"✓ {name} ({len(spark_rows)} rows)")
             n_pass += 1
-    print(f"\n{n_pass} pass, {n_fail} fail, {n_skip} skipped (rows-only)")
+    print(
+        f"\n{label}: {n_pass} pass, {n_fail} fail, {n_rows_only} rows-only "
+        f"of {len(names)} ({sf_dir})"
+    )
     return 1 if n_fail else 0
+
+
+def main(argv: list[str] | None = None) -> int:
+    sf_dir, names = sf_and_names(sys.argv[1:] if argv is None else argv)
+    plans = {n: spec.fn for n, spec in REGISTRY.items()}
+    oracles = {n: spec.sql for n, spec in REGISTRY.items()}
+    spark = get_spark("parity-check")
+    return run_gate(spark, sf_dir, names or list(plans), plans, oracles, ROWS, "parity")
 
 
 if __name__ == "__main__":

@@ -6,7 +6,8 @@ Replays the EXTERNAL gate's exact shape before the external gate does:
   __spark_entry__._configure for the mandatory confs, exactly like the
   driver;
 - the FIRST N (default 50) registry entries in iteration order — the
-  driver's sample window;
+  driver's sample window — or the named entries (the targeted
+  re-verification loop for maintenance work);
 - the DRIVER'S OWN canonicalization shape: both sides fetched into
   pandas, every column lex-sorted via sort_values, cells stringified,
   THEN compared. This is what the r07 gauntlet lacked — it said
@@ -16,9 +17,10 @@ Replays the EXTERNAL gate's exact shape before the external gate does:
   the driver, and '1.0' != '1' fails here exactly as the value-hash
   does there;
 - the strict audits from tools/check_parity.py (HUGEINT/TIMESTAMPTZ/
-  DECIMAL/nested oracle outputs; Spark-vs-DuckDB dtype disagreement).
+  DECIMAL/nested oracle outputs; Spark-vs-DuckDB dtype disagreement),
+  through check_parity's runner loop.
 
-Usage: python tools/driver_gauntlet.py [sf_dir] [N]
+Usage: python tools/driver_gauntlet.py [sf_dir] [N | name ...]
 """
 
 from __future__ import annotations
@@ -26,16 +28,11 @@ from __future__ import annotations
 import os
 import sys
 
-import duckdb
-
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession  # noqa: E402
 
-from tools.check_parity import (  # noqa: E402
-    audit_dtype_agreement,
-    audit_oracle_types,
-)
+from tools.check_parity import Gate, run_gate, sf_and_names  # noqa: E402
 
 
 def _canon_cell(v):
@@ -79,8 +76,9 @@ def driver_canon(pdf):
     ]
 
 
-def pandas_compare(name, spark_pdf, duck_pdf):
-    """Driver-shaped comparison; returns a list of issue strings."""
+def pandas_compare(name, spark_pdf, duck_pdf, *_cols):
+    """Driver-shaped comparison (the columns ride the frames); returns
+    a list of issue strings."""
     issues = []
     if len(spark_pdf) != len(duck_pdf):
         issues.append(f"ROWCOUNT spark={len(spark_pdf)} duck={len(duck_pdf)}")
@@ -105,72 +103,30 @@ def pandas_compare(name, spark_pdf, duck_pdf):
     return issues
 
 
-def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    n_sample = int(sys.argv[2]) if len(sys.argv) > 2 else 50
+DRIVER = Gate(
+    fetch=lambda sdf: (None, sdf.toPandas()),
+    fetch_oracle=lambda res: (None, res.df()),
+    compare=pandas_compare,
+    prepare_sql=lambda sql: sql,
+    # the driver's rows-only path still canonicalizes — an array
+    # output column crashes it even without an oracle
+    rows_only=driver_canon,
+)
+
+
+def main(argv: list[str] | None = None) -> int:
+    sf_dir, names = sf_and_names(sys.argv[1:] if argv is None else argv)
 
     import __spark_entry__ as e
 
-    qs, osql = e.queries(), e.oracle_sql()
-    sample = list(qs)[:n_sample]
-
-    from lol_data_pipeline_spark.io import TABLES, table_path
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{table_path(sf_dir, t)}'")
-
+    qs = e.queries()
+    if not names or names[0].isdigit():
+        names = list(qs)[: int(names[0]) if names else 50]
     # plain session — the external verifier's config, NOT get_spark
     spark = SparkSession.builder.master(
         f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]"
     ).getOrCreate()
-
-    n_pass = n_fail = n_rows_only = 0
-    for name in sample:
-        try:
-            sdf = qs[name](spark, sf_dir)
-            spark_pdf = sdf.toPandas()
-        except Exception as ex:
-            print(f"✗ {name}: SPARK ERROR {type(ex).__name__}: {str(ex)[:200]}")
-            n_fail += 1
-            continue
-        sql = osql.get(name)
-        if sql is None:
-            # the driver's rows-only path still canonicalizes — an
-            # array output column crashes it even without an oracle
-            try:
-                driver_canon(spark_pdf)
-            except Exception as ex:
-                print(f"✗ {name}: CANON-CRASH rows-only: {type(ex).__name__}")
-                n_fail += 1
-                continue
-            print(f"~ {name}: rows-only ({len(spark_pdf)} rows)")
-            n_rows_only += 1
-            continue
-        try:
-            type_flags = audit_oracle_types(con, sql)
-            duck_pdf = con.execute(sql).df()
-        except Exception as ex:
-            print(f"✗ {name}: DUCKDB ERROR {str(ex)[:200]}")
-            n_fail += 1
-            continue
-        issues = pandas_compare(name, spark_pdf, duck_pdf)
-        if type_flags:
-            issues.append(f"ORACLE-TYPE {type_flags}")
-        dtype_flags = audit_dtype_agreement(sdf.schema, con, sql)
-        if dtype_flags:
-            issues.append(f"DTYPE-DISAGREE {dtype_flags}")
-        if issues:
-            print(f"✗ {name}: " + " | ".join(issues))
-            n_fail += 1
-        else:
-            print(f"✓ {name} ({len(spark_pdf)} rows)")
-            n_pass += 1
-    print(
-        f"\ngauntlet: {n_pass} pass, {n_fail} fail, {n_rows_only} rows-only "
-        f"of {len(sample)} sampled (plain session, {sf_dir})"
-    )
-    return 1 if n_fail else 0
+    return run_gate(spark, sf_dir, names, qs, e.oracle_sql(), DRIVER, "gauntlet")
 
 
 if __name__ == "__main__":

@@ -32,6 +32,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import tools  # noqa: E402,F401  (the root for Spark's workers too)
+
 from pyspark.sql import functions as F  # noqa: E402
 
 from lol_data_pipeline_spark.io import load_table  # noqa: E402

@@ -47,6 +47,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import tools  # noqa: E402,F401  (the root for Spark's workers too)
+
 from lol_data_pipeline_spark.plans import REGISTRY  # noqa: E402
 from lol_data_pipeline_spark.session import get_spark  # noqa: E402
 

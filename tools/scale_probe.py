@@ -25,8 +25,8 @@ preserved rather than planting K-1 exact duplicates of everything:
   hash-seeded offset in [-0.15, 0.15) -> copies spread out instead
   of stacking K points at the same location in every LSH bucket.
 
-Timing mirrors bench.py: noop sink, one warm run, min of two
-measured runs. Output: one JSON line per query with (t_base,
+Timing is bench.py's ``warm_min``: noop sink, one warm run, min of
+two measured runs. Output: one JSON line per query with (t_base,
 t_scaled, ratio, rows_base, rows_scaled) plus a summary line;
 PERF_NOTES.md records the adjudicated table.
 """
@@ -36,12 +36,14 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import tools  # noqa: E402,F401  (the root for Spark's workers too)
+
 from pyspark.sql import functions as F  # noqa: E402
 
+from bench import warm_min  # noqa: E402
 from lol_data_pipeline_spark.io import load_table  # noqa: E402
 from lol_data_pipeline_spark.plans import REGISTRY  # noqa: E402
 from lol_data_pipeline_spark.session import get_spark  # noqa: E402
@@ -165,15 +167,7 @@ def synthesize(spark, k: int, out_dir: str) -> None:
 
 
 def time_query(spark, name: str, sf_dir: str) -> tuple[float, int]:
-    fn = REGISTRY[name].fn
-    df = fn(spark, sf_dir)
-    df.write.format("noop").mode("overwrite").save()  # warm
-    best = float("inf")
-    for _ in range(2):
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 3), fn(spark, sf_dir).count()
+    return warm_min(spark, sf_dir, name, 2), REGISTRY[name].fn(spark, sf_dir).count()
 
 
 def main() -> None:
